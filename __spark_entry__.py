@@ -300,7 +300,7 @@ def _li_matrices(spark: SparkSession, sf_dir: str):
     # broadcast-hash join inside mxm, the final groupBy(i, j) / the
     # reduce_rows groupBy(i) reuse it too: the 2.4M-row post-join
     # exchange disappears from the mxm gates and reduce_rows becomes
-    # single-shuffle (plans/r16/ before vs after). b keys on l_partkey =
+    # single-shuffle (round-16 plans, before vs after). b keys on l_partkey =
     # mxm's join key k, so at scales where b stops broadcasting the join
     # needs no b-side exchange either. Sum order changes are immaterial:
     # l_quantity is integer-valued (checked all SFs), so every sum and
@@ -969,7 +969,7 @@ def _q_graph_random_walks(spark: SparkSession, sf_dir: str) -> DataFrame:
     arg_min(md5('seed:start:rep:t:dst')) over the out-neighbors — md5
     is byte-identical across Spark, DuckDB, and hashlib, so the oracle
     unrolls the same three draws. Round-15 debut (staged + verified in
-    scripts/r15_queue.py on the final r14 tree)."""
+    the round-15 staging queue on the final r14 tree)."""
     from g4s_spark.operators import random_walks
 
     return random_walks(_ps_edges(spark, sf_dir), length=3, walks_per_node=1, seed=42)
@@ -986,7 +986,7 @@ def _q_pipeline_dsir(spark: SparkSession, sf_dir: str) -> DataFrame:
     byte-identical across Spark/DuckDB so the oracle reproduces the
     full computation; ln is the single transcendental, rounded at the
     gate boundary (6 decimals, like graph_harmonic). Round-16 debut
-    (staged + oracle-verified in scripts/r16_queue.py on the final r15
+    (staged + oracle-verified in the round-16 staging queue on the final r15
     tree)."""
     from g4s_spark.functions.pipeline import dsir_log_weights
 
@@ -1002,7 +1002,7 @@ def _q_pipeline_dsir(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --- round-9 debuts (staged + oracle-verified in r8, scripts/r9_queue) ----
+# --- round-9 debuts (staged + oracle-verified in r8, the round-9 staging queue) ----
 
 EIG_ITERS = 3
 BC_DEPTH = 8  # TPC-H depth from the customer seed is 6; 2 spare layers
@@ -1016,17 +1016,18 @@ def _q_graph_eigenvector(spark: SparkSession, sf_dir: str) -> DataFrame:
     from g4s_spark.graph import PropertyGraph
 
     g = build_graph(spark, sf_dir)
-    # the endpoints graph is memoized on the cached base graph (round-17):
-    # a fresh PropertyGraph per call defeated the operator's graph-lifetime
-    # memos (nodes/edges/count re-cached per call)
-    eg = getattr(g, "_endpoints_graph", None)
-    if eg is None:
+    # the endpoints graph is an entry of the cached base graph's derived
+    # registry (round-17): a fresh PropertyGraph per call defeated the
+    # operator's graph-lifetime memos (nodes/edges/count re-cached per call)
+    def endpoints_graph():
         endpoints = (
             g.edges.select(F.col("src").alias("id"))
             .unionByName(g.edges.select(F.col("dst").alias("id")))
             .dropDuplicates(["id"])
         )
-        eg = g._endpoints_graph = PropertyGraph(endpoints, g.edges, spark)
+        return PropertyGraph(endpoints, g.edges, spark)
+
+    eg = g.derived.get("endpoints_graph", {"edges"}, endpoints_graph)
     ec = eigenvector_centrality(eg, iters=EIG_ITERS)
     return ec.select("id", pround(F.col("ec"), 9).alias("ec"))
 
@@ -1190,7 +1191,7 @@ def _q_cypher_distinct_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --- round-10 debuts (staged + oracle-verified in r9, scripts/r10_queue) --
+# --- round-10 debuts (staged + oracle-verified in r9, the round-10 staging queue) --
 
 # second Brandes source: another customer seed keeps the oracle's walk
 # depth at the customer-graph depth (a supplier seed would add layers)
@@ -1236,7 +1237,7 @@ def _q_events_range_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _q_events_range_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The events_range_join fixture routed through the STREAMING twin
-    (round-13 debut, staged+verified in r11-r12 via scripts/r13_queue.py):
+    (round-13 debut, staged+verified in r11-r12 in the round-13 staging queue):
     clicks arrive as an availableNow file stream, each micro-batch
     range-joins the static same-user error windows, results land in a
     parquet sink and are read back — so the driver value-hashes the
@@ -1449,7 +1450,7 @@ def _q_cypher_merge_node(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --- round-11 debuts (staged + oracle-verified in r10, scripts/r11_queue) -
+# --- round-11 debuts (staged + oracle-verified in r10, the round-11 staging queue) -
 
 def _asof_clicks_purchases(spark: SparkSession, sf_dir: str):
     """The events_asof fixture shared by the direction gates: clicks as
@@ -1577,7 +1578,7 @@ def _q_dedup_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Round-16 composition (drafted in NOTES.md at r15 close, lifted
 # verbatim): the 1 round-16 debut (pipeline_dsir — DSIR hashed-unigram
 # importance weights, Xie 2023; staged + oracle-verified on final r15
-# code via scripts/r16_queue.py), the 42 forced last-green-r12 gates
+# code in the round-16 staging queue), the 42 forced last-green-r12 gates
 # (the 4-round staleness budget), and the 7 oldest last-seen-r13 rows
 # by first appearance. Registry 191 → 192 — back AT the D=2 trip-wire
 # (text_vocab retired r15); from here every debut pairs with a
@@ -1588,7 +1589,7 @@ def _q_dedup_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
 # the budget. Everything at 51+ is green in the local full check
 # (scripts/check_correctness.py).
 _WINDOW_ORDER = [
-    # round-16 debut (from scripts/r16_queue.py, oracle-verified)
+    # round-16 debut (in the round-16 staging queue, oracle-verified)
     "pipeline_dsir",
     # the 42 forced last-green-r12 gates (contract test fails without them)
     "ann_ivf_topk", "cypher_concat", "cypher_distinct_agg",
@@ -2079,7 +2080,7 @@ def _queries_unordered() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "graph_random_walks": _q_graph_random_walks,
         "pipeline_dsir": _q_pipeline_dsir,
         # round-9 debuts: the 11 gates staged + oracle-verified in r8
-        # (scripts/r9_queue.py) plus the MERGE ON MATCH SET and
+        # (the round-9 staging queue) plus the MERGE ON MATCH SET and
         # weighted-closeness driver rows (VERDICT r8 #6/#8)
         "graph_eigenvector": _q_graph_eigenvector,
         "graph_betweenness": _q_graph_betweenness,
@@ -2133,7 +2134,7 @@ def _queries_unordered() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             f"RETURN c, count(o) AS n_orders"
         ),
         # round-10 debuts: staged + oracle-verified in r9
-        # (scripts/r10_queue.py) — temporal joins, vocab encode,
+        # (the round-10 staging queue) — temporal joins, vocab encode,
         # multi-probe IVF, k-truss, TF-IDF, bigram rarity, reciprocity,
         # weighted harmonic, batched multi-source Brandes, grouped
         # top-k, node-form MERGE
@@ -2150,7 +2151,7 @@ def _queries_unordered() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "cypher_topk_agg": _q_cypher_topk_agg,
         "cypher_merge_node": _q_cypher_merge_node,
         # round-11 debuts: staged + oracle-verified in r10
-        # (scripts/r11_queue.py) — the asof direction/tolerance surface,
+        # (the round-11 staging queue) — the asof direction/tolerance surface,
         # GraphSAGE neighbor aggregation, the deep-closure Cypher gate,
         # and quality-aware canonical dedup selection
         "events_asof_forward": _q_events_asof_forward,
@@ -2160,7 +2161,7 @@ def _queries_unordered() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "cypher_deep_chain": _q_cypher_deep_chain,
         "dedup_canonical": _q_dedup_canonical,
         # round-13 debuts: staged + oracle-verified in r11/r12
-        # (scripts/r13_queue.py) — the streaming range-join twin drained
+        # (the round-13 staging queue) — the streaming range-join twin drained
         # at the driver, and SemDeDup semantic deduplication
         "events_range_stream": _q_events_range_stream,
         "dedup_semantic": _q_dedup_semantic,
@@ -2564,7 +2565,7 @@ def _components_oracle(iters: int = 30) -> str:
     """
 
 
-# --- round-9 debut oracle helpers (lifted from scripts/r9_queue.py) -------
+# --- round-9 debut oracle helpers (lifted from the round-9 staging queue) -------
 
 # SCC + condensed-edge CTE shared by graph_condense / graph_layers —
 # identical to the graph_scc oracle's closure construction
@@ -5050,7 +5051,7 @@ def oracle_sql() -> dict[str, str]:
                    'h1' AS name, '9' AS tier
             FROM lineitem
         """,
-        # round-11 debuts (staged + verified in r10, scripts/r11_queue)
+        # round-11 debuts (staged + verified in r10, the round-11 staging queue)
         # native ASOF with the flipped inequality: smallest p.ts >= c.ts
         "events_asof_forward": f"""
             WITH {_CLICKS_PURCHASES_SQL}

@@ -17,6 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 
 from .cypher.parser import parse, split_with
+from .cypher.tokenizer import CypherLexError, scan_clauses, tokenize
 from .graph.store import PropertyGraph
 from .plans.planner import (
     PlannedQuery,
@@ -29,6 +30,14 @@ from .plans.planner import (
     run_cypher_remove,
     run_cypher_set,
 )
+
+# update() routes on the first of these verbs found as a top-level
+# clause (DELETE also covers DETACH DELETE); none of them means SET
+_ROUTES = (
+    ("MERGE", run_cypher_merge), ("CREATE", run_cypher_create),
+    ("DELETE", run_cypher_delete), ("REMOVE", run_cypher_remove),
+)
+_VERBS = {verb: (verb,) for verb, _ in _ROUTES}
 
 
 class GraphDB:
@@ -43,71 +52,32 @@ class GraphDB:
 
     def update(self, cypher: str) -> "GraphDB":
         """Mutation statements — ``MATCH ... SET b.prop = value``,
-        ``MERGE ...`` (with ON CREATE SET / ON MATCH SET), ``MATCH ...
-        [DETACH] DELETE ...`` and ``MATCH ... REMOVE b.prop`` —
-        returning a NEW GraphDB over the updated graph (immutable
+        ``MERGE ...`` (with ON CREATE SET / ON MATCH SET), ``CREATE ...``,
+        ``MATCH ... [DETACH] DELETE ...`` and ``MATCH ... REMOVE b.prop``
+        — returning a NEW GraphDB over the updated graph (immutable
         rewrite; see the run_cypher_* statement runners in plans).
 
-        Verb routing scans a literal-masked copy of the statement
-        (quoted spans blanked to a space so tokens never juxtapose):
-        a DELETE/MERGE/... keyword INSIDE a string value — ``SET c.note
-        = 'please DELETE'`` — must not hijack the route. The mask uses
-        the SAME literal grammar the statement runners execute
-        (``'[^']*'`` — no escapes), so routing and execution see
-        identical spans by construction; a literal whose content merely
-        ENDS in a backslash (``'dir\\'``) masks and executes fine
-        (ADVICE r10 — the r10 blanket ``\\'`` rejection over-fired on
-        it). A statement the grammar leaves with an unpaired quote —
-        including the escaped-quote style it does not support
-        (``'it\\'s a DELETE'`` parses as literal ``it\\`` + trailing
-        garbage) — is REJECTED with a clear error rather than routed on
-        a partially-masked text. The escape-aware mask is computed
-        UNCONDITIONALLY and compared against the no-escape mask
-        (ADVICE r11): an EVEN count of backslash-escaped quotes pairs
-        up wrongly under the no-escape grammar and leaks literal
-        content into the routing text with no unpaired quote left to
-        trip the balance check — the mask-divergence check catches
-        exactly that (the trailing-backslash ``'dir\\'`` literal still
-        passes: its escape-aware mask retains an unpaired quote, so
-        the masks diverge only where esc is NOT quote-free). The
-        original text is what executes."""
-        import re
-
-        bare = re.sub(r"'[^']*'|\"[^\"]*\"", " ", cypher)
-        esc = re.sub(r"'(?:\\.|[^'\\])*'|\"(?:\\.|[^\"\\])*\"", " ", cypher)
-        esc_clean = "'" not in esc and '"' not in esc
-        if "'" in bare or '"' in bare:
-            if esc_clean:
+        The route is the top-level verb clauses the statement tokenizer
+        finds, so a verb inside a string literal never routes. Priority:
+        MERGE, CREATE, [DETACH] DELETE, REMOVE, otherwise SET. Text the
+        tokenizer cannot lex — an unterminated literal, or a
+        backslash-escaped quote the literal grammar does not support —
+        is rejected rather than routed."""
+        try:
+            verbs = {name for name, *_ in scan_clauses(tokenize(cypher), _VERBS)}
+        except CypherLexError as e:
+            if "\\'" in cypher or '\\"' in cypher:
                 raise ValueError(
                     "update(): backslash-escaped quotes are not supported by "
                     "the literal grammar (every literal is '[^']*'); use the "
                     "other quote style for the literal"
-                )
+                ) from e
             raise ValueError(
-                "update(): unbalanced string literal in statement — refusing "
-                "to route a verb on a partially-masked text"
-            )
-        if esc_clean and esc != bare:
-            # both masks quote-free but DIFFERENT: an even number of
-            # escaped quotes paired up wrongly under the no-escape
-            # grammar, leaking literal content into the routing text
-            raise ValueError(
-                "update(): backslash-escaped quotes are not supported by "
-                "the literal grammar (every literal is '[^']*'); use the "
-                "other quote style for the literal"
-            )
-        if re.match(r"(?is)^\s*MERGE\b", bare) or re.search(
-            r"(?is)\bMERGE\s*\(", bare
-        ):
-            return GraphDB(run_cypher_merge(self.graph, cypher))
-        if re.match(r"(?is)^\s*CREATE\b", bare) or re.search(
-            r"(?is)\bCREATE\s*\(", bare
-        ):
-            return GraphDB(run_cypher_create(self.graph, cypher))
-        if re.search(r"(?is)\b(?:DETACH\s+)?DELETE\b", bare):
-            return GraphDB(run_cypher_delete(self.graph, cypher))
-        if re.search(r"(?is)\bREMOVE\b", bare):
-            return GraphDB(run_cypher_remove(self.graph, cypher))
+                f"update(): unbalanced quote or bracket in statement: {e}"
+            ) from e
+        for verb, run in _ROUTES:
+            if verb in verbs:
+                return GraphDB(run(self.graph, cypher))
         return GraphDB(run_cypher_set(self.graph, cypher))
 
     def plan(self, cypher: str) -> PlannedQuery:

@@ -76,7 +76,7 @@ def shingle_docs(
 # minhash_bucket_table / similarity._LSH_CORPUS_CACHE (applicationId +
 # semanticHash key). Round-17: the jaccard/containment pair stage was
 # paying the full tokenize -> explode -> distinct fill per CALL (~45% of
-# the gate, measured in scripts/exp_ngram.py); every consumer of the
+# the gate, measured in round 17); every consumer of the
 # same corpus now shares ONE fill per session. At cluster scale this is
 # the same materialized-index story as the MinHash buckets: a
 # parquet/Delta inverted index maintained alongside the corpus.
@@ -95,7 +95,7 @@ def shingle_table(
     same parquet share one index. Layout stays DOC-keyed (the
     repartition(id) inside shingle_docs, reused by the distinct via the
     subset rule): a shingle-keyed layout was built and MEASURED SLOWER
-    (gate min 1.24 s vs 0.52 s, scripts/exp_ngram.py r17 A/B) — the
+    (gate min 1.24 s vs 0.52 s, round-17 A/B) — the
     co-partitioned zero-exchange self-join it enables loses to the
     broadcast-hash self-join the small cached table gets anyway, and
     per-sample string sorts replace the exchange it saves."""
@@ -592,7 +592,7 @@ def simhash(df: DataFrame, text_col: str = "text", id_col: str = "doc_id", bits:
     # per-row substr/instr decoding with `bits` shifted-mask sums in the
     # same map-side-combinable groupBy; all-integer arithmetic, so the
     # fingerprints are identical bit for bit)
-    # single-exchange shape (round-16, measured A/B scripts/exp_simhash.py:
+    # single-exchange shape (round-16, measured A/B:
     # min 0.920 -> 0.751 s at sf0.1): hash-partitioning on id_col alone
     # satisfies ClusteredDistribution([id, tok]) (the subset rule), so the
     # distinct AND the vote groupBy(id) below both reuse this one exchange

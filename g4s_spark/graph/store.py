@@ -12,7 +12,10 @@ DataStore (DataStore.scala:9-92). Here:
   reference we never materialize it (SURVEY §1.3),
 - label/type statistics for the cost-based planner come from
   ``groupBy(label).count()`` and are cached driver-side, mirroring
-  StatsStore (g4s-optimizer/.../optim/StatsStore.scala:111-255).
+  StatsStore (g4s-optimizer/.../optim/StatsStore.scala:111-255),
+- everything computed FROM the tables (stats, the slim projection,
+  payload dedups, the operators' edge folds and counts) lives in one
+  per-graph registry, ``PropertyGraph.derived`` (see Derived).
 
 At 100 TB the nodes/edges tables are parquet, partitioned/bucketed by
 label (resp. type, src) so a label scan is partition-pruned and an expand
@@ -100,6 +103,64 @@ def apply_scalar_fn(spec: str, c: "F.Column") -> "F.Column":
     raise ValueError(f"unknown scalar function spec: {spec!r}")
 
 
+# Facets a derived entry reads and a write changes: labels = the
+# (id, label) rows, props = the node payload maps, edges = the
+# (src, dst, type) rows, weights = every other edge column.
+FACETS = frozenset({"labels", "props", "edges", "weights"})
+NODE_ROWS = frozenset({"labels", "props"})  # changed by adding/dropping node rows
+EDGE_ROWS = frozenset({"edges", "weights"})  # changed by adding/dropping edge rows
+STATS_READS = frozenset({"labels", "edges"})
+
+
+def _entry(reads, value) -> tuple:
+    reads = frozenset(reads)
+    if not reads <= FACETS:
+        raise ValueError(f"unknown graph facets {sorted(reads - FACETS)}")
+    return reads, value
+
+
+class Derived:
+    """Per-graph registry of derived state; the reference keeps this
+    state (per-label matrices, transposes, StatsStore counters) in the
+    graph object (ConcurrentDirectedGraph.scala:29-41). An entry is a
+    key, the FACETS it reads, and a value built on first use. A write's
+    result inherits every entry that reads none of the facets it changed."""
+
+    def __init__(self, entries: dict | None = None):
+        self._entries: dict = entries if entries is not None else {}
+
+    def get(self, key, reads, build):
+        # threads racing on a first use may each build; setdefault
+        # keeps the first, so every caller gets the same value
+        entry = self._entries.get(key)
+        if entry is None:
+            entry = self._entries.setdefault(key, _entry(reads, build()))
+        return entry[1]
+
+    def put(self, key, reads, value) -> None:
+        self._entries[key] = _entry(reads, value)
+
+    def peek(self, key):
+        """The entry for ``key`` if it is built, else None."""
+        return self._entries.get(key, (None, None))[1]
+
+    def __contains__(self, key) -> bool:
+        return key in self._entries
+
+    def __iter__(self):
+        return iter(list(self._entries))
+
+    def inherit(self, changed) -> "Derived":
+        return Derived({k: e for k, e in list(self._entries.items()) if not e[0] & changed})
+
+    def uncache(self) -> None:
+        """Unpersist and drop every DataFrame entry; other values stay."""
+        for k, (_, v) in list(self._entries.items()):
+            if isinstance(v, DataFrame):
+                v.unpersist()
+                del self._entries[k]
+
+
 class PropertyGraph:
     def __init__(self, nodes: DataFrame, edges: DataFrame, spark: SparkSession | None = None):
         """nodes: (id long, label string, ...props); edges: (src long,
@@ -107,8 +168,13 @@ class PropertyGraph:
         self.spark = spark or nodes.sparkSession
         self.nodes = nodes
         self.edges = edges
-        self._stats: GraphStats | None = None
-        self._nodes_slim: DataFrame | None = None  # cached (id,label) projection
+        self.derived = Derived()
+
+    def _write(self, nodes: DataFrame, edges: DataFrame, changed) -> "PropertyGraph":
+        """A write's result; ``changed`` = the facets the write changed."""
+        g = PropertyGraph(nodes, edges, self.spark)
+        g.derived = self.derived.inherit(changed)
+        return g
 
     # -- construction / mutation (ConcurrentDirectedGraph.scala:109-153) --
 
@@ -135,11 +201,12 @@ class PropertyGraph:
         """Batch append (insertVertex, ConcurrentDirectedGraph.scala:109-125).
         Append-only, id uniqueness is the caller's contract; at scale this
         is a Delta/parquet append, not a union."""
-        g = PropertyGraph(self.nodes.unionByName(rows, allowMissingColumns=True), self.edges, self.spark)
-        return g
+        nodes = self.nodes.unionByName(rows, allowMissingColumns=True)
+        return self._write(nodes, self.edges, NODE_ROWS)
 
     def insert_edges(self, rows: DataFrame) -> "PropertyGraph":
-        return PropertyGraph(self.nodes, self.edges.unionByName(rows, allowMissingColumns=True), self.spark)
+        edges = self.edges.unionByName(rows, allowMissingColumns=True)
+        return self._write(self.nodes, edges, EDGE_ROWS)
 
     def remove_vertices(self, ids: DataFrame) -> "PropertyGraph":
         """Delete nodes (all label rows) AND their incident edges — the
@@ -161,7 +228,7 @@ class PropertyGraph:
                 F.broadcast(ids.select(F.col("id").alias("dst"))), on="dst", how="left_anti"
             )
         )
-        return PropertyGraph(nodes, edges, self.spark)
+        return self._write(nodes, edges, FACETS)
 
     def remove_edges(self, rows: DataFrame) -> "PropertyGraph":
         """Delete edges by (src, dst[, type]) anti-join (removeEdge = ???
@@ -171,11 +238,8 @@ class PropertyGraph:
         if not {"src", "dst"} <= set(on):
             raise ValueError("remove_edges needs src and dst columns")
         sel = rows.select(*on).dropDuplicates(on)
-        return PropertyGraph(
-            self.nodes,
-            self.edges.join(F.broadcast(sel), on=on, how="left_anti"),
-            self.spark,
-        )
+        edges = self.edges.join(F.broadcast(sel), on=on, how="left_anti")
+        return self._write(self.nodes, edges, EDGE_ROWS)
 
     def merge_vertices(self, rows: DataFrame) -> "PropertyGraph":
         """MERGE (match-or-create) for nodes — the upsert verb completing
@@ -237,7 +301,7 @@ class PropertyGraph:
         keep = self.nodes.join(
             F.broadcast(key), on=["id", "label"], how="left_anti"
         )
-        g = PropertyGraph(keep, self.edges, self.spark)
+        g = self._write(keep, self.edges, NODE_ROWS)
         gone = (
             self.nodes.select("id").dropDuplicates(["id"])
             .join(keep.select("id").dropDuplicates(["id"]), on="id", how="left_anti")
@@ -294,18 +358,9 @@ class PropertyGraph:
                 )
             )
         out = joined.withColumn("props", new_props).drop("_upd")
-        g = PropertyGraph(out, self.edges, self.spark)
-        # a props rewrite changes NO cardinality: the (id, label) set,
-        # label/type counts, and the whole edge table are untouched, so
-        # the planner stats, slim-projection cache, and per-graph edge
-        # memos all carry over (round-7: run_cypher on a SET result was
-        # recomputing stats from scratch)
-        g._stats = self._stats
-        g._nodes_slim = self._nodes_slim
-        for memo in ("_typed_edge_cache", "_degree_edges", "_weight_edges"):
-            if hasattr(self, memo):
-                setattr(g, memo, getattr(self, memo))
-        return g
+        # a props rewrite keeps the (id, label) rows and the edge table:
+        # the planner stats and every edge-derived entry carry over
+        return self._write(out, self.edges, {"props"})
 
     def remove_node_props(self, ids: DataFrame, keys: list[str]) -> "PropertyGraph":
         """REMOVE verb: drop property ``keys`` from the nodes in
@@ -324,14 +379,7 @@ class PropertyGraph:
             F.map_filter(F.col("props"), lambda k, _v: ~F.array_contains(keyset, k)),
         ).otherwise(F.col("props"))
         out = hit.withColumn("props", new_props).drop("_rm")
-        g = PropertyGraph(out, self.edges, self.spark)
-        # cardinalities unchanged: stats/caches carry over like SET
-        g._stats = self._stats
-        g._nodes_slim = self._nodes_slim
-        for memo in ("_typed_edge_cache", "_degree_edges", "_weight_edges"):
-            if hasattr(self, memo):
-                setattr(g, memo, getattr(self, memo))
-        return g
+        return self._write(out, self.edges, {"props"})
 
     def update_edge_weights(self, updates: DataFrame) -> "PropertyGraph":
         """SET for edge weights: ``updates`` (src, dst[, type], weight)
@@ -356,13 +404,9 @@ class PropertyGraph:
             .withColumn("weight", F.coalesce(F.col("_w"), F.col("weight")))
             .drop("_w")
         )
-        g = PropertyGraph(self.nodes, out, self.spark)
-        # weight overwrite preserves every cardinality and the whole
-        # nodes table; stats + slim cache carry over (edge memos do NOT
-        # — they may cache weight columns)
-        g._stats = self._stats
-        g._nodes_slim = self._nodes_slim
-        return g
+        # a weight overwrite keeps every row: only entries that read an
+        # edge column beyond (src, dst, type) are rebuilt
+        return self._write(self.nodes, out, {"weights"})
 
     def next_id(self) -> int:
         """Driver-side id counter analogue (DataStore.scala:44-49). At
@@ -376,13 +420,11 @@ class PropertyGraph:
         share their payload across label rows). Memoized per graph:
         every property-resolution join, keys()/properties() lookup and
         SET payload read reuses ONE deduped plan instead of re-paying
-        the dedup aggregate per query. Mutations return new graphs, so
-        the memo can never serve a stale payload."""
-        if getattr(self, "_payload_nodes", None) is None:
-            self._payload_nodes = self.nodes.select(
-                "id", "props"
-            ).dropDuplicates(["id"])
-        return self._payload_nodes
+        the dedup aggregate per query."""
+        return self.derived.get(
+            "payload_nodes", NODE_ROWS,
+            lambda: self.nodes.select("id", "props").dropDuplicates(["id"]),
+        )
 
     def payload_rows(self) -> DataFrame:
         """The (id, props) projection deduped on (id, PAYLOAD) — the
@@ -396,22 +438,22 @@ class PropertyGraph:
         aggregation semantics. For a well-formed store (props
         functional on id) this is exactly one row per id. Maps aren't
         set-comparable in Spark, so the dedup keys on the sorted
-        entry array. Memoized per graph (mutations return new graphs,
-        so the memo can never serve a stale payload).
+        entry array. Memoized per graph.
 
         Scale shape: one exchange on (id, payload-key) for the dedup,
         then the join's exchange on id over the already-deduped slim
         side — both on (id, props) projections only, never the label
         rows."""
-        if getattr(self, "_payload_rows", None) is None:
+        def build():
             pk = F.array_sort(F.map_entries(F.col("props")))
-            self._payload_rows = (
+            return (
                 self.nodes.select("id", "props")
                 .withColumn("_pk", pk)
                 .dropDuplicates(["id", "_pk"])
                 .drop("_pk")
             )
-        return self._payload_rows
+
+        return self.derived.get("payload_rows", NODE_ROWS, build)
 
     # -- lookups (ConcurrentDirectedGraph.scala:55-80,104) -----------------
 
@@ -419,7 +461,9 @@ class PropertyGraph:
         """The per-label diagonal matrix: node-id set for a label. Uses the
         slim (id,label) cache when present — label semi-joins never touch
         the props payload."""
-        df = self._nodes_slim if self._nodes_slim is not None else self.nodes
+        df = self.derived.peek("nodes_slim")
+        if df is None:
+            df = self.nodes
         if label is not None:
             df = df.filter(F.col("label") == label)
         return df.select("id")
@@ -509,15 +553,29 @@ class PropertyGraph:
 
     @property
     def stats(self) -> GraphStats:
-        if self._stats is None:
-            self._stats = GraphStats.compute(self.nodes, self.edges)
-        return self._stats
+        return self.derived.get(
+            "stats", STATS_READS, lambda: GraphStats.compute(self.nodes, self.edges)
+        )
+
+    @stats.setter
+    def stats(self, value: GraphStats) -> None:
+        self.derived.put("stats", STATS_READS, value)
 
     def cache(self) -> "PropertyGraph":
         """Cache the hot projections: (id,label) for planning/semi-joins
         and the edge topology. The full props payload stays uncached —
         prop-predicate scans and payload resolution read the source with
         column pruning/pushdown instead of pinning every map in memory."""
-        self._nodes_slim = self.nodes.select("id", "label").cache()
+        self.derived.get(
+            "nodes_slim", {"labels"},
+            lambda: self.nodes.select("id", "label").cache(),
+        )
         self.edges = self.edges.cache()
+        return self
+
+    def uncache(self) -> "PropertyGraph":
+        """Unpersist every registry DataFrame and the edge table cache()
+        pinned. Results are unchanged; later reads rebuild what they use."""
+        self.derived.uncache()
+        self.edges.unpersist()
         return self

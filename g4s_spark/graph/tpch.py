@@ -185,7 +185,7 @@ def _build_graph_uncached(spark: SparkSession, sf_dir: str, tables: dict[str, Da
         ("BY_SUPP", 0): counts["lineitem"],
         ("BY_SUPP", 2): dc(lineitem, "l_suppkey"),
     }
-    g._stats = GraphStats(
+    g.stats = GraphStats(
         sum(label_counts.values()), sum(type_counts.values()), label_counts, type_counts,
         triplet_counts,
         endpoint_counts,

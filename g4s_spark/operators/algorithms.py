@@ -24,7 +24,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..checkpointing import iter_checkpoint
-from ..graph.store import PropertyGraph
+from ..graph.store import EDGE_ROWS, PropertyGraph
 
 # frontier/visited sets below this row count are broadcast into the expand
 # join; beyond it the join shuffles on src. The visited set grows
@@ -53,12 +53,11 @@ def _cached_typed_edges(
     cols: tuple[str, ...],
     partition_col: str | None = None,
 ) -> DataFrame:
-    """Per-graph memo of the cached (typed) edge projection every
-    iteration re-joins — bfs/sssp on the same graph reuse the
+    """The cached (typed) edge projection every iteration re-joins,
+    one registry entry per graph — bfs/sssp on the same graph reuse the
     materialized cache across calls instead of paying the scan+filter
-    per call (same session-amortization pattern as _degree_folded_edges;
-    the cache is never unpersisted inside one algorithm call anymore,
-    it lives with the graph).
+    per call. It reads the weights facet only when ``cols`` carries an
+    edge column beyond (src, dst, type).
 
     ``partition_col`` hash-partitions the cache on that column before
     caching (the _mass_edges trick, round-16): when each iteration
@@ -71,16 +70,16 @@ def _cached_typed_edges(
     cache — their per-iteration exchanges carry only the small frontier
     and pinning the layout made every tiny iteration run MORE tasks
     (round-16, measured: bfs isolated min 1.7 -> 2.4 s)."""
-    key = (tuple(edge_types) if edge_types else None, cols, partition_col)
-    memo = getattr(graph, "_typed_edge_cache", None)
-    if memo is None:
-        memo = graph._typed_edge_cache = {}
-    if key not in memo:
+    key = ("typed_edges", tuple(edge_types) if edge_types else None, cols, partition_col)
+    reads = EDGE_ROWS if set(cols) - {"src", "dst", "type"} else {"edges"}
+
+    def build():
         e = graph.typed_edges(edge_types).select(*cols)
         if partition_col is not None:
             e = e.repartition(F.col(partition_col))
-        memo[key] = e.cache()
-    return memo[key]
+        return e.cache()
+
+    return graph.derived.get(key, reads, build)
 
 
 def bfs(
@@ -204,26 +203,24 @@ def reachable(graph: PropertyGraph, start_ids: list[int], edge_types: list[str] 
 
 def _degree_folded_edges(graph: PropertyGraph) -> DataFrame:
     """(src, dst, deg=outdeg(src)) — the cached message-passing edge
-    table shared by pagerank / personalized_pagerank. Memoized on the
-    graph object (same session-amortization pattern as the ANN bucket
-    tables and _GRAPH_CACHE): the fold costs one groupBy + join over the
-    full edge set, and every subsequent *-pagerank call on the same
-    graph reuses the materialized cache instead of rebuilding it."""
-    cached = getattr(graph, "_degree_edges", None)
-    if cached is not None:
-        return cached
-    edges = graph.edges.select("src", "dst")
-    deg = (
-        edges.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
-        .withColumnRenamed("src", "deg_src")
-    )
-    e2 = (
-        edges.join(deg, edges.src == F.col("deg_src"))
-        .select("src", "dst", "deg")
-        .cache()
-    )
-    graph._degree_edges = e2
-    return e2
+    table shared by pagerank / personalized_pagerank, one registry entry
+    per graph: the fold costs one groupBy + join over the full edge
+    set, and every subsequent *-pagerank call on the same graph reuses
+    the materialized cache instead of rebuilding it."""
+
+    def build():
+        edges = graph.edges.select("src", "dst")
+        deg = (
+            edges.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
+            .withColumnRenamed("src", "deg_src")
+        )
+        return (
+            edges.join(deg, edges.src == F.col("deg_src"))
+            .select("src", "dst", "deg")
+            .cache()
+        )
+
+    return graph.derived.get("degree_edges", {"edges"}, build)
 
 
 # lineage is truncated every CHECKPOINT_EVERY iterations, not every one:
@@ -235,60 +232,44 @@ def _degree_folded_edges(graph: PropertyGraph) -> DataFrame:
 CHECKPOINT_EVERY = 5
 
 
-def _node_ids(graph: PropertyGraph) -> DataFrame:
-    """(id) projection backed by the graph's cached slim (id,label)
-    projection when PropertyGraph.cache() has pinned one — the full
-    nodes frame is a 7-way union of parquet scans on the TPC-H graph
-    and re-scanning it per call/sample is pure I/O (round-16; the
-    pagerank final attach alone re-read every table). Same row
-    multiplicity as graph.nodes (one row per label)."""
-    slim = getattr(graph, "_nodes_slim", None)
-    base = slim if slim is not None else graph.nodes
-    return base.select("id")
-
-
 def _mass_edges(graph: PropertyGraph) -> DataFrame:
     """(src, dst, deg, cnt): the degree-folded edge table with the
     source node's multiplicity in the node table attached (multi-labeled
     nodes are one row per label — SURVEY §2.5 — and the dense rank
-    vector joined each edge once per label row). Memoized on the graph
-    like _degree_folded_edges."""
-    cached = getattr(graph, "_mass_edges", None)
-    if cached is not None:
-        return cached
-    e2 = _degree_folded_edges(graph)
-    cnt = _node_ids(graph).groupBy("id").agg(F.count(F.lit(1)).alias("cnt"))
-    e3 = (
-        e2.join(cnt.withColumnRenamed("id", "cnt_src"), e2.src == F.col("cnt_src"))
-        .select("src", "dst", "deg", "cnt")
-        # dst-keyed cache (round-16): the pagerank loop aggregates the
-        # contributions by dst every iteration; hash-partitioning the
-        # cached table once lets that groupBy reuse the cache's
-        # partitioning (alias-aware: dst -> id survives the broadcast
-        # join + projection), so the per-iteration Exchange disappears
-        # while the sparse rank vector broadcasts. Partition count comes
-        # from spark.sql.shuffle.partitions (scale-adaptive, not a
-        # local[32] constant); the non-broadcast fallback path shuffles
-        # on src exactly as before.
-        .repartition(F.col("dst"))
-        .cache()
-    )
-    graph._mass_edges = e3
-    return e3
+    vector joined each edge once per label row). A registry entry like
+    _degree_folded_edges."""
+
+    def build():
+        e2 = _degree_folded_edges(graph)
+        cnt = graph.label_nodes(None).groupBy("id").agg(F.count(F.lit(1)).alias("cnt"))
+        return (
+            e2.join(cnt.withColumnRenamed("id", "cnt_src"), e2.src == F.col("cnt_src"))
+            .select("src", "dst", "deg", "cnt")
+            # dst-keyed cache (round-16): the pagerank loop aggregates the
+            # contributions by dst every iteration; hash-partitioning the
+            # cached table once lets that groupBy reuse the cache's
+            # partitioning (alias-aware: dst -> id survives the broadcast
+            # join + projection), so the per-iteration Exchange disappears
+            # while the sparse rank vector broadcasts. Partition count comes
+            # from spark.sql.shuffle.partitions (scale-adaptive, not a
+            # local[32] constant); the non-broadcast fallback path shuffles
+            # on src exactly as before.
+            .repartition(F.col("dst"))
+            .cache()
+        )
+
+    return graph.derived.get("mass_edges", {"labels", "edges"}, build)
 
 
 def _distinct_node_ids(graph: PropertyGraph) -> DataFrame:
     """Distinct (id) set, cached once per graph (round-17): hits and
     eigenvector re-deduped + re-cached the node-id set per CALL (cache
-    fill + unpersist inside each call), so every bench sample re-paid
-    the dedup over the nodes union. Memoized on the graph like
-    _degree_folded_edges; lives for the graph's lifetime."""
-    cached = getattr(graph, "_node_ids_distinct", None)
-    if cached is None:
-        cached = graph._node_ids_distinct = (
-            _node_ids(graph).dropDuplicates(["id"]).cache()
-        )
-    return cached
+    fill + unpersist inside each call), so every call re-paid the
+    dedup over the nodes union."""
+    return graph.derived.get(
+        "distinct_node_ids", {"labels"},
+        lambda: graph.label_nodes(None).dropDuplicates(["id"]).cache(),
+    )
 
 
 def _distinct_edges(graph: PropertyGraph, partition_col: str = "dst") -> DataFrame:
@@ -299,37 +280,31 @@ def _distinct_edges(graph: PropertyGraph, partition_col: str = "dst") -> DataFra
     phase aggregates by (s, v=dst) off the dst-keyed copy, its backward
     phase by (s, v=u=src) off the src-keyed copy; either way the
     subset-key rule erases the per-layer exchange."""
-    memo = getattr(graph, "_edges_distinct", None)
-    if memo is None:
-        memo = graph._edges_distinct = {}
-    if partition_col not in memo:
-        memo[partition_col] = (
-            graph.edges.select("src", "dst")
-            .dropDuplicates(["src", "dst"])
-            .repartition(F.col(partition_col))
-            .cache()
-        )
-    return memo[partition_col]
+    return graph.derived.get(
+        ("distinct_edges", partition_col), {"edges"},
+        lambda: graph.edges.select("src", "dst")
+        .dropDuplicates(["src", "dst"])
+        .repartition(F.col(partition_col))
+        .cache(),
+    )
 
 
 def _distinct_node_count(graph: PropertyGraph) -> int:
     """|distinct ids|, memoized on the graph (round-17) — the broadcast
     size gate for score-vector loops (every loop vector has at most this
     many rows) and eigenvector's 1/N seed."""
-    n = getattr(graph, "_n_nodes_distinct", None)
-    if n is None:
-        n = graph._n_nodes_distinct = _distinct_node_ids(graph).count()
-    return n
+    return graph.derived.get(
+        "distinct_node_count", {"labels"}, lambda: _distinct_node_ids(graph).count()
+    )
 
 
 def _sym_edges(graph: PropertyGraph) -> DataFrame:
     """Distinct symmetric (src, dst) topology — the undirected view
     connected_components folds per call — cached once per graph
     (round-17, same pattern as _distinct_edges)."""
-    cached = getattr(graph, "_edges_sym", None)
-    if cached is None:
+    def build():
         e = graph.edges.select("src", "dst")
-        cached = graph._edges_sym = (
+        return (
             e.unionByName(
                 e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
             )
@@ -341,18 +316,16 @@ def _sym_edges(graph: PropertyGraph) -> DataFrame:
             .repartition(F.col("dst"))
             .cache()
         )
-    return cached
+
+    return graph.derived.get("sym_edges", {"edges"}, build)
 
 
 def _node_count(graph: PropertyGraph) -> int:
-    """|V|, memoized on the graph object (the node table is immutable for
-    the graph's lifetime — same contract as _GRAPH_CACHE / the stats
-    store): every *-pagerank call needs N and the count job recurred per
-    call."""
-    n = getattr(graph, "_n_nodes", None)
-    if n is None:
-        n = graph._n_nodes = _node_ids(graph).count()
-    return n
+    """|V| (label rows), a registry entry: every *-pagerank call needs N
+    and the count job recurred per call."""
+    return graph.derived.get(
+        "node_count", {"labels"}, lambda: graph.label_nodes(None).count()
+    )
 
 
 def pagerank(graph: PropertyGraph, iters: int = 3, damping: float = 0.85) -> DataFrame:
@@ -377,7 +350,7 @@ def pagerank(graph: PropertyGraph, iters: int = 3, damping: float = 0.85) -> Dat
     left-join the sparse vector into the cached edge table with the
     constant as the null-fill. This removes the per-iteration
     nodes-union Exchange+Sort+SortMergeJoin the dense form paid to
-    re-attach zero-mass nodes (measured plan, plans/r16/) — the full
+    re-attach zero-mass nodes (measured in the round-16 plans) — the full
     node set is joined exactly once, after the loop. The sparse vector
     is the broadcast side while N is under BROADCAST_SET_MAX_ROWS
     (size-aware, like bfs/sssp frontiers — at cluster scale the rank
@@ -395,7 +368,7 @@ def pagerank(graph: PropertyGraph, iters: int = 3, damping: float = 0.85) -> Dat
     e3 = _mass_edges(graph)
     n = _node_count(graph)
     if iters <= 0:
-        return _node_ids(graph).select("id", F.lit(1.0 / n).alias("pr"))
+        return graph.label_nodes(None).select("id", F.lit(1.0 / n).alias("pr"))
     base = (1.0 - damping) / n
     pr = None  # sparse (id, pr); None = uniform 1/N (iteration 0 state)
     default = 1.0 / n  # rank of any node outside the sparse support
@@ -426,7 +399,7 @@ def pagerank(graph: PropertyGraph, iters: int = 3, damping: float = 0.85) -> Dat
         if (i + 1) % CHECKPOINT_EVERY == 0 and i + 1 < iters:
             pr = iter_checkpoint(pr)
     return (
-        _node_ids(graph)
+        graph.label_nodes(None)
         .join(pr, on="id", how="left")
         .select("id", F.coalesce(F.col("pr"), F.lit(default)).alias("pr"))
     )
@@ -442,28 +415,24 @@ def weighted_pagerank(
         pr_{t+1}(v) = (1-d)/N + d · Σ_{u→v} pr_t(u) · w(u,v)/W(u)
 
     Same Pregel shape and memoized fold as pagerank (the weight-summed
-    edge table is built once per graph per weight column and cached —
-    keyed by weight_col, mirroring _cached_typed_edges, so two calls
-    with different weight columns never share a fold); each iteration
-    moves only the rank vector."""
-    nodes = _node_ids(graph).cache()
-    cache = getattr(graph, "_weight_edges", None)
-    if cache is None or not isinstance(cache, dict):
-        cache = {}
-        graph._weight_edges = cache
-    e3 = cache.get(weight_col)
-    if e3 is None:
+    edge table is one registry entry per graph per weight column, so
+    two calls with different weight columns never share a fold); each
+    iteration moves only the rank vector."""
+
+    def build():
         edges = graph.edges.select("src", "dst", F.col(weight_col).alias("w"))
         tot = (
             edges.groupBy("src").agg(F.sum("w").alias("wsum"))
             .withColumnRenamed("src", "w_src")
         )
-        e3 = (
+        return (
             edges.join(tot, edges.src == F.col("w_src"))
             .select("src", "dst", "w", "wsum")
             .cache()
         )
-        cache[weight_col] = e3
+
+    nodes = graph.label_nodes(None).cache()
+    e3 = graph.derived.get(("weight_edges", weight_col), EDGE_ROWS, build)
     try:
         n = nodes.count()
         pr = nodes.withColumn("pr", F.lit(1.0 / n))
@@ -506,7 +475,7 @@ def personalized_pagerank(
     one dst-keyed aggregation per iteration; lineage truncated); the
     reset vector is a cached per-node column joined in place of the
     uniform constant."""
-    nodes = _node_ids(graph).cache()
+    nodes = graph.label_nodes(None).cache()
     s = seeds.select("id").dropDuplicates()
     e2 = _degree_folded_edges(graph)
     reset = (
@@ -554,7 +523,7 @@ def connected_components(graph: PropertyGraph, max_iters: int = 30) -> DataFrame
     # graph-lifetime memo (round-17): the symmetric fold was re-built and
     # re-cached per call (and unpersisted on exit)
     sym = _sym_edges(graph)
-    comp = _node_ids(graph).select("id", F.col("id").alias("component"))
+    comp = graph.label_nodes(None).select("id", F.col("id").alias("component"))
     # the label vector and the per-iteration min table are both bounded
     # by the node-table row count — one memoized count gates every
     # broadcast below (round-17: the unknown-size checkpoint stats
@@ -1174,8 +1143,8 @@ def hits(graph: PropertyGraph, iters: int = 3) -> DataFrame:
     JOINED the full node set onto every half-step aggregate to assign
     zeros, and because the checkpointed vector has unknown size stats
     the planner ran SortMergeJoin — two exchanges + sorts of node- and
-    edge-sized tables per half-step (measured 38.7 s isolated at sf0.1;
-    plans/r17/graph_hits_before.txt). Zeros are attached ONCE after the
+    edge-sized tables per half-step (measured 38.7 s isolated at
+    sf0.1). Zeros are attached ONCE after the
     loop. Equivalence is exact, not approximate: from hub_0 = 1
     everywhere, every score on the support is strictly positive, the
     sparse support IS the nonzero support, and a node outside it (no
@@ -1406,7 +1375,7 @@ def eigenvector_centrality(
     iteration, zeros attached ONCE after the loop. The old form
     left-joined the full node set every iteration and the unknown-size
     checkpoint stats forced SortMergeJoin (two exchanges + sorts per
-    step; plans/r17/graph_eigenvector_before.txt)."""
+    step)."""
     # graph-lifetime memos (round-17): nodes/edges/count were re-cached
     # and re-counted per call (and unpersisted on exit), so every call
     # re-paid the dedup, the edge projection fill, and the count job

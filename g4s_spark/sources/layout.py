@@ -60,7 +60,7 @@ def read_graph(spark: SparkSession, path: str) -> PropertyGraph:
     stats_path = f"{path}/stats.json"
     if os.path.exists(stats_path):
         with open(stats_path) as fh:
-            g._stats = stats_from_dict(json.load(fh))
+            g.stats = stats_from_dict(json.load(fh))
     return g
 
 

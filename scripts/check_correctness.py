@@ -41,46 +41,6 @@ def value_hash(cols: list[str], rows: list[tuple]) -> tuple[str, int]:
     return h, len(lines)
 
 
-def run_queue(queries: dict, oracles: dict, app_name: str = "queue_check") -> None:
-    """Shared verification harness for the rN_queue.py staging files:
-    run each staged gate on Spark, its oracle on DuckDB over the same
-    parquet views, compare schema + rows + value hash; exit 1 on any
-    mismatch. ONE implementation so the staging areas can never verify
-    differently from each other (round-11 review finding)."""
-    import duckdb
-
-    from g4s_spark.session import get_spark
-
-    spark = get_spark(app_name)
-    con = duckdb.connect()
-    for t in ["region", "nation", "customer", "supplier", "part", "orders",
-              "lineitem", "events", "documents", "embeddings"]:
-        con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{SF_DIR}/{t}.parquet'")
-    failed = 0
-    for name, fn in queries.items():
-        t0 = time.time()
-        # per-gate isolation like main(): one raising gate must report
-        # as ITS failure and let the rest verify (round-11 review)
-        try:
-            sdf = fn(spark, SF_DIR)
-            scols, srows = sdf.columns, [tuple(r) for r in sdf.collect()]
-            rel = con.sql(oracles[name])
-            ocols, orows = rel.columns, rel.fetchall()
-        except Exception as e:
-            failed += 1
-            print(f"FAIL  {name}: error: {str(e)[:200]}")
-            continue
-        sh, sn = value_hash(scols, srows)
-        oh, on = value_hash(ocols, orows)
-        ok = sorted(scols) == sorted(ocols) and sn == on and sh == oh
-        failed += 0 if ok else 1
-        print(f"{'ok  ' if ok else 'FAIL'}  {name}: {sn} vs {on} rows, "
-              f"hash {'match' if sh == oh else 'MISMATCH'}  "
-              f"({time.time() - t0:.1f}s)")
-    print(f"\n{len(queries) - failed} passed, {failed} failed")
-    sys.exit(1 if failed else 0)
-
-
 def main():
     import duckdb
 

@@ -48,45 +48,6 @@ def test_no_gate_returns_array_or_map_columns(spark):
     assert not bad, bad
 
 
-def test_bench_headline_gates_are_registered():
-    """bench.py's HEADLINE list must name live registry gates: round-10
-    found the hard way that retiring a gate without updating the bench
-    breaks the driver's BENCH run (events_window_agg KeyError)."""
-    import bench
-
-    missing = [q for q in bench.HEADLINE if q not in E.oracle_sql()]
-    assert not missing, f"bench HEADLINE names unregistered gates: {missing}"
-
-
-def test_bench_round_stamp_from_ledger(tmp_path):
-    """bench_history records stamp their round from WINDOW_LEDGER's max
-    entry, not max(BENCH_r*)+1 — the artifact inference mislabeled a
-    mid-round rerun taken AFTER the driver archived (VERDICT r14 #3).
-    Fabricated set: ledger says round 9 even though BENCH_r09 already
-    exists (the old inference would say 10); no ledger → artifact
-    fallback; neither → None."""
-    import json
-
-    import bench
-
-    repo = str(tmp_path)
-    (tmp_path / "BENCH_r08.json").write_text("{}")
-    (tmp_path / "BENCH_r09.json").write_text("{}")
-    (tmp_path / "WINDOW_LEDGER.json").write_text(
-        json.dumps({"8": [], "9": []})
-    )
-    assert bench._current_round(repo) == 9
-    # a ledger holding a non-iterable JSON value must fall back to the
-    # artifact inference, not abort with TypeError (ADVICE r15)
-    (tmp_path / "WINDOW_LEDGER.json").write_text("7")
-    assert bench._current_round(repo) == 10
-    (tmp_path / "WINDOW_LEDGER.json").unlink()
-    assert bench._current_round(repo) == 10
-    (tmp_path / "BENCH_r08.json").unlink()
-    (tmp_path / "BENCH_r09.json").unlink()
-    assert bench._current_round(repo) == 1
-
-
 def test_window_ledger_matches_current_window():
     """WINDOW_LEDGER.json records each round's driver window (rounds
     1..N-1 from the CORRECTNESS files, round N = the planned window).

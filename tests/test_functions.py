@@ -782,7 +782,7 @@ def test_graph_stats_persistence(spark, tmp_path):
     path = str(tmp_path / "g")
     save_graph(g, path)
     g2 = load_graph(spark, path)
-    assert g2._stats is not None  # warm before any query
+    assert "stats" in g2.derived  # warm before any query
     assert g2.stats.label_counts == {"A": 2, "B": 1}
     assert g2.stats.type_counts == {"E": 2}
     assert g2.stats.triplet_counts == {("A", "E", "B"): 2}

@@ -695,7 +695,7 @@ def test_semi_skip_fires_on_synth_graph_and_snapshot_roundtrip(spark, tmp_path):
     path = str(tmp_path / "synthg")
     write_graph(g, path)
     g2 = read_graph(spark, path)
-    assert g2._stats is not None and g2._stats.single_label is True
+    assert "stats" in g2.derived and g2.stats.single_label is True
     planned2 = plan_match(g2, parse("MATCH (a:S)-[:X]->(b:T) RETURN a, b"))
     assert steps_of(planned2, "semi_skip"), planned2.steps
     got = {(r.a, r.b) for r in planned2.df.collect()}
@@ -725,7 +725,7 @@ def test_semi_skip_refused_under_preflag_stats_snapshot(spark, tmp_path):
     with open(f"{path}/stats.json", "w") as fh:
         _json.dump(d, fh)
     g2 = read_graph(spark, path)
-    assert g2._stats is not None and g2._stats.single_label is None
+    assert "stats" in g2.derived and g2.stats.single_label is None
     planned = plan_match(g2, parse("MATCH (a:A)-[:X]->(b:B) RETURN a, b"))
     assert not steps_of(planned, "semi_skip"), planned.steps
     assert steps_of(planned, "semi"), planned.steps
