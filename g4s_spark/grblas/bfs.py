@@ -9,15 +9,16 @@ it plans as a left-anti join on the vector index (shuffle-free when the
 frontier is broadcastable).
 
 The DataFrame-native BFS in ``operators/algorithms.py`` remains the
-production path (size-aware broadcast, checkpointing); this one exists to
-prove kernel-parity: BFS is expressible purely in GraphBLAS calls.
+production path (size-aware broadcast); this one exists to prove
+kernel-parity: BFS is expressible purely in GraphBLAS calls. Both run
+through the package's one fixpoint driver (``checkpointing.fixpoint``).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from ..checkpointing import iter_checkpoint
+from ..checkpointing import fixpoint
 
 from .matrix import Matrix, Vector, vxm
 from .semiring import LOR_LAND
@@ -34,20 +35,22 @@ def bfs_levels(adj: Matrix, start_ids: list[int]) -> Vector:
     over LOR_LAND — each round discovers exactly the unvisited vertices
     adjacent to the frontier."""
     spark = adj.df.sparkSession
-    levels = Vector.from_tuples(spark, [(int(s), 0) for s in start_ids], adj.nrows, "long")
-    frontier = Vector.from_tuples(
-        spark, [(int(s), True) for s in start_ids], adj.nrows, "boolean"
+    n = adj.nrows
+    levels = spark.createDataFrame([(int(s), 0) for s in start_ids], "i long, v long")
+    frontier = spark.createDataFrame([(int(s), True) for s in start_ids], "i long, v boolean")
+
+    def expand(_i, levels, frontier, _n_levels, _n_frontier):
+        return vxm(
+            Vector(frontier, n), adj, LOR_LAND, mask=Vector(levels, n), mask_complement=True
+        ).df
+
+    def merge(i, levels, nxt):
+        return levels.unionByName(nxt.select("i", F.lit(i + 1).cast("long").alias("v")))
+
+    return Vector(
+        fixpoint(
+            expand, merge, levels, frontier, MAX_BFS_ITERS,
+            f"bfs_levels did not converge within {MAX_BFS_ITERS} iterations",
+        ),
+        n,
     )
-    for level in range(1, MAX_BFS_ITERS + 1):
-        nxt = vxm(frontier, adj, LOR_LAND, mask=levels, mask_complement=True)
-        nxt.df = iter_checkpoint(nxt.df)
-        if nxt.df.limit(1).count() == 0:
-            return levels
-        levels = Vector(
-            iter_checkpoint(levels.df.unionByName(
-                nxt.df.select("i", F.lit(level).cast("long").alias("v"))
-            )),
-            levels.size,
-        )
-        frontier = nxt
-    raise RuntimeError(f"bfs_levels did not converge within {MAX_BFS_ITERS} iterations")

@@ -7,15 +7,17 @@ fixpoint, convergence via isEq (DocSpec.scala:55-101).
 Scale notes:
 - each iteration is one shuffle join keyed on the frontier ids; the
   frontier/visited sets are distinct-keyed DataFrames, never collected,
-- ``iter_checkpoint()`` truncates lineage so plan size stays O(1)
-  across iterations (SURVEY §7.3) — every iteration for
-  convergence-tested loops (the count() materializes anyway), every
-  CHECKPOINT_EVERY for fixed-iteration loops (a checkpoint is a full
-  materialization pass; shallow lineage is cheaper than paying it each
-  round). Set G4S_CHECKPOINT_DIR for reliable checkpoints on a cluster
-  (see g4s_spark.checkpointing),
-- convergence tests are anti-join counts (limit-1), not full equality
-  scans.
+- every frontier loop (bfs, sssp, components, scc, topological_layers,
+  the betweenness forward phase) runs through
+  ``checkpointing.fixpoint``: each round's delta is checkpointed lazily
+  and counted ONCE — that count is the convergence test and the
+  broadcast-size input — and the merged state is checkpointed lazily,
+  so plan size stays O(1) across iterations (SURVEY §7.3) at one job
+  per round. Fixed-iteration loops truncate every CHECKPOINT_EVERY
+  instead (a checkpoint is a full materialization pass; shallow
+  lineage is cheaper than paying it each round). Set
+  G4S_CHECKPOINT_DIR for reliable checkpoints on a cluster (see
+  g4s_spark.checkpointing).
 """
 
 from __future__ import annotations
@@ -23,7 +25,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..checkpointing import iter_checkpoint
+from ..checkpointing import MAX_CLOSURE_ITERS, fixpoint, iter_checkpoint
 from ..graph.store import EDGE_ROWS, PropertyGraph
 
 # frontier/visited sets below this row count are broadcast into the expand
@@ -33,12 +35,6 @@ from ..graph.store import EDGE_ROWS, PropertyGraph
 # is driver-side arithmetic over counts we already have (the checkpointed
 # delta sets), so being size-aware costs nothing.
 BROADCAST_SET_MAX_ROWS = 1_000_000
-
-# inner-fixpoint bound shared by the iterative operators (matches the
-# planner's closure bound): hitting it raises rather than returning a
-# silently-unconverged result
-MAX_CLOSURE_ITERS = 64
-
 
 def _bc(df: DataFrame, n_rows: int, broadcast: bool | None):
     """broadcast=None -> size-aware (default); True/False -> forced."""
@@ -101,35 +97,23 @@ def bfs(
     spark = graph.spark
     edges = _cached_typed_edges(graph, edge_types, ("src", "dst"))
     visited = spark.createDataFrame([(int(s), 0) for s in start_ids], "id long, dist long")
-    frontier = visited.select("id")
-    n_frontier = n_visited = len(start_ids)
-    dist = 0
-    while max_hops is None or dist < max_hops:
-        dist += 1
-        nxt = (
+
+    def expand(_i, visited, frontier, n_visited, n_frontier):
+        return (
             _bc(frontier, n_frontier, broadcast_frontier)
             .join(edges, frontier.id == edges.src)
             .select(F.col("dst").alias("id"))
             .dropDuplicates(["id"])
             .join(_bc(visited.select("id"), n_visited, broadcast_frontier), on="id", how="left_anti")
         )
-        # lazy checkpoint + count = ONE job per iteration (round-16):
-        # eager=True ran a materialization job and then the count; with
-        # eager=False the count triggers the materialization and later
-        # consumers hit the stored blocks. The growing visited set is
-        # also marked lazily — it materializes as a byproduct of the
-        # next iteration's anti-join (each level exactly once).
-        nxt = iter_checkpoint(nxt, eager=False)
-        n_new = nxt.count()
-        if n_new == 0:
-            break
-        visited = iter_checkpoint(
-            visited.unionByName(nxt.withColumn("dist", F.lit(dist))), eager=False
-        )
-        frontier = nxt
-        n_frontier = n_new
-        n_visited += n_new
-    return visited
+
+    def merge(i, visited, nxt):
+        return visited.unionByName(nxt.withColumn("dist", F.lit(i + 1)))
+
+    n = len(start_ids)
+    return fixpoint(
+        expand, merge, visited, visited.select("id"), max_hops, n_state=n, n_delta=n
+    )
 
 
 def sssp(
@@ -154,9 +138,8 @@ def sssp(
     wtype = dict(edges.dtypes)["w"]
     zero = 0.0 if wtype in ("double", "float") else 0
     dist = spark.createDataFrame([(int(s), zero) for s in start_ids], f"id long, dist {wtype}")
-    frontier = dist  # nodes whose distance improved last round
-    n_frontier = n_dist = len(start_ids)
-    for _ in range(max_iters):
+
+    def expand(_i, dist, frontier, n_dist, n_frontier):
         candidates = (
             _bc(frontier, n_frontier, broadcast_frontier)
             .join(edges, frontier.id == edges.src)
@@ -165,35 +148,22 @@ def sssp(
             .agg(F.min("dist").alias("dist"))
         )
         # keep only strict improvements over current distances
-        improved = (
+        return (
             candidates.alias("c")
             .join(_bc(dist, n_dist, broadcast_frontier).alias("d"), on="id", how="left")
             .filter(F.col("d.dist").isNull() | (F.col("c.dist") < F.col("d.dist")))
             .select("id", F.col("c.dist").alias("dist"))
         )
-        # lazy checkpoint + count = ONE job per iteration (round-16),
-        # same pattern as bfs; the merged dist vector is marked lazily
-        # and materializes inside the next iteration's improvement join.
-        improved = iter_checkpoint(improved, eager=False)
-        n_improved = improved.count()
-        if n_improved == 0:
-            break
-        dist = iter_checkpoint(
-            dist.join(improved.select("id"), on="id", how="left_anti").unionByName(improved),
-            eager=False,
-        )
-        frontier = improved
-        n_frontier = n_improved
-        # |dist| grows by at most the improved count; the exact size was
-        # only consumed by the broadcast-size gate, so the (monotone)
-        # upper bound replaces a full count job per iteration
-        n_dist += n_improved
-    else:
-        raise RuntimeError(
-            f"sssp did not converge within {max_iters} iterations; "
-            "raise max_iters (matches MAX_CLOSURE_ITERS hard-error behavior)"
-        )
-    return dist
+
+    def merge(_i, dist, improved):
+        return dist.join(improved.select("id"), on="id", how="left_anti").unionByName(improved)
+
+    n = len(start_ids)
+    return fixpoint(
+        expand, merge, dist, dist, max_iters,
+        f"sssp did not converge within {max_iters} iterations; raise max_iters",
+        n_state=n, n_delta=n,
+    )
 
 
 def reachable(graph: PropertyGraph, start_ids: list[int], edge_types: list[str] | None = None) -> DataFrame:
@@ -513,6 +483,53 @@ def personalized_pagerank(
     return pr
 
 
+def _min_labels(edges: DataFrame, labels: DataFrame, n_rows: int, cap: int, error: str) -> DataFrame:
+    """HashMin to fixpoint: every node takes the least ``label`` among
+    itself and the nodes that reach it along ``edges`` (src -> dst,
+    cached dst-keyed). ``labels`` is (id, label), every node's starting
+    label; the result has the same shape. The one min-label propagation
+    behind connected_components and scc's forward coloring.
+
+    Semi-naive messages (round-17): a node's label can only improve via
+    a neighbor whose label improved LAST round (its older message was
+    already incorporated), so only the improved set sends. Every table
+    here is bounded by ``n_rows`` — one static gate for the broadcasts
+    (round-17: unknown-size checkpoint stats forced SortMergeJoin,
+    shuffling + sorting the edge table every round; broadcasting the
+    delta keeps the dst-partitioned cache layout, so the min
+    aggregation needs no exchange either)."""
+
+    updated = None  # the whole vector after the last round, change flag in-row
+
+    def expand(_i, labels, delta, _n_labels, _n_delta):
+        nonlocal updated
+        nmin = (
+            _bc(delta, n_rows, None).join(edges, delta.id == edges.src)
+            .select(F.col("dst").alias("id"), F.col("label"))
+            .groupBy("id")
+            .agg(F.min("label").alias("nmin"))
+        )
+        # in-row change flag (round-17): the updated vector is stored by
+        # the same job as the driver's count, so merge is a projection of
+        # its blocks, not one more join (and the vector keeps its
+        # partitioning — an anti-join + union would add the delta's
+        # partitions every round)
+        updated = iter_checkpoint(
+            labels.join(_bc(nmin, n_rows, None), on="id", how="left").select(
+                "id",
+                F.least(F.col("label"), F.coalesce(F.col("nmin"), F.col("label"))).alias("label"),
+                (F.col("nmin") < F.col("label")).alias("_chg"),
+            ),
+            eager=False,
+        )
+        return updated.filter(F.col("_chg")).select("id", "label")
+
+    def merge(_i, _labels, _improved):
+        return updated.drop("_chg")
+
+    return fixpoint(expand, merge, labels, labels, cap, error)
+
+
 def connected_components(graph: PropertyGraph, max_iters: int = 30) -> DataFrame:
     """Undirected connected components by iterative min-id label
     propagation (HashMin / Pregel style): each node adopts the smallest
@@ -520,57 +537,12 @@ def connected_components(graph: PropertyGraph, max_iters: int = 30) -> DataFrame
     (id long, component long). Raises if max_iters is hit before the
     fixpoint — a silently-unconverged labeling is wrong, not approximate
     (e.g. min-id propagation on a path graph longer than max_iters)."""
-    # graph-lifetime memo (round-17): the symmetric fold was re-built and
-    # re-cached per call (and unpersisted on exit)
-    sym = _sym_edges(graph)
-    comp = graph.label_nodes(None).select("id", F.col("id").alias("component"))
-    # the label vector and the per-iteration min table are both bounded
-    # by the node-table row count — one memoized count gates every
-    # broadcast below (round-17: the unknown-size checkpoint stats
-    # forced SortMergeJoin, shuffling + sorting the symmetric edge table
-    # EVERY iteration; broadcasting the vector keeps the dst-partitioned
-    # cache layout, so the min aggregation needs no exchange either)
-    n_rows = _node_count(graph)
-    # semi-naive messages (round-17): a node's label can only improve
-    # via a neighbor whose label improved LAST round (its older message
-    # was already incorporated), so only the changed set sends — the
-    # message join shrinks geometrically after the first rounds while
-    # results stay identical (min-propagation closure; the same
-    # delta-evaluation topological_layers always used)
-    delta = comp
-    for _ in range(max_iters):
-        neighbor_min = (
-            _bc(delta, n_rows, None).join(sym, delta.id == sym.src)
-            .select(F.col("dst").alias("id"), F.col("component"))
-            .groupBy("id")
-            .agg(F.min("component").alias("nmin"))
-        )
-        # carry the did-it-change flag in the row (round-17): the old
-        # probe re-joined new vs old labels — a whole extra join per
-        # iteration just to ask "any strict improvement?"; the flag is
-        # known at update time and the probe becomes a filter scan of
-        # the checkpoint the convergence count materializes anyway
-        new_comp = (
-            comp.join(_bc(neighbor_min, n_rows, None), on="id", how="left")
-            .select(
-                "id",
-                F.least(F.col("component"), F.coalesce(F.col("nmin"), F.col("component"))).alias("component"),
-                (F.col("nmin") < F.col("component")).alias("_chg"),
-            )
-        )
-        # lazy: the changed-probe count materializes the checkpoint
-        new_comp = iter_checkpoint(new_comp, eager=False)
-        changed = new_comp.filter(F.col("_chg")).limit(1).count()
-        comp = new_comp.drop("_chg")
-        delta = new_comp.filter(F.col("_chg")).select("id", "component")
-        if changed == 0:
-            break
-    else:
-        raise RuntimeError(
-            f"connected_components did not converge within {max_iters} "
-            "iterations; raise max_iters"
-        )
-    return comp
+    labels = graph.label_nodes(None).select("id", F.col("id").alias("label"))
+    return _min_labels(
+        _sym_edges(graph), labels, _node_count(graph), max_iters,
+        f"connected_components did not converge within {max_iters} "
+        "iterations; raise max_iters",
+    ).withColumnRenamed("label", "component")
 
 
 def k_core(pairs: DataFrame, k: int, max_iters: int = 30) -> DataFrame:
@@ -1235,124 +1207,88 @@ def strongly_connected_components(
 
     Scale shape: each inner step is one shuffle on dst (forward) or
     src (backward) plus a semi/anti join — the BFS/HashMin shape every
-    fixpoint here uses; lineage is cut per iteration (iter_checkpoint)
-    and the subgraph restriction is two semi-joins, so 100 TB of edges
-    never re-materializes more than the active subgraph."""
+    fixpoint here uses; all three loops run through the fixpoint driver
+    (lineage cut per round) and the subgraph restriction is two
+    semi-joins, so 100 TB of edges never re-materializes more than the
+    active subgraph."""
     e = edges.select("src", "dst").dropDuplicates(["src", "dst"]).cache()
-    nodes = (
+    nodes = iter_checkpoint(
         e.select(F.col("src").alias("id"))
         .unionByName(e.select(F.col("dst").alias("id")))
-        .dropDuplicates(["id"])
+        .dropDuplicates(["id"]),
+        eager=False,
     )
-    assigned: DataFrame | None = None
-    remaining = iter_checkpoint(nodes)
-    # every per-iteration state table (color / frontier / reach /
-    # remaining) is bounded by the node count — one up-front count gates
-    # all the broadcasts below (round-17: the unknown-size checkpoint
-    # stats forced SortMergeJoin inside BOTH inner fixpoints, paying
-    # exchange+sort barriers on every tiny iteration of a latency-bound
-    # loop; with the gate the non-broadcast fallback is byte-identical
-    # to the old plan)
-    n_nodes = remaining.count()
+    # every per-round state table (color / frontier / reach / remaining)
+    # is bounded by the unassigned node count — one up-front count and
+    # the driver's assigned count gate all the broadcasts below
+    # (round-17: the unknown-size checkpoint stats forced SortMergeJoin
+    # inside BOTH inner fixpoints, paying exchange+sort barriers on
+    # every tiny iteration of a latency-bound loop; with the gate the
+    # non-broadcast fallback is byte-identical to the old plan)
+    n_nodes = nodes.count()
+
+    def peel(_i, assigned, _delta, n_assigned, _n_delta):
+        n_left = n_nodes - n_assigned  # exact: every node is assigned once
+        if n_left == 0:
+            return assigned.limit(0)
+        remaining = iter_checkpoint(
+            nodes.join(_bc(assigned.select("id"), n_assigned, None), on="id", how="left_anti"),
+            eager=False,
+        )
+        sub = (
+            e.join(
+                _bc(remaining.select(F.col("id").alias("src")), n_left, None),
+                on="src", how="left_semi",
+            ).join(
+                _bc(remaining.select(F.col("id").alias("dst")), n_left, None),
+                on="dst", how="left_semi",
+            )
+            # dst-keyed: the forward fixpoint broadcasts color into
+            # this table and min-aggregates by dst every iteration —
+            # the cache layout makes that a zero-exchange job
+            .repartition(F.col("dst"))
+        ).cache()
+        # (1) forward min-id coloring to fixpoint
+        color = _min_labels(
+            sub, remaining.select("id", F.col("id").alias("label")), n_left,
+            MAX_CLOSURE_ITERS,
+            f"scc coloring did not converge within {MAX_CLOSURE_ITERS} iterations",
+        )
+
+        # (2) backward confinement: semi-naive frontier from the roots
+        def walk_back(_j, reach, frontier, _n_reach, _n_frontier):
+            return (
+                _bc(frontier, n_left, None).join(sub, frontier.id == sub.dst)
+                .select(F.col("src").alias("id"), F.col("label"))
+                .dropDuplicates(["id", "label"])
+                .join(_bc(color, n_left, None), on=["id", "label"], how="left_semi")
+                .join(_bc(reach, n_left, None), on=["id"], how="left_anti")
+            )
+
+        roots = color.filter(F.col("id") == F.col("label"))
+        reach = fixpoint(
+            walk_back,
+            lambda _j, reach, step: reach.unionByName(step),
+            roots, roots, MAX_CLOSURE_ITERS,
+            f"scc backward walk did not converge within {MAX_CLOSURE_ITERS} iterations",
+        )
+        sub.unpersist()
+        return reach.select("id", F.col("label").alias("scc"))
+
+    # (3) one peel per round until every node is assigned: the cap is
+    # max_iters PEELS, plus the round that finds nothing left — a run
+    # whose condensation depth EQUALS max_iters peels everything on the
+    # last allowed round (round-9, ADVICE r8)
+    empty = edges.sparkSession.createDataFrame([], "id long, scc long")
     try:
-        for _outer in range(max_iters):
-            if n_nodes == 0:
-                break
-            sub = (
-                e.join(
-                    _bc(remaining.select(F.col("id").alias("src")), n_nodes, None),
-                    on="src", how="left_semi",
-                ).join(
-                    _bc(remaining.select(F.col("id").alias("dst")), n_nodes, None),
-                    on="dst", how="left_semi",
-                )
-                # dst-keyed: the forward fixpoint broadcasts color into
-                # this table and min-aggregates by dst every iteration —
-                # the cache layout makes that a zero-exchange job
-                .repartition(F.col("dst"))
-            ).cache()
-            # (1) forward min-id coloring to fixpoint — semi-naive
-            # messages, same delta argument as connected_components
-            color = remaining.select("id", F.col("id").alias("color"))
-            delta = color
-            for _ in range(MAX_CLOSURE_ITERS):
-                neighbor_min = (
-                    _bc(delta, n_nodes, None).join(sub, delta.id == sub.src)
-                    .select(F.col("dst").alias("id"), F.col("color"))
-                    .groupBy("id")
-                    .agg(F.min("color").alias("nmin"))
-                )
-                # in-row change flag (round-17): the probe is a filter
-                # over the materialized checkpoint, not a second join
-                new_color = color.join(
-                    _bc(neighbor_min, n_nodes, None), on="id", how="left"
-                ).select(
-                    "id",
-                    F.least(
-                        F.col("color"), F.coalesce(F.col("nmin"), F.col("color"))
-                    ).alias("color"),
-                    (F.col("nmin") < F.col("color")).alias("_chg"),
-                )
-                new_color = iter_checkpoint(new_color, eager=False)
-                changed = new_color.filter(F.col("_chg")).limit(1).count()
-                color = new_color.drop("_chg")
-                delta = new_color.filter(F.col("_chg")).select("id", "color")
-                if changed == 0:
-                    break
-            else:
-                raise RuntimeError(
-                    "scc coloring did not converge within "
-                    f"{MAX_CLOSURE_ITERS} iterations"
-                )
-            # (2) backward confinement: semi-naive frontier from the roots
-            reach = iter_checkpoint(
-                color.filter(F.col("id") == F.col("color"))
-            )
-            frontier = reach
-            for _ in range(MAX_CLOSURE_ITERS):
-                step = (
-                    _bc(frontier, n_nodes, None).join(sub, frontier.id == sub.dst)
-                    .select(F.col("src").alias("id"), F.col("color"))
-                    .dropDuplicates(["id", "color"])
-                    .join(_bc(color, n_nodes, None), on=["id", "color"], how="left_semi")
-                    .join(_bc(reach, n_nodes, None), on=["id"], how="left_anti")
-                )
-                step = iter_checkpoint(step)
-                if step.limit(1).count() == 0:
-                    break
-                reach = iter_checkpoint(reach.unionByName(step))
-                frontier = step
-            else:
-                raise RuntimeError(
-                    "scc backward walk did not converge within "
-                    f"{MAX_CLOSURE_ITERS} iterations"
-                )
-            scc = reach.select("id", F.col("color").alias("scc"))
-            assigned = (
-                scc if assigned is None else assigned.unionByName(scc)
-            )
-            assigned = iter_checkpoint(assigned)
-            remaining = iter_checkpoint(
-                remaining.join(
-                    _bc(scc.select("id"), n_nodes, None), on="id", how="left_anti"
-                )
-            )
-            n_nodes = remaining.count()
-            sub.unpersist()
-        else:
-            # exhausted the round budget — but a run whose condensation
-            # depth EQUALS max_iters peels everything on the last round
-            # (round-9, ADVICE r8): only unfinished work is an error
-            if remaining.limit(1).count() != 0:
-                raise RuntimeError(
-                    f"scc did not peel every component within {max_iters} "
-                    "rounds; raise max_iters"
-                )
+        return fixpoint(
+            peel, lambda _i, assigned, scc: assigned.unionByName(scc),
+            empty, empty, max_iters + 1,
+            f"scc did not peel every component within {max_iters} rounds; "
+            "raise max_iters",
+        )
     finally:
         e.unpersist()
-    if assigned is None:
-        return nodes.select("id", F.col("id").alias("scc"))
-    return assigned
 
 
 def eigenvector_centrality(
@@ -1463,35 +1399,34 @@ def topological_layers(edges: DataFrame, max_iters: int = 64) -> DataFrame:
         .dropDuplicates(["id"])
     )
     try:
-        layer = iter_checkpoint(nodes.withColumn("layer", F.lit(0).cast("long")))
+        layer = iter_checkpoint(nodes.withColumn("layer", F.lit(0).cast("long")), eager=False)
         # all per-round state is bounded by the node count — one up-front
         # count gates the broadcasts (round-17, same rationale as scc)
         n_nodes = layer.count()
-        delta = layer
-        for _ in range(max_iters):
+
+        def expand(_i, layer, delta, _n_layer, _n_delta):
             cand = (
                 _bc(delta, n_nodes, None).join(e, delta.id == e.src)
                 .select(F.col("dst").alias("id"), (F.col("layer") + 1).alias("l"))
                 .groupBy("id")
                 .agg(F.max("l").alias("l"))
             )
-            improved = (
+            return (
                 cand.join(_bc(layer, n_nodes, None), on="id")
                 .filter(F.col("l") > F.col("layer"))
                 .select("id", F.col("l").alias("layer"))
             )
-            improved = iter_checkpoint(improved)
-            if improved.limit(1).count() == 0:
-                return layer
-            layer = iter_checkpoint(
-                layer.join(_bc(improved.select("id"), n_nodes, None), on="id", how="left_anti")
-                .unionByName(improved)
-            )
-            delta = improved
-        raise RuntimeError(
+
+        def merge(_i, layer, improved):
+            return layer.join(
+                _bc(improved.select("id"), n_nodes, None), on="id", how="left_anti"
+            ).unionByName(improved)
+
+        return fixpoint(
+            expand, merge, layer, layer, max_iters,
             f"topological_layers exceeded {max_iters} rounds — the input "
             "has a cycle (or a longer critical path; raise max_iters). "
-            "Run condensation() first for a general directed graph."
+            "Run condensation() first for a general directed graph.",
         )
     finally:
         e.unpersist()
@@ -1605,42 +1540,40 @@ def betweenness_centrality(
             )
     else:
         seeds = spark.createDataFrame([(int(x),) for x in sources], "s long")
-    # every per-layer table is bounded by |S| x |V| rows — one static
-    # bound gates the broadcasts below (round-17: unknown-size checkpoint
-    # stats forced SortMergeJoin, shuffling + re-sorting the edge cache
-    # once per LAYER in both phases)
+    # size-gated broadcasts in both phases (round-17: unknown-size
+    # checkpoint stats forced SortMergeJoin, shuffling + re-sorting the
+    # edge cache once per LAYER). The forward phase gates on the
+    # driver's exact frontier / visited counts; the backward phase on
+    # the static |S| x |V| bound of every per-layer table.
     n_state = (
         n_nodes * n_nodes
         if sources is None
         else len(sources) * _node_count(graph)
     )
     layer0 = iter_checkpoint(
-        seeds.select(
-            "s", F.col("s").alias("v"), F.lit(1.0).alias("sigma")
-        )
+        seeds.select("s", F.col("s").alias("v"), F.lit(1.0).alias("sigma")), eager=False
     )
     layers = [layer0]  # layers[d]: (s, v, sigma) at distance d
-    visited = layer0.select("s", "v")
-    frontier = layer0
-    for _d in range(max_depth):
-        nxt = (
-            _bc(frontier, n_state, None).join(e, frontier.v == e.src)
+
+    def expand(_d, visited, frontier, n_visited, n_frontier):
+        return (
+            _bc(frontier, n_frontier, None).join(e, frontier.v == e.src)
             .select("s", F.col("dst").alias("v"), "sigma")
             .groupBy("s", "v")
             .agg(F.sum("sigma").alias("sigma"))
-            .join(_bc(visited, n_state, None), on=["s", "v"], how="left_anti")
+            .join(_bc(visited, n_visited, None), on=["s", "v"], how="left_anti")
         )
-        nxt = iter_checkpoint(nxt)
-        if nxt.limit(1).count() == 0:
-            break
+
+    def merge(_d, visited, nxt):
         layers.append(nxt)
-        visited = iter_checkpoint(visited.unionByName(nxt.select("s", "v")))
-        frontier = nxt
-    else:
-        raise RuntimeError(
-            f"betweenness forward phase exceeded {max_depth} layers; "
-            "raise max_depth"
-        )
+        return visited.unionByName(nxt.select("s", "v"))
+
+    n_seeds = n_nodes if sources is None else len(sources)
+    fixpoint(
+        expand, merge, layer0.select("s", "v"), layer0, max_depth,
+        f"betweenness forward phase exceeded {max_depth} layers; raise max_depth",
+        n_state=n_seeds, n_delta=n_seeds,
+    )
     # backward accumulation, deepest layer first
     delta_next: DataFrame | None = None  # (s, v, delta) at layer d+1... current deepest processed
     acc: DataFrame | None = None  # accumulated per-(s,v) dependency

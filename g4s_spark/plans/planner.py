@@ -35,7 +35,7 @@ from pyspark.sql import functions as F
 
 import re
 
-from ..checkpointing import iter_checkpoint
+from ..checkpointing import MAX_CLOSURE_ITERS, fixpoint, iter_checkpoint
 from ..cypher.parser import (
     CypherParseError,
     ID_PROP,
@@ -2984,7 +2984,6 @@ def plan_match(
 
 
 MAX_VAR_HOPS = 10
-MAX_CLOSURE_ITERS = 64
 
 
 def _var_length_pairs(
@@ -3009,11 +3008,10 @@ def _var_length_pairs(
 
     hi=None (bare `*` / `*n..`) runs a delta-iteration transitive
     closure: only newly discovered pairs are re-expanded each round
-    (semi-naive evaluation), lineage truncated per iteration with
-    iter_checkpoint (G4S_CHECKPOINT_DIR switches every loop in the
-    package to reliable checkpoints for cluster mode). The loop
-    terminates after at most graph-diameter rounds; MAX_CLOSURE_ITERS is
-    a hard error, not a silent cap."""
+    (semi-naive evaluation) by the package's one fixpoint driver
+    (``checkpointing.fixpoint``: lazy checkpoint + one count per round).
+    The loop terminates after at most graph-diameter rounds;
+    MAX_CLOSURE_ITERS is a hard error, not a silent cap."""
     e = edges.dropDuplicates(["src", "dst"])
     seed = e
     if sources is not None:
@@ -3055,12 +3053,10 @@ def _var_length_pairs(
             )
         if with_dist:
             frontier = frontier.withColumn("dist", F.lit(lo).cast("long"))
-        pairs = iter_checkpoint(frontier)
-        frontier = pairs
+        frontier = iter_checkpoint(frontier, eager=False)
         e_next = e.select(F.col("src").alias("mid"), "dst")
-        depth = lo
-        for _ in range(MAX_CLOSURE_ITERS):
-            depth += 1
+
+        def expand(i, pairs, frontier, _n_pairs, _n_frontier):
             new = (
                 frontier.select("src", F.col("dst").alias("mid"))
                 .join(e_next, on="mid")
@@ -3070,22 +3066,19 @@ def _var_length_pairs(
             )
             if with_dist:
                 # first discovery == BFS depth == minimum walk length
-                new = new.withColumn("dist", F.lit(depth).cast("long"))
-            new = iter_checkpoint(new)
-            if new.limit(1).count() == 0:
-                break
-            pairs = iter_checkpoint(pairs.unionByName(new))
-            frontier = new
-        else:
-            raise RuntimeError(
-                f"transitive closure did not converge within {MAX_CLOSURE_ITERS} iterations"
-            )
+                new = new.withColumn("dist", F.lit(lo + i + 1).cast("long"))
+            return new
+
+        return fixpoint(
+            expand, lambda _i, pairs, new: pairs.unionByName(new),
+            frontier, frontier, MAX_CLOSURE_ITERS,
+            f"transitive closure did not converge within {MAX_CLOSURE_ITERS} iterations",
+        )
     finally:
         # every retained round is checkpointed (lineage truncated), so
         # the edge cache is not needed after the loop — release it instead
         # of leaking cached blocks across the session's other queries
         e.unpersist()
-    return pairs
 
 
 def _subtree_edges(tree) -> list:

@@ -12,6 +12,24 @@ import os
 from pyspark.sql import SparkSession
 
 
+def default_driver_mem() -> str:
+    """The driver heap when ``G4S_DRIVER_MEM`` is unset: half of physical
+    RAM (``MemTotal`` in /proc/meminfo), so the heap can never outgrow
+    the machine — in local mode the driver is the whole engine, and a
+    fixed cap above physical RAM lets the heap grow until the OS kills
+    the JVM. The other half is left to Python workers, off-heap buffers
+    and the OS. 4g where /proc/meminfo is unreadable. A container's
+    cgroup limit is not read: set ``G4S_DRIVER_MEM`` there."""
+    try:
+        with open("/proc/meminfo") as f:
+            for line in f:
+                if line.startswith("MemTotal:"):
+                    return f"{int(line.split()[1]) // 2048}m"  # KiB / 2, in MiB
+    except OSError:
+        pass
+    return "4g"
+
+
 def get_spark(app_name: str = "g4s_spark", shuffle_partitions: int | None = None) -> SparkSession:
     cpus = os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count() or 8))
     if shuffle_partitions is None:
@@ -52,7 +70,7 @@ def get_spark(app_name: str = "g4s_spark", shuffle_partitions: int | None = None
         )
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("G4S_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory", os.environ.get("G4S_DRIVER_MEM") or default_driver_mem())
         .config("spark.ui.enabled", "false")
         # driver testdata parquet carries TIMESTAMP(NANOS); read as long,
         # sources.tables converts to TimestampType (micros)
