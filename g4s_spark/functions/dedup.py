@@ -22,6 +22,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..checkpointing import iter_checkpoint
+from ..memo import plan_memo
 from .rounding import pround
 from .text import tokens, word_ngrams
 
@@ -72,23 +73,19 @@ def shingle_docs(
     )
 
 
-# Session-persisted shingle inverted-index table — same memo pattern as
-# minhash_bucket_table / similarity._LSH_CORPUS_CACHE (applicationId +
+# Session-persisted shingle inverted-index table — same memo as
+# minhash_bucket_table / similarity.lsh_bucketed_corpus (memo.plan_memo,
 # semanticHash key). Round-17: the jaccard/containment pair stage was
 # paying the full tokenize -> explode -> distinct fill per CALL (~45% of
 # the gate, measured in round 17); every consumer of the
 # same corpus now shares ONE fill per session. At cluster scale this is
 # the same materialized-index story as the MinHash buckets: a
 # parquet/Delta inverted index maintained alongside the corpus.
-_SHINGLE_CACHE: dict[tuple, DataFrame] = {}
-
-
 def shingle_table(
     df: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
     n: int = 3,
-    use_cache: bool = True,
 ) -> DataFrame:
     """The distinct (id, shingle) inverted-index table, persisted per
     session keyed on the corpus plan's semantic hash — two loads of the
@@ -99,21 +96,10 @@ def shingle_table(
     co-partitioned zero-exchange self-join it enables loses to the
     broadcast-hash self-join the small cached table gets anyway, and
     per-sample string sorts replace the exchange it saves."""
-    key = None
-    if use_cache:
-        try:
-            key = (
-                df.sparkSession.sparkContext.applicationId,
-                df.semanticHash(), text_col, id_col, n,
-            )
-        except Exception:  # non-analyzable plan (e.g. streaming) — skip memo
-            key = None
-        if key is not None and key in _SHINGLE_CACHE:
-            return _SHINGLE_CACHE[key]
-    sh = shingle_docs(df, text_col, id_col, n).persist()
-    if key is not None:
-        _SHINGLE_CACHE[key] = sh
-    return sh
+    return plan_memo(
+        "shingles", df, (text_col, id_col, n),
+        lambda: shingle_docs(df, text_col, id_col, n),
+    )
 
 
 def ngram_jaccard_pairs(
@@ -278,43 +264,28 @@ def minhash_signatures(
     return based.select(F.col(id_col), *sig_cols)
 
 
-# Session-persisted MinHash bucket index — same memo pattern as
-# similarity._LSH_CORPUS_CACHE (applicationId + semanticHash key). At
+# Session-persisted MinHash bucket index — memo.plan_memo keys it on the
+# corpus plan's semanticHash, like similarity.lsh_bucketed_corpus. At
 # cluster scale the equivalent is a materialized parquet/Delta index
 # maintained incrementally alongside the corpus: dedup_against already
 # probes corpus buckets without re-pairing them, and every minhash
 # consumer (pairs, clusters, cross-source audits) shares ONE
 # load->shingle->k×md5 fill per corpus instead of paying it per query
 # (VERDICT r7 #5 — the bench driver's cold run paid the fill each time).
-_BUCKET_CACHE: dict[tuple, DataFrame] = {}
-
-
 def minhash_bucket_table(
     df: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
     k: int = MINHASH_K,
     bands: int = MINHASH_BANDS,
-    use_cache: bool = True,
 ) -> DataFrame:
     """The MinHash-LSH index table (id, band, key), persisted per
     session keyed on the corpus plan's semantic hash — two loads of the
     same parquet share one index."""
-    key = None
-    if use_cache:
-        try:
-            key = (
-                df.sparkSession.sparkContext.applicationId,
-                df.semanticHash(), text_col, id_col, k, bands,
-            )
-        except Exception:  # non-analyzable plan (e.g. streaming) — skip memo
-            key = None
-        if key is not None and key in _BUCKET_CACHE:
-            return _BUCKET_CACHE[key]
-    b = _band_buckets(df, text_col, id_col, k, bands).persist()
-    if key is not None:
-        _BUCKET_CACHE[key] = b
-    return b
+    return plan_memo(
+        "minhash_buckets", df, (text_col, id_col, k, bands),
+        lambda: _band_buckets(df, text_col, id_col, k, bands),
+    )
 
 
 def minhash_lsh_pairs(
@@ -667,9 +638,9 @@ def embedding_near_dups_lsh(
 
     n_planes = LSH_BAND_PLANES if n_planes is None else n_planes
     n_bands = LSH_BANDS if n_bands is None else n_bands
-    # shared session-cached index table — one banded projection of the
+    # shared session-memoized index table — one banded projection of the
     # corpus serves lsh_topk, near-dup mining, and the self-join's two
-    # sides alike (similarity._LSH_CORPUS_CACHE)
+    # sides alike (similarity.lsh_bucketed_corpus)
     b = lsh_bucketed_corpus(emb, n_planes, n_bands, id_col, vec_col)
     l = b.select(F.col("id").alias("a"), F.col("v").alias("va"), "band", "key")
     r = b.select(F.col("id").alias("b"), F.col("v").alias("vb"), "band", "key")
@@ -729,11 +700,11 @@ def semantic_dedup(
     result rows) broadcast back into the plan — no driver action. Cost
     honesty (ADVICE r14/r15): the sizes aggregate reads the SAME
     session-persisted cell table the pair join reads
-    (ivf_cells_corpus ``.persist()``s its output, keyed on the corpus
-    plan's semantic hash), so the guard costs one aggregate over the
-    cached (id, v, cell) rows — the embedding input itself is scanned
-    once per session, not once more per call. Only with the corpus
-    cache disabled (``use_cache=False`` upstream) does the guard add a
+    (ivf_cells_corpus persists its output in the session memo, keyed on
+    the corpus plan's semantic hash), so the guard costs one aggregate
+    over the cached (id, v, cell) rows — the embedding input itself is
+    scanned once per session, not once more per call. Only for a corpus
+    plan the memo cannot key (e.g. streaming) does the guard add a
     genuine second scan. ``None`` disables it."""
     from .similarity import (
         EMB_DIM, IVF_SEED, dot_expr, ivf_cells_corpus, norm_expr,

@@ -13,6 +13,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..memo import plan_memo
 from .rounding import pround
 
 
@@ -276,51 +277,40 @@ def sign_lsh_bands_sql(
     return "(" + "\n            UNION ALL ".join(selects) + ")"
 
 
-# One bucketed corpus per (spark app, corpus plan, projection params): an
-# ANN index exists to be BUILT ONCE and queried many times, so the banded
-# projection's fixed cost (codegen of the packed-sign expression + the
-# corpus scan) amortizes across every lsh_topk / embedding_near_dups_lsh
-# call in a session instead of being paid per query. Same memo pattern as
-# graph.tpch._GRAPH_CACHE. At cluster scale the equivalent is writing the
-# table out partitioned by (band, key) — see SCALE.md; the join semantics
-# are identical either way.
-_LSH_CORPUS_CACHE: dict[tuple, DataFrame] = {}
-
-
+# One bucketed corpus per (corpus plan, projection params) in the
+# session memo (memo.plan_memo): an ANN index exists to be BUILT ONCE and
+# queried many times, so the banded projection's fixed cost (codegen of
+# the packed-sign expression + the corpus scan) amortizes across every
+# lsh_topk / embedding_near_dups_lsh call in a session instead of being
+# paid per query. At cluster scale the equivalent is writing the table
+# out partitioned by (band, key) — see SCALE.md and save_ann_index; the
+# join semantics are identical either way.
 def lsh_bucketed_corpus(
     emb: DataFrame,
     n_planes: int = LSH_BAND_PLANES,
     n_bands: int = LSH_BANDS,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    use_cache: bool = True,
 ) -> DataFrame:
     """The LSH index table: (id, v, band, key) — one row per corpus vector
     per band, persisted per session keyed on the corpus plan's semantic
     hash (two loads of the same parquet share one index)."""
-    key = None
-    if use_cache:
-        try:
-            key = (
-                emb.sparkSession.sparkContext.applicationId,
-                emb.semanticHash(),
-                n_planes, n_bands, id_col, vec_col,
-            )
-        except Exception:  # non-analyzable plan (e.g. streaming) — skip memo
-            key = None
-        if key is not None and key in _LSH_CORPUS_CACHE:
-            return _LSH_CORPUS_CACHE[key]
-    b = (
+    return plan_memo(
+        "lsh_corpus", emb, (n_planes, n_bands, id_col, vec_col),
+        lambda: _lsh_bands(emb, n_planes, n_bands, id_col, vec_col),
+    )
+
+
+def _lsh_bands(
+    emb: DataFrame, n_planes: int, n_bands: int, id_col: str, vec_col: str
+) -> DataFrame:
+    return (
         emb.select(
             F.col(id_col).alias("id"), F.col(vec_col).alias("v"),
             F.explode(sign_lsh_bands(vec_col, n_planes, n_bands)).alias("bk"),
         )
         .select("id", "v", F.col("bk.band").alias("band"), F.col("bk.key").alias("key"))
     )
-    if key is not None:
-        b = b.persist()
-        _LSH_CORPUS_CACHE[key] = b
-    return b
 
 
 def lsh_topk(
@@ -481,11 +471,8 @@ def ivf_cells_topn_expr(
     return F.transform(F.array(dots), ranked)[0]
 
 
-# Cell-assigned corpus memo — same rationale as _LSH_CORPUS_CACHE: the
+# Cell-assigned corpus memo — same rationale as lsh_bucketed_corpus: the
 # IVF index is built once per session, queried many times.
-_IVF_CORPUS_CACHE: dict[tuple, DataFrame] = {}
-
-
 def ivf_cells_corpus(
     emb: DataFrame,
     n_centroids: int = 8,
@@ -493,28 +480,15 @@ def ivf_cells_corpus(
     vec_col: str = "embedding",
     dim: int = EMB_DIM,
     seed: int = IVF_SEED,
-    use_cache: bool = True,
 ) -> DataFrame:
     """The IVF index table: (id, v, cell), persisted per session keyed on
     the corpus plan's semantic hash."""
-    key = None
-    if use_cache:
-        try:
-            key = (
-                emb.sparkSession.sparkContext.applicationId,
-                emb.semanticHash(),
-                n_centroids, dim, seed, id_col, vec_col,
-            )
-        except Exception:
-            key = None
-        if key is not None and key in _IVF_CORPUS_CACHE:
-            return _IVF_CORPUS_CACHE[key]
-    cell_c = ivf_cell_expr(F.col(vec_col), n_centroids, dim, seed)
-    b = emb.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v"), cell_c.alias("cell"))
-    if key is not None:
-        b = b.persist()
-        _IVF_CORPUS_CACHE[key] = b
-    return b
+
+    def build():
+        cell_c = ivf_cell_expr(F.col(vec_col), n_centroids, dim, seed)
+        return emb.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v"), cell_c.alias("cell"))
+
+    return plan_memo("ivf_corpus", emb, (n_centroids, dim, seed, id_col, vec_col), build)
 
 
 def ivf_topk(
@@ -737,9 +711,9 @@ def save_ann_index(
     mirroring the MinHash save_bucket_index: the 100 TB corpus is
     banded ONCE, every later session/query probes the saved index. Band
     partitioning means a per-band probe is directory pruning."""
-    lsh_bucketed_corpus(
-        emb, n_planes, n_bands, id_col, vec_col, use_cache=False
-    ).write.partitionBy("band").mode(mode).parquet(path)
+    _lsh_bands(emb, n_planes, n_bands, id_col, vec_col).write.partitionBy(
+        "band"
+    ).mode(mode).parquet(path)
 
 
 def load_ann_index(spark, path: str) -> DataFrame:

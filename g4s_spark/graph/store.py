@@ -15,7 +15,7 @@ DataStore (DataStore.scala:9-92). Here:
   StatsStore (g4s-optimizer/.../optim/StatsStore.scala:111-255),
 - everything computed FROM the tables (stats, the slim projection,
   payload dedups, the operators' edge folds and counts) lives in one
-  per-graph registry, ``PropertyGraph.derived`` (see Derived).
+  per-graph registry, ``PropertyGraph.derived`` (see memo.Derived).
 
 At 100 TB the nodes/edges tables are parquet, partitioned/bucketed by
 label (resp. type, src) so a label scan is partition-pruned and an expand
@@ -28,6 +28,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..memo import FACETS, Derived
 from .stats import GraphStats
 
 _PRED_OPS = {
@@ -103,62 +104,10 @@ def apply_scalar_fn(spec: str, c: "F.Column") -> "F.Column":
     raise ValueError(f"unknown scalar function spec: {spec!r}")
 
 
-# Facets a derived entry reads and a write changes: labels = the
-# (id, label) rows, props = the node payload maps, edges = the
-# (src, dst, type) rows, weights = every other edge column.
-FACETS = frozenset({"labels", "props", "edges", "weights"})
+# the memo.FACETS a write changes
 NODE_ROWS = frozenset({"labels", "props"})  # changed by adding/dropping node rows
 EDGE_ROWS = frozenset({"edges", "weights"})  # changed by adding/dropping edge rows
 STATS_READS = frozenset({"labels", "edges"})
-
-
-def _entry(reads, value) -> tuple:
-    reads = frozenset(reads)
-    if not reads <= FACETS:
-        raise ValueError(f"unknown graph facets {sorted(reads - FACETS)}")
-    return reads, value
-
-
-class Derived:
-    """Per-graph registry of derived state; the reference keeps this
-    state (per-label matrices, transposes, StatsStore counters) in the
-    graph object (ConcurrentDirectedGraph.scala:29-41). An entry is a
-    key, the FACETS it reads, and a value built on first use. A write's
-    result inherits every entry that reads none of the facets it changed."""
-
-    def __init__(self, entries: dict | None = None):
-        self._entries: dict = entries if entries is not None else {}
-
-    def get(self, key, reads, build):
-        # threads racing on a first use may each build; setdefault
-        # keeps the first, so every caller gets the same value
-        entry = self._entries.get(key)
-        if entry is None:
-            entry = self._entries.setdefault(key, _entry(reads, build()))
-        return entry[1]
-
-    def put(self, key, reads, value) -> None:
-        self._entries[key] = _entry(reads, value)
-
-    def peek(self, key):
-        """The entry for ``key`` if it is built, else None."""
-        return self._entries.get(key, (None, None))[1]
-
-    def __contains__(self, key) -> bool:
-        return key in self._entries
-
-    def __iter__(self):
-        return iter(list(self._entries))
-
-    def inherit(self, changed) -> "Derived":
-        return Derived({k: e for k, e in list(self._entries.items()) if not e[0] & changed})
-
-    def uncache(self) -> None:
-        """Unpersist and drop every DataFrame entry; other values stay."""
-        for k, (_, v) in list(self._entries.items()):
-            if isinstance(v, DataFrame):
-                v.unpersist()
-                del self._entries[k]
 
 
 class PropertyGraph:
@@ -574,8 +523,9 @@ class PropertyGraph:
         return self
 
     def uncache(self) -> "PropertyGraph":
-        """Unpersist every registry DataFrame and the edge table cache()
-        pinned. Results are unchanged; later reads rebuild what they use."""
+        """Unpersist every registry DataFrame, uncache every registry graph,
+        and unpersist the edge table cache() pinned. Results are unchanged;
+        later reads rebuild what they use."""
         self.derived.uncache()
         self.edges.unpersist()
         return self

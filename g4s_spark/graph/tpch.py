@@ -29,6 +29,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..memo import session_memo
 from .store import PropertyGraph
 
 OFF = 1_000_000_000_000
@@ -56,20 +57,16 @@ def _id(col, offset: int):
     return (F.lit(offset) + F.col(col).cast("long")).cast("long")
 
 
-# One cached graph per (spark app, sf_dir): every query in a session shares
-# the materialized nodes/edges instead of re-unioning 7 parquet scans.
-_GRAPH_CACHE: dict[tuple[str, str], PropertyGraph] = {}
-
-
 def build_graph(spark: SparkSession, sf_dir: str, tables: dict[str, DataFrame] | None = None) -> PropertyGraph:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if tables is None and key in _GRAPH_CACHE:
-        return _GRAPH_CACHE[key]
-    g = _build_graph_uncached(spark, sf_dir, tables)
-    if tables is None:
-        g.cache()
-        _GRAPH_CACHE[key] = g
-    return g
+    """The TPC-H graph of ``sf_dir``. Without ``tables`` it is built and
+    cached once per Spark application (memo.session_memo): every query
+    in a session shares the materialized nodes/edges instead of
+    re-unioning 7 parquet scans."""
+    if tables is not None:
+        return _build_graph_uncached(spark, sf_dir, tables)
+    return session_memo(spark).get(
+        ("graph", sf_dir), (), lambda: _build_graph_uncached(spark, sf_dir).cache()
+    )
 
 
 def _build_graph_uncached(spark: SparkSession, sf_dir: str, tables: dict[str, DataFrame] | None = None) -> PropertyGraph:

@@ -45,17 +45,12 @@ def get_spark(app_name: str = "g4s_spark", shuffle_partitions: int | None = None
         # one straggler task owning the hub (SCALE.md skew strategy)
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.skewedPartitionFactor", "2")
-        .config(
-            "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes",
-            os.environ.get("G4S_SKEW_THRESHOLD_BYTES", "16m"),
-        )
+        .config("spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes", "16m")
         # 64MB advisory partitions over-coalesce the small-but-CPU-heavy
         # shuffles of a 32-thread local node (mxm join stages ran 3-wide);
-        # 8m keeps them parallel. Cluster deployments should raise this.
-        .config(
-            "spark.sql.adaptive.advisoryPartitionSizeInBytes",
-            os.environ.get("G4S_ADVISORY_PARTITION_BYTES", "8m"),
-        )
+        # 8m keeps them parallel. These AQE sizes are runtime SQL confs: a
+        # cluster deployment raises them with spark.conf.set.
+        .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "8m")
         # with coalescePartitions.parallelismFirst the coalesce target is
         # max(totalSize/parallelism, minPartitionSize) — the 1m default
         # floor collapsed CPU-heavy small-COMPRESSED-byte shuffles (the
@@ -63,11 +58,8 @@ def get_spark(app_name: str = "g4s_spark", shuffle_partitions: int | None = None
         # 3-4 tasks with one straggler. 64k keeps them ~parallelism-wide:
         # pagerank 4.8->3.2 s warm at sf0.1. Same compressed-size pitfall
         # as SCALE.md's skew note; cluster deployments with genuinely
-        # large shuffles can raise this back.
-        .config(
-            "spark.sql.adaptive.coalescePartitions.minPartitionSize",
-            os.environ.get("G4S_AQE_MIN_PARTITION_SIZE", "64k"),
-        )
+        # large shuffles can raise this back with spark.conf.set.
+        .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.driver.memory", os.environ.get("G4S_DRIVER_MEM") or default_driver_mem())

@@ -8,12 +8,12 @@ from .snapshots import (
     snapshot_diff,
 )
 from .tables import (
-    DEFAULT_SF_DIR, DOCUMENTS_SCHEMA, TABLES, load_table, load_tables,
+    DOCUMENTS_SCHEMA, TABLES, load_table, load_tables,
     read_documents_jsonl, register_views, write_documents_jsonl,
 )
 
 __all__ = [
-    "DEFAULT_SF_DIR", "DOCUMENTS_SCHEMA", "TABLES", "load_table", "load_tables",
+    "DOCUMENTS_SCHEMA", "TABLES", "load_table", "load_tables",
     "read_documents_jsonl", "register_views", "write_documents_jsonl",
     "write_graph", "read_graph", "write_graph_bucketed", "read_graph_bucketed",
     "compact_parquet",

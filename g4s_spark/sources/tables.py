@@ -8,17 +8,15 @@ projections applied downstream push into these scans (verify with
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from ..memo import session_memo
 
 TABLES = [
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings",
 ]
-
-DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 # Timestamp columns the testdata has shipped under several parquet logical
 # types across regenerations: TIMESTAMP(NANOS) (readable only as long under
@@ -51,8 +49,8 @@ def normalize_ts(df: DataFrame, cols: list[str]) -> DataFrame:
     return df
 
 
-# One analyzed DataFrame per (spark app, sf_dir, table) — the same memo
-# scheme as graph.tpch._GRAPH_CACHE. spark.read.parquet lists files and
+# One analyzed DataFrame per (sf_dir, table) in the session memo
+# (memo.session_memo). spark.read.parquet lists files and
 # reads footers ON THE DRIVER at plan-construction time (~100 ms/table),
 # so an uncached load_tables() call cost ~1 s of serial driver time per
 # GATE; across a 50-gate driver window that was ~50 s of pure plan
@@ -64,36 +62,17 @@ def normalize_ts(df: DataFrame, cols: list[str]) -> DataFrame:
 # at first load, so rewriting the files behind it yields stale reads
 # or FileNotFoundException. That matches this engine's inputs (the
 # driver's testdata is write-once; mutations go through the graph
-# store's append paths, never in-place rewrites). Tests or
-# data-regeneration code that DO rewrite a directory must call
-# invalidate_table_cache() after. Bounded in practice by
-# #apps × #sf_dirs × 10 tables (a handful of plan objects, no
-# executor memory); invalidate_table_cache() is also the escape hatch
-# if a long-lived service ever cycles through many directories.
-_TABLE_CACHE: dict[tuple[str, str, str], DataFrame] = {}
-
-
-def invalidate_table_cache(sf_dir: str | None = None) -> None:
-    """Drop memoized table plans — all of them, or only those under
-    ``sf_dir`` — so the next load_table re-lists files. Call after
-    rewriting parquet under a directory load_table has seen."""
-    if sf_dir is None:
-        _TABLE_CACHE.clear()
-        return
-    for key in [k for k in _TABLE_CACHE if k[1] == sf_dir]:
-        del _TABLE_CACHE[key]
-
-
+# store's append paths, never in-place rewrites). Code that DOES
+# rewrite a directory must release the memo after
+# (``session_memo(spark).uncache()``).
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    key = (spark.sparkContext.applicationId, sf_dir, name)
-    df = _TABLE_CACHE.get(key)
-    if df is None:
-        df = normalize_ts(
+    return session_memo(spark).get(
+        ("table", sf_dir, name), (),
+        lambda: normalize_ts(
             spark.read.parquet(f"{sf_dir}/{name}.parquet"), TS_COLS.get(name, [])
-        )
-        _TABLE_CACHE[key] = df
-    return df
+        ),
+    )
 
 
 def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
