@@ -94,34 +94,38 @@ class ExprItem:
     is mandatory (an expression has no natural column name).
 
     ``expr`` nodes: ("num", float) | ("prop", binding, prop) |
-    ("op", "+-*/", left, right) | ("neg", operand)."""
+    ("op", "+-*/", left, right) | ("neg", operand) |
+    ("strlen", binding, prop) | ("fn1", name, operand) |
+    ("case", whens, else). A WITH stage's carried column is a
+    ("prop", None, column) leaf."""
 
     agg: str | None  # None | sum | avg | min | max
     expr: tuple
     alias: str
 
 
+def expr_walk(expr: tuple):
+    """Every node of an expression tree, pre-order, children left to
+    right (a CASE yields each WHEN's condition then its THEN, then the
+    ELSE)."""
+    yield expr
+    kind = expr[0]
+    if kind in ("neg", "fn1"):
+        yield from expr_walk(expr[-1])
+    elif kind == "case":
+        for cond_l, _op, _lit, then_e in expr[1]:
+            yield from expr_walk(cond_l)
+            yield from expr_walk(then_e)
+        if expr[2] is not None:
+            yield from expr_walk(expr[2])
+    elif kind == "op":
+        yield from expr_walk(expr[2])
+        yield from expr_walk(expr[3])
+
+
 def expr_prop_leaves(expr: tuple) -> list[tuple[str, str]]:
     """All (binding, prop) leaves of an ExprItem tree, in order."""
-    kind = expr[0]
-    if kind == "prop":
-        return [(expr[1], expr[2])]
-    if kind == "num":
-        return []
-    if kind in ("neg",):
-        return expr_prop_leaves(expr[1])
-    if kind == "strlen":
-        return [(expr[1], expr[2])]
-    if kind == "fn1":
-        return expr_prop_leaves(expr[2])
-    if kind == "case":
-        out = []
-        for cond_l, _op, _lit, then_e in expr[1]:
-            out += expr_prop_leaves(cond_l) + expr_prop_leaves(then_e)
-        if expr[2] is not None:
-            out += expr_prop_leaves(expr[2])
-        return out
-    return expr_prop_leaves(expr[2]) + expr_prop_leaves(expr[3])
+    return [(n[1], n[2]) for n in expr_walk(expr) if n[0] in ("prop", "strlen")]
 
 
 @dataclass
@@ -874,10 +878,7 @@ def _parse_clauses(body: str, qg: QueryGraph) -> None:
                         raise CypherParseError(
                             "arithmetic WHERE in OPTIONAL MATCH is unsupported"
                         )
-                    toks = _tokenize_expr(lhs_txt)
-                    node, end = _parse_arith(toks)
-                    if end != len(toks):
-                        raise CypherParseError(f"trailing tokens in WHERE expression: {c!r}")
+                    node = parse_expr(lhs_txt)
                     leaves = expr_prop_leaves(node)
                     if not leaves:
                         raise CypherParseError(f"WHERE expression has no property: {c!r}")
@@ -907,11 +908,8 @@ def _parse_clauses(body: str, qg: QueryGraph) -> None:
                     first_start, first_end, first_op = cmps[0]
                     lhs_txt, rhs_txt = c[:first_start], c[first_end:]
                     try:
-                        lt = _tokenize_expr(lhs_txt)
-                        ln, le = _parse_arith(lt)
-                        rt = _tokenize_expr(rhs_txt)
-                        rn, re_ = _parse_arith(rt)
-                        ok = le == len(lt) and re_ == len(rt)
+                        ln, rn = parse_expr(lhs_txt), parse_expr(rhs_txt)
+                        ok = True
                     except CypherParseError:
                         ok = False
                     if ok:
@@ -966,10 +964,27 @@ _EXPR_TOKEN = re.compile(
 )
 
 
-def _tokenize_expr(s: str) -> list[tuple[str, object]]:
+_EXPR_NAME = re.compile(r"\s*([A-Za-z_][A-Za-z0-9_]*)")
+
+
+def _tokenize_expr(s: str, cols=None) -> list[tuple[str, object]]:
+    """Expression tokens. With ``cols`` (the carried column names of a
+    WITH stage) a bare identifier is a column: one in ``cols`` becomes
+    a ("prop", (None, name)) leaf, ahead of any keyword reading of the
+    same word; any other identifier that is no keyword is an unknown
+    column."""
     toks, pos = [], 0
     while pos < len(s):
+        nm = _EXPR_NAME.match(s, pos) if cols is not None else None
+        if nm and nm.group(1) in cols:
+            toks.append(("prop", (None, nm.group(1))))
+            pos = nm.end()
+            continue
         m = _EXPR_TOKEN.match(s, pos)
+        if nm and (m is None or m.lastgroup not in ("kw", "fnword")):
+            raise CypherParseError(
+                f"final RETURN after WITH references unknown column: {nm.group(1)!r}"
+            )
         if not m:
             if s[pos:].strip() == "":
                 break
@@ -1083,6 +1098,18 @@ def _parse_arith(toks: list, pos: int = 0) -> tuple[tuple, int]:
     return expr(pos)
 
 
+def parse_expr(text: str, cols=None) -> tuple:
+    """The one expression parse: tokenize ``text``, parse it whole
+    (trailing tokens are an error) and return the tree. ``cols`` lists
+    the carried columns a WITH stage may name bare (_tokenize_expr);
+    without it a bare identifier is a bad token."""
+    toks = _tokenize_expr(text, cols)
+    node, end = _parse_arith(toks)
+    if end != len(toks):
+        raise CypherParseError(f"trailing tokens in expression: {text!r}")
+    return node
+
+
 def _try_parse_expr_item(qg: QueryGraph, item: str) -> bool:
     """Arithmetic RETURN item `[agg(] expr [)] AS alias` — attempted only
     after every simpler form failed. Leaves must be node-binding props
@@ -1097,10 +1124,7 @@ def _try_parse_expr_item(qg: QueryGraph, item: str) -> bool:
             f"arithmetic RETURN item needs an AS alias: {item!r}"
         )
     body = am.group("inner") if am.group("fn") else am.group("bare")
-    toks = _tokenize_expr(body)
-    node, end = _parse_arith(toks)
-    if end != len(toks):
-        raise CypherParseError(f"trailing tokens in expression: {item!r}")
+    node = parse_expr(body)
     leaves = expr_prop_leaves(node)
     if not leaves:
         raise CypherParseError(f"expression has no property reference: {item!r}")
@@ -1708,8 +1732,11 @@ def _apply_atom(spec, cond: str, check_binding, qg: QueryGraph, ci: int) -> list
             raise CypherParseError(
                 f"id() in WHERE needs a node variable: {b!r}"
             )
+        # an integer literal compares the uncast long id column (exact
+        # beyond 2^53); one outside the long range keeps the double
+        v = int(lv)
         return [PropFilter(
-            b, ID_PROP, op, float(lv), True, clause=ci,
+            b, ID_PROP, op, v if -2**63 <= v < 2**63 else float(v), True, clause=ci,
         )]
     if tag == "regex":
         _, b, p, pat = spec

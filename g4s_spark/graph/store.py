@@ -454,10 +454,12 @@ class PropertyGraph:
 
         def cond(f):
             if f.prop == ID_PROP:
-                # id(b) predicate (round-8): the physical id column —
-                # exact for ids < 2^53 under the double comparison
+                # id(b) predicate (round-8): the physical long id column,
+                # compared uncast against an integer literal (exact at
+                # any id), as a double otherwise
+                c = F.col("id")
                 return _PRED_OPS[f.op](
-                    F.col("id").cast("double"), F.lit(f.value)
+                    c if isinstance(f.value, int) else c.cast("double"), F.lit(f.value)
                 )
             c = F.col("props").getItem(f.prop)
             fn = getattr(f, "fn", None)

@@ -33,6 +33,7 @@ from dataclasses import dataclass, field, fields as dc_fields, is_dataclass, rep
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+import operator
 import re
 
 from ..checkpointing import MAX_CLOSURE_ITERS, fixpoint, iter_checkpoint
@@ -41,6 +42,8 @@ from ..cypher.parser import (
     ID_PROP,
     bind_params,
     expr_prop_leaves,
+    expr_walk,
+    parse_expr,
     PatternEdge,
     QueryGraph,
     _parse_clauses,
@@ -198,25 +201,29 @@ def run_cypher(
         df = plan_match(graph, qg).df
         bindings = set(qg.labels)
     if resolve:
-        # sorted comma-joined label SET per id (round-9): the same
-        # aggregated lookup labels() uses — a multi-label node resolves
-        # to one row carrying all its labels, never a fanout
-        ldf = (
-            graph.nodes.select("id", "label")
-            .dropDuplicates(["id", "label"])
-            .groupBy("id")
-            .agg(
-                F.concat_ws(",", F.sort_array(F.collect_set("label"))).alias("_lbls")
-            )
+        df = _join_label_sets(
+            graph, df, [(b, f"{b}_label") for b in df.columns if b in bindings]
         )
-        for b in df.columns:
-            if b not in bindings:
-                continue
-            df = df.join(
-                ldf.select(F.col("id").alias(b), F.col("_lbls").alias(f"{b}_label")),
-                on=b,
-                how="left",
-            )
+    return df
+
+
+def _join_label_sets(graph: PropertyGraph, df: DataFrame, pairs) -> DataFrame:
+    """Left-join each (binding, alias) pair's sorted comma-joined label
+    SET onto ``df`` (round-9): one aggregated per-id lookup — a
+    multi-label node is several (id, label) rows, yet resolves to one
+    row carrying all its labels, never a fanout. Serves both
+    run_cypher(resolve=True) and labels() returns; shuffles on node id,
+    the same scale shape as props resolution."""
+    ldf = (
+        graph.nodes.select("id", "label")
+        .dropDuplicates(["id", "label"])
+        .groupBy("id")
+        .agg(F.concat_ws(",", F.sort_array(F.collect_set("label"))).alias("_lbls"))
+    )
+    for b, a in pairs:
+        df = df.join(
+            ldf.select(F.col("id").alias(b), F.col("_lbls").alias(a)), on=b, how="left"
+        )
     return df
 
 
@@ -268,45 +275,68 @@ _SET_ITEM_ANY = re.compile(
 )
 
 
-_NUM_FNS = {
-    "abs": F.abs, "round": F.round, "ceil": F.ceil,
-    "floor": F.floor, "sqrt": F.sqrt,
-}
+def _read_set_item(item: str) -> tuple[str, str, tuple] | None:
+    """The one reader of a ``b.p = literal | expr`` SET item (SET, MERGE
+    ON CREATE / ON MATCH): (b, p, ("lit", text) | ("expr", tree)), or
+    None when the item has another shape. A literal keeps its text with
+    quotes stripped (the props map is string-valued); an expression may
+    only reference b itself — a cross-binding RHS would make the per-id
+    update value ambiguous (one node, many match rows). Each statement
+    checks the target on its own."""
+    sm = _SET_ITEM.match(item)
+    if sm:
+        raw = sm.group("val")
+        return sm.group("b"), sm.group("p"), ("lit", raw[1:-1] if raw[0] in "'\"" else raw)
+    am = _SET_ITEM_ANY.match(item)
+    if not am:
+        return None
+    b, node = am.group("b"), parse_expr(am.group("rhs"))
+    for lb, _lp in expr_prop_leaves(node):
+        if lb != b:
+            raise CypherParseError(
+                f"SET expression may only reference the binding being "
+                f"set ({b!r}), got {lb!r}: {item!r}"
+            )
+    return b, am.group("p"), ("expr", node)
 
 
-def _num_fn_col(name: str, c: "F.Column") -> "F.Column":
-    """Numeric scalar functions in expression trees (round-8) — results
-    cast to double so ceil/floor (Spark: LONG) stay type-identical to
-    the rest of the expression algebra and to the DuckDB oracles."""
-    return _NUM_FNS[name](c).cast("double")
+def _weight_value(en: str, val: tuple) -> tuple:
+    """An edge-weight SET value: ("lit", float) for a numeric literal,
+    or ("expr", tree) over ``en.weight`` alone. An edge weight is a
+    double, so size()/CASE (string-valued leaves) are rejected."""
+    kind, v = val
+    if kind == "lit":
+        try:
+            return "lit", float(v)
+        except ValueError:
+            raise CypherParseError(f"edge weight must be numeric, got: {v!r}") from None
+    for n in expr_walk(v):
+        if n[0] in ("strlen", "case"):
+            raise CypherParseError("size()/CASE are unsupported in edge weight expressions")
+        if n[0] == "prop" and n[2] != "weight":
+            raise CypherParseError(
+                f"edge SET expression may only reference {en}.weight, got {n[1]}.{n[2]}"
+            )
+    return "expr", v
 
 
-def _set_expr_col(node, binding: str) -> "F.Column":
-    """Evaluate a SET expression RHS against the target node's own props
-    map (``b.prop + 1``, property-from-property, size(), CASE). Leaves
-    must reference the binding being SET — a cross-binding RHS would
-    make the per-id update value ambiguous (one node, many match rows),
-    so it is rejected at parse time."""
-    kind = node[0]
-    if kind == "num":
-        return F.lit(node[1])
-    if kind == "prop":
-        return F.col("props").getItem(node[2]).cast("double")
-    if kind == "neg":
-        return -_set_expr_col(node[1], binding)
-    if kind == "strlen":
-        return F.length(F.col("props").getItem(node[2])).cast("double")
-    if kind == "fn1":
-        return _num_fn_col(node[1], _set_expr_col(node[2], binding))
-    if kind == "case":
-        return _case_col(
-            node,
-            lambda n: _set_expr_col(n, binding),
-            lambda _b, p: F.col("props").getItem(p),
+def _node_props(graph: PropertyGraph, ids: DataFrame, props: dict) -> DataFrame:
+    """(id, props) update rows for update_node_props: literal values as
+    given, expression values evaluated over each node's own props map
+    (ONE left join onto the payload resolves every leaf; multi-label
+    nodes share one props map per id) and stored through the
+    double->string rendering every other numeric prop uses."""
+    upd = ids.dropDuplicates(["id"])
+    if any(kind == "expr" for kind, _ in props.values()):
+        upd = upd.join(graph.payload_nodes(), on="id", how="left")
+    entries = []
+    for k, (kind, v) in sorted(props.items()):
+        entries.append(F.lit(k))
+        entries.append(
+            F.lit(v) if kind == "lit"
+            else expr_col(v, lambda _b, p: F.col("props").getItem(p)).cast("string")
         )
-    _, op, l, r = node
-    lc, rc = _set_expr_col(l, binding), _set_expr_col(r, binding)
-    return {"+": lc + rc, "-": lc - rc, "*": lc * rc, "/": lc / rc}[op]
+    return upd.select("id", F.create_map(*entries).alias("props"))
 
 
 def run_cypher_set(graph: PropertyGraph, query: str) -> PropertyGraph:
@@ -332,12 +362,7 @@ def run_cypher_set(graph: PropertyGraph, query: str) -> PropertyGraph:
             f"SET statement must be MATCH ... SET b.prop = value: {query!r}"
         )
     _verb, _body, _sets = sp
-    from ..cypher.parser import (
-        _parse_arith,
-        _split_patterns,
-        _tokenize_expr,
-        expr_prop_leaves,
-    )
+    from ..cypher.parser import _split_patterns
 
     # prop -> ("lit", str) | ("expr", tree), per binding
     sets: dict[str, dict[str, tuple]] = {}
@@ -347,35 +372,19 @@ def run_cypher_set(graph: PropertyGraph, query: str) -> PropertyGraph:
         if lm_:
             label_adds.append((lm_.group("b"), lm_.group("label")))
             continue
-        sm = _SET_ITEM.match(item)
-        if sm:
-            raw = sm.group("val")
-            val = raw[1:-1] if raw[0] in "'\"" else raw  # props map is string-valued
-            sets.setdefault(sm.group("b"), {})[sm.group("p")] = ("lit", val)
-            continue
-        am = _SET_ITEM_ANY.match(item)
-        if not am:
+        si = _read_set_item(item)
+        if si is None:
             raise CypherParseError(
                 f"unsupported SET item (need b.prop = value): {item!r}"
             )
-        b = am.group("b")
-        toks = _tokenize_expr(am.group("rhs"))
-        node, end = _parse_arith(toks)
-        if end != len(toks):
-            raise CypherParseError(f"trailing tokens in SET expression: {item!r}")
-        for lb, _lp in expr_prop_leaves(node):
-            if lb != b:
-                raise CypherParseError(
-                    f"SET expression may only reference the binding being "
-                    f"set ({b!r}), got {lb!r}: {item!r}"
-                )
-        sets.setdefault(b, {})[am.group("p")] = ("expr", node)
+        b, p, val = si
+        sets.setdefault(b, {})[p] = val
     qg = QueryGraph()
     _parse_clauses(_body, qg)
     # edge-variable SET (round-7): `SET e.weight = <number>` overwrites
     # the matched edges' typed weight through update_edge_weights —
     # routed by the pattern edge the variable names
-    edge_sets: dict[str, float] = {}
+    edge_sets: dict[str, tuple] = {}
     edge_by_name = {e.name: e for e in qg.edges if e.name}
     for b in list(sets):
         if b in qg.labels:
@@ -387,24 +396,9 @@ def run_cypher_set(graph: PropertyGraph, query: str) -> PropertyGraph:
                     f"edge SET supports only {b}.weight (typed column); "
                     f"got: {sorted(items_)}"
                 )
-            kind, v = items_["weight"]
-            if kind == "lit":
-                try:
-                    edge_sets[b] = ("lit", float(v))
-                except ValueError:
-                    raise CypherParseError(
-                        f"edge weight must be numeric, got: {v!r}"
-                    )
-            else:
-                # expression RHS (round-7): leaves must be THIS edge's
-                # weight (`SET e.weight = e.weight * 2`)
-                for lb, lp in expr_prop_leaves(v):
-                    if lb != b or lp != "weight":
-                        raise CypherParseError(
-                            f"edge SET expression may only reference "
-                            f"{b}.weight, got {lb}.{lp}"
-                        )
-                edge_sets[b] = ("expr", v)
+            # a literal, or an expression over THIS edge's weight
+            # (`SET e.weight = e.weight * 2`, round-7)
+            edge_sets[b] = _weight_value(b, items_["weight"])
             continue
         raise CypherParseError(f"SET references unbound binding: {b!r}")
     for b, _lbl in label_adds:
@@ -425,25 +419,6 @@ def run_cypher_set(graph: PropertyGraph, query: str) -> PropertyGraph:
             qg.edge_prop_returns.append((en, "weight", f"_setw_{en}"))
     matched = plan_match(graph, qg).df
     out = graph
-
-    def _edge_expr_col(node, alias: str):
-        k = node[0]
-        if k == "num":
-            return F.lit(node[1])
-        if k == "prop":
-            return F.col(alias).cast("double")
-        if k == "neg":
-            return -_edge_expr_col(node[1], alias)
-        if k == "fn1":
-            return _num_fn_col(node[1], _edge_expr_col(node[2], alias))
-        if k in ("strlen", "case"):
-            raise CypherParseError(
-                "size()/CASE are unsupported in edge SET expressions"
-            )
-        _, op, l, r = node
-        lc, rc = _edge_expr_col(l, alias), _edge_expr_col(r, alias)
-        return {"+": lc + rc, "-": lc - rc, "*": lc * rc, "/": lc / rc}[op]
-
     for en, (kind, v) in edge_sets.items():
         e = edge_by_name[en]
         if len(e.types) != 1:
@@ -454,7 +429,7 @@ def run_cypher_set(graph: PropertyGraph, query: str) -> PropertyGraph:
             wcol = F.lit(v).cast("double")
             cols = [F.col(e.src).alias("src"), F.col(e.dst).alias("dst")]
         else:
-            wcol = _edge_expr_col(v, f"_setw_{en}").cast("double")
+            wcol = expr_col(v, lambda _b, _p: F.col(f"_setw_{en}")).cast("double")
             cols = [
                 F.col(e.src).alias("src"), F.col(e.dst).alias("dst"),
                 F.col(f"_setw_{en}"),
@@ -468,21 +443,8 @@ def run_cypher_set(graph: PropertyGraph, query: str) -> PropertyGraph:
         )
         out = out.update_edge_weights(upd)
     for b, props in sets.items():
-        upd = matched.select(F.col(b).alias("id")).dropDuplicates(["id"])
-        if any(kind == "expr" for kind, _ in props.values()):
-            # one left join onto the payload resolves every expression
-            # leaf; multi-label nodes share one props map per id
-            payload = graph.payload_nodes()
-            upd = upd.join(payload, on="id", how="left")
-        entries = []
-        for k, (kind, v) in sorted(props.items()):
-            entries.append(F.lit(k))
-            if kind == "lit":
-                entries.append(F.lit(v))
-            else:
-                entries.append(_set_expr_col(v, b).cast("string"))
-        updates = upd.select("id", F.create_map(*entries).alias("props"))
-        out = out.update_node_props(updates)
+        ids = matched.select(F.col(b).alias("id"))
+        out = out.update_node_props(_node_props(graph, ids, props))
     # SET n:Label (round-8): matched ids gain the label's (id, label)
     # row (multi-label model; add_labels is an idempotent anti-join)
     for b, lbl in label_adds:
@@ -833,36 +795,17 @@ def run_cypher_merge(graph: PropertyGraph, query: str) -> PropertyGraph:
     on_create, on_match = _split_on_clauses(nm.group("tail"))
 
     def _parse_set_items(items: list[str], allow_expr: bool) -> dict[str, tuple]:
-        from ..cypher.parser import _parse_arith, _tokenize_expr, expr_prop_leaves
-
         out: dict[str, tuple] = {}
         for item in items:
-            sm = _SET_ITEM.match(item)
-            if sm:
-                if sm.group("b") != name:
-                    raise CypherParseError(
-                        f"MERGE SET item must target {name!r}: {item!r}"
-                    )
-                raw = sm.group("val")
-                out[sm.group("p")] = ("lit", raw[1:-1] if raw[0] in "'\"" else raw)
-                continue
-            am = _SET_ITEM_ANY.match(item)
-            if not (allow_expr and am and am.group("b") == name):
+            si = _read_set_item(item)
+            if si is not None and si[0] != name:
+                raise CypherParseError(f"MERGE SET item must target {name!r}: {item!r}")
+            if si is None or (si[2][0] == "expr" and not allow_expr):
                 raise CypherParseError(
                     f"unsupported MERGE SET item (need {name}.prop = "
                     f"{'value/expr' if allow_expr else 'literal'}): {item!r}"
                 )
-            toks = _tokenize_expr(am.group("rhs"))
-            node, end = _parse_arith(toks)
-            if end != len(toks):
-                raise CypherParseError(f"trailing tokens in SET expression: {item!r}")
-            for lb, _lp in expr_prop_leaves(node):
-                if lb != name:
-                    raise CypherParseError(
-                        f"ON MATCH SET expression may only reference {name!r}, "
-                        f"got {lb!r}: {item!r}"
-                    )
-            out[am.group("p")] = ("expr", node)
+            out[si[1]] = si[2]
         return out
 
     create_sets = _parse_set_items(on_create, allow_expr=False)
@@ -893,20 +836,9 @@ def run_cypher_merge(graph: PropertyGraph, query: str) -> PropertyGraph:
         return graph.merge_vertices(row_df)
     if not match_sets:
         return graph
-    # ON MATCH SET through the update_node_props broadcast upsert;
-    # expression leaves resolve against the matched payload (same shape
-    # as run_cypher_set's node path)
-    upd = cand.select("id").dropDuplicates(["id"])
-    if any(kind == "expr" for kind, _ in match_sets.values()):
-        payload = graph.payload_nodes()
-        upd = upd.join(payload, on="id", how="left")
-    entries = []
-    for k, (kind, v) in sorted(match_sets.items()):
-        entries.append(F.lit(k))
-        entries.append(
-            F.lit(v) if kind == "lit" else _set_expr_col(v, name).cast("string")
-        )
-    return graph.update_node_props(upd.select("id", F.create_map(*entries).alias("props")))
+    # ON MATCH SET through the update_node_props broadcast upsert, the
+    # same update rows as run_cypher_set's node path
+    return graph.update_node_props(_node_props(graph, cand.select("id"), match_sets))
 
 
 def _run_merge_edge(
@@ -921,39 +853,20 @@ def _run_merge_edge(
         | ("expr", tree)."""
         if not items:
             return None
-        from ..cypher.parser import _parse_arith, _tokenize_expr, expr_prop_leaves
-
         if len(items) > 1 or en is None:
             raise CypherParseError(
                 "edge MERGE SET supports exactly one item on a named edge "
                 f"variable ({en or '<unnamed>'}.weight)"
             )
-        sm = _SET_ITEM.match(items[0])
-        if sm:
-            if (sm.group("b"), sm.group("p")) != (en, "weight"):
-                raise CypherParseError(
-                    f"edge MERGE SET must target {en}.weight: {items[0]!r}"
-                )
-            try:
-                return ("lit", float(sm.group("val")))
-            except ValueError:
-                raise CypherParseError(f"edge weight must be numeric: {items[0]!r}")
-        am = _SET_ITEM_ANY.match(items[0])
-        if not (allow_expr and am and (am.group("b"), am.group("p")) == (en, "weight")):
+        si = _read_set_item(items[0])
+        if si is not None and si[:2] != (en, "weight"):
+            raise CypherParseError(f"edge MERGE SET must target {en}.weight: {items[0]!r}")
+        if si is None or (si[2][0] == "expr" and not allow_expr):
             raise CypherParseError(
-                f"unsupported edge MERGE SET item: {items[0]!r}"
+                f"unsupported edge MERGE SET item (need {en}.weight = "
+                f"{'value/expr' if allow_expr else 'literal'}): {items[0]!r}"
             )
-        toks = _tokenize_expr(am.group("rhs"))
-        node, end = _parse_arith(toks)
-        if end != len(toks):
-            raise CypherParseError(f"trailing tokens in SET expression: {items[0]!r}")
-        for lb, lp in expr_prop_leaves(node):
-            if (lb, lp) != (en, "weight"):
-                raise CypherParseError(
-                    f"ON MATCH SET expression may only reference {en}.weight, "
-                    f"got {lb}.{lp}"
-                )
-        return ("expr", node)
+        return _weight_value(en, si[2])
 
     create_w = _parse_weight_items(on_create, allow_expr=False)
     match_w = _parse_weight_items(on_match, allow_expr=True)
@@ -992,51 +905,60 @@ def _run_merge_edge(
         wsrc = pre.select("src", "dst", F.col("weight").alias("_curw")).dropDuplicates(
             ["src", "dst"]
         )
-
-        def _eval(node):
-            k = node[0]
-            if k == "num":
-                return F.lit(node[1])
-            if k == "prop":
-                return F.col("_curw").cast("double")
-            if k == "neg":
-                return -_eval(node[1])
-            if k == "fn1":
-                return _num_fn_col(node[1], _eval(node[2]))
-            if k in ("strlen", "case"):
-                raise CypherParseError(
-                    "size()/CASE are unsupported in edge MERGE expressions"
-                )
-            _, op, l, r = node
-            lc, rc = _eval(l), _eval(r)
-            return {"+": lc + rc, "-": lc - rc, "*": lc * rc, "/": lc / rc}[op]
-
         upd = (
             existing.join(wsrc, on=["src", "dst"], how="left")
-            .withColumn("weight", _eval(match_w[1]).cast("double"))
+            .withColumn(
+                "weight", expr_col(match_w[1], lambda _b, _p: F.col("_curw")).cast("double")
+            )
             .drop("_curw")
         )
     return out.update_edge_weights(upd.select("src", "dst", "type", "weight"))
 
 
-def _case_col(node, eval_expr, raw_prop):
-    """CASE evaluator shared by both expression contexts. String-literal
-    comparisons require a bare prop condition (compared uncast); numeric
-    comparisons evaluate the condition arithmetically as a double."""
-    _, whens, else_e = node
-    out = None
-    for cond_l, cmp_op, lit, then_e in whens:
-        if lit[0] == "str":
-            if cond_l[0] != "prop":
-                raise CypherParseError(
-                    "CASE WHEN against a string literal needs a bare property"
-                )
-            c = _OPS[cmp_op](raw_prop(cond_l[1], cond_l[2]), F.lit(lit[1]))
-        else:
-            c = _OPS[cmp_op](eval_expr(cond_l), F.lit(lit[1]))
-        t = eval_expr(then_e)
-        out = F.when(c, t) if out is None else out.when(c, t)
-    return out.otherwise(eval_expr(else_e)) if else_e is not None else out
+_NUM_FNS = {
+    "abs": F.abs, "round": F.round, "ceil": F.ceil,
+    "floor": F.floor, "sqrt": F.sqrt,
+}
+_ARITH = {"+": operator.add, "-": operator.sub, "*": operator.mul, "/": operator.truediv}
+
+
+def expr_col(node, raw) -> Column:
+    """The one expression compiler: a parse_expr tree -> Column, for
+    every context (RETURN items, WHERE predicates, node/edge SET, MERGE
+    SET items, WITH stages). ``raw(binding, prop)`` is the context's
+    UNCAST leaf column; leaves and numeric-function results evaluate as
+    doubles (Spark's LONG ceil/floor would otherwise diverge from the
+    DuckDB oracles), NULL leaves propagate. A CASE WHEN against a string
+    literal compares a bare leaf uncast; a numeric one compares the
+    condition's double value."""
+    kind = node[0]
+    if kind == "num":
+        return F.lit(node[1])
+    if kind == "prop":
+        return raw(node[1], node[2]).cast("double")
+    if kind == "strlen":
+        return F.length(raw(node[1], node[2])).cast("double")
+    if kind == "neg":
+        return -expr_col(node[1], raw)
+    if kind == "fn1":
+        return _NUM_FNS[node[1]](expr_col(node[2], raw)).cast("double")
+    if kind == "case":
+        _, whens, else_e = node
+        out = None
+        for cond_l, cmp_op, lit, then_e in whens:
+            if lit[0] == "str":
+                if cond_l[0] != "prop":
+                    raise CypherParseError(
+                        "CASE WHEN against a string literal needs a bare property"
+                    )
+                c = _OPS[cmp_op](raw(cond_l[1], cond_l[2]), F.lit(lit[1]))
+            else:
+                c = _OPS[cmp_op](expr_col(cond_l, raw), F.lit(lit[1]))
+            t = expr_col(then_e, raw)
+            out = F.when(c, t) if out is None else out.when(c, t)
+        return out if else_e is None else out.otherwise(expr_col(else_e, raw))
+    _, op, l, r = node
+    return _ARITH[op](expr_col(l, raw), expr_col(r, raw))
 
 
 def _run_unwind(graph: PropertyGraph, um: "re.Match", resolve: bool) -> DataFrame:
@@ -1233,86 +1155,16 @@ _CARRY_COND = re.compile(
 )
 
 
-_CARRY_EXPR_TOKEN = re.compile(
-    r"\s*(?:(?P<num>\d+(?:\.\d+)?)"
-    r"|(?P<name>[A-Za-z_][A-Za-z0-9_]*)"
-    r"|(?P<op>[-+*/()]))"
-)
-
-
-def _carry_expr(text: str, cols: list[str]):
-    """Arithmetic over carried columns for the final RETURN after a WITH
-    pipeline (extension): `n_orders * 2`, `(a + b) / 2`, unary minus.
-    Leaves are carried column names (evaluated as doubles, like every
-    other expression context) and numeric literals; returns a Column."""
-    toks: list[tuple[str, object]] = []
-    pos = 0
-    while pos < len(text):
-        m = _CARRY_EXPR_TOKEN.match(text, pos)
-        if not m or m.end() == pos:
-            if text[pos:].strip() == "":
-                break
-            raise CypherParseError(
-                f"bad token in RETURN expression at: {text[pos:]!r}"
-            )
-        if m.group("num") is not None:
-            toks.append(("num", float(m.group("num"))))
-        elif m.group("name") is not None:
-            n = m.group("name")
-            if n not in cols:
-                raise CypherParseError(
-                    f"final RETURN after WITH references unknown column: {n!r}"
-                )
-            toks.append(("col", n))
-        else:
-            toks.append(("op", m.group("op")))
-        pos = m.end()
-
-    def factor(i):
-        if i >= len(toks):
-            raise CypherParseError(f"RETURN expression ends unexpectedly: {text!r}")
-        kind, val = toks[i]
-        if kind == "num":
-            return F.lit(val), i + 1
-        if kind == "col":
-            return F.col(val).cast("double"), i + 1
-        if (kind, val) == ("op", "("):
-            c, j = expr(i + 1)
-            if j >= len(toks) or toks[j] != ("op", ")"):
-                raise CypherParseError(f"unbalanced parentheses in: {text!r}")
-            return c, j + 1
-        if (kind, val) == ("op", "-"):
-            c, j = factor(i + 1)
-            return -c, j
-        raise CypherParseError(f"unexpected token {val!r} in: {text!r}")
-
-    def term(i):
-        c, i = factor(i)
-        while i < len(toks) and toks[i][0] == "op" and toks[i][1] in "*/":
-            op = toks[i][1]
-            rhs, i = factor(i + 1)
-            c = (c * rhs) if op == "*" else (c / rhs)
-        return c, i
-
-    def expr(i):
-        c, i = term(i)
-        while i < len(toks) and toks[i][0] == "op" and toks[i][1] in "+-":
-            op = toks[i][1]
-            rhs, i = term(i + 1)
-            c = (c + rhs) if op == "+" else (c - rhs)
-        return c, i
-
-    col, end = expr(0)
-    if end != len(toks):
-        raise CypherParseError(f"trailing tokens in RETURN expression: {text!r}")
-    return col
+def _carried(_b, c: str) -> Column:
+    """The raw leaf of a WITH stage's expressions: a carried column,
+    named bare (parse_expr's ``cols``)."""
+    return F.col(c)
 
 
 def _carry_filter(df: DataFrame, where_text: str) -> DataFrame:
     """WITH ... WHERE over the carried columns: `col <op> literal`
     conjunctions (HAVING when the stage aggregated), or arithmetic
-    comparisons over carried columns (`n * 2 >= m + 1`) via
-    _carry_expr."""
+    comparisons over carried columns (`n * 2 >= m + 1`)."""
     for conj in _split_bool(where_text, "AND"):
         m = _CARRY_COND.match(conj)
         if not m:
@@ -1321,8 +1173,8 @@ def _carry_filter(df: DataFrame, where_text: str) -> DataFrame:
                 raise CypherParseError(
                     f"unsupported WITH WHERE condition: {conj!r}"
                 )
-            lhs = _carry_expr(conj[: cm.start()], df.columns)
-            rhs = _carry_expr(conj[cm.end():], df.columns)
+            lhs = expr_col(parse_expr(conj[: cm.start()], df.columns), _carried)
+            rhs = expr_col(parse_expr(conj[cm.end():], df.columns), _carried)
             df = df.filter(_OPS[cm.group(0)](lhs, rhs))
             continue
         col = m.group("c")
@@ -1441,7 +1293,7 @@ def _run_carry_stage(carried: DataFrame | None, items_text: str) -> DataFrame:
         )
         if em:
             keys.append(
-                _carry_expr(em.group("body"), carried.columns)
+                expr_col(parse_expr(em.group("body"), carried.columns), _carried)
                 .alias(em.group("alias"))
             )
             key_names.append(em.group("alias"))
@@ -1628,10 +1480,10 @@ def _order_limit(
                 )
                 continue
             # arithmetic ORDER BY over the stage's columns (round-6):
-            # `ORDER BY n * 2 DESC` via the carry-expression evaluator
+            # `ORDER BY n * 2 DESC` over the stage's columns
             em = re.fullmatch(r"(?is)\s*(?P<body>.+?)(?:\s+(?P<dir>ASC|DESC))?\s*", part)
             try:
-                c = _carry_expr(em.group("body"), cols)
+                c = expr_col(parse_expr(em.group("body"), cols), _carried)
             except CypherParseError:
                 raise CypherParseError(f"unsupported ORDER BY item: {part!r}")
             exprs.append(
@@ -1796,7 +1648,7 @@ def _run_with_pipeline(
                         f"aliased expression over carried columns, got: {it!r}"
                     )
                 sel_cols.append(
-                    _carry_expr(am.group("body"), carried.columns)
+                    expr_col(parse_expr(am.group("body"), carried.columns), _carried)
                     .alias(am.group("alias"))
                 )
                 cols.append(am.group("alias"))
@@ -2551,27 +2403,12 @@ def plan_match(
             )
             df = df.join(n, on=b, how="left")
 
-        def _leaf(nd):
-            kind = nd[0]
-            if kind == "num":
-                return F.lit(nd[1])
-            if kind == "prop":
-                return F.col(f"_xf_{nd[1]}").getItem(nd[2]).cast("double")
-            if kind == "neg":
-                return -_leaf(nd[1])
-            if kind == "strlen":
-                return F.length(F.col(f"_xf_{nd[1]}").getItem(nd[2])).cast("double")
-            if kind == "fn1":
-                return _num_fn_col(nd[1], _leaf(nd[2]))
-            if kind == "case":
-                return _case_col(
-                    nd, _leaf, lambda b, p: F.col(f"_xf_{b}").getItem(p)
-                )
-            _, o, l, r = nd
-            lc, rc = _leaf(l), _leaf(r)
-            return {"+": lc + rc, "-": lc - rc, "*": lc * rc, "/": lc / rc}[o]
+        def raw(b, p):
+            return F.col(f"_xf_{b}").getItem(p)
 
-        df = df.filter(_OPS[op](_leaf(node), _leaf(rhs))).drop(*[f"_xf_{b}" for b in bs])
+        df = df.filter(_OPS[op](expr_col(node, raw), expr_col(rhs, raw))).drop(
+            *[f"_xf_{b}" for b in bs]
+        )
         steps.append(("expr_filter", tuple(bs), op))
 
     # OPTIONAL MATCH (extension): each group becomes its own distinct
@@ -2750,54 +2587,16 @@ def plan_match(
         out = out.drop(f"_props_{b}")
         steps.append(("resolve_props", b, tuple(p for p, _ in cols)))
 
-    # arithmetic RETURN items (extension): evaluate the tree over the
-    # resolved _xp_ leaf columns; non-aggregated items project like
-    # prop_returns, aggregated items stage a value column for the agg
-    def _expr_col(node):
-        kind = node[0]
-        if kind == "num":
-            return F.lit(node[1])
-        if kind == "prop":
-            return F.col(f"_xp_{node[1]}_{node[2]}").cast("double")
-        if kind == "neg":
-            return -_expr_col(node[1])
-        if kind == "strlen":
-            return F.length(F.col(f"_xp_{node[1]}_{node[2]}")).cast("double")
-        if kind == "fn1":
-            return _num_fn_col(node[1], _expr_col(node[2]))
-        if kind == "case":
-            return _case_col(node, _expr_col, lambda b, p: F.col(f"_xp_{b}_{p}"))
-        _, op, l, r = node
-        lc, rc = _expr_col(l), _expr_col(r)
-        return {"+": lc + rc, "-": lc - rc, "*": lc * rc, "/": lc / rc}[op]
-
     # id(b): the binding column IS the node id — a zero-cost projection
     id_aliases = []
     for b, a in qg.id_returns:
         out = out.withColumn(a, F.col(b))
         id_aliases.append(a)
-    # labels(b): one per-id label-set lookup table (sorted comma-joined —
-    # multi-label nodes are several (id,label) rows), left-joined per
-    # binding like the props resolution above; shuffles on node id, the
-    # same scale shape as resolve_props
-    labels_aliases = []
+    # labels(b): the per-id label-set lookup, left-joined per binding
+    labels_aliases = [a for _, a in qg.labels_returns]
     if qg.labels_returns:
-        ldf = (
-            graph.nodes.select("id", "label")
-            .dropDuplicates(["id", "label"])
-            .groupBy("id")
-            .agg(
-                F.concat_ws(",", F.sort_array(F.collect_set("label"))).alias("_lbls")
-            )
-        )
-        for b, a in qg.labels_returns:
-            out = out.join(
-                ldf.select(F.col("id").alias(b), F.col("_lbls").alias(a)),
-                on=b,
-                how="left",
-            )
-            labels_aliases.append(a)
-            steps.append(("resolve_labels", b))
+        out = _join_label_sets(graph, out, qg.labels_returns)
+        steps.extend(("resolve_labels", b) for b, _ in qg.labels_returns)
     # keys(b)/properties(b): one props-map join per binding (deduped on
     # (id, payload) like every resolution join — a multi-label node
     # carries one shared payload), rendered sorted so the result is
@@ -2841,9 +2640,12 @@ def plan_match(
         ]
         out = out.withColumn(a, F.concat(*cols))
         concat_aliases.append(a)
+    # arithmetic RETURN items (extension): evaluate the tree over the
+    # resolved _xp_ leaf columns; non-aggregated items project like
+    # prop_returns, aggregated items stage a value column for the agg
     plain_expr_aliases = []
     for it in qg.expr_returns:
-        col = _expr_col(it.expr)
+        col = expr_col(it.expr, lambda b, p: F.col(f"_xp_{b}_{p}"))
         if it.agg is None:
             out = out.withColumn(it.alias, col)
             plain_expr_aliases.append(it.alias)
