@@ -1777,7 +1777,7 @@ def _queries_unordered() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         ),
         # round-6 extensions: arithmetic in the final RETURN after WITH,
         # and UNWIND over a collected list (the `WITH collect(x) AS xs
-        # UNWIND xs` idiom — planner.py _UNWIND_TAIL / expr_col)
+        # UNWIND xs` idiom — planner.py _unwind_column / expr_col)
         "cypher_with_expr": _cypher(
             "MATCH (c:Customer)-[:PLACED]->(o:Order) "
             "WITH c, count(o) AS n_orders WHERE n_orders >= 15 "

@@ -13,11 +13,12 @@ else raises, like the reference's MatchError.
 from __future__ import annotations
 
 import re
-from dataclasses import dataclass, field
+from dataclasses import dataclass, field, replace as dc_replace
 
 from .tokenizer import (
     CypherLexError,
     Token,
+    scan_clauses,
     split_punct,
     split_top_level,
     tokenize,
@@ -229,6 +230,9 @@ class QueryGraph:
     order_items: list[tuple] = field(default_factory=list)
     skip: int | None = None  # SKIP n (extension): row offset after ORDER BY
     limit: int | None = None
+    # RETURN DISTINCT: dedupe the projected rows (a match set projected
+    # to property values may repeat a value; bindings and groups never do)
+    distinct: bool = False
 
 
 # inline property maps (round-16, openCypher MapExpression): `{k: lit,
@@ -608,111 +612,338 @@ def _cmp_numeric_split(c: str) -> tuple[str, str, str, bool] | None:
     return c[:s0], op0, val, case_present
 
 
-_STATEMENT_CLAUSES = {
-    "RETURN": ("RETURN",),
-    "ORDER BY": ("ORDER", "BY"),
-    "SKIP": ("SKIP",),
-    "LIMIT": ("LIMIT",),
+# ---------------------------------------------------------------------------
+# Statement tree. One token pass over a read statement finds every
+# top-level clause keyword; the statement becomes its UNION parts, each
+# an ordered list of clause nodes (Unwind, Match, Projection) holding
+# source spans. Every later reader takes its clause, item or ORDER BY
+# text from these nodes: a comma or keyword inside a string literal or a
+# bracket group never cuts a clause or an item. ``parse`` and
+# ``split_with`` are views over the tree. The reference gets this from
+# its openCypher front-end (QueryGraph.scala:87-99).
+# ---------------------------------------------------------------------------
+
+
+@dataclass(frozen=True)
+class Unwind:
+    """``UNWIND <source> AS alias``. The source is a literal list
+    (``values``), ``range()`` (``bounds`` = start, exclusive stop, step)
+    or a carried column (``column``); ``text`` is the source as written."""
+
+    alias: str
+    text: str
+    values: tuple = ()
+    bounds: tuple[int, int, int] | None = None
+    column: str | None = None
+
+
+@dataclass(frozen=True)
+class Match:
+    """``[OPTIONAL] MATCH <pattern> [WHERE <cond>]`` as source spans."""
+
+    optional: bool
+    pattern: str
+    where: str | None = None
+
+
+@dataclass(frozen=True)
+class Projection:
+    """``WITH``/``RETURN [DISTINCT] items [WHERE] [ORDER BY] [SKIP]
+    [LIMIT]`` (WHERE on WITH only). ``items`` and ``order_by`` are the
+    top-level comma-separated spans; ``start`` is the keyword's offset."""
+
+    kind: str
+    items: tuple[str, ...]
+    distinct: bool = False
+    where: str | None = None
+    order_by: tuple[str, ...] = ()
+    skip: int | None = None
+    limit: int | None = None
+    start: int = 0
+
+
+@dataclass(frozen=True)
+class Statement:
+    """A read statement: its UNION parts (``union_all`` = UNION ALL),
+    each an ordered clause list ending in a RETURN."""
+
+    text: str
+    parts: tuple[tuple, ...]
+    union_all: bool = False
+
+    def single_stage(self):
+        """``(matches, return)`` of a one-part ``MATCH ... RETURN``
+        statement, else None."""
+        if len(self.parts) != 1:
+            return None
+        *matches, ret = self.parts[0]
+        if matches and all(isinstance(m, Match) for m in matches):
+            return matches, ret
+        return None
+
+
+_READ_CLAUSES = {
+    "UNION": ("UNION",), "UNWIND": ("UNWIND",),
+    "OPTIONAL MATCH": ("OPTIONAL", "MATCH"), "MATCH": ("MATCH",),
+    "WHERE": ("WHERE",), "WITH": ("WITH",), "RETURN": ("RETURN",),
+    "ORDER BY": ("ORDER", "BY"), "SKIP": ("SKIP",), "LIMIT": ("LIMIT",),
 }
-# the clause order the statement grammar admits (each at most once,
-# RETURN mandatory) — openCypher's read-statement tail
-_CLAUSE_RANK = {"RETURN": 0, "ORDER BY": 1, "SKIP": 2, "LIMIT": 3}
+# a projection's sub-clauses and their Projection fields, in the one
+# order the grammar admits
+_PROJ_TAIL = ("WHERE", "ORDER BY", "SKIP", "LIMIT")
+_PROJ_FIELDS = ("where", "order_by", "skip", "limit")
 
 
-def parse(query: str) -> QueryGraph:
-    """Statement-level split runs on the token stream (round-14,
-    tokenizer.py): clause keywords inside string literals or in
-    identifier positions (``o.skip``, ``AS limit``) never split. A bare
-    binding actually NAMED like a tail keyword (``RETURN skip``) is the
-    one deliberate non-goal — treat those words as reserved, as
-    openCypher effectively does."""
-    q = query.strip()
+def _rebase(toks: list[Token], off: int) -> list[Token]:
+    return [Token(t.kind, t.text, t.pos - off, t.end - off) for t in toks]
+
+
+def _segments(q: str) -> list[tuple[str | None, str, list[Token], int]]:
+    """The one token pass: ``(clause, body, body tokens, keyword offset)``
+    per top-level clause keyword, body tokens rebased onto the body; the
+    text before the first keyword arrives as clause None. WITH right
+    after STARTS/ENDS belongs to the string predicate."""
     try:
         toks = tokenize(q)
+        hits = scan_clauses(toks, _READ_CLAUSES)
     except CypherLexError as e:
         raise CypherParseError(str(e)) from None
-    if not toks or not toks[0].is_word("MATCH") or len(toks) < 2:
-        raise CypherParseError(
-            f"unsupported query (expected MATCH ... RETURN ...): {query!r}"
-        )
-    try:
-        segs = split_top_level(q, toks, _STATEMENT_CLAUSES)
-    except CypherLexError as e:
-        raise CypherParseError(str(e)) from None
-    head = segs[0]
-    clauses: dict[str, str] = {}
-    rank = -1
-    for name, text in segs[1:]:
-        if name in clauses or _CLAUSE_RANK[name] <= rank:
-            raise CypherParseError(
-                f"misplaced or duplicate {name} clause: {query!r}"
-            )
-        rank = _CLAUSE_RANK[name]
-        clauses[name] = text
-    if head[0] is not None or "RETURN" not in clauses:
-        raise CypherParseError(
-            f"unsupported query (expected MATCH ... RETURN ...): {query!r}"
-        )
-    body = head[1][toks[0].end :].strip()  # head text minus the MATCH keyword
-    if not body:
-        raise CypherParseError(f"empty MATCH pattern: {query!r}")
-    for k in ("SKIP", "LIMIT"):
-        if k in clauses and not re.fullmatch(r"\d+", clauses[k]):
-            # an empty body usually means the word appeared as a bare
-            # binding ('RETURN skip') — say so (ADVICE r14): SKIP /
-            # LIMIT / RETURN / ORDER are reserved at top level here
-            hint = (
-                " (SKIP/LIMIT/RETURN/ORDER are reserved words — rename"
-                " the binding or alias it)"
-                if not clauses[k]
-                else ""
-            )
-            raise CypherParseError(
-                f"{k} expects a non-negative integer literal: "
-                f"{clauses[k]!r}{hint}"
-            )
-    qg = QueryGraph()
-    _parse_clauses(body, qg)
-    _parse_returns(qg, clauses["RETURN"])
-    _parse_order_limit(
-        qg, clauses.get("ORDER BY"), clauses.get("LIMIT"), clauses.get("SKIP")
+    hits = [
+        h for h in hits
+        if not (h[0] == "WITH" and h[1] > 0 and toks[h[1] - 1].is_word("STARTS", "ENDS"))
+    ]
+    starts = [(None, 0, 0)] + [(n, i + len(_READ_CLAUSES[n]), s) for n, i, s, _e in hits]
+    segs = []
+    for k, (name, first, kw_pos) in enumerate(starts):
+        body = toks[first : hits[k][1] if k < len(hits) else len(toks)]
+        off = body[0].pos if body else 0
+        text = q[off : body[-1].end] if body else ""
+        segs.append((name, text, _rebase(body, off), kw_pos))
+    return segs
+
+
+def _items(text: str, toks: list[Token]) -> tuple[str, ...]:
+    """Top-level comma-separated spans, stripped (empties kept)."""
+    return tuple(p.strip() for p in split_punct(text, toks, ","))
+
+
+def _unwind(text: str, toks: list[Token]) -> Unwind:
+    if len(toks) < 3 or not toks[-2].is_word("AS") or toks[-1].kind != "word":
+        raise CypherParseError(f"unsupported UNWIND (need UNWIND <list> AS name): {text!r}")
+    src, alias = toks[:-2], toks[-1].text
+    src_text = text[src[0].pos : src[-1].end]
+    if len(src) == 1 and src[0].kind == "word":
+        return Unwind(alias, src_text, column=src[0].text)
+    is_list = len(src) >= 2 and src[0].text == "[" and src[-1].text == "]"
+    is_range = (
+        len(src) >= 3 and src[0].kind == "word" and src[0].text.lower() == "range"
+        and src[1].text == "(" and src[-1].text == ")"
     )
+    if not (is_list or is_range):
+        raise CypherParseError(f"unsupported UNWIND source: {src_text!r}")
+    inner = src[2:-1] if is_range else src[1:-1]
+    segs: list[list[Token]] = [[]]
+    for t in inner:
+        if t.kind == "punct" and t.text == ",":
+            segs.append([])
+        else:
+            segs[-1].append(t)
+    vals = []
+    for seg in (s for s in segs if s):
+        lit = _lit_at(seg, 0)
+        if lit is None or lit[2] != len(seg) or (is_range and (lit[0] != "num" or "." in lit[1])):
+            raise CypherParseError(
+                f"unsupported UNWIND list item: {text[seg[0].pos : seg[-1].end]!r}"
+            )
+        kind, v, _ = lit
+        vals.append(v if kind == "str" else float(v) if "." in v else int(v))
+    if is_range:
+        if len(vals) not in (2, 3) or len(segs) != len(vals):
+            raise CypherParseError(f"range() takes (start, end[, step]): {src_text!r}")
+        start, end = vals[0], vals[1]
+        step = vals[2] if len(vals) > 2 else 1
+        if step == 0 or (end - start) * step < 0:
+            raise CypherParseError(f"range() step never reaches the end: {src_text!r}")
+        return Unwind(alias, src_text, bounds=(start, end + (1 if step > 0 else -1), step))
+    if not vals:
+        raise CypherParseError("UNWIND over an empty list")
+    if len({type(v) for v in vals}) > 1:
+        raise CypherParseError(f"mixed-type UNWIND list: {src_text!r}")
+    return Unwind(alias, src_text, values=tuple(vals))
+
+
+def _assemble(q: str, segs) -> tuple[list[list], list[bool]]:
+    """Clause nodes per UNION part, plus each UNION's ALL flag. Checks
+    the clause order within a projection and the WHERE attachment."""
+    parts: list[list] = [[]]
+    alls: list[bool] = []
+    for name, text, toks, pos in segs:
+        clauses = parts[-1]
+        last = clauses[-1] if clauses else None
+        if name is None:
+            if text:
+                raise CypherParseError(
+                    f"unsupported query (expected MATCH ... RETURN ...): {q!r}"
+                )
+        elif name == "UNION":
+            if text and not (len(toks) == 1 and toks[0].is_word("ALL")):
+                raise CypherParseError(f"unsupported UNION modifier {text!r} in: {q!r}")
+            alls.append(bool(text))
+            parts.append([])
+        elif name == "WHERE" and isinstance(last, Match):
+            if last.where is not None:
+                raise CypherParseError(f"multiple WHERE in one clause: {q!r}")
+            if not text:
+                raise CypherParseError(f"empty WHERE in: {q!r}")
+            clauses[-1] = dc_replace(last, where=text)
+        elif name in _PROJ_TAIL:
+            rank = _PROJ_TAIL.index(name)
+            if (
+                not isinstance(last, Projection)
+                or (name == "WHERE" and last.kind == "RETURN")
+                or any(getattr(last, f) not in (None, ()) for f in _PROJ_FIELDS[rank:])
+            ):
+                raise CypherParseError(f"misplaced or duplicate {name} clause: {q!r}")
+            if name == "ORDER BY":
+                value = _items(text, toks)
+            elif name == "WHERE":
+                if not text:
+                    raise CypherParseError(f"empty WHERE in: {q!r}")
+                value = text
+            elif len(toks) == 1 and toks[0].kind == "num" and "." not in toks[0].text:
+                value = int(toks[0].text)
+            else:
+                # an empty body usually means the word appeared as a bare
+                # binding ('RETURN skip'): SKIP / LIMIT / RETURN / ORDER
+                # are reserved at top level here
+                hint = (
+                    " (SKIP/LIMIT/RETURN/ORDER are reserved words — rename"
+                    " the binding or alias it)"
+                    if not text
+                    else ""
+                )
+                raise CypherParseError(
+                    f"{name} expects a non-negative integer literal: {text!r}{hint}"
+                )
+            clauses[-1] = dc_replace(last, **{_PROJ_FIELDS[rank]: value})
+        elif isinstance(last, Projection) and last.kind == "RETURN":
+            raise CypherParseError(f"misplaced or duplicate {name} clause: {q!r}")
+        elif name == "UNWIND":
+            clauses.append(_unwind(text, toks))
+        elif name in ("MATCH", "OPTIONAL MATCH"):
+            if not text:
+                raise CypherParseError(f"empty MATCH pattern: {q!r}")
+            clauses.append(Match(name == "OPTIONAL MATCH", text))
+        else:  # WITH / RETURN
+            distinct = bool(toks) and toks[0].is_word("DISTINCT")
+            if distinct:
+                off = toks[1].pos if len(toks) > 1 else len(text)
+                text, toks = text[off:], _rebase(toks[1:], off)
+            items = tuple(i for i in _items(text, toks) if i) if toks else ()
+            if name == "WITH" and not items:
+                raise CypherParseError(f"dangling WITH: {q!r}")
+            clauses.append(Projection(name, items, distinct, start=pos))
+    return parts, alls
+
+
+def _check_part(q: str, clauses: list) -> None:
+    """The stage shapes the planner runs: leading UNWINDs, then a
+    MATCH (or the RETURN); an UNWIND elsewhere follows a WITH; one
+    plain MATCH per stage; a RETURN last."""
+    if not clauses or not (isinstance(clauses[-1], Projection) and clauses[-1].kind == "RETURN"):
+        raise CypherParseError(f"unsupported query (expected MATCH ... RETURN ...): {q!r}")
+    lead = 0
+    while isinstance(clauses[lead], Unwind):
+        if clauses[lead].column is not None:
+            raise CypherParseError(
+                f"UNWIND of a carried column needs a preceding WITH: {clauses[lead].text!r}"
+            )
+        lead += 1
+    first = clauses[lead]
+    if not (
+        (isinstance(first, Match) and not first.optional)
+        or (lead and first is clauses[-1])
+    ):
+        raise CypherParseError(f"unsupported query (expected MATCH ... RETURN ...): {q!r}")
+    for prev, c in zip(clauses[lead:], clauses[lead + 1 :]):
+        if isinstance(c, Unwind) and not isinstance(prev, (Unwind, Projection)):
+            raise CypherParseError(f"UNWIND must open the statement or follow a WITH: {c.text!r}")
+        if isinstance(c, Match) and not c.optional and isinstance(prev, Match):
+            raise CypherParseError(
+                f"consecutive MATCH clauses need a WITH between them: {c.pattern!r}"
+            )
+
+
+def parse_statement(text: str) -> Statement:
+    """Parse a read statement into its tree (see Statement). Lexes once;
+    raises CypherParseError for text outside the read grammar."""
+    q = text.strip()
+    parts, alls = _assemble(q, _segments(q))
+    if len(parts) > 1 and not all(parts):
+        raise CypherParseError(f"dangling UNION in: {q!r}")
+    if len(set(alls)) > 1:
+        raise CypherParseError("cannot mix UNION and UNION ALL in one query")
+    for clauses in parts:
+        _check_part(q, clauses)
+    return Statement(q, tuple(tuple(p) for p in parts), bool(alls) and alls[0])
+
+
+def match_clauses(body: str) -> list[Match]:
+    """The MATCH clauses of a write statement's body (the text between
+    its MATCH and its verb), read by the same token pass."""
+    q = body.strip()
+    segs = _segments(q)
+    segs[0] = ("MATCH",) + segs[0][1:]
+    parts, _ = _assemble(q, segs)
+    if len(parts) > 1 or not all(isinstance(c, Match) for c in parts[0]):
+        raise CypherParseError(f"unsupported MATCH body: {q!r}")
+    return parts[0]
+
+
+def stage_query_graph(matches: list[Match], ret: Projection) -> QueryGraph:
+    """The QueryGraph of one ``MATCH ... RETURN`` stage."""
+    qg = QueryGraph(distinct=ret.distinct)
+    _parse_clauses(matches, qg)
+    _parse_returns(qg, ret.items)
+    _parse_order_limit(qg, ret.order_by, ret.limit, ret.skip)
     return qg
 
 
-def split_with(query: str) -> list[str] | None:
-    """Split a query on top-level WITH keywords (the stage separators of a
-    Cypher pipeline — an extension beyond the reference surface, which has
-    no WITH). Returns None when the query has no top-level WITH; string
-    literals, bracketed groups, identifier positions (``a.with``,
-    ``AS with``) and the WITH inside a STARTS WITH / ENDS WITH string
-    predicate never split (token-stream scan, round-14)."""
-    q = query.strip()
-    try:
-        toks = tokenize(q)
-    except CypherLexError as e:
-        raise CypherParseError(str(e)) from None
-
-    def not_string_op(ts, i):
-        return not (i > 0 and ts[i - 1].is_word("STARTS", "ENDS"))
-
-    try:
-        segs = split_top_level(
-            q, toks, {"WITH": ("WITH",)}, extra_guard=not_string_op
+def parse(query: str) -> QueryGraph:
+    """The QueryGraph of a single-stage ``MATCH ... RETURN`` statement (a
+    view over parse_statement). A bare binding NAMED like a clause
+    keyword (``RETURN skip``) is the one deliberate non-goal — those
+    words are reserved, as openCypher effectively does."""
+    stage = parse_statement(query).single_stage()
+    if stage is None:
+        raise CypherParseError(
+            f"unsupported query (expected MATCH ... RETURN ...): {query!r}"
         )
-    except CypherLexError as e:
-        raise CypherParseError(str(e)) from None
-    if len(segs) <= 1:
+    return stage_query_graph(*stage)
+
+
+def split_with(query: str) -> list[str] | None:
+    """The statement's text cut at its top-level WITH keywords (a view
+    over parse_statement): None without a WITH, else the text before the
+    first WITH and after each one."""
+    stmt = parse_statement(query)
+    starts = [
+        c.start for part in stmt.parts for c in part
+        if isinstance(c, Projection) and c.kind == "WITH"
+    ]
+    if not starts:
         return None
-    parts = [text for _, text in segs]
-    if any(not p for p in parts):
-        raise CypherParseError(f"dangling WITH: {query!r}")
-    return parts
+    q = stmt.text
+    cuts = [0] + [s + len("WITH") for s in starts]
+    return [q[a:b].strip() for a, b in zip(cuts, starts + [len(q)])]
 
 
-def _parse_clauses(body: str, qg: QueryGraph) -> None:
-    """Parse `pattern [WHERE ...] (OPTIONAL MATCH pattern [WHERE ...])*`
-    into qg's bindings/edges/filters (everything left of RETURN)."""
+def _parse_clauses(clauses: list[Match], qg: QueryGraph) -> None:
+    """Parse a stage's MATCH clauses (the required one first, then each
+    OPTIONAL MATCH; the first clause's own OPTIONAL flag is the caller's
+    business) into qg's bindings/edges/filters. WHERE scoping follows
+    clause order: a clause's WHERE may only reference bindings bound so
+    far, like openCypher."""
     anon = 0
 
     def fresh() -> str:
@@ -720,40 +951,8 @@ def _parse_clauses(body: str, qg: QueryGraph) -> None:
         anon += 1
         return f"_anon{anon}"
 
-    # clause list: required MATCH first, then zero or more OPTIONAL MATCH;
-    # each clause is `patterns [WHERE conds]` and WHERE scoping follows
-    # clause order (a clause's WHERE may only reference bindings bound so
-    # far, like openCypher). Token-stream split (round-14): an OPTIONAL
-    # MATCH inside a string literal or sub-pattern parens never splits.
-    try:
-        btoks = tokenize(body)
-        clauses = [
-            text
-            for _, text in split_top_level(
-                body, btoks, {"OPTIONAL MATCH": ("OPTIONAL", "MATCH")}
-            )
-        ]
-    except CypherLexError as e:
-        raise CypherParseError(str(e)) from None
     for ci, clause in enumerate(clauses):
-        # clause-level WHERE boundary on the token stream (round-15 —
-        # the old non-greedy regex split at the FIRST ' WHERE ', so a
-        # string literal containing it broke the clause): WHERE inside
-        # literals/brackets/identifier positions never splits
-        clause = clause.strip()
-        try:
-            ctoks = tokenize(clause)
-            wsegs = split_top_level(clause, ctoks, {"WHERE": ("WHERE",)})
-        except CypherLexError as e:
-            raise CypherParseError(str(e)) from None
-        if len(wsegs) > 2:
-            raise CypherParseError(f"multiple WHERE in one clause: {clause!r}")
-        patterns_text = wsegs[0][1].strip()
-        where_text = wsegs[1][1].strip() if len(wsegs) == 2 else None
-        if where_text == "":
-            raise CypherParseError(f"empty WHERE in: {clause!r}")
-        if not patterns_text:
-            raise CypherParseError(f"empty MATCH clause in: {body!r}")
+        patterns_text, where_text = clause.pattern, clause.where
         target = qg.edges
         if ci > 0:
             target = []
@@ -1425,15 +1624,10 @@ def _split_depth0_plus(toks: list[Token]) -> list[list[Token]]:
     return segs
 
 
-def _parse_returns(qg: QueryGraph, returns: str) -> None:
-    """Parse a RETURN / WITH item list into qg's return fields."""
-    # RETURN DISTINCT is accepted and is a no-op: match results are
-    # already distinct endpoint combinations (ANY_PAIR existence
-    # semantics, Readme.md:66-70 returns a Set)
-    returns_src = re.sub(r"(?is)^\s*DISTINCT\s+", "", returns)
-    # paren-aware split: coalesce(b.prop, 'x') carries a comma inside
-    for item in _split_patterns(returns_src):
-        name = item.strip()
+def _parse_returns(qg: QueryGraph, items) -> None:
+    """Parse RETURN / WITH items (a Projection's spans) into qg's return
+    fields."""
+    for name in items:
         if name == "*":
             # RETURN *: every named (non-anonymous) binding of the match,
             # in name order — pattern-filter-only bindings are excluded
@@ -1613,52 +1807,44 @@ def out_columns(qg: QueryGraph) -> set[str]:
 
 
 def _parse_order_limit(
-    qg: QueryGraph, orderby: str | None, limit: str | None, skip: str | None = None
+    qg: QueryGraph, order_by=(), limit: int | None = None, skip: int | None = None
 ) -> None:
+    """ORDER BY items (spans; an empty one is an unsupported item), SKIP
+    and LIMIT of a single-stage statement."""
     out_cols = out_columns(qg)
-    if orderby:
-        # token-stream comma split (round-15): empties kept so `a,,b`
-        # still errors as an unsupported item, matching the old split
+    for part in order_by:
+        # token shapes (round-16, with the WHERE/RETURN migrations):
+        # `col [ASC|DESC]` over an output column, or `b.prop
+        # [ASC|DESC]` (extension) — sort by a property without
+        # returning it, resolved via the planner's props join and
+        # dropped after LIMIT
         try:
-            ob_parts = split_punct(orderby, tokenize(orderby), ",")
+            ptoks = tokenize(part)
         except CypherLexError as e:
             raise CypherParseError(str(e)) from None
-        for part in ob_parts:
-            # token shapes (round-16, with the WHERE/RETURN migrations):
-            # `col [ASC|DESC]` over an output column, or `b.prop
-            # [ASC|DESC]` (extension) — sort by a property without
-            # returning it, resolved via the planner's props join and
-            # dropped after LIMIT
-            try:
-                ptoks = tokenize(part)
-            except CypherLexError as e:
-                raise CypherParseError(str(e)) from None
-            desc = False
-            if ptoks and ptoks[-1].is_word("ASC", "DESC"):
-                desc = ptoks[-1].text.upper() == "DESC"
-                ptoks = ptoks[:-1]
-            if len(ptoks) == 1 and ptoks[0].kind == "word":
-                col = ptoks[0].text
-                if col in out_cols:
-                    qg.order_by.append((col, desc))
-                    qg.order_items.append(("col", col, desc))
-                    continue
-                raise CypherParseError(
-                    f"ORDER BY of non-returned column: {col!r}"
-                )
-            opr = _prop_at(ptoks, 0)
-            if opr and opr[2] == len(ptoks):
-                if opr[0] not in qg.labels:
-                    raise CypherParseError(
-                        f"ORDER BY property of unbound binding: {part!r}"
-                    )
-                qg.order_items.append(("prop", opr[0], opr[1], desc))
+        desc = False
+        if ptoks and ptoks[-1].is_word("ASC", "DESC"):
+            desc = ptoks[-1].text.upper() == "DESC"
+            ptoks = ptoks[:-1]
+        if len(ptoks) == 1 and ptoks[0].kind == "word":
+            col = ptoks[0].text
+            if col in out_cols:
+                qg.order_by.append((col, desc))
+                qg.order_items.append(("col", col, desc))
                 continue
-            raise CypherParseError(f"unsupported ORDER BY item: {part!r}")
-    if skip:
-        qg.skip = int(skip)
-    if limit:
-        qg.limit = int(limit)
+            raise CypherParseError(
+                f"ORDER BY of non-returned column: {col!r}"
+            )
+        opr = _prop_at(ptoks, 0)
+        if opr and opr[2] == len(ptoks):
+            if opr[0] not in qg.labels:
+                raise CypherParseError(
+                    f"ORDER BY property of unbound binding: {part!r}"
+                )
+            qg.order_items.append(("prop", opr[0], opr[1], desc))
+            continue
+        raise CypherParseError(f"unsupported ORDER BY item: {part!r}")
+    qg.skip, qg.limit = skip, limit
 
 
 

@@ -16,7 +16,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 
-from .cypher.parser import parse, split_with
+from .cypher.parser import parse_statement, stage_query_graph
 from .cypher.tokenizer import CypherLexError, scan_clauses, tokenize
 from .graph.store import PropertyGraph
 from .plans.planner import (
@@ -81,13 +81,15 @@ class GraphDB:
         return GraphDB(run_cypher_set(self.graph, cypher))
 
     def plan(self, cypher: str) -> PlannedQuery:
-        if split_with(cypher) is not None:
+        stage = parse_statement(cypher).single_stage()
+        if stage is None:
             raise ValueError(
-                "plan()/explain() cover single-stage queries; WITH pipelines "
-                "execute stage-by-stage via query() (each stage is a "
-                "plan_match call with the previous stage's output as carry)"
+                "plan() covers single-stage MATCH ... RETURN queries; UNION, "
+                "UNWIND and WITH statements execute part by part and stage "
+                "by stage via query() (each stage is a plan_match call with "
+                "the previous stage's output as carry)"
             )
-        return plan_match(self.graph, parse(cypher))
+        return plan_match(self.graph, stage_query_graph(*stage))
 
     def explain(
         self,

@@ -12,7 +12,7 @@ from __future__ import annotations
 
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
@@ -97,156 +97,6 @@ class GraphStats:
             return self.edge_count
         return sum(self.type_counts.get(t, 0) for t in types)
 
-    # ---- WHERE-predicate selectivity (extension beyond the reference's
-    # label-frequency model; SURVEY §4.2 lists selectivity as the
-    # optimizer's whole signal — histograms extend it to predicates) ----
-    #
-    # Lazily-built per-(label, prop) equi-width histograms over the
-    # numeric interpretation of the props map, cached for the stats
-    # object's lifetime (= the graph's). Building one is an ANALYZE-style
-    # aggregation job at plan time — paid once per (label, prop), reused
-    # by every later query on the same graph.
-
-    HIST_BUCKETS = 32
-
-    def _histogram(self, nodes: DataFrame, label: str | None, prop: str):
-        cache = self.__dict__.setdefault("_hist_cache", {})
-        key = (label, prop)
-        if key in cache:
-            return cache[key]
-        if "props" not in nodes.columns:
-            cache[key] = None
-            return None
-        base = nodes if label is None else nodes.filter(F.col("label") == label)
-        v = F.col("props").getItem(prop)
-        # try_cast: ANSI mode would error the whole job on one
-        # non-numeric string; unparsable values simply fall out of the
-        # numeric histogram (their distinct count still informs equality)
-        vn = v.try_cast("double")
-        stats_row = base.agg(
-            F.min(vn).alias("lo"),
-            F.max(vn).alias("hi"),
-            F.count(vn).alias("n"),
-            F.approx_count_distinct(v).alias("nd"),
-        ).collect()[0]
-        nd = max(int(stats_row["nd"]), 1)
-        if stats_row["n"] == 0 or stats_row["lo"] is None:
-            cache[key] = (None, None, 0, nd, None)
-            return cache[key]
-        lo, hi, n = float(stats_row["lo"]), float(stats_row["hi"]), int(stats_row["n"])
-        counts = [0] * self.HIST_BUCKETS
-        if hi > lo:
-            b = F.least(
-                F.lit(self.HIST_BUCKETS - 1),
-                F.floor((vn - lo) / (hi - lo) * self.HIST_BUCKETS).cast("int"),
-            )
-            for r in base.filter(vn.isNotNull()).groupBy(b.alias("b")).count().collect():
-                if r["b"] is not None:
-                    counts[int(r["b"])] = int(r["count"])
-        else:
-            counts[0] = n
-        cache[key] = (lo, hi, n, nd, counts)
-        return cache[key]
-
-    def pred_sel(
-        self,
-        nodes: DataFrame,
-        label: str | None,
-        prop: str,
-        op: str,
-        value,
-        is_num: bool,
-    ) -> float | None:
-        """Estimated fraction of `label` nodes satisfying
-        `prop <op> value`. None = unknown (planner keeps its upper
-        bound). Numeric ranges interpolate the histogram; equality uses
-        1/approx-distinct; string ops beyond (=, <>) are unestimated."""
-        return self._sel_from_hist(self._histogram(nodes, label, prop), op, value, is_num)
-
-    def edge_pred_sel(
-        self,
-        edges: DataFrame,
-        types: tuple[str, ...],
-        prop: str,
-        op: str,
-        value,
-        is_num: bool,
-    ) -> float | None:
-        """Selectivity of an edge-property predicate over the typed edge
-        set — the edge twin of pred_sel, histogram cached per
-        (types, prop). The value column is the typed column (weight) when
-        present, else the edge props map."""
-        cache = self.__dict__.setdefault("_hist_cache", {})
-        key = ("edge", types, prop)
-        if key not in cache:
-            base = edges
-            if prop in edges.columns:
-                v = F.col(prop)
-            elif "props" in edges.columns:
-                v = F.col("props").getItem(prop)
-            else:
-                cache[key] = None
-                return None
-            vn = v.try_cast("double")
-            row = base.agg(
-                F.min(vn).alias("lo"), F.max(vn).alias("hi"),
-                F.count(vn).alias("n"), F.approx_count_distinct(v).alias("nd"),
-            ).collect()[0]
-            nd = max(int(row["nd"]), 1)
-            if row["n"] == 0 or row["lo"] is None:
-                cache[key] = (None, None, 0, nd, None)
-            else:
-                lo, hi, n = float(row["lo"]), float(row["hi"]), int(row["n"])
-                counts = [0] * self.HIST_BUCKETS
-                if hi > lo:
-                    b = F.least(
-                        F.lit(self.HIST_BUCKETS - 1),
-                        F.floor((vn - lo) / (hi - lo) * self.HIST_BUCKETS).cast("int"),
-                    )
-                    for r in base.filter(vn.isNotNull()).groupBy(b.alias("b")).count().collect():
-                        if r["b"] is not None:
-                            counts[int(r["b"])] = int(r["count"])
-                else:
-                    counts[0] = n
-                cache[key] = (lo, hi, n, nd, counts)
-        return self._sel_from_hist(cache[key], op, value, is_num)
-
-    def _sel_from_hist(self, h, op: str, value, is_num: bool) -> float | None:
-        if h is None:
-            return None
-        lo, hi, n, nd, counts = h
-        if not is_num:
-            if op == "=":
-                return 1.0 / nd
-            if op in ("<>", "!="):
-                return 1.0 - 1.0 / nd
-            return None
-        if counts is None:
-            return None
-        x = float(value)
-        if op == "=":
-            return 1.0 / nd
-        if op in ("<>", "!="):
-            return 1.0 - 1.0 / nd
-        if hi <= lo:
-            below = 1.0 if lo <= x else 0.0
-        else:
-            width = (hi - lo) / len(counts)
-            mass = 0.0
-            for i, c in enumerate(counts):
-                b_lo = lo + i * width
-                b_hi = b_lo + width
-                if b_hi <= x:
-                    mass += c
-                elif b_lo < x:
-                    mass += c * (x - b_lo) / width
-            below = mass / n
-        if op in ("<", "<="):
-            return max(min(below, 1.0), 1.0 / n)
-        if op in (">", ">="):
-            return max(min(1.0 - below, 1.0), 1.0 / n)
-        return None
-
     def triplet_card(
         self, src_label: str | None, types: list[str] | None, dst_label: str | None
     ) -> int | None:
@@ -267,6 +117,91 @@ class GraphStats:
                 continue
             total += c
         return total
+
+
+# ---- WHERE-predicate selectivity (extension beyond the reference's
+# label-frequency model; SURVEY §4.2 lists selectivity as the
+# optimizer's whole signal — histograms extend it to predicates) ----
+#
+# Equi-width histograms over the numeric reading of one value column.
+# The graph keeps one per (label, prop) and per (edge types, prop) as
+# entries of its derived registry (PropertyGraph.node_histogram /
+# edge_histogram): building one is an ANALYZE-style aggregation job at
+# plan time, paid once per graph version and dropped by a write that
+# changes what it reads.
+
+HIST_BUCKETS = 32
+
+
+def histogram(base: DataFrame, v: Column):
+    """``(lo, hi, n, nd, counts)`` over the rows of ``base``: the numeric
+    range, count and bucket counts of ``v`` read as a double, and the
+    approximate distinct count of ``v`` itself."""
+    # try_cast: ANSI mode would error the whole job on one non-numeric
+    # string; unparsable values simply fall out of the numeric histogram
+    # (their distinct count still informs equality)
+    vn = v.try_cast("double")
+    row = base.agg(
+        F.min(vn).alias("lo"), F.max(vn).alias("hi"),
+        F.count(vn).alias("n"), F.approx_count_distinct(v).alias("nd"),
+    ).collect()[0]
+    nd = max(int(row["nd"]), 1)
+    if row["n"] == 0 or row["lo"] is None:
+        return (None, None, 0, nd, None)
+    lo, hi, n = float(row["lo"]), float(row["hi"]), int(row["n"])
+    counts = [0] * HIST_BUCKETS
+    if hi > lo:
+        b = F.least(
+            F.lit(HIST_BUCKETS - 1),
+            F.floor((vn - lo) / (hi - lo) * HIST_BUCKETS).cast("int"),
+        )
+        for r in base.filter(vn.isNotNull()).groupBy(b.alias("b")).count().collect():
+            if r["b"] is not None:
+                counts[int(r["b"])] = int(r["count"])
+    else:
+        counts[0] = n
+    return (lo, hi, n, nd, counts)
+
+
+def hist_sel(h, op: str, value, is_num: bool) -> float | None:
+    """Estimated fraction of rows satisfying ``<op> value`` under
+    histogram ``h``. None = unknown (planner keeps its upper bound).
+    Numeric ranges interpolate the buckets; equality uses
+    1/approx-distinct; string ops beyond (=, <>) are unestimated."""
+    if h is None:
+        return None
+    lo, hi, n, nd, counts = h
+    if not is_num:
+        if op == "=":
+            return 1.0 / nd
+        if op in ("<>", "!="):
+            return 1.0 - 1.0 / nd
+        return None
+    if counts is None:
+        return None
+    x = float(value)
+    if op == "=":
+        return 1.0 / nd
+    if op in ("<>", "!="):
+        return 1.0 - 1.0 / nd
+    if hi <= lo:
+        below = 1.0 if lo <= x else 0.0
+    else:
+        width = (hi - lo) / len(counts)
+        mass = 0.0
+        for i, c in enumerate(counts):
+            b_lo = lo + i * width
+            b_hi = b_lo + width
+            if b_hi <= x:
+                mass += c
+            elif b_lo < x:
+                mass += c * (x - b_lo) / width
+        below = mass / n
+    if op in ("<", "<="):
+        return max(min(below, 1.0), 1.0 / n)
+    if op in (">", ">="):
+        return max(min(1.0 - below, 1.0), 1.0 / n)
+    return None
 
 
 def stats_to_dict(s: "GraphStats") -> dict:

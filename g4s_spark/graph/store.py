@@ -29,9 +29,9 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..memo import FACETS, Derived
-from .stats import GraphStats
+from .stats import GraphStats, histogram
 
-_PRED_OPS = {
+PRED_OPS = {
     "=": lambda c, v: c == v,
     "<>": lambda c, v: c != v,
     "!=": lambda c, v: c != v,
@@ -458,7 +458,7 @@ class PropertyGraph:
                 # compared uncast against an integer literal (exact at
                 # any id), as a double otherwise
                 c = F.col("id")
-                return _PRED_OPS[f.op](
+                return PRED_OPS[f.op](
                     c if isinstance(f.value, int) else c.cast("double"), F.lit(f.value)
                 )
             c = F.col("props").getItem(f.prop)
@@ -467,7 +467,7 @@ class PropertyGraph:
                 c = apply_scalar_fn(fn, c)
             if f.is_num:
                 c = c.cast("double")
-            return _PRED_OPS[f.op](c, F.lit(f.value))
+            return PRED_OPS[f.op](c, F.lit(f.value))
 
         for f in prop_filters:
             df = df.filter(cond(f))
@@ -511,6 +511,32 @@ class PropertyGraph:
     @stats.setter
     def stats(self, value: GraphStats) -> None:
         self.derived.put("stats", STATS_READS, value)
+
+    def node_histogram(self, label: str | None, prop: str):
+        """stats.histogram of ``prop`` over the ``label`` nodes (None
+        without a props map), built once per graph version."""
+
+        def build():
+            if "props" not in self.nodes.columns:
+                return None
+            base = self.nodes if label is None else self.nodes.filter(F.col("label") == label)
+            return histogram(base, F.col("props").getItem(prop))
+
+        return self.derived.get(("node_hist", label, prop), NODE_ROWS, build)
+
+    def edge_histogram(self, types: tuple[str, ...], prop: str):
+        """stats.histogram of an edge property over the ``types`` edges:
+        the typed column (weight) when present, else the props map."""
+
+        def build():
+            base = self.typed_edges(list(types))
+            if prop in base.columns:
+                return histogram(base, F.col(prop))
+            if "props" in base.columns:
+                return histogram(base, F.col("props").getItem(prop))
+            return None
+
+        return self.derived.get(("edge_hist", types, prop), EDGE_ROWS, build)
 
     def cache(self) -> "PropertyGraph":
         """Cache the hot projections: (id,label) for planning/semi-joins

@@ -40,19 +40,28 @@ from ..checkpointing import MAX_CLOSURE_ITERS, fixpoint, iter_checkpoint
 from ..cypher.parser import (
     CypherParseError,
     ID_PROP,
+    Match,
+    PatternEdge,
+    Projection,
+    QueryGraph,
+    Statement,
+    Unwind,
     bind_params,
     expr_prop_leaves,
     expr_walk,
+    match_clauses,
+    parse,
     parse_expr,
-    PatternEdge,
-    QueryGraph,
+    parse_statement,
+    stage_query_graph,
     _parse_clauses,
     _parse_returns,
     _split_bool,
-    parse,
-    split_with,
+    _strip_ret_alias,
 )
-from ..graph.store import PropertyGraph, apply_scalar_fn
+from ..cypher.tokenizer import CypherLexError, scan_clauses, tokenize
+from ..graph.stats import hist_sel
+from ..graph.store import PRED_OPS, PropertyGraph, apply_scalar_fn
 from .cost import expand_card, step_cost
 
 BROADCAST_MAX_ROWS = 2_000_000  # label sets below this are broadcast
@@ -65,98 +74,23 @@ class PlannedQuery:
     cost: float = 0.0
 
 
-_UNWIND = re.compile(
-    r"(?is)^\s*UNWIND\s*(?:\[(?P<list>[^\]]*)\]"
-    r"|range\s*\(\s*(?P<rng>-?\d+\s*,\s*-?\d+(?:\s*,\s*-?\d+)?)\s*\))"
-    r"\s+AS\s+(?P<name>[A-Za-z_][A-Za-z0-9_]*)"
-    r"\s+(?P<rest>.+)$"
-)
-_IN_ITEM = re.compile(r"^\s*('[^']*'|\"[^\"]*\"|-?\d+(?:\.\d+)?)\s*$")
-# trailing `UNWIND <carried-col|literal-list|range()> AS alias` inside a
-# WITH stage (see _run_with_pipeline)
-_UNWIND_TAIL = re.compile(
-    r"(?is)\s+UNWIND\s+(?:(?P<src>[A-Za-z_][A-Za-z0-9_]*)"
-    r"|\[(?P<lits>[^\]]*)\]"
-    r"|range\s*\(\s*(?P<rng>-?\d+\s*,\s*-?\d+(?:\s*,\s*-?\d+)?)\s*\))"
-    r"\s+AS\s+(?P<alias>[A-Za-z_][A-Za-z0-9_]*)\s*$"
-)
-
-
-# ranges that must materialize as a Python list (the WITH-tail UNWIND
-# embeds them as a literal array) are capped so UNWIND range(0, 1e8)
-# cannot OOM the driver; the leading-UNWIND path uses spark.range and
-# has no cap (ADVICE r6)
+# a WITH-tail UNWIND range() materializes as a Python list (embedded as
+# a literal array), so it is capped: UNWIND range(0, 1e8) cannot OOM the
+# driver; a leading UNWIND builds on spark.range and has no cap (ADVICE r6)
 _RANGE_LIST_CAP = 1_000_000
 
 
-def _range_bounds(txt: str) -> tuple[int, int, int]:
-    """openCypher range(start, end[, step]): INCLUSIVE of end; step
-    defaults to 1 and must move toward end. Returns (start, stop, step)
-    with stop exclusive, ready for range()/spark.range()."""
-    parts = [int(p) for p in txt.split(",")]
-    start, end = parts[0], parts[1]
-    step = parts[2] if len(parts) > 2 else 1
-    if step == 0 or (end - start) * step < 0:
-        raise CypherParseError(f"range() step never reaches the end: {txt!r}")
-    return start, end + (1 if step > 0 else -1), step
-
-
-def _parse_range(txt: str) -> list[int]:
-    start, stop, step = _range_bounds(txt)
+def _unwind_values(u: Unwind) -> list:
+    """The values of a literal-list or range() UNWIND, as a list."""
+    if u.bounds is None:
+        return list(u.values)
+    start, stop, step = u.bounds
     if abs(stop - start) // abs(step) > _RANGE_LIST_CAP:
         raise CypherParseError(
-            f"range({txt}) exceeds {_RANGE_LIST_CAP} elements; use a "
+            f"{u.text} exceeds {_RANGE_LIST_CAP} elements; use a "
             "leading UNWIND (distributed via spark.range) instead"
         )
     return list(range(start, stop, step))
-
-
-def _parse_literal_list(items_txt: str) -> list:
-    """The literal list of an UNWIND: quoted strings or numbers, one
-    shared type."""
-    from ..cypher.parser import _split_patterns
-
-    vals = []
-    for raw in _split_patterns(items_txt):
-        m = _IN_ITEM.match(raw)
-        if not m:
-            raise CypherParseError(f"unsupported UNWIND list item: {raw!r}")
-        tok = m.group(1)
-        vals.append(tok[1:-1] if tok[0] in "'\"" else (
-            float(tok) if "." in tok else int(tok)))
-    if not vals:
-        raise CypherParseError("UNWIND over an empty list")
-    kinds = {type(v) for v in vals}
-    if len(kinds) > 1:
-        raise CypherParseError(f"mixed-type UNWIND list: {items_txt!r}")
-    return vals
-
-
-def _split_union(query: str) -> tuple[list[str], bool]:
-    """Top-level UNION [ALL] segments (token-stream split, round-14 —
-    a UNION inside a string literal or parens never splits). openCypher
-    forbids mixing UNION and UNION ALL in one query; so do we."""
-    from ..cypher.tokenizer import CypherLexError, split_top_level, tokenize
-
-    q = query.strip()
-    try:
-        toks = tokenize(q)
-        parts = split_top_level(q, toks, {"UNION": ("UNION",)})
-    except CypherLexError as e:
-        raise CypherParseError(str(e)) from None
-    if len(parts) <= 1:
-        return [q], False
-    alls = []
-    segs = [parts[0][1]]
-    for _, p in parts[1:]:
-        m = re.match(r"(?is)^ALL\s+(?P<rest>.+)$", p)
-        alls.append(bool(m))
-        segs.append(m.group("rest") if m else p)
-    if any(not s for s in segs):
-        raise CypherParseError(f"dangling UNION in: {query!r}")
-    if len(set(alls)) > 1:
-        raise CypherParseError("cannot mix UNION and UNION ALL in one query")
-    return segs, alls[0]
 
 
 def run_cypher(
@@ -174,32 +108,37 @@ def run_cypher(
     ``$name`` query parameters as literals before parsing (round-8)."""
     if params is not None:
         query = bind_params(query, params)
-    segs, union_all = _split_union(query)
-    if len(segs) > 1:
-        dfs = [run_cypher(graph, s, resolve=resolve) for s in segs]
-        cols = sorted(dfs[0].columns)
-        for d in dfs[1:]:
-            if sorted(d.columns) != cols:
-                raise CypherParseError(
-                    f"UNION sides return different columns: {cols} vs {sorted(d.columns)}"
-                )
-        out = dfs[0]
-        for d in dfs[1:]:
-            out = out.unionByName(d)
-        # UNION dedups across sides; each side is already distinct under
-        # the engine's existence semantics, so ALL only skips that final
-        # cross-side dedup
-        return out if union_all else out.dropDuplicates()
-    um = _UNWIND.match(query)
-    if um:
-        return _run_unwind(graph, um, resolve)
-    parts = split_with(query)
-    if parts is not None:
-        df, bindings = _run_with_pipeline(graph, parts)
-    else:
-        qg = parse(query)
-        df = plan_match(graph, qg).df
-        bindings = set(qg.labels)
+    return _run_statement(graph, parse_statement(query), resolve)
+
+
+def _run_statement(graph: PropertyGraph, stmt: Statement, resolve: bool) -> DataFrame:
+    dfs = [_run_part(graph, part, resolve) for part in stmt.parts]
+    if len(dfs) == 1:
+        return dfs[0]
+    cols = sorted(dfs[0].columns)
+    for d in dfs[1:]:
+        if sorted(d.columns) != cols:
+            raise CypherParseError(
+                f"UNION sides return different columns: {cols} vs {sorted(d.columns)}"
+            )
+    out = dfs[0]
+    for d in dfs[1:]:
+        out = out.unionByName(d)
+    # UNION dedups across sides; each side is already distinct under
+    # the engine's existence semantics, so ALL only skips that final
+    # cross-side dedup
+    return out if stmt.union_all else out.dropDuplicates()
+
+
+def _run_part(graph: PropertyGraph, clauses, resolve: bool) -> DataFrame:
+    """One UNION side: leading UNWINDs wrap the rest; otherwise the
+    stage loop, then the optional label resolution."""
+    lead = 0
+    while isinstance(clauses[lead], Unwind):
+        lead += 1
+    if lead:
+        return _run_unwind(graph, clauses[:lead], list(clauses[lead:]), resolve)
+    df, bindings = _run_stages(graph, clauses)
     if resolve:
         df = _join_label_sets(
             graph, df, [(b, f"{b}_label") for b in df.columns if b in bindings]
@@ -238,8 +177,6 @@ def _stmt_verb_split(
     substring regardless. Returns (verb_name, body, tail), or None when
     the statement does not open with MATCH or carries no top-level
     verb."""
-    from ..cypher.tokenizer import CypherLexError, scan_clauses, tokenize
-
     q = query.strip()
     try:
         toks = tokenize(q)
@@ -380,7 +317,7 @@ def run_cypher_set(graph: PropertyGraph, query: str) -> PropertyGraph:
         b, p, val = si
         sets.setdefault(b, {})[p] = val
     qg = QueryGraph()
-    _parse_clauses(_body, qg)
+    _parse_clauses(match_clauses(_body), qg)
     # edge-variable SET (round-7): `SET e.weight = <number>` overwrites
     # the matched edges' typed weight through update_edge_weights —
     # routed by the pattern edge the variable names
@@ -487,7 +424,7 @@ def run_cypher_delete(graph: PropertyGraph, query: str) -> PropertyGraph:
         )
     _detach = sp[0] == "DETACH DELETE"
     qg = QueryGraph()
-    _parse_clauses(sp[1], qg)
+    _parse_clauses(match_clauses(sp[1]), qg)
     edge_by_name = {e.name: e for e in qg.edges if e.name}
     targets = [t.strip() for t in sp[2].split(",")]
     node_targets, edge_targets = [], []
@@ -566,7 +503,7 @@ def run_cypher_remove(graph: PropertyGraph, query: str) -> PropertyGraph:
     from ..cypher.parser import _split_patterns
 
     qg = QueryGraph()
-    _parse_clauses(sp[1], qg)
+    _parse_clauses(match_clauses(sp[1]), qg)
     edge_names = {e.name for e in qg.edges if e.name}
     removes: dict[str, list[str]] = {}
     label_removes: list[tuple[str, str]] = []  # (binding, label)
@@ -872,7 +809,7 @@ def _run_merge_edge(
     match_w = _parse_weight_items(on_match, allow_expr=True)
 
     qg = QueryGraph()
-    _parse_clauses(body, qg)
+    _parse_clauses(match_clauses(body), qg)
     for nb in (a, b):
         if nb not in qg.labels:
             raise CypherParseError(f"MERGE endpoint {nb!r} is not bound by MATCH")
@@ -951,9 +888,9 @@ def expr_col(node, raw) -> Column:
                     raise CypherParseError(
                         "CASE WHEN against a string literal needs a bare property"
                     )
-                c = _OPS[cmp_op](raw(cond_l[1], cond_l[2]), F.lit(lit[1]))
+                c = PRED_OPS[cmp_op](raw(cond_l[1], cond_l[2]), F.lit(lit[1]))
             else:
-                c = _OPS[cmp_op](expr_col(cond_l, raw), F.lit(lit[1]))
+                c = PRED_OPS[cmp_op](expr_col(cond_l, raw), F.lit(lit[1]))
             t = expr_col(then_e, raw)
             out = F.when(c, t) if out is None else out.when(c, t)
         return out if else_e is None else out.otherwise(expr_col(else_e, raw))
@@ -961,106 +898,108 @@ def expr_col(node, raw) -> Column:
     return _ARITH[op](expr_col(l, raw), expr_col(r, raw))
 
 
-def _run_unwind(graph: PropertyGraph, um: "re.Match", resolve: bool) -> DataFrame:
-    """UNWIND [literals] AS x (chainable): a literal-list row generator
-    cross-multiplied with the remaining query's (distinct) match rows —
-    list duplicates are preserved, matching openCypher's row semantics
-    for the generator itself. The unwound names must appear in RETURN to
-    be emitted; WHERE conjuncts of the form `x <op> literal` over an
-    unwound name filter the generator rows pre-join (see the lift
-    below); other references to unwound names stay unsupported."""
+def _run_unwind(graph: PropertyGraph, unwinds, rest: list, resolve: bool) -> DataFrame:
+    """Leading UNWIND [literals] | range() AS x (chainable): a row
+    generator cross-multiplied with the rest of the part's (distinct)
+    match rows — list duplicates are preserved, matching openCypher's
+    row semantics for the generator itself. The unwound names must
+    appear in RETURN to be emitted; WHERE conjuncts of the form
+    `x <op> literal` over an unwound name filter the generator rows
+    pre-join (see the lift below); other references to unwound names
+    stay unsupported. The RETURN's DISTINCT, ORDER BY, SKIP and LIMIT
+    apply to the joined rows."""
     spark = graph.spark
-    unwinds: list[tuple[str, DataFrame]] = []
-    rest = None
-    while um:
-        name, items_txt, rest = um.group("name"), um.group("list"), um.group("rest")
-        if um.group("rng") is not None:
+    gens: list[tuple[str, DataFrame]] = []
+    for u in unwinds:
+        if u.bounds is not None:
             # distributed row generator — never a driver-side list, so
             # UNWIND range(0, 1e8) is fine here (ADVICE r6)
-            start, stop, step = _range_bounds(um.group("rng"))
-            unwinds.append(
-                (name, spark.range(start, stop, step).select(F.col("id").alias(name)))
-            )
+            gen = spark.range(*u.bounds).select(F.col("id").alias(u.alias))
         else:
-            vals = _parse_literal_list(items_txt)
-            dt = {str: "string", int: "long", float: "double"}[type(vals[0])]
-            unwinds.append(
-                (name, spark.createDataFrame([(v,) for v in vals], f"{name} {dt}"))
-            )
-        um = _UNWIND.match(rest)
-    unames = {n for n, _ in unwinds}
+            dt = {str: "string", int: "long", float: "double"}[type(u.values[0])]
+            gen = spark.createDataFrame([(v,) for v in u.values], f"{u.alias} {dt}")
+        gens.append((u.alias, gen))
+    unames = {n for n, _ in gens}
     # WHERE conjuncts over unwound names (extension): `k <op> literal`
-    # conjuncts lift out of the inner query and prune the GENERATOR
-    # itself — a pre-join filter on the literal rows, the cheapest
-    # possible placement. Only a single un-nested WHERE is rewritten
-    # (an OPTIONAL MATCH's clause-scoped WHERE stays untouched).
+    # conjuncts lift out of the part's first WHERE (when no MATCH
+    # follows it) and prune the GENERATOR itself — a pre-join filter on
+    # the literal rows, the cheapest possible placement
     post: dict[str, list] = {}
-    wm = re.match(
-        r"(?is)^(?P<head>.*?)\bWHERE\s+(?P<w>.+?)(?P<tail>\s+RETURN\s+.+)$",
-        rest.strip(),
-    )
-    if wm and not re.search(r"(?is)\b(?:OPTIONAL|MATCH)\b", wm.group("w")):
+    w = next((i for i, c in enumerate(rest) if getattr(c, "where", None)), None)
+    if w is not None and not any(isinstance(c, Match) for c in rest[w + 1 :]):
         kept_conjs = []
-        for conj in _split_bool(wm.group("w"), "AND"):
+        for conj in _split_bool(rest[w].where, "AND"):
             cm = _CARRY_COND.match(conj)
             if cm and cm.group("c") in unames:
                 post.setdefault(cm.group("c"), []).append(cm)
             else:
                 kept_conjs.append(conj)
         if post:
-            mid = (" WHERE " + " AND ".join(kept_conjs)) if kept_conjs else " "
-            rest = wm.group("head").rstrip() + mid + wm.group("tail")
-    if post:
-        filtered = []
-        for name, vdf in unwinds:
-            for cm in post.get(name, ()):
-                raw = cm.group("val")
-                if raw[0] in "'\"":
-                    c, v = F.col(name), raw[1:-1]
-                else:
-                    c, v = F.col(name).cast("double"), float(raw)
-                vdf = vdf.filter(_OPS[cm.group("op")](c, F.lit(v)))
-            filtered.append((name, vdf))
-        unwinds = filtered
-    rm = re.match(r"(?is)^(?P<head>.*?)\bRETURN\s+(?P<items>.+)$", rest.strip())
-    if not rm:
-        raise CypherParseError(f"UNWIND query needs a RETURN clause: {rest!r}")
-    # normalize items before matching against unwind names: `k AS kk`
-    # and stray whitespace must alias the unwound column, not leak into
-    # the inner match query (where `k` is unbound)
-    kept: list[str] = []  # non-unwind items, passed to the inner query
+            rest[w] = dc_replace(rest[w], where=" AND ".join(kept_conjs) or None)
+    for i, (name, gen) in enumerate(gens):
+        for cm in post.get(name, ()):
+            raw = cm.group("val")
+            if raw[0] in "'\"":
+                c, v = F.col(name), raw[1:-1]
+            else:
+                c, v = F.col(name).cast("double"), float(raw)
+            gen = gen.filter(PRED_OPS[cm.group("op")](c, F.lit(v)))
+        gens[i] = (name, gen)
+    ret = rest[-1]
+    kept: list[str] = []  # non-unwind items, returned by the rest of the part
     out_cols: list[str | None] = []  # RETURN-ordered output column names
     requested: dict[str, str] = {}  # unwind name -> output alias
-    for item in (i.strip() for i in rm.group("items").split(",")):
-        nm = _NAME_ITEM.match(item)
-        if nm and nm.group("n") in unames:
-            alias = nm.group("a") or nm.group("n")
-            requested[nm.group("n")] = alias
-            out_cols.append(alias)
-            continue
-        kept.append(item)
-        am = re.search(r"(?is)\s+AS\s+([A-Za-z_][A-Za-z0-9_]*)\s*$", item)
-        out_cols.append(
-            am.group(1) if am
-            else (item if re.fullmatch(r"[A-Za-z_][A-Za-z0-9_]*", item) else None)
-        )
-    out = None
-    if kept:
-        inner = f"{rm.group('head')}RETURN {', '.join(kept)}"
-        out = run_cypher(graph, inner, resolve=resolve)
-    elif rm.group("head").strip():
+    for item in ret.items:
+        body, alias = _strip_ret_alias(tokenize(item))
+        name = body[0].text if len(body) == 1 and body[0].kind == "word" else None
+        if name in unames:
+            requested[name] = alias or name
+        else:
+            kept.append(item)
+        out_cols.append(alias or name)
+    if len(rest) == 1:
+        if kept:
+            raise CypherParseError(
+                f"UNWIND without MATCH can only RETURN unwound names, got: {kept[0]!r}"
+            )
+    elif not kept:
         raise CypherParseError(
             "UNWIND with a MATCH body must RETURN at least one pattern binding"
         )
+    # ORDER BY / SKIP / LIMIT run once, after the join. An ORDER BY item
+    # that reads no output column (`ORDER BY c.name`) rides the rest of
+    # the part as a hidden column, sorted like a property sort key
+    known = [c for c in out_cols if c]
+    order, hidden = [], []
+    for o in ret.order_by:
+        body, desc = _order_item(o)
+        if kept and not _over_cols(body, known):
+            if re.fullmatch(r"[A-Za-z_][A-Za-z0-9_]*", body):
+                raise CypherParseError(f"ORDER BY of non-returned column: {body!r}")
+            if ret.distinct:
+                raise CypherParseError(_DISTINCT_PROP_ORDER)
+            hidden.append(f"_g4s_ob{len(hidden)}")
+            kept.append(f"{body} AS {hidden[-1]}")
+            o = f"{hidden[-1]} DESC" if desc else hidden[-1]
+        order.append(o)
+    out = None
+    if kept:
+        inner = Projection("RETURN", tuple(kept))
+        out = _run_part(graph, rest[:-1] + [inner], resolve)
     kill = False  # a filtered-out NON-returned generator still empties rows
-    for name, vdf in unwinds:
+    for name, gen in gens:
         alias = requested.get(name)
         if alias is None:
-            if name in post and vdf.limit(1).count() == 0:
+            if name in post and gen.limit(1).count() == 0:
                 kill = True
             continue
-        vdf = vdf.withColumnRenamed(name, alias)
-        out = vdf if out is None else out.crossJoin(F.broadcast(vdf))
+        # DISTINCT: distinct generators times the distinct rest of the
+        # part are distinct rows, so no dedupe after the join disturbs
+        # an order the rest of the part set
+        if ret.distinct:
+            gen = gen.dropDuplicates()
+        gen = gen.withColumnRenamed(name, alias)
+        out = gen if out is None else out.crossJoin(F.broadcast(gen))
     if out is None:
         raise CypherParseError("UNWIND query returned no columns")
     if kill:
@@ -1070,37 +1009,44 @@ def _run_unwind(graph: PropertyGraph, um: "re.Match", resolve: bool) -> DataFram
     if all(c is not None for c in out_cols) and set(out_cols) <= set(out.columns):
         extras = [c for c in out.columns if c not in out_cols]
         out = out.select(*out_cols, *extras)
-    return out
+    out = _order_limit(out, out.columns, dc_replace(ret, order_by=tuple(order)), hidden)
+    return out.drop(*hidden) if hidden else out
 
 
-_OPS = {
-    "=": lambda c, v: c == v,
-    "<>": lambda c, v: c != v,
-    "!=": lambda c, v: c != v,
-    "<": lambda c, v: c < v,
-    "<=": lambda c, v: c <= v,
-    ">": lambda c, v: c > v,
-    ">=": lambda c, v: c >= v,
-    # openCypher string predicates (extension)
-    "starts_with": lambda c, v: c.startswith(v),
-    "ends_with": lambda c, v: c.endswith(v),
-    "contains": lambda c, v: c.contains(v),
-    # IS [NOT] NULL (round-7)
-    "is_null": lambda c, v: c.isNull(),
-    "is_not_null": lambda c, v: c.isNotNull(),
-    # =~ regex (round-8): the parser anchors the pattern (openCypher's
-    # =~ is a FULL-string match; regexp alone is partial). regexp_like
-    # accepts the lit() Column every call site passes (rlike is str-only)
-    "regex": lambda c, v: F.regexp_like(c, v if isinstance(v, Column) else F.lit(v)),
-    # negated string/regex predicates (round-16, WHERE NOT <atom>):
-    # SQL-3VL `~` keeps NULL NULL, so NULL props drop the row either way
-    "not_starts_with": lambda c, v: ~c.startswith(v),
-    "not_ends_with": lambda c, v: ~c.endswith(v),
-    "not_contains": lambda c, v: ~c.contains(v),
-    "not_regex": lambda c, v: ~F.regexp_like(
-        c, v if isinstance(v, Column) else F.lit(v)
-    ),
-}
+def _order_item(item: str) -> tuple[str, bool]:
+    """An ORDER BY item's body and its DESC flag."""
+    om = re.fullmatch(r"(?is)(?P<body>.+?)(?:\s+(?P<dir>ASC|DESC))?", item)
+    if om is None:
+        raise CypherParseError(f"unsupported ORDER BY item: {item!r}")
+    return om.group("body"), (om.group("dir") or "").upper() == "DESC"
+
+
+_DISTINCT_PROP_ORDER = (
+    "ORDER BY a property with RETURN DISTINCT: return the "
+    "property with an alias and ORDER BY the alias"
+)
+
+
+def _prop_sort(col: str, desc: bool) -> list[Column]:
+    """Sort keys of a string-typed property column: its numeric cast
+    first, the raw string second ONLY where the cast fails — numeric
+    ties must NOT be broken by their string rendering ('100' vs
+    '100.0') or a LIMIT cut diverges from the oracle's CAST-then-binding
+    ordering (ADVICE r6); non-numeric values keep a deterministic
+    lexical order."""
+    num = F.col(col).try_cast("double")
+    raw_sec = F.when(num.isNull(), F.col(col))
+    return [k.desc() if desc else k.asc() for k in (num, raw_sec)]
+
+
+def _over_cols(body: str, cols: list[str]) -> bool:
+    """True when ``body`` reads only the columns ``cols`` (a column or
+    an arithmetic expression over them)."""
+    try:
+        parse_expr(body, cols)
+    except CypherParseError:
+        return False
+    return True
 
 
 # --------------------------------------------------------------------------
@@ -1115,36 +1061,6 @@ _OPS = {
 # implicitly DISTINCT, and aggregates count distinct matches.
 # --------------------------------------------------------------------------
 
-_SEG = re.compile(
-    r"(?is)^(?P<items>.+?)"
-    r"(?:\s+WHERE\s+(?P<w>.+?))?"
-    r"(?:\s+ORDER\s+BY\s+(?P<ob>.+?))?"
-    r"(?:\s+SKIP\s+(?P<skipn>\d+))?"
-    r"(?:\s+LIMIT\s+(?P<lim>\d+))?"
-    r"\s+(?:MATCH\s+(?P<next>.+)|RETURN\s+(?P<ret>.+))$"
-)
-# a WITH stage with no MATCH/RETURN tail — consecutive WITHs
-# (`WITH a, count(b) AS n WITH n, count(a) AS m ...`); the following
-# stage runs carry-only (_run_carry_stage)
-_SEG_BARE = re.compile(
-    r"(?is)^(?P<items>.+?)"
-    r"(?:\s+WHERE\s+(?P<w>.+?))?"
-    r"(?:\s+ORDER\s+BY\s+(?P<ob>.+?))?"
-    r"(?:\s+SKIP\s+(?P<skipn>\d+))?"
-    r"(?:\s+LIMIT\s+(?P<lim>\d+))?$"
-)
-_TAIL = re.compile(
-    r"(?is)^(?P<body>.+?)\s+RETURN\s+(?P<returns>.+?)"
-    r"(?:\s+ORDER\s+BY\s+(?P<ob>.+?))?"
-    r"(?:\s+SKIP\s+(?P<skip>\d+))?"
-    r"(?:\s+LIMIT\s+(?P<lim>\d+))?\s*$"
-)
-_RET_TAIL = re.compile(
-    r"(?is)^(?P<returns>.+?)"
-    r"(?:\s+ORDER\s+BY\s+(?P<ob>.+?))?"
-    r"(?:\s+SKIP\s+(?P<skip>\d+))?"
-    r"(?:\s+LIMIT\s+(?P<lim>\d+))?\s*$"
-)
 _NAME_ITEM = re.compile(
     r"(?is)^(?P<n>[A-Za-z_][A-Za-z0-9_]*)"
     r"(?:\s+AS\s+(?P<a>[A-Za-z_][A-Za-z0-9_]*))?$"
@@ -1175,7 +1091,7 @@ def _carry_filter(df: DataFrame, where_text: str) -> DataFrame:
                 )
             lhs = expr_col(parse_expr(conj[: cm.start()], df.columns), _carried)
             rhs = expr_col(parse_expr(conj[cm.end():], df.columns), _carried)
-            df = df.filter(_OPS[cm.group(0)](lhs, rhs))
+            df = df.filter(PRED_OPS[cm.group(0)](lhs, rhs))
             continue
         col = m.group("c")
         if col not in df.columns:
@@ -1185,7 +1101,7 @@ def _carry_filter(df: DataFrame, where_text: str) -> DataFrame:
             c, v = F.col(col), raw[1:-1]
         else:
             c, v = F.col(col).cast("double"), float(raw)
-        df = df.filter(_OPS[m.group("op")](c, F.lit(v)))
+        df = df.filter(PRED_OPS[m.group("op")](c, F.lit(v)))
     return df
 
 
@@ -1197,7 +1113,7 @@ _CARRY_AGG = re.compile(
 )
 
 
-def _run_carry_stage(carried: DataFrame | None, items_text: str) -> DataFrame:
+def _run_carry_stage(carried: DataFrame, items, dedup: bool) -> DataFrame:
     """A WITH/RETURN stage with NO new MATCH: pure projection or
     aggregation over the carried columns (extension). This enables the
     aggregate-of-aggregate idiom — e.g. the TPC-H Q13 count-of-counts,
@@ -1205,18 +1121,12 @@ def _run_carry_stage(carried: DataFrame | None, items_text: str) -> DataFrame:
     users reach for as soon as they group twice. Aggregates run over the
     carried rows (already distinct under the engine's existence
     semantics): count -> long, sum/avg -> double, min/max keep the
-    carried column's type. Items may also be aliased arithmetic
-    expressions over carried columns (they join the grouping keys)."""
-    if carried is None:
-        raise CypherParseError(
-            "a carry-only WITH stage needs a previous WITH stage"
-        )
-    from ..cypher.parser import _split_patterns
-
-    items_text = re.sub(r"(?is)^\s*DISTINCT\s+", "", items_text)
-    if items_text.strip() == "*":
-        return carried.dropDuplicates()
-    items = _split_patterns(items_text)
+    carried column's type. Items may also be carried columns, id() of a
+    carried binding, or aliased arithmetic expressions over carried
+    columns (they join the grouping keys). ``dedup`` dedupes a
+    projection without aggregates: WITH always, RETURN when DISTINCT."""
+    if tuple(items) == ("*",):
+        return carried.dropDuplicates() if dedup else carried
     if not items:
         raise CypherParseError("empty WITH/RETURN item list")
     keys, key_names, aggs, agg_srcs = [], [], [], []
@@ -1299,11 +1209,12 @@ def _run_carry_stage(carried: DataFrame | None, items_text: str) -> DataFrame:
             key_names.append(em.group("alias"))
             continue
         raise CypherParseError(
-            f"carry-only WITH stage item must be a carried column, an "
+            f"carry-only stage item must be a carried column, an "
             f"aggregate over one, or an aliased expression, got: {it!r}"
         )
     if not aggs:
-        return carried.select(*keys).dropDuplicates()
+        out = carried.select(*keys)
+        return out.dropDuplicates() if dedup else out
     srcs = [c for c in dict.fromkeys(agg_srcs) if c not in key_names]
     pre = carried.select(*keys, *[F.col(c) for c in srcs])
     return pre.groupBy(*key_names).agg(*aggs) if key_names else pre.agg(*aggs)
@@ -1333,29 +1244,22 @@ def _new_out_col(qg: QueryGraph, marks: tuple[int, ...]) -> str:
 
 def _run_stage(
     graph: PropertyGraph,
-    match_body: str,
-    items_text: str,
+    matches: list[Match],
+    items,
     carried: DataFrame | None,
     dedup: bool,
-    optional: bool = False,
 ) -> tuple[DataFrame, QueryGraph, list[str]]:
-    """Plan one pipeline stage: MATCH `match_body` carrying `carried`,
-    projecting the WITH/RETURN `items_text`. Returns (df, qg, out cols).
+    """Plan one pipeline stage: the MATCH clauses carrying `carried`,
+    projecting the WITH/RETURN `items`. Returns (df, qg, out cols).
 
-    ``optional`` (VERDICT r6 #5): the stage is an OPTIONAL MATCH — its
-    pattern is demoted to the first optional group and the carried rows
+    A stage that opens with OPTIONAL MATCH (VERDICT r6 #5) has its
+    pattern demoted to the first optional group and the carried rows
     become the required match set, so unmatched carried rows survive
     with NULLs for the stage's new bindings (and count(b) = 0)."""
-    from ..cypher.parser import _split_patterns  # top-level comma split
-
     qg = QueryGraph()
-    _parse_clauses(match_body, qg)
-    if optional:
-        if carried is None:
-            raise CypherParseError(
-                "OPTIONAL MATCH stage needs carried rows (a preceding WITH)"
-            )
-        if qg.cross_filters or qg.pattern_filters or getattr(qg, "expr_filters", ()):
+    _parse_clauses(matches, qg)
+    if matches[0].optional:
+        if qg.cross_filters or qg.pattern_filters or qg.expr_filters:
             raise CypherParseError(
                 "cross-binding / pattern / expression WHERE predicates are "
                 "unsupported in an OPTIONAL MATCH stage (they would drop "
@@ -1365,24 +1269,21 @@ def _run_stage(
             raise CypherParseError(
                 "OPTIONAL MATCH stage needs at least one pattern edge"
             )
-        import dataclasses as _dc
-
         # demote the parsed required clause to the FIRST optional group;
         # clause-scoped WHERE predicates shift with their clause
         # (clause 0 -> 1, pre-existing optional clauses 1.. -> 2..)
         qg.optionals.insert(0, list(qg.edges))
         qg.edges = []
-        qg.filters = [_dc.replace(pf, clause=pf.clause + 1) for pf in qg.filters]
+        qg.filters = [dc_replace(pf, clause=pf.clause + 1) for pf in qg.filters]
         qg.edge_filters = [
-            _dc.replace(pf, clause=pf.clause + 1) for pf in qg.edge_filters
+            dc_replace(pf, clause=pf.clause + 1) for pf in qg.edge_filters
         ]
         qg.or_filters = [
-            tuple(_dc.replace(pf, clause=pf.clause + 1) for pf in grp)
+            tuple(dc_replace(pf, clause=pf.clause + 1) for pf in grp)
             for grp in qg.or_filters
         ]
         qg.carry_required = True
-    items_text = re.sub(r"(?is)^\s*DISTINCT\s+", "", items_text)
-    if items_text.strip() == "*":
+    if tuple(items) == ("*",):
         # WITH * — every named binding of this match plus every carried
         # column rides through (openCypher's all-variables projection)
         names = sorted(
@@ -1390,12 +1291,10 @@ def _run_stage(
             if not b.startswith("_anon")
             and (not qg.match_bindings or b in qg.match_bindings)
         )
-        extra = [
+        items = names + [
             c for c in (carried.columns if carried is not None else [])
             if c not in names
         ]
-        items_text = ", ".join(names + extra)
-    items = _split_patterns(items_text)
     if not items:
         raise CypherParseError("empty WITH/RETURN item list")
     sel: list[tuple[str, str]] = []  # (source col, output alias)
@@ -1423,7 +1322,7 @@ def _run_stage(
             len(qg.labels_returns), len(qg.concat_returns),
             len(qg.keys_returns), len(qg.returns),
         )
-        _parse_returns(qg, it)
+        _parse_returns(qg, [it])
         out = _new_out_col(qg, marks)
         sel.append((out, out))
     dummy_added = False
@@ -1464,215 +1363,76 @@ def _run_stage(
 
 
 def _order_limit(
-    df: DataFrame, cols: list[str], ob: str | None, lim: str | None,
-    skip: str | None = None,
+    df: DataFrame, cols: list[str], proj: Projection, prop_keys=()
 ) -> DataFrame:
-    if ob:
+    """A pipeline projection's ORDER BY (over its output columns, or an
+    arithmetic expression over them: `ORDER BY n * 2 DESC`), SKIP and
+    LIMIT. Columns in ``prop_keys`` hold property values and sort as
+    property sort keys (_prop_sort)."""
+    if proj.order_by:
         exprs = []
-        for part in ob.split(","):
-            om = re.fullmatch(
-                r"(?i)\s*(?P<col>[A-Za-z_][A-Za-z0-9_]*)(?:\s+(?P<dir>ASC|DESC))?\s*", part
-            )
-            if om and om.group("col") in cols:
-                c = F.col(om.group("col"))
-                exprs.append(
-                    c.desc() if (om.group("dir") or "").upper() == "DESC" else c.asc()
-                )
+        for part in proj.order_by:
+            body, desc = _order_item(part)
+            if body in prop_keys:
+                exprs.extend(_prop_sort(body, desc))
                 continue
-            # arithmetic ORDER BY over the stage's columns (round-6):
-            # `ORDER BY n * 2 DESC` over the stage's columns
-            em = re.fullmatch(r"(?is)\s*(?P<body>.+?)(?:\s+(?P<dir>ASC|DESC))?\s*", part)
-            try:
-                c = expr_col(parse_expr(em.group("body"), cols), _carried)
-            except CypherParseError:
-                raise CypherParseError(f"unsupported ORDER BY item: {part!r}")
-            exprs.append(
-                c.desc() if (em.group("dir") or "").upper() == "DESC" else c.asc()
-            )
+            if body in cols:
+                c = F.col(body)
+            else:
+                try:
+                    c = expr_col(parse_expr(body, cols), _carried)
+                except CypherParseError:
+                    raise CypherParseError(f"unsupported ORDER BY item: {part!r}") from None
+            exprs.append(c.desc() if desc else c.asc())
         df = df.orderBy(*exprs)
-    if skip:
-        df = df.offset(int(skip))
-    if lim:
-        df = df.limit(int(lim))
+    if proj.skip is not None:
+        df = df.offset(proj.skip)
+    if proj.limit is not None:
+        df = df.limit(proj.limit)
     return df
 
 
-def _run_with_pipeline(
-    graph: PropertyGraph, parts: list[str]
-) -> tuple[DataFrame, set[str]]:
-    m0 = re.match(r"(?is)^\s*MATCH\s+(?P<body>.+)$", parts[0].strip())
-    if not m0:
-        raise CypherParseError("WITH pipeline must start with MATCH")
-    pending_match: str | None = m0.group("body")
-    pending_optional = False
+def _unwind_column(df: DataFrame, u: Unwind) -> DataFrame:
+    """A WITH-tail UNWIND: explode a carried list column, a literal list
+    or a capped range() into one row per element."""
+    if u.column is None:
+        return df.withColumn(u.alias, F.explode(F.array(*map(F.lit, _unwind_values(u)))))
+    if u.column not in df.columns:
+        raise CypherParseError(f"UNWIND references unknown carried column: {u.column!r}")
+    return df.withColumn(u.alias, F.explode(F.col(u.column)))
+
+
+def _run_stages(graph: PropertyGraph, clauses) -> tuple[DataFrame, set[str]]:
+    """The stage loop over one part's clauses. A projection closes a
+    stage over the MATCH clauses before it (none = a carry-only stage
+    over the previous stage's rows). A WITH stage is implicitly
+    DISTINCT, then filtered by its WHERE, ordered and cut; UNWINDs after
+    it explode its rows. Returns the RETURN's frame and the binding
+    columns it emits (for label resolution)."""
     carried: DataFrame | None = None
-    for seg in parts[1:]:
-        sm = _SEG.match(seg.strip())
-        bare = False
-        if not sm:
-            sm = _SEG_BARE.match(seg.strip())
-            bare = sm is not None
-            if not sm:
-                raise CypherParseError(f"unsupported WITH stage: {seg!r}")
-        items, w = sm.group("items"), sm.group("w")
-        # `WITH ... OPTIONAL MATCH ...` (VERDICT r6 #5): _SEG stops at the
-        # MATCH keyword, leaving the OPTIONAL marker as the tail of the
-        # items (or the WHERE) text — strip it and flag the NEXT match
-        # (which consumes this stage's carry) as an optional stage
-        next_optional = False
-        if items is not None and re.search(r"(?is)\bOPTIONAL\s*$", items):
-            items = re.sub(r"(?is)\s*\bOPTIONAL\s*$", "", items)
-            next_optional = True
-        if w is not None and re.search(r"(?is)\bOPTIONAL\s*$", w):
-            w = re.sub(r"(?is)\s*\bOPTIONAL\s*$", "", w)
-            next_optional = True
-        if sm.groupdict().get("ob") and re.search(
-            r"(?is)\bOPTIONAL\s*$", sm.group("ob")
-        ):
-            raise CypherParseError(
-                "OPTIONAL MATCH directly after ORDER BY is unsupported; "
-                "add an intermediate WITH"
-            )
-        if next_optional and not items.strip():
-            raise CypherParseError(
-                "a WITH stage must project at least one item before "
-                "OPTIONAL MATCH"
-            )
-        # `WITH ... [WHERE ...] UNWIND xs AS x [UNWIND ...]` — trailing
-        # UNWINDs land at the end of the items (or WHERE) text because
-        # UNWIND is not a _SEG stop word; strip them off and explode
-        # after the stage head runs. This is the collected-list idiom
-        # (`WITH collect(n) AS ns UNWIND ns AS x`) plus literal lists.
-        unwind_chain: list[tuple[str | None, list | None, str]] = []
-
-        def _strip_unwinds(text: str) -> str:
-            while True:
-                um = _UNWIND_TAIL.search(text)
-                if not um:
-                    return text
-                lits = None
-                if um.group("lits") is not None:
-                    lits = _parse_literal_list(um.group("lits"))
-                elif um.group("rng") is not None:
-                    lits = _parse_range(um.group("rng"))
-                unwind_chain.insert(
-                    0, (um.group("src"), lits, um.group("alias"))
-                )
-                text = text[: um.start()]
-
-        if w:
-            w = _strip_unwinds(w)
+    matches: list[Match] = []
+    for c in clauses:
+        if isinstance(c, Match):
+            matches.append(c)
+        elif isinstance(c, Unwind):
+            carried = _unwind_column(carried, c)
+        elif carried is None and c.kind == "RETURN":
+            qg = stage_query_graph(matches, c)
+            return plan_match(graph, qg).df, set(qg.labels)
         else:
-            items = _strip_unwinds(items)
-
-        def run_head(carried_df):
-            # WITH head = items [WHERE] [ORDER BY] [LIMIT] — the
-            # ORDER BY/LIMIT pair makes the stage a top-N selector.
-            # pending_match None = the previous segment already consumed
-            # its MATCH (consecutive WITHs): run carry-only.
-            if pending_match is None:
-                out = _run_carry_stage(carried_df, items)
+            dedup = c.kind == "WITH" or c.distinct
+            if matches:
+                df, qg, cols = _run_stage(graph, matches, c.items, carried, dedup)
+                bindings = {x for x in cols if x in qg.labels}
             else:
-                out, _, _ = _run_stage(
-                    graph, pending_match, items, carried_df, dedup=True,
-                    optional=pending_optional,
-                )
-            if w:
-                out = _carry_filter(out, w)
-            out = _order_limit(
-                out, out.columns, sm.group("ob"), sm.group("lim"), sm.group("skipn")
-            )
-            for src, lits, alias in unwind_chain:
-                if src is not None:
-                    if src not in out.columns:
-                        raise CypherParseError(
-                            f"UNWIND references unknown carried column: {src!r}"
-                        )
-                    out = out.withColumn(alias, F.explode(F.col(src)))
-                else:
-                    out = out.withColumn(
-                        alias, F.explode(F.array(*[F.lit(v) for v in lits]))
-                    )
-            return out
-
-        if bare:
-            carried = run_head(carried)
-            pending_match = None
-            pending_optional = False
-            continue
-        if sm.group("ret") is not None:
-            # items WHERE w RETURN r — the WITH projects, then RETURN
-            # selects names, arithmetic expressions (with mandatory AS
-            # alias), or aggregates over the carried columns
-            carried = run_head(carried)
-            rm = _RET_TAIL.match(sm.group("ret"))
-            ret_items = re.sub(r"(?is)^\s*DISTINCT\s+", "", rm.group("returns"))
-            if ret_items.strip() == "*":
-                # RETURN * after WITH = every carried column, as-is
-                return _order_limit(
-                    carried, carried.columns,
-                    rm.group("ob"), rm.group("lim"), rm.group("skip"),
-                ), set()
-            if any(_CARRY_AGG.match(i) for i in ret_items.split(",")):
-                df = _run_carry_stage(carried, ret_items)
-                return _order_limit(
-                    df, df.columns, rm.group("ob"), rm.group("lim"), rm.group("skip")
-                ), set()
-            sel_cols, cols = [], []
-            for it in ret_items.split(","):
-                it = it.strip()
-                nm = _NAME_ITEM.match(it)
-                if nm and nm.group("n") in carried.columns:
-                    a = nm.group("a") or nm.group("n")
-                    sel_cols.append(F.col(nm.group("n")).alias(a))
-                    cols.append(a)
-                    continue
-                idm = re.fullmatch(
-                    r"(?i)id\s*\(\s*(?P<n>[A-Za-z_][A-Za-z0-9_]*)\s*\)"
-                    r"(?:\s+AS\s+(?P<a>[A-Za-z_][A-Za-z0-9_]*))?",
-                    it,
-                )
-                if idm and idm.group("n") in carried.columns:
-                    # id(x) over a carried binding = the column (round-8)
-                    a = idm.group("a") or f"id_{idm.group('n')}"
-                    sel_cols.append(F.col(idm.group("n")).alias(a))
-                    cols.append(a)
-                    continue
-                am = re.fullmatch(
-                    r"(?is)(?P<body>.+?)\s+AS\s+(?P<alias>[A-Za-z_][A-Za-z0-9_]*)\s*",
-                    it,
-                )
-                if not am:
-                    raise CypherParseError(
-                        f"final RETURN after WITH needs a carried column or an "
-                        f"aliased expression over carried columns, got: {it!r}"
-                    )
-                sel_cols.append(
-                    expr_col(parse_expr(am.group("body"), carried.columns), _carried)
-                    .alias(am.group("alias"))
-                )
-                cols.append(am.group("alias"))
-            df = carried.select(*sel_cols)
-            return _order_limit(
-                df, cols, rm.group("ob"), rm.group("lim"), rm.group("skip")
-            ), set()
-        nxt = sm.group("next")
-        tm = _TAIL.match(nxt)
-        if tm:
-            # final stage: items pipe into MATCH body RETURN returns
-            carried = run_head(carried)
-            df, qg, cols = _run_stage(
-                graph, tm.group("body"), tm.group("returns"), carried,
-                dedup=False, optional=next_optional,
-            )
-            bindings = {c for c in cols if c in qg.labels}
-            return _order_limit(
-                df, cols, tm.group("ob"), tm.group("lim"), tm.group("skip")
-            ), bindings
-        carried = run_head(carried)
-        pending_match = nxt
-        pending_optional = next_optional
-    raise CypherParseError("WITH pipeline has no RETURN")
+                df = _run_carry_stage(carried, c.items, dedup)
+                cols, bindings = df.columns, set()
+            if c.where:
+                df = _carry_filter(df, c.where)
+            df = _order_limit(df, cols, c)
+            if c.kind == "RETURN":
+                return df, bindings
+            carried, matches = df, []
 
 
 def _edge_implies_label(qg: QueryGraph, stats, e, binding: str) -> bool:
@@ -1986,8 +1746,8 @@ def plan_match(
                     if card:
                         sel *= 1.0 / card
                 continue  # range/inequality on id: unestimated
-            s = stats.pred_sel(
-                graph.nodes, qg.labels.get(binding), f.prop, f.op, f.value, f.is_num
+            s = hist_sel(
+                graph.node_histogram(qg.labels.get(binding), f.prop), f.op, f.value, f.is_num
             )
             if s is not None:
                 sel *= s
@@ -1996,8 +1756,9 @@ def plan_match(
         # group unestimable (sum would silently under-count it)
         for grp in or_filters_by_binding().get(binding, ()):
             parts = [
-                None if f.fn is not None else stats.pred_sel(
-                    graph.nodes, qg.labels.get(binding), f.prop, f.op, f.value, f.is_num
+                None if f.fn is not None else hist_sel(
+                    graph.node_histogram(qg.labels.get(binding), f.prop),
+                    f.op, f.value, f.is_num,
                 )
                 for f in grp
             ]
@@ -2012,9 +1773,8 @@ def plan_match(
             return 1.0
         sel = 1.0
         for f in edge_filters_by_clause.get(clause_state["clause"], {}).get(e.name, ()):
-            s = stats.edge_pred_sel(
-                graph.typed_edges(list(e.types)), tuple(e.types),
-                f.prop, f.op, f.value, f.is_num,
+            s = hist_sel(
+                graph.edge_histogram(tuple(e.types), f.prop), f.op, f.value, f.is_num
             )
             if s is not None:
                 sel *= s
@@ -2112,7 +1872,7 @@ def plan_match(
         else:
             for f in efs:
                 raw = raw.filter(
-                    _OPS[f.op](edge_prop_col(raw, f.prop, f.is_num), F.lit(f.value))
+                    PRED_OPS[f.op](edge_prop_col(raw, f.prop, f.is_num), F.lit(f.value))
                 )
             if efs:
                 steps.append(("edge_filter", e.name, len(efs)))
@@ -2385,7 +2145,7 @@ def plan_match(
             c = F.col(f"_cf_{a.binding}").getItem(a.prop)
             if a.is_num:
                 c = c.cast("double")
-            cc = _OPS[a.op](c, F.lit(a.value))
+            cc = PRED_OPS[a.op](c, F.lit(a.value))
             acc = cc if acc is None else (acc | cc)
         df = df.filter(acc).drop(*[f"_cf_{b}" for b in bs])
         steps.append(("cross_filter", tuple(bs), len(grp)))
@@ -2406,7 +2166,7 @@ def plan_match(
         def raw(b, p):
             return F.col(f"_xf_{b}").getItem(p)
 
-        df = df.filter(_OPS[op](expr_col(node, raw), expr_col(rhs, raw))).drop(
+        df = df.filter(PRED_OPS[op](expr_col(node, raw), expr_col(rhs, raw))).drop(
             *[f"_xf_{b}" for b in bs]
         )
         steps.append(("expr_filter", tuple(bs), op))
@@ -2746,8 +2506,13 @@ def plan_match(
     ):
         # distinct matches projected to properties; duplicates from shared
         # property values are kept (the match set, not the value set, is
-        # what's distinct)
+        # what's distinct) unless RETURN DISTINCT asks for the value set
         out = out.select(*group_cols, *ob_aliases.values())
+        if qg.distinct:
+            if ob_aliases:
+                raise CypherParseError(_DISTINCT_PROP_ORDER)
+            out = out.dropDuplicates()
+            steps.append(("distinct", tuple(group_cols)))
     if ob_aliases:
         # property sort keys are string-typed: numeric strings order by
         # their numeric cast first, the raw string second (deterministic
@@ -2758,17 +2523,7 @@ def plan_match(
                 c, d = F.col(it[1]), it[2]
                 exprs.append(c.desc() if d else c.asc())
             else:
-                a, d = ob_aliases[i], it[3]
-                num = F.col(a).try_cast("double")
-                exprs.append(num.desc() if d else num.asc())
-                # raw-string secondary ONLY where the numeric cast fails:
-                # numeric ties must NOT be broken by their string
-                # rendering ('100' vs '100.0') or a LIMIT cut diverges
-                # from the oracle's CAST-then-binding ordering (ADVICE
-                # r6); non-numeric values keep a deterministic lexical
-                # order.
-                raw_sec = F.when(num.isNull(), F.col(a))
-                exprs.append(raw_sec.desc() if d else raw_sec.asc())
+                exprs.extend(_prop_sort(ob_aliases[i], it[3]))
         out = out.orderBy(*exprs)
         steps.append(("order_by", tuple(qg.order_items)))
     elif qg.order_by:
@@ -3085,18 +2840,17 @@ def explain_cypher(
     if params is not None:
         query = bind_params(query, params)
     lines: list[str] = []
-    segs, _union_all = _split_union(query)
-    compound = len(segs) > 1 or _UNWIND.match(query) or split_with(query) is not None
-    if compound:
-        df = run_cypher(graph, query)
+    stmt = parse_statement(query)
+    stage = stmt.single_stage()
+    if stage is None:
+        df = _run_statement(graph, stmt, resolve=False)
         lines.append(
             "compound query (UNION / UNWIND / WITH pipeline): stage-level "
             "step traces are internal; Spark plan reflects the composed job"
         )
         spark_plan = True
     else:
-        qg = parse(query)
-        planned = plan_match(graph, qg)
+        planned = plan_match(graph, stage_query_graph(*stage))
         df = planned.df
         lines.append(f"estimated cost: {planned.cost:,.1f}")
         for s in planned.steps:

@@ -11,7 +11,7 @@ from pyspark.sql import DataFrame
 
 from g4s_spark.graph import PropertyGraph
 from g4s_spark.operators import algorithms as A
-from g4s_spark.plans import run_cypher
+from g4s_spark.plans import explain_cypher, run_cypher, run_cypher_set
 
 NODE_SCHEMA = "id long, label string, props map<string,string>"
 EDGE_SCHEMA = "src long, dst long, type string, weight double"
@@ -44,6 +44,8 @@ WARM = {
     "sym_edges": A._sym_edges,
     "node_count": A._node_count,
     WEIGHT_KEY: _weight_edges,
+    ("node_hist", "A", "k"): lambda g: g.node_histogram("A", "k"),
+    ("edge_hist", ("T",), "weight"): lambda g: g.edge_histogram(("T",), "weight"),
 }
 
 
@@ -209,3 +211,25 @@ def test_racing_first_uses_share_one_entry(spark):
     assert not any(t.is_alive() for t in threads)
     kept = g.derived.peek("payload_rows")
     assert all(x is kept for x in got)
+
+
+def test_predicate_estimate_follows_a_props_write(spark):
+    """The planner's WHERE histograms are registry entries reading
+    {labels, props}: after a SET the estimate equals a fresh build's
+    instead of the pre-write histogram's."""
+    nodes = spark.createDataFrame(
+        [(i, "C", {"v": str(i)}) for i in range(100)] + [(100 + i, "D", {}) for i in range(4)],
+        NODE_SCHEMA,
+    )
+    edges = spark.createDataFrame(
+        [(i, 100 + i % 4, "E", 1.0) for i in range(100)], EDGE_SCHEMA
+    )
+    g = PropertyGraph(nodes, edges, spark)
+    query = "MATCH (c:C)-[:E]->(d:D) WHERE c.v > 50 RETURN d"
+
+    def cost(graph):
+        return explain_cypher(graph, query).splitlines()[0]
+
+    before = cost(g)
+    written = run_cypher_set(g, "MATCH (c:C) SET c.v = 1000")
+    assert cost(written) == cost(PropertyGraph(written.nodes, written.edges, spark)) != before
