@@ -337,12 +337,45 @@ def _lit_at(toks: list[Token], i: int) -> tuple[str, str, int] | None:
     return None
 
 
+def _in_items(toks: list[Token], j: int, cond: str) -> list[tuple[str, str]] | None:
+    """The (kind, text) literals of the ``IN [...]`` whose IN token is
+    ``toks[j]`` and whose ``]`` ends the atom, or None for another
+    shape. Comma-split the bracket interior; empty segments are dropped
+    (trailing/duplicate commas), matching the retired _split_patterns
+    behavior."""
+    n = len(toks)
+    if not (
+        j + 1 < n
+        and toks[j + 1].kind == "punct"
+        and toks[j + 1].text == "["
+        and toks[n - 1].kind == "punct"
+        and toks[n - 1].text == "]"
+    ):
+        return None
+    segs: list[list[Token]] = [[]]
+    for t2 in toks[j + 2 : n - 1]:
+        if t2.kind == "punct" and t2.text == ",":
+            segs.append([])
+        else:
+            segs[-1].append(t2)
+    items: list[tuple[str, str]] = []
+    for seg in segs:
+        if not seg:
+            continue
+        lit = _lit_at(seg, 0)
+        if lit is None or lit[2] != len(seg):
+            item = cond[seg[0].pos : seg[-1].end]
+            raise CypherParseError(f"unsupported IN list item: {item!r}")
+        items.append((lit[0], lit[1]))
+    return items
+
+
 def _match_atom(toks: list[Token], cond: str):
     """Shape-match ONE predicate atom over its full token list; returns
     a tagged spec tuple, or None when no shape consumes every token
     (the caller raises the canonical "unsupported WHERE condition").
-    Spec tags: plain / null / exists / fn / id / regex / strpred / in —
-    one per retired _COND* regex."""
+    Spec tags: plain / null / exists / fn / id / id_in / regex / strpred
+    / in."""
     toks = _split_arrow_lt(toks)
     n = len(toks)
     prop = _prop_at(toks, 0)
@@ -388,34 +421,8 @@ def _match_atom(toks: list[Token], cond: str):
                 return ("strpred", b, p, "contains", toks[j + 1].text[1:-1])
             return None
         if t.is_word("IN"):
-            # IN [literals] expands to an equality OR-group (reusing the
-            # scan-pushdown path). Comma-split the bracket interior;
-            # empty segments are dropped (trailing/duplicate commas),
-            # matching the retired _split_patterns behavior.
-            if not (
-                j + 1 < n
-                and toks[j + 1].kind == "punct"
-                and toks[j + 1].text == "["
-                and toks[n - 1].kind == "punct"
-                and toks[n - 1].text == "]"
-            ):
-                return None
-            segs: list[list[Token]] = [[]]
-            for t2 in toks[j + 2 : n - 1]:
-                if t2.kind == "punct" and t2.text == ",":
-                    segs.append([])
-                else:
-                    segs[-1].append(t2)
-            items: list[tuple[str, str]] = []
-            for seg in segs:
-                if not seg:
-                    continue
-                lit = _lit_at(seg, 0)
-                if lit is None or lit[2] != len(seg):
-                    item = cond[seg[0].pos : seg[-1].end]
-                    raise CypherParseError(f"unsupported IN list item: {item!r}")
-                items.append((lit[0], lit[1]))
-            return ("in", b, p, items)
+            items = _in_items(toks, j, cond)
+            return None if items is None else ("in", b, p, items)
         return None
     if toks and toks[0].kind == "word":
         head = toks[0].text
@@ -458,6 +465,22 @@ def _match_atom(toks: list[Token], cond: str):
                     and "." not in lit[1]
                 ):
                     return ("id", toks[2].text, toks[4].text, lit[1])
+            if (
+                n >= 6
+                and toks[1].kind == "punct"
+                and toks[1].text == "("
+                and toks[2].kind == "word"
+                and toks[3].kind == "punct"
+                and toks[3].text == ")"
+                and toks[4].is_word("IN")
+            ):
+                # id(b) IN [integers]: an OR-group of id equalities,
+                # like a property IN list
+                items = _in_items(toks, 4, cond)
+                if items is not None and all(
+                    k == "num" and "." not in v for k, v in items
+                ):
+                    return ("id_in", toks[2].text, [v for _, v in items])
             return None
         if u in _FN_WORDS:
             # scalar function over a property (extension):
@@ -1911,19 +1934,24 @@ def _apply_atom(spec, cond: str, check_binding, qg: QueryGraph, ci: int) -> list
         is_num = lk == "num"
         value = float(lv) if is_num else lv
         return [PropFilter(b, p, op, value, is_num, clause=ci)]
-    if tag == "id":
-        _, b, op, lv = spec
+    if tag in ("id", "id_in"):
+        b = spec[1]
         check_binding(b, cond)
         if b not in qg.labels:
             raise CypherParseError(
                 f"id() in WHERE needs a node variable: {b!r}"
             )
+        op, lvs = (spec[2], [spec[3]]) if tag == "id" else ("=", spec[2])
+        if not lvs:
+            raise CypherParseError(f"empty IN list: {cond!r}")
         # an integer literal compares the uncast long id column (exact
         # beyond 2^53); one outside the long range keeps the double
-        v = int(lv)
-        return [PropFilter(
-            b, ID_PROP, op, v if -2**63 <= v < 2**63 else float(v), True, clause=ci,
-        )]
+        return [
+            PropFilter(
+                b, ID_PROP, op, v if -2**63 <= v < 2**63 else float(v), True, clause=ci,
+            )
+            for v in map(int, lvs)
+        ]
     if tag == "regex":
         _, b, p, pat = spec
         check_binding(b, cond)

@@ -9,7 +9,8 @@ DataStore (DataStore.scala:9-92). Here:
   per-label "diagonal matrix" is just ``nodes.filter(label == L)``,
 - ``edges(src: long, dst: long, type: string, weight: double,
   props: map)`` — the transpose is a column swap (free), so unlike the
-  reference we never materialize it (SURVEY §1.3),
+  reference we never materialize it as a table (SURVEY §1.3); only the
+  driver-side adjacency index of anchored reads keeps both directions,
 - label/type statistics for the cost-based planner come from
   ``groupBy(label).count()`` and are cached driver-side, mirroring
   StatsStore (g4s-optimizer/.../optim/StatsStore.scala:111-255),
@@ -25,6 +26,7 @@ same.
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -102,6 +104,122 @@ def apply_scalar_fn(spec: str, c: "F.Column") -> "F.Column":
         # Spark's negative-start substring skips strings shorter than n
         return F.when(F.length(c) <= n, c).otherwise(F.substring(c, -n, n))
     raise ValueError(f"unknown scalar function spec: {spec!r}")
+
+
+# The driver-side indexes (PropertyGraph.adjacency) are built from the
+# cached tables only, and each only while its arrays stay under this
+# budget: (key, neighbour) int64 pairs out and in are 32 B per edge;
+# the label index holds at most 16 B per (id, label) row (the row's id
+# under its label and among all ids).
+INDEX_MAX_BYTES = 256 << 20
+INDEX_BYTES_PER_EDGE = 32
+INDEX_BYTES_PER_NODE = 16
+
+_NO_IDS = np.empty(0, np.int64)
+
+
+class AdjacencyIndex:
+    """A graph's edge topology held on the driver: per edge type and
+    direction, the (key, neighbour) id pairs sorted by key. It is a CSR
+    whose row pointers come from binary search, so ids need not be
+    dense. The reference keeps the same per-type matrix and its
+    transpose in memory (ConcurrentDirectedGraph.scala:30-35); here a
+    frontier of a few ids costs two searches per type, not a job."""
+
+    def __init__(self, pairs: dict):
+        # (type, reverse) -> (sorted keys, neighbours in key order)
+        self.pairs = pairs
+        self.nbytes = sum(k.nbytes + v.nbytes for k, v in pairs.values())
+
+    @staticmethod
+    def build(edges: DataFrame) -> "AdjacencyIndex | None":
+        """One collect of the (src, dst, type) columns; None when the
+        edge count puts the arrays over INDEX_MAX_BYTES."""
+        if edges.count() * INDEX_BYTES_PER_EDGE > INDEX_MAX_BYTES:
+            return None
+        pdf = edges.select("src", "dst", "type").toPandas()
+        src = pdf["src"].to_numpy(np.int64)
+        dst = pdf["dst"].to_numpy(np.int64)
+        pairs = {}
+        for t, rows in pdf.groupby("type", dropna=False).indices.items():
+            for reverse, keys, nbrs in ((False, src, dst), (True, dst, src)):
+                keys, nbrs = keys[rows], nbrs[rows]
+                order = np.lexsort((nbrs, keys))
+                pairs[(t, reverse)] = (keys[order], nbrs[order])
+        return AdjacencyIndex(pairs)
+
+    def expand(self, ids: np.ndarray, types, reverse: bool, cap: int):
+        """The edges leaving ``ids`` over ``types`` (every type when
+        empty), followed against their direction when ``reverse``:
+        ``(row, nbr)`` arrays, ``row`` indexing ``ids``. None when there
+        would be more than ``cap`` of them: the range lengths give the
+        count before any row is built."""
+        spans, total = [], 0
+        for (t, rev), (keys, nbrs) in self.pairs.items():
+            if rev != reverse or (types and t not in types):
+                continue
+            lo = np.searchsorted(keys, ids, "left")
+            n = np.searchsorted(keys, ids, "right") - lo
+            total += int(n.sum())
+            if total > cap:
+                return None
+            spans.append((lo, n, nbrs))
+        rows = [np.repeat(np.arange(len(ids)), n) for _, n, _ in spans]
+        # each id's range [lo, lo + n) laid end to end
+        picked = [
+            nbrs[np.arange(n.sum()) + np.repeat(lo - np.cumsum(n) + n, n)]
+            for lo, n, nbrs in spans
+        ]
+        return np.concatenate([_NO_IDS, *rows]), np.concatenate([_NO_IDS, *picked])
+
+    def __eq__(self, other) -> bool:
+        return (
+            isinstance(other, AdjacencyIndex)
+            and self.pairs.keys() == other.pairs.keys()
+            and all(
+                np.array_equal(a, b)
+                for k in self.pairs
+                for a, b in zip(self.pairs[k], other.pairs[k])
+            )
+        )
+
+
+class LabelIndex:
+    """A graph's (id, label) rows held on the driver: the sorted ids of
+    each label, and of every node for an unlabeled check."""
+
+    def __init__(self, by_label: dict):
+        self.by_label = by_label
+        self.all_ids = np.unique(np.concatenate([_NO_IDS, *by_label.values()]))
+        self.nbytes = self.all_ids.nbytes + sum(a.nbytes for a in by_label.values())
+
+    @staticmethod
+    def build(slim: DataFrame) -> "LabelIndex | None":
+        """One collect of the (id, label) rows; None when their count
+        puts the arrays over INDEX_MAX_BYTES."""
+        if slim.count() * INDEX_BYTES_PER_NODE > INDEX_MAX_BYTES:
+            return None
+        pdf = slim.select("id", "label").toPandas()
+        ids = pdf["id"].to_numpy(np.int64)
+        return LabelIndex({
+            label: np.unique(ids[rows])
+            for label, rows in pdf.groupby("label").indices.items()
+        })
+
+    def has(self, ids: np.ndarray, label: str | None) -> np.ndarray:
+        """Mask of the ``ids`` that carry ``label`` (any label: None)."""
+        known = self.all_ids if label is None else self.by_label.get(label, _NO_IDS)
+        if not len(known):
+            return np.zeros(len(ids), bool)
+        pos = np.searchsorted(known, ids).clip(max=len(known) - 1)
+        return known[pos] == ids
+
+    def __eq__(self, other) -> bool:
+        return (
+            isinstance(other, LabelIndex)
+            and self.by_label.keys() == other.by_label.keys()
+            and all(np.array_equal(v, other.by_label[k]) for k, v in self.by_label.items())
+        )
 
 
 # the memo.FACETS a write changes
@@ -537,6 +655,25 @@ class PropertyGraph:
             return None
 
         return self.derived.get(("edge_hist", types, prop), EDGE_ROWS, build)
+
+    def adjacency(self) -> tuple[AdjacencyIndex, LabelIndex] | None:
+        """The driver-side adjacency and label indexes, or None. Each is
+        built on first use from a cache: the cached edge table and the
+        slim (id, label) cache. A write whose result holds an uncached
+        union of what an index reads neither inherits that index nor
+        rebuilds it. The adjacency reads ``edges`` and the label index
+        ``labels``, so a props write inherits both. An index over
+        INDEX_MAX_BYTES is recorded as None and never built."""
+        slim = self.derived.peek("nodes_slim")
+        if ("adjacency" not in self.derived and not self.edges.is_cached) or (
+            "label_index" not in self.derived and slim is None
+        ):
+            return None
+        adj = self.derived.get(
+            "adjacency", {"edges"}, lambda: AdjacencyIndex.build(self.edges)
+        )
+        labels = self.derived.get("label_index", {"labels"}, lambda: LabelIndex.build(slim))
+        return None if adj is None or labels is None else (adj, labels)
 
     def cache(self) -> "PropertyGraph":
         """Cache the hot projections: (id,label) for planning/semi-joins

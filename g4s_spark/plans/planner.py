@@ -30,8 +30,11 @@ from __future__ import annotations
 
 from dataclasses import dataclass, field, fields as dc_fields, is_dataclass, replace as dc_replace
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import LongType, StructField, StructType
 
 import operator
 import re
@@ -1596,6 +1599,112 @@ def _eliminate_tautological_edges(qg: QueryGraph, stats, steps: list) -> QueryGr
     return qg
 
 
+# an anchored read whose frontier would pass this many rows on a hop
+# plans as joins over the cached edge table instead (_probe_anchored)
+PROBE_MAX_ROWS = 100_000
+
+
+def _probe_order(qg: QueryGraph, cols: list[str]):
+    """(literal id sets by binding, root, edges in expansion order) of a
+    pattern the adjacency probe answers exactly, else None. Eligible: a
+    tree of fixed 1-hop directed edges, anchored by ``id(x) = n`` /
+    ``id(x) IN [...]`` literals, with no other WHERE than those and
+    nothing but label constraints, no OPTIONAL, no edge variable read,
+    no path, and every ``cols`` binding in the pattern."""
+    edges = qg.edges
+    bindings = {b for e in edges for b in (e.src, e.dst)}
+    if (
+        not edges
+        or qg.optionals or qg.pattern_filters or qg.cross_filters
+        or qg.expr_filters or qg.edge_filters or qg.edge_prop_returns
+        or qg.paths or qg.path_lengths or qg.carry_required
+        or any(a.on_edge for a in qg.aggregates)
+        or any(
+            e.undirected or (e.min_hops, e.max_hops) != (1, 1) or e.src == e.dst
+            for e in edges
+        )
+        or len(edges) != len(bindings) - 1
+        or not cols or not set(cols) <= bindings
+        or not (qg.match_bindings or set(qg.labels)) <= bindings
+    ):
+        return None
+    anchors: dict[str, np.ndarray] = {}
+    for grp in [(f,) for f in qg.filters] + list(qg.or_filters):
+        if not all(
+            f.prop == ID_PROP and f.op == "=" and type(f.value) is int for f in grp
+        ):
+            return None
+        ids = np.unique(np.array([f.value for f in grp], np.int64))
+        b = grp[0].binding
+        anchors[b] = np.intersect1d(anchors[b], ids) if b in anchors else ids
+    if not anchors:
+        return None
+    # tree walk from the smallest anchor set: each edge in the order has
+    # its other endpoint bound by an earlier one
+    root = min(anchors, key=lambda b: len(anchors[b]))
+    seen, order, frontier = {root}, [], [root]
+    while frontier:
+        b = frontier.pop()
+        for e in edges:
+            if b in (e.src, e.dst) and e not in order:
+                order.append(e)
+                other = e.dst if b == e.src else e.src
+                seen.add(other)
+                frontier.append(other)
+    if seen != bindings:
+        return None
+    return anchors, root, order
+
+
+def _probe_anchored(graph: PropertyGraph, qg: QueryGraph, cols: list[str]):
+    """Expand an anchored pattern on the driver over the graph's
+    adjacency index (PropertyGraph.adjacency): label checks and the
+    live-binding dedupe after every hop, as build_tree's join chain
+    does them. Returns ({binding: distinct match column}, [(edge, rows
+    after the hop)], the index bytes), or None when the pattern is not
+    eligible, the graph has no index, or a hop would pass
+    PROBE_MAX_ROWS."""
+    walk = _probe_order(qg, cols)
+    index = graph.adjacency() if walk is not None else None
+    if index is None:
+        return None
+    (adj, labels), (anchors, root, order) = index, walk
+
+    def keep(b: str, ids: np.ndarray) -> np.ndarray:
+        # the general path's semi-joins: the label (any node row when
+        # only an anchor constrains b), extra labels, the anchor ids
+        mask = np.ones(len(ids), bool)
+        if qg.labels.get(b) is not None or b in anchors:
+            mask &= labels.has(ids, qg.labels.get(b))
+        for xl in qg.extra_labels.get(b, ()):
+            mask &= labels.has(ids, xl)
+        if b in anchors:
+            mask &= np.isin(ids, anchors[b])
+        return mask
+
+    ids = anchors[root]
+    table = {root: ids[keep(root, ids)]}
+    hops = []
+    for i, e in enumerate(order):
+        reverse = e.src not in table
+        frm, to = (e.dst, e.src) if reverse else (e.src, e.dst)
+        got = adj.expand(table[frm], e.types, reverse, PROBE_MAX_ROWS)
+        if got is None:
+            return None
+        rows, nbrs = got
+        m = keep(to, nbrs)
+        table = {b: v[rows[m]] for b, v in table.items()}
+        table[to] = nbrs[m]
+        live = [
+            b for b in table
+            if b in cols or any(b in (x.src, x.dst) for x in order[i + 1:])
+        ]
+        distinct = np.unique(np.stack([table[b] for b in live], axis=1), axis=0)
+        table = {b: distinct[:, j] for j, b in enumerate(live)}
+        hops.append((e, len(distinct)))
+    return {b: table[b] for b in cols}, hops, adj.nbytes + labels.nbytes
+
+
 def plan_match(
     graph: PropertyGraph, qg: QueryGraph, carry: DataFrame | None = None
 ) -> PlannedQuery:
@@ -1735,33 +1844,28 @@ def plan_match(
         reference's label-frequency-only model — SURVEY §4.2). Unknown
         predicates contribute 1.0, keeping the estimate an upper bound
         exactly like the label card."""
+        label = qg.labels.get(binding)
+
+        def atom_sel(f) -> float | None:
+            if f.fn is not None:
+                return None  # function-wrapped prop: unestimated (bound kept)
+            if f.prop == ID_PROP:
+                # id(b) equality hits exactly one node of the label set;
+                # range/inequality on id: unestimated
+                card = stats.label_card(label)
+                return 1.0 / card if f.op == "=" and card else None
+            return hist_sel(graph.node_histogram(label, f.prop), f.op, f.value, f.is_num)
+
         sel = 1.0
         for f in filters_by_binding().get(binding, ()):
-            if f.fn is not None:
-                continue  # function-wrapped prop: unestimated (bound kept)
-            if f.prop == ID_PROP:
-                # id(b) equality hits exactly one node of the label set
-                if f.op == "=":
-                    card = stats.label_card(qg.labels.get(binding))
-                    if card:
-                        sel *= 1.0 / card
-                continue  # range/inequality on id: unestimated
-            s = hist_sel(
-                graph.node_histogram(qg.labels.get(binding), f.prop), f.op, f.value, f.is_num
-            )
+            s = atom_sel(f)
             if s is not None:
                 sel *= s
         # OR groups (incl. expanded IN lists): disjunction bounded by the
         # sum of atom fractions; an unestimable atom makes the whole
         # group unestimable (sum would silently under-count it)
         for grp in or_filters_by_binding().get(binding, ()):
-            parts = [
-                None if f.fn is not None else hist_sel(
-                    graph.node_histogram(qg.labels.get(binding), f.prop),
-                    f.op, f.value, f.is_num,
-                )
-                for f in grp
-            ]
+            parts = [atom_sel(f) for f in grp]
             if all(p is not None for p in parts):
                 sel *= min(1.0, sum(parts))
         return sel
@@ -2046,7 +2150,28 @@ def plan_match(
         steps.append(("project_distinct", tuple(live)))
         return out
 
-    if qg.edges:
+    # an anchored tree pattern expands on the driver (_probe_anchored)
+    # into a local relation of distinct matches: no job until a later
+    # step (property resolution, aggregation) needs one
+    probe_cols = list(dict.fromkeys(
+        qg.returns + prop_bindings + agg_bindings + expr_bindings
+        + (sorted(edge_bindings) if star else [])
+    ))
+    probed = _probe_anchored(graph, qg, probe_cols) if carry is None else None
+    if probed is not None:
+        probe_ids, hops, index_bytes = probed
+        df = graph.spark.createDataFrame(
+            pd.DataFrame(probe_ids),
+            StructType([StructField(b, LongType()) for b in probe_cols]),
+        )
+        bound = set(edge_bindings)
+        hop_trace = []
+        for e, rows in hops:
+            est = edge_est(e)
+            total_cost += step_cost(est)
+            hop_trace.append(((e.src, e.dst), e.types, est, rows))
+        steps.append(("probe", tuple(hop_trace), index_bytes))
+    elif qg.edges:
         tree, _ = _choose_join_tree(list(qg.edges), edge_est)
         df = build_tree(tree, set())
 
@@ -2288,7 +2413,11 @@ def plan_match(
             + path_len_aliases + star_extra + carry_extras
         )
     )
-    out = df.select(*needed).dropDuplicates(needed)
+    if probed is not None:
+        assert needed == probe_cols, (needed, probe_cols)
+        out = df  # the probe's rows are distinct already
+    else:
+        out = df.select(*needed).dropDuplicates(needed)
 
     # Property resolution (extension): one join back to the nodes payload
     # per binding with property accesses — the Readme.md:66-70 "resolve to
@@ -2338,9 +2467,13 @@ def plan_match(
         # lineitem rows (same id, genuinely DISTINCT props; NOTES.md
         # "testdata quirk") survive the payload dedup, so the oracles'
         # per-raw-row aggregation still hash-matches.
-        n = graph.payload_rows().select(
-            F.col("id").alias(b), F.col("props").alias(f"_props_{b}")
-        )
+        n = graph.payload_rows()
+        if probed is not None:
+            # fetch only the probed ids' payload: one literal IN list
+            # (one JVM call), which Catalyst pushes below the dedupe
+            ids = ",".join(map(str, np.unique(probe_ids[b])))
+            n = n.filter(F.expr(f"id IN ({ids})") if ids else F.lit(False))
+        n = n.select(F.col("id").alias(b), F.col("props").alias(f"_props_{b}"))
         out = out.join(n, on=b, how="left")
         for p, a in cols:
             out = out.withColumn(a, F.col(f"_props_{b}").getItem(p))
@@ -2855,6 +2988,16 @@ def explain_cypher(
         lines.append(f"estimated cost: {planned.cost:,.1f}")
         for s in planned.steps:
             kind, args = s[0], s[1:]
+            if kind == "probe":
+                # the driver-side expansion: estimated beside actual rows
+                hops, nbytes = args
+                lines.append(f"  probe: adjacency index, {nbytes:,} bytes")
+                for (src, dst), types, est, rows in hops:
+                    lines.append(
+                        f"    hop ({src})-[{'|'.join(types)}]->({dst}): "
+                        f"estimated rows {est:,.1f}, actual rows {rows:,}"
+                    )
+                continue
             lines.append(f"  {kind}: " + ", ".join(repr(a) for a in args))
     if spark_plan:
         lines.append("-- spark physical plan --")

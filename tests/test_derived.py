@@ -46,6 +46,9 @@ WARM = {
     WEIGHT_KEY: _weight_edges,
     ("node_hist", "A", "k"): lambda g: g.node_histogram("A", "k"),
     ("edge_hist", ("T",), "weight"): lambda g: g.edge_histogram(("T",), "weight"),
+    # the driver-side indexes build only from the caches
+    "adjacency": lambda g: g.cache().adjacency()[0],
+    "label_index": lambda g: g.cache().adjacency()[1],
 }
 
 

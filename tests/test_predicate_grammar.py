@@ -159,6 +159,18 @@ def test_id_predicate():
         _filters("id(a) = 5.5")  # ids are integers
     with pytest.raises(CypherParseError, match="needs a node variable"):
         _filters("id(e) = 5")
+    # id(a) IN [integers]: an OR-group of exact id equalities
+    (grp,) = parse(FRAME.format(w="id(a) IN [3, -4, 2]")).or_filters
+    assert [(f.prop, f.op, f.value) for f in grp] == [
+        (ID_PROP, "=", 3), (ID_PROP, "=", -4), (ID_PROP, "=", 2)
+    ]
+    assert _one("id(a) IN [7]").value == 7
+    with pytest.raises(CypherParseError, match="empty IN list"):
+        _filters("id(a) IN []")
+    with pytest.raises(CypherParseError, match="unsupported WHERE"):
+        _filters("id(a) IN [1.5]")
+    with pytest.raises(CypherParseError, match="needs a node variable"):
+        _filters("id(e) IN [5]")
 
 
 @pytest.mark.parametrize(
