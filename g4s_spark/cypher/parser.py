@@ -14,6 +14,7 @@ from __future__ import annotations
 
 import re
 from dataclasses import dataclass, field, replace as dc_replace
+from typing import ClassVar
 
 from .tokenizer import (
     CypherLexError,
@@ -237,8 +238,8 @@ class QueryGraph:
 
 # inline property maps (round-16, openCypher MapExpression): `{k: lit,
 # ...}` on a pattern node or single-hop edge desugars to equality
-# PropFilters. `[^{}]*` is the same no-nesting/no-quoted-brace contract
-# as the CREATE/MERGE map grammar (planner._CREATE_NODE_PAT).
+# PropFilters. `[^{}]*` is the no-nesting/no-quoted-brace map contract,
+# which CREATE/MERGE patterns share (they are read by _parse_pattern).
 _NODE = re.compile(
     r"\(\s*(?P<name>[A-Za-z_][A-Za-z0-9_]*)?\s*"
     r"(?P<labels>(?::\s*[A-Za-z_][A-Za-z0-9_]*)*)\s*"
@@ -636,14 +637,16 @@ def _cmp_numeric_split(c: str) -> tuple[str, str, str, bool] | None:
 
 
 # ---------------------------------------------------------------------------
-# Statement tree. One token pass over a read statement finds every
-# top-level clause keyword; the statement becomes its UNION parts, each
-# an ordered list of clause nodes (Unwind, Match, Projection) holding
-# source spans. Every later reader takes its clause, item or ORDER BY
-# text from these nodes: a comma or keyword inside a string literal or a
-# bracket group never cuts a clause or an item. ``parse`` and
-# ``split_with`` are views over the tree. The reference gets this from
-# its openCypher front-end (QueryGraph.scala:87-99).
+# Statement tree. One token pass over a statement finds every top-level
+# clause keyword; the statement becomes its UNION parts, each an ordered
+# list of clause nodes (Unwind, Match, Projection) holding source spans.
+# A write statement is one part that ends in a write node (SetClause,
+# Remove, Delete, Create, Merge) instead of a RETURN. Every later reader
+# takes its clause, item or ORDER BY text from these nodes: a comma or
+# keyword inside a string literal or a bracket group never cuts a
+# clause or an item. ``parse`` and ``split_with`` are views over the
+# tree. The reference gets this from its openCypher front-end
+# (QueryGraph.scala:87-99).
 # ---------------------------------------------------------------------------
 
 
@@ -686,18 +689,127 @@ class Projection:
 
 
 @dataclass(frozen=True)
+class SetItem:
+    """One SET / REMOVE / ON ... SET item: ``b.p = value`` (``value`` is
+    ("lit", text) with quotes stripped, or ("expr", parse_expr tree)),
+    ``b.p`` (REMOVE) or a label ``b:Label``; ``text`` as written."""
+
+    binding: str
+    prop: str | None = None
+    label: str | None = None
+    value: tuple | None = None
+    text: str = ""
+
+
+@dataclass(frozen=True)
+class SetClause:
+    """``MATCH ... SET items``."""
+
+    SHAPE: ClassVar[str] = "SET statement must be MATCH ... SET b.prop = value"
+
+    items: tuple[SetItem, ...]
+
+
+@dataclass(frozen=True)
+class Remove:
+    """``MATCH ... REMOVE items`` (``b.p`` or ``b:Label``)."""
+
+    SHAPE: ClassVar[str] = "REMOVE statement must be MATCH ... REMOVE b.prop"
+
+    items: tuple[SetItem, ...]
+
+
+@dataclass(frozen=True)
+class Delete:
+    """``MATCH ... [DETACH] DELETE names``."""
+
+    SHAPE: ClassVar[str] = "DELETE statement must be MATCH ... [DETACH] DELETE targets"
+
+    targets: tuple[str, ...]
+    detach: bool = False
+
+
+@dataclass(frozen=True)
+class WriteNode:
+    """A CREATE / MERGE node ``(name:Label {k: v, ...})``. ``props``
+    holds the map's literal text (numbers as written, the stored
+    value); ``filters`` the same map as MATCH's equality PropFilters."""
+
+    name: str | None
+    label: str
+    props: tuple[tuple[str, str], ...] = ()
+    filters: tuple[PropFilter, ...] = ()
+
+
+@dataclass(frozen=True)
+class WriteEdge:
+    """A CREATE / MERGE edge ``(src)-[name:TYPE {k: v}]->(dst)`` between
+    bare MATCH bindings; ``props`` as in WriteNode."""
+
+    src: str
+    dst: str
+    type: str
+    name: str | None = None
+    props: tuple[tuple[str, str], ...] = ()
+
+
+@dataclass(frozen=True)
+class Create:
+    """``CREATE (n:L {...})[, ...]`` (``nodes``) or ``MATCH ... CREATE
+    (a)-[:T {...}]->(b)`` (``edge``)."""
+
+    SHAPE: ClassVar[str] = (
+        "CREATE statement must be `CREATE (n:Label {props})[, ...]` or `MATCH ... CREATE (a)-[:T]->(b)`"
+    )
+
+    nodes: tuple[WriteNode, ...] = ()
+    edge: WriteEdge | None = None
+
+
+@dataclass(frozen=True)
+class Merge:
+    """``MERGE (n:L {...})`` (``node``) or ``MATCH ... MERGE
+    (a)-[r:T]->(b)`` (``edge``), with its ON CREATE SET / ON MATCH SET
+    items (None when the clause is absent)."""
+
+    SHAPE: ClassVar[str] = (
+        "MERGE statement must be `MERGE (n:Label {props})` or `MATCH ... MERGE (a)-[r:T]->(b)`"
+    )
+
+    node: WriteNode | None = None
+    edge: WriteEdge | None = None
+    on_create: tuple[SetItem, ...] | None = None
+    on_match: tuple[SetItem, ...] | None = None
+
+
+_WRITES = (SetClause, Remove, Delete, Create, Merge)
+
+
+def write_shape_error(cls, q: str, why: str = "") -> CypherParseError:
+    """The one statement-shape error of a write clause ``cls``."""
+    return CypherParseError(f"{cls.SHAPE}: {q!r}" + (f" ({why})" if why else ""))
+
+
+@dataclass(frozen=True)
 class Statement:
-    """A read statement: its UNION parts (``union_all`` = UNION ALL),
-    each an ordered clause list ending in a RETURN."""
+    """A statement: its UNION parts (``union_all`` = UNION ALL), each an
+    ordered clause list ending in a RETURN; a write statement is one
+    part ending in its write node."""
 
     text: str
     parts: tuple[tuple, ...]
     union_all: bool = False
 
+    @property
+    def write(self):
+        """The write node of a write statement, else None."""
+        last = self.parts[0][-1]
+        return last if isinstance(last, _WRITES) else None
+
     def single_stage(self):
         """``(matches, return)`` of a one-part ``MATCH ... RETURN``
         statement, else None."""
-        if len(self.parts) != 1:
+        if len(self.parts) != 1 or self.write is not None:
             return None
         *matches, ret = self.parts[0]
         if matches and all(isinstance(m, Match) for m in matches):
@@ -705,12 +817,16 @@ class Statement:
         return None
 
 
-_READ_CLAUSES = {
-    "UNION": ("UNION",), "UNWIND": ("UNWIND",),
-    "OPTIONAL MATCH": ("OPTIONAL", "MATCH"), "MATCH": ("MATCH",),
-    "WHERE": ("WHERE",), "WITH": ("WITH",), "RETURN": ("RETURN",),
-    "ORDER BY": ("ORDER", "BY"), "SKIP": ("SKIP",), "LIMIT": ("LIMIT",),
+_CLAUSES = {name: tuple(name.split()) for name in (
+    "UNION", "UNWIND", "OPTIONAL MATCH", "MATCH", "WHERE", "WITH", "RETURN",
+    "ORDER BY", "SKIP", "LIMIT", "SET", "REMOVE", "DELETE", "DETACH DELETE",
+    "CREATE", "MERGE", "ON CREATE SET", "ON MATCH SET",
+)}
+_WRITE_VERBS = {
+    "SET": SetClause, "REMOVE": Remove, "DELETE": Delete, "DETACH DELETE": Delete,
+    "CREATE": Create, "MERGE": Merge,
 }
+_ON_SET = {"ON CREATE SET": "on_create", "ON MATCH SET": "on_match"}
 # a projection's sub-clauses and their Projection fields, in the one
 # order the grammar admits
 _PROJ_TAIL = ("WHERE", "ORDER BY", "SKIP", "LIMIT")
@@ -728,14 +844,14 @@ def _segments(q: str) -> list[tuple[str | None, str, list[Token], int]]:
     after STARTS/ENDS belongs to the string predicate."""
     try:
         toks = tokenize(q)
-        hits = scan_clauses(toks, _READ_CLAUSES)
+        hits = scan_clauses(toks, _CLAUSES)
     except CypherLexError as e:
-        raise CypherParseError(str(e)) from None
+        raise CypherParseError(str(e)) from e
     hits = [
         h for h in hits
         if not (h[0] == "WITH" and h[1] > 0 and toks[h[1] - 1].is_word("STARTS", "ENDS"))
     ]
-    starts = [(None, 0, 0)] + [(n, i + len(_READ_CLAUSES[n]), s) for n, i, s, _e in hits]
+    starts = [(None, 0, 0)] + [(n, i + len(_CLAUSES[n]), s) for n, i, s, _e in hits]
     segs = []
     for k, (name, first, kw_pos) in enumerate(starts):
         body = toks[first : hits[k][1] if k < len(hits) else len(toks)]
@@ -851,6 +967,24 @@ def _assemble(q: str, segs) -> tuple[list[list], list[bool]]:
             clauses[-1] = dc_replace(last, **{_PROJ_FIELDS[rank]: value})
         elif isinstance(last, Projection) and last.kind == "RETURN":
             raise CypherParseError(f"misplaced or duplicate {name} clause: {q!r}")
+        elif name in _ON_SET:
+            if not isinstance(last, Merge):
+                raise CypherParseError(f"{name} must follow a MERGE pattern: {q!r}")
+            if getattr(last, _ON_SET[name]) is not None:
+                raise CypherParseError(f"duplicate {name} clause")
+            items = tuple(_set_item(text, t) for t in _split_depth0(toks, ",") if t)
+            if not items:
+                raise CypherParseError(f"empty {name} in: {q!r}")
+            clauses[-1] = dc_replace(last, **{_ON_SET[name]: items})
+        elif any(isinstance(c, _WRITES) for c in clauses):
+            if name in _WRITE_VERBS:
+                raise CypherParseError(f"one write clause per statement: {q!r}")
+            raise CypherParseError(
+                f"{name} cannot follow a write clause (a write statement "
+                f"returns the updated graph, not rows): {q!r}"
+            )
+        elif name in _WRITE_VERBS:
+            clauses.append(_write_clause(q, name, text, toks))
         elif name == "UNWIND":
             clauses.append(_unwind(text, toks))
         elif name in ("MATCH", "OPTIONAL MATCH"):
@@ -869,10 +1003,123 @@ def _assemble(q: str, segs) -> tuple[list[list], list[bool]]:
     return parts, alls
 
 
+def _write_clause(q: str, name: str, text: str, toks: list[Token]):
+    """The write node of a SET / REMOVE / [DETACH] DELETE / CREATE /
+    MERGE clause body: its top-level comma items, each read on its
+    tokens (CREATE / MERGE patterns by the MATCH pattern reader)."""
+    cls = _WRITE_VERBS[name]
+    segs = _split_depth0(toks, ",")
+    if cls in (Delete, Merge) and not all(segs):
+        raise write_shape_error(cls, q)
+    segs = [t for t in segs if t]
+    if not segs:
+        raise write_shape_error(cls, q)
+    if cls is Delete:
+        if any(len(t) != 1 or t[0].kind != "word" for t in segs):
+            raise write_shape_error(cls, q)
+        return Delete(tuple(t[0].text for t in segs), name == "DETACH DELETE")
+    if cls in (SetClause, Remove):
+        return cls(tuple(_set_item(text, t, cls is Remove) for t in segs))
+    pats = [_write_pattern(q, cls, text[t[0].pos : t[-1].end]) for t in segs]
+    if all(isinstance(p, WriteNode) for p in pats) and (cls is Create or len(pats) == 1):
+        return Create(nodes=tuple(pats)) if cls is Create else Merge(node=pats[0])
+    if len(pats) != 1:
+        raise write_shape_error(cls, q)
+    return cls(edge=pats[0])
+
+
+def _set_item(text: str, toks: list[Token], remove: bool = False) -> SetItem:
+    """One SET / REMOVE item (see SetItem). A literal keeps its text (the
+    props map is string-valued); an expression may only reference the
+    item's own binding — a cross-binding RHS would make the per-id
+    update value ambiguous (one node, many match rows)."""
+    item = text[toks[0].pos : toks[-1].end]
+    if len(toks) == 3 and toks[0].kind == toks[2].kind == "word" and toks[1].text == ":":
+        return SetItem(toks[0].text, label=toks[2].text, text=item)
+    pr = _prop_at(toks, 0)
+    if remove:
+        if pr and pr[2] == len(toks):
+            return SetItem(pr[0], pr[1], text=item)
+        raise CypherParseError(f"unsupported REMOVE item (need b.prop): {item!r}")
+    if not (pr and len(toks) > pr[2] + 1 and toks[pr[2]].kind == "punct" and toks[pr[2]].text == "="):
+        raise CypherParseError(f"unsupported SET item (need b.prop = value): {item!r}")
+    b, p, i = pr
+    rhs = toks[i + 1 :]
+    if len(rhs) == 1 and rhs[0].kind in ("str", "num"):
+        return SetItem(b, p, value=("lit", _lit_at(rhs, 0)[1]), text=item)
+    if len(rhs) == 2 and rhs[0].text == "-" and rhs[1].kind == "num" and rhs[0].end == rhs[1].pos:
+        return SetItem(b, p, value=("lit", "-" + rhs[1].text), text=item)
+    node = parse_expr(text[rhs[0].pos : rhs[-1].end])
+    for lb, _lp in expr_prop_leaves(node):
+        if lb != b:
+            raise CypherParseError(
+                f"SET expression may only reference the binding being "
+                f"set ({b!r}), got {lb!r}: {item!r}"
+            )
+    return SetItem(b, p, value=("expr", node), text=item)
+
+
+def _write_pattern(q: str, cls, text: str) -> WriteNode | WriteEdge:
+    """One CREATE / MERGE pattern, read by the MATCH pattern reader: a
+    lone node with exactly one label, or one directed single-hop edge
+    of exactly one type between bare named bindings (``(a)``). CREATE
+    edges are unnamed; MERGE edges carry no map; MERGE nodes are
+    named."""
+    qg, maps, anon = QueryGraph(), {}, []
+
+    def fresh() -> str:
+        anon.append(f"_anon{len(anon) + 1}")
+        return anon[-1]
+
+    try:
+        _parse_pattern(text, qg, qg.edges, fresh, maps=maps)
+    except CypherParseError as e:
+        raise write_shape_error(cls, q, str(e)) from None
+    verb = cls.__name__.upper()
+    if not qg.edges:
+        (name, label), = qg.labels.items()
+        if label is None or qg.extra_labels or (cls is Merge and name in anon):
+            raise write_shape_error(cls, q, f"unsupported {verb} node pattern: {text!r}")
+        props = tuple(maps.get(name, ()))
+        return WriteNode(None if name in anon else name, label, props, tuple(qg.filters))
+    e = qg.edges[0]
+    ename = None if e.name in anon else e.name
+    props = tuple(maps.get(e.name, ()))
+    if (
+        len(qg.edges) > 1 or e.undirected or len(e.types) != 1
+        or (e.min_hops, e.max_hops) != (1, 1) or next(iter(qg.labels)) != e.src
+        or any(b in anon or b in maps or qg.labels[b] or b in qg.extra_labels for b in qg.labels)
+        or (cls is Create and ename is not None) or (cls is Merge and props)
+    ):
+        raise write_shape_error(cls, q, f"unsupported {verb} edge pattern: {text!r}")
+    return WriteEdge(e.src, e.dst, e.types[0], ename, props)
+
+
+def _check_write(q: str, clauses: list) -> None:
+    """A write part: a MATCH (then OPTIONAL MATCHes) before SET, REMOVE,
+    DELETE and the edge CREATE / MERGE; nothing before a node CREATE /
+    MERGE."""
+    *matches, w = clauses
+    node_form = isinstance(w, (Create, Merge)) and w.edge is None
+    if (
+        node_form != (not matches)
+        or not all(isinstance(m, Match) for m in matches)
+        or (matches and matches[0].optional)
+    ):
+        raise write_shape_error(type(w), q)
+    for m in matches[1:]:
+        if not m.optional:
+            raise CypherParseError(
+                f"consecutive MATCH clauses need a WITH between them: {m.pattern!r}"
+            )
+
+
 def _check_part(q: str, clauses: list) -> None:
     """The stage shapes the planner runs: leading UNWINDs, then a
     MATCH (or the RETURN); an UNWIND elsewhere follows a WITH; one
     plain MATCH per stage; a RETURN last."""
+    if clauses and isinstance(clauses[-1], _WRITES):
+        return _check_write(q, clauses)
     if not clauses or not (isinstance(clauses[-1], Projection) and clauses[-1].kind == "RETURN"):
         raise CypherParseError(f"unsupported query (expected MATCH ... RETURN ...): {q!r}")
     lead = 0
@@ -898,8 +1145,9 @@ def _check_part(q: str, clauses: list) -> None:
 
 
 def parse_statement(text: str) -> Statement:
-    """Parse a read statement into its tree (see Statement). Lexes once;
-    raises CypherParseError for text outside the read grammar."""
+    """Parse a read or write statement into its tree (see Statement).
+    Lexes once; raises CypherParseError for text outside the grammar
+    (with the CypherLexError as its cause when the text does not lex)."""
     q = text.strip()
     parts, alls = _assemble(q, _segments(q))
     if len(parts) > 1 and not all(parts):
@@ -908,19 +1156,9 @@ def parse_statement(text: str) -> Statement:
         raise CypherParseError("cannot mix UNION and UNION ALL in one query")
     for clauses in parts:
         _check_part(q, clauses)
+    if len(parts) > 1 and any(isinstance(p[-1], _WRITES) for p in parts):
+        raise CypherParseError(f"UNION of a write statement is unsupported: {q!r}")
     return Statement(q, tuple(tuple(p) for p in parts), bool(alls) and alls[0])
-
-
-def match_clauses(body: str) -> list[Match]:
-    """The MATCH clauses of a write statement's body (the text between
-    its MATCH and its verb), read by the same token pass."""
-    q = body.strip()
-    segs = _segments(q)
-    segs[0] = ("MATCH",) + segs[0][1:]
-    parts, _ = _assemble(q, segs)
-    if len(parts) > 1 or not all(isinstance(c, Match) for c in parts[0]):
-        raise CypherParseError(f"unsupported MATCH body: {q!r}")
-    return parts[0]
 
 
 def stage_query_graph(matches: list[Match], ret: Projection) -> QueryGraph:
@@ -1628,11 +1866,12 @@ def _apply_ret_item(qg: QueryGraph, spec, name: str, alias: str | None) -> None:
     raise CypherParseError(f"unsupported return item: {name!r}")  # unreachable
 
 
-def _split_depth0_plus(toks: list[Token]) -> list[list[Token]]:
-    """Token segments of a concat body between top-level '+' operators
-    ('+' inside any bracket group never splits; a '+' inside a string
-    literal is already literal-interior by lexing). Empty segments are
-    kept — the piece grammar rejects them with its own error."""
+def _split_depth0(toks: list[Token], punct: str) -> list[list[Token]]:
+    """Token segments between top-level ``punct`` tokens (a concat
+    body's '+', a write clause's ','): one inside any bracket group
+    never splits, one inside a string literal is literal-interior by
+    lexing. Empty segments are kept — each caller rejects or drops
+    them."""
     segs: list[list[Token]] = [[]]
     depth = 0
     for t in toks:
@@ -1640,7 +1879,7 @@ def _split_depth0_plus(toks: list[Token]) -> list[list[Token]]:
             depth += 1
         elif t.kind == "punct" and t.text in ")]}":
             depth -= 1
-        if t.kind == "punct" and t.text == "+" and depth == 0:
+        if t.kind == "punct" and t.text == punct and depth == 0:
             segs.append([])
         else:
             segs[-1].append(t)
@@ -1681,7 +1920,7 @@ def _parse_returns(qg: QueryGraph, items) -> None:
             and any(t.kind == "punct" and t.text == "+" for t in body)
         ):
             parts = []
-            for seg in _split_depth0_plus(body):
+            for seg in _split_depth0(body, "+"):
                 if len(seg) == 1 and seg[0].kind == "str":
                     parts.append(("lit", seg[0].text[1:-1]))
                     continue
@@ -2038,14 +2277,15 @@ def _edge_names(qg: QueryGraph) -> set[str]:
     }
 
 
-def _parse_prop_map(s: str) -> list[tuple[str, str | float, bool]]:
+def _parse_prop_map(s: str) -> list[tuple[str, str, bool]]:
     """Inline property-map entries ``k: literal[, ...]`` (round-16,
     openCypher MapExpression — the reference front-end accepts these
     via its openCypher artifact, reference build.sbt:117): returns
-    (key, value, is_num) triples with the same literal semantics as
-    WHERE equality atoms. Token shapes throughout — a comma or colon
-    inside a quoted value never splits."""
-    entries: list[tuple[str, str | float, bool]] = []
+    (key, literal text, is_num) triples — string text unquoted, a
+    number as written — with the same literal semantics as WHERE
+    equality atoms. Token shapes throughout — a comma or colon inside a
+    quoted value never splits."""
+    entries: list[tuple[str, str, bool]] = []
     for entry in _split_patterns(s):
         try:
             toks = tokenize(entry)
@@ -2059,11 +2299,7 @@ def _parse_prop_map(s: str) -> list[tuple[str, str | float, bool]]:
         ):
             lit = _lit_at(toks, 2)
             if lit and lit[2] == len(toks):
-                kind, text = lit[0], lit[1]
-                entries.append(
-                    (toks[0].text, float(text) if kind == "num" else text,
-                     kind == "num")
-                )
+                entries.append((toks[0].text, lit[1], lit[0] == "num"))
                 continue
         raise CypherParseError(f"unsupported pattern property entry: {entry!r}")
     return entries
@@ -2072,16 +2308,27 @@ def _parse_prop_map(s: str) -> list[tuple[str, str | float, bool]]:
 def _parse_pattern(
     pattern: str, qg: QueryGraph, target: list[PatternEdge], fresh,
     clause_bound: set[str] | None = None, ci: int = 0,
-    allow_props: bool = True,
+    allow_props: bool = True, maps: dict | None = None,
 ) -> None:
     """Parse one node-edge-node chain, appending edges to `target`
     (qg.edges for MATCH, a group list for OPTIONAL MATCH). Node bindings
     named in this pattern are added to `clause_bound` (WHERE scoping).
     Inline property maps desugar to clause-``ci`` equality PropFilters;
     ``allow_props=False`` (pattern predicates) rejects them — a map
-    there would wrongly constrain the whole match, not the semi-join."""
+    there would wrongly constrain the whole match, not the semi-join.
+    ``maps`` (CREATE / MERGE) receives each map's (key, literal text)
+    pairs under its node or edge binding."""
     if clause_bound is None:
         clause_bound = set()
+    if maps is None:
+        maps = {}
+
+    def desugar(entries, binding: str, into: list) -> None:
+        maps[binding] = [(k, text) for k, text, _ in entries]
+        for k, text, is_num in entries:
+            into.append(
+                PropFilter(binding, k, "=", float(text) if is_num else text, is_num, clause=ci)
+            )
 
     def desugar_node_props(nm: re.Match, binding: str) -> None:
         raw = nm.group("props")
@@ -2091,8 +2338,7 @@ def _parse_pattern(
             raise CypherParseError(
                 "property maps in pattern predicates are unsupported"
             )
-        for k, v, is_num in _parse_prop_map(raw):
-            qg.filters.append(PropFilter(binding, k, "=", v, is_num, clause=ci))
+        desugar(_parse_prop_map(raw), binding, qg.filters)
 
     pos = 0
     pattern = pattern.strip()
@@ -2162,10 +2408,7 @@ def _parse_pattern(
             entries = _parse_prop_map(eprops)
             if entries and ename is None:
                 ename = fresh()  # filters are keyed by edge name
-            for k, v, is_num in entries:
-                qg.edge_filters.append(
-                    PropFilter(ename, k, "=", v, is_num, clause=ci)
-                )
+            desugar(entries, ename, qg.edge_filters)
         if em.group("right"):  # (prev)-[:T]->(cur)
             target.append(PatternEdge(prev, cur, types, lo, hi, ename))
         elif em.group("left"):  # (prev)<-[:T]-(cur)

@@ -1,25 +1,26 @@
-"""Statement-level Cypher token stream (round-14, VERDICT r12 #6).
+"""Statement-level Cypher token stream.
 
 The reference ships a full openCypher front-end (reference build.sbt:117
-pulls the openCypher frontend artifact); this repo's per-clause grammar
-stays regex-based, but STATEMENT-level clause splitting — carving a
-query into MATCH / OPTIONAL MATCH / RETURN / ORDER BY / SKIP / LIMIT /
-WITH / UNION segments — runs on this token stream instead of regex
-scans over raw text. The win is principled handling of the two things
-raw-text splitting kept re-fixing ad hoc:
+pulls the openCypher frontend artifact). Here every statement, read or
+write, is lexed once by this module and cut into clauses by
+``scan_clauses`` (MATCH / OPTIONAL MATCH / WHERE / WITH / RETURN /
+ORDER BY / SKIP / LIMIT / UNION / UNWIND and SET / REMOVE / [DETACH]
+DELETE / CREATE / MERGE / ON CREATE SET / ON MATCH SET);
+``parser.parse_statement`` builds the statement tree from those cuts,
+and ``GraphDB.update`` routes a write on the tree's root. Two things
+raw-text splitting kept re-fixing ad hoc are handled by construction:
 
-- **string literals**: ``WHERE c.note = ' RETURN '`` never splits —
-  a literal is ONE token, so clause keywords inside it are invisible
-  (db.py's literal-masked verb routing is the same idea; the tokenizer
-  subsumes it for query-side splitting);
+- **string literals**: ``WHERE c.note = ' RETURN '`` or ``SET n.note =
+  'a ON CREATE SET b'`` never splits — a literal is ONE token, so
+  clause keywords inside it are invisible;
 - **identifier contexts**: ``RETURN o.skip``, ``count(x) AS limit``,
   ``(match:Label)`` never split — a clause keyword is only a clause
   START when it is a bare word at bracket depth 0 not preceded by
   ``.`` / ``:`` / ``AS``.
 
-The literal grammar is EXACTLY the one the per-clause regexes and the
-mutation runners execute (``'[^']*'`` / ``"[^"]*"``, no escapes), so
-splitting and execution see identical spans by construction.
+The literal grammar is ``'[^']*'`` / ``"[^"]*"``, no escapes, the same
+one the pattern regexes (``_NODE``/``_EDGE``) and the expression lexer
+read, so splitting and execution see identical spans by construction.
 
 Everything the lexer cannot read raises CypherParseError — the typed
 error the fuzz suites require (no foreign exceptions escape).
@@ -116,7 +117,10 @@ def scan_clauses(
     Depth tracks ()/[]/{} so sub-pattern parentheses shield their
     contents.
     """
-    seqs = sorted(keywords.items(), key=lambda kv: -len(kv[1]))
+    # candidate sequences per first word, longest first
+    by_first: dict[str, list[tuple[str, tuple[str, ...]]]] = {}
+    for name, seq in sorted(keywords.items(), key=lambda kv: -len(kv[1])):
+        by_first.setdefault(seq[0], []).append((name, seq))
     hits: list[tuple[str, int, int, int]] = []
     # unbalanced brackets (ADVICE r14): a negative or dangling depth
     # silently shields subsequent (or all) top-level keywords and
@@ -141,9 +145,7 @@ def scan_clauses(
         depth = len(opens)
         if t.kind == "word" and _is_clause_start(toks, i, depth):
             matched = None
-            for name, seq in seqs:
-                if t.text.upper() != seq[0]:
-                    continue
+            for name, seq in by_first.get(t.text.upper(), ()):
                 if all(
                     i + k < len(toks) and toks[i + k].is_word(seq[k])
                     for k in range(1, len(seq))

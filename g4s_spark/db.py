@@ -16,28 +16,10 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 
-from .cypher.parser import parse_statement, stage_query_graph
-from .cypher.tokenizer import CypherLexError, scan_clauses, tokenize
+from .cypher.parser import CypherParseError, parse_statement, stage_query_graph
+from .cypher.tokenizer import CypherLexError
 from .graph.store import PropertyGraph
-from .plans.planner import (
-    PlannedQuery,
-    explain_cypher,
-    plan_match,
-    run_cypher,
-    run_cypher_create,
-    run_cypher_delete,
-    run_cypher_merge,
-    run_cypher_remove,
-    run_cypher_set,
-)
-
-# update() routes on the first of these verbs found as a top-level
-# clause (DELETE also covers DETACH DELETE); none of them means SET
-_ROUTES = (
-    ("MERGE", run_cypher_merge), ("CREATE", run_cypher_create),
-    ("DELETE", run_cypher_delete), ("REMOVE", run_cypher_remove),
-)
-_VERBS = {verb: (verb,) for verb, _ in _ROUTES}
+from .plans.planner import WRITERS, PlannedQuery, explain_cypher, plan_match, run_cypher
 
 
 class GraphDB:
@@ -57,15 +39,17 @@ class GraphDB:
         — returning a NEW GraphDB over the updated graph (immutable
         rewrite; see the run_cypher_* statement runners in plans).
 
-        The route is the top-level verb clauses the statement tokenizer
-        finds, so a verb inside a string literal never routes. Priority:
-        MERGE, CREATE, [DETACH] DELETE, REMOVE, otherwise SET. Text the
-        tokenizer cannot lex — an unterminated literal, or a
-        backslash-escaped quote the literal grammar does not support —
-        is rejected rather than routed."""
+        The statement is parsed once (parse_statement) and runs the
+        writer of its tree's write node, so a verb inside a string
+        literal never routes and a statement with two write clauses is
+        rejected. Text the tokenizer cannot lex — an unterminated
+        literal, or a backslash-escaped quote the literal grammar does
+        not support — is rejected rather than routed."""
         try:
-            verbs = {name for name, *_ in scan_clauses(tokenize(cypher), _VERBS)}
-        except CypherLexError as e:
+            stmt = parse_statement(cypher)
+        except CypherParseError as e:
+            if not isinstance(e.__cause__, CypherLexError):
+                raise
             if "\\'" in cypher or '\\"' in cypher:
                 raise ValueError(
                     "update(): backslash-escaped quotes are not supported by "
@@ -75,10 +59,12 @@ class GraphDB:
             raise ValueError(
                 f"update(): unbalanced quote or bracket in statement: {e}"
             ) from e
-        for verb, run in _ROUTES:
-            if verb in verbs:
-                return GraphDB(run(self.graph, cypher))
-        return GraphDB(run_cypher_set(self.graph, cypher))
+        if stmt.write is None:
+            raise CypherParseError(
+                "update() takes a write statement (SET, REMOVE, [DETACH] "
+                f"DELETE, CREATE or MERGE): {stmt.text!r}"
+            )
+        return GraphDB(WRITERS[type(stmt.write)](self.graph, stmt))
 
     def plan(self, cypher: str) -> PlannedQuery:
         stage = parse_statement(cypher).single_stage()

@@ -42,27 +42,31 @@ import re
 from ..checkpointing import MAX_CLOSURE_ITERS, fixpoint, iter_checkpoint
 from ..cypher.parser import (
     CypherParseError,
+    Create,
+    Delete,
     ID_PROP,
     Match,
+    Merge,
     PatternEdge,
     Projection,
     QueryGraph,
+    Remove,
+    SetClause,
     Statement,
     Unwind,
     bind_params,
     expr_prop_leaves,
     expr_walk,
-    match_clauses,
-    parse,
     parse_expr,
     parse_statement,
     stage_query_graph,
+    write_shape_error,
     _parse_clauses,
     _parse_returns,
     _split_bool,
     _strip_ret_alias,
 )
-from ..cypher.tokenizer import CypherLexError, scan_clauses, tokenize
+from ..cypher.tokenizer import tokenize
 from ..graph.stats import hist_sel
 from ..graph.store import PRED_OPS, PropertyGraph, apply_scalar_fn
 from .cost import expand_card, step_cost
@@ -115,6 +119,11 @@ def run_cypher(
 
 
 def _run_statement(graph: PropertyGraph, stmt: Statement, resolve: bool) -> DataFrame:
+    if stmt.write is not None:
+        raise CypherParseError(
+            f"unsupported query (expected MATCH ... RETURN ...; a write "
+            f"statement runs through GraphDB.update): {stmt.text!r}"
+        )
     dfs = [_run_part(graph, part, resolve) for part in stmt.parts]
     if len(dfs) == 1:
         return dfs[0]
@@ -169,75 +178,26 @@ def _join_label_sets(graph: PropertyGraph, df: DataFrame, pairs) -> DataFrame:
     return df
 
 
-def _stmt_verb_split(
-    query: str, verbs: dict[str, tuple[str, ...]]
-) -> tuple[str, str, str] | None:
-    """Carve ``MATCH <body> <VERB> <tail>`` at the FIRST top-level verb
-    keyword on the token stream (round-14, cypher/tokenizer.py): a verb
-    inside a string literal (``WHERE a.s = '... DELETE ...'``) or in
-    identifier position (``a.delete``) never splits — the lazy-regex
-    statement splits this replaces cut at the first verb-shaped
-    substring regardless. Returns (verb_name, body, tail), or None when
-    the statement does not open with MATCH or carries no top-level
-    verb."""
-    q = query.strip()
-    try:
-        toks = tokenize(q)
-    except CypherLexError as e:
-        raise CypherParseError(str(e)) from None
-    if not toks or not toks[0].is_word("MATCH") or len(toks) < 2:
-        return None
-    try:
-        hits = scan_clauses(toks, verbs)
-    except CypherLexError as e:
-        raise CypherParseError(str(e)) from None
-    # skip a hit at token 0 (the statement verb must FOLLOW the MATCH)
-    hits = [h for h in hits if h[1] > 0]
-    if not hits:
-        return None
-    name, _i, start, end = hits[0]
-    body = q[toks[0].end : start].strip()
-    return name, body, q[end:].strip()
+def _write_statement(query, cls) -> tuple[QueryGraph, object]:
+    """The QueryGraph of a write statement's MATCH clauses and its write
+    node, which must be a ``cls`` node; ``query`` is the statement's
+    text or its parsed tree."""
+    stmt = query if isinstance(query, Statement) else parse_statement(query)
+    *matches, w = stmt.parts[0]
+    if not isinstance(w, cls):
+        raise write_shape_error(cls, stmt.text)
+    qg = QueryGraph()
+    _parse_clauses(matches, qg)
+    return qg, w
 
 
-# SET n:Label / REMOVE n:Label — label mutation (round-8)
-_SET_LABEL_ITEM = re.compile(
-    r"(?is)^\s*(?P<b>[A-Za-z_][A-Za-z0-9_]*)\s*:\s*"
-    r"(?P<label>[A-Za-z_][A-Za-z0-9_]*)\s*$"
-)
-_SET_ITEM = re.compile(
-    r"(?is)^\s*(?P<b>[A-Za-z_][A-Za-z0-9_]*)\.(?P<p>[A-Za-z_][A-Za-z0-9_]*)\s*"
-    r"=\s*(?P<val>'[^']*'|\"[^\"]*\"|-?\d+(?:\.\d+)?)\s*$"
-)
-_SET_ITEM_ANY = re.compile(
-    r"(?is)^\s*(?P<b>[A-Za-z_][A-Za-z0-9_]*)\.(?P<p>[A-Za-z_][A-Za-z0-9_]*)\s*"
-    r"=\s*(?P<rhs>.+?)\s*$"
-)
-
-
-def _read_set_item(item: str) -> tuple[str, str, tuple] | None:
-    """The one reader of a ``b.p = literal | expr`` SET item (SET, MERGE
-    ON CREATE / ON MATCH): (b, p, ("lit", text) | ("expr", tree)), or
-    None when the item has another shape. A literal keeps its text with
-    quotes stripped (the props map is string-valued); an expression may
-    only reference b itself — a cross-binding RHS would make the per-id
-    update value ambiguous (one node, many match rows). Each statement
-    checks the target on its own."""
-    sm = _SET_ITEM.match(item)
-    if sm:
-        raw = sm.group("val")
-        return sm.group("b"), sm.group("p"), ("lit", raw[1:-1] if raw[0] in "'\"" else raw)
-    am = _SET_ITEM_ANY.match(item)
-    if not am:
-        return None
-    b, node = am.group("b"), parse_expr(am.group("rhs"))
-    for lb, _lp in expr_prop_leaves(node):
-        if lb != b:
-            raise CypherParseError(
-                f"SET expression may only reference the binding being "
-                f"set ({b!r}), got {lb!r}: {item!r}"
-            )
-    return b, am.group("p"), ("expr", node)
+def _write_rows(graph: PropertyGraph, qg: QueryGraph, bindings) -> DataFrame:
+    """Plan a write's MATCH through plan_match, returning ``bindings``
+    (the ones the write reads) as well."""
+    for b in bindings:
+        if b not in qg.returns:
+            qg.returns.append(b)
+    return plan_match(graph, qg).df
 
 
 def _weight_value(en: str, val: tuple) -> tuple:
@@ -279,7 +239,7 @@ def _node_props(graph: PropertyGraph, ids: DataFrame, props: dict) -> DataFrame:
     return upd.select("id", F.create_map(*entries).alias("props"))
 
 
-def run_cypher_set(graph: PropertyGraph, query: str) -> PropertyGraph:
+def run_cypher_set(graph: PropertyGraph, query) -> PropertyGraph:
     """Mutation statement: ``MATCH pattern [WHERE ...] SET b.prop =
     value [, b2.prop2 = ...]`` — openCypher SET (extension; the
     reference declares no mutation at all, StatsStore.scala:172-177
@@ -296,31 +256,15 @@ def run_cypher_set(graph: PropertyGraph, query: str) -> PropertyGraph:
     props land via update_node_props' broadcast-merge join — so the
     match cost is one planned query and the write is
     Delta-MERGE-shaped."""
-    sp = _stmt_verb_split(query, {"SET": ("SET",)})
-    if sp is None or not sp[1] or not sp[2]:
-        raise CypherParseError(
-            f"SET statement must be MATCH ... SET b.prop = value: {query!r}"
-        )
-    _verb, _body, _sets = sp
-    from ..cypher.parser import _split_patterns
-
+    qg, w = _write_statement(query, SetClause)
     # prop -> ("lit", str) | ("expr", tree), per binding
     sets: dict[str, dict[str, tuple]] = {}
     label_adds: list[tuple[str, str]] = []  # (binding, label) — SET n:L
-    for item in _split_patterns(_sets):
-        lm_ = _SET_LABEL_ITEM.match(item)
-        if lm_:
-            label_adds.append((lm_.group("b"), lm_.group("label")))
-            continue
-        si = _read_set_item(item)
-        if si is None:
-            raise CypherParseError(
-                f"unsupported SET item (need b.prop = value): {item!r}"
-            )
-        b, p, val = si
-        sets.setdefault(b, {})[p] = val
-    qg = QueryGraph()
-    _parse_clauses(match_clauses(_body), qg)
+    for it in w.items:
+        if it.label is not None:
+            label_adds.append((it.binding, it.label))
+        else:
+            sets.setdefault(it.binding, {})[it.prop] = it.value
     # edge-variable SET (round-7): `SET e.weight = <number>` overwrites
     # the matched edges' typed weight through update_edge_weights —
     # routed by the pattern edge the variable names
@@ -344,20 +288,14 @@ def run_cypher_set(graph: PropertyGraph, query: str) -> PropertyGraph:
     for b, _lbl in label_adds:
         if b not in qg.labels:
             raise CypherParseError(f"SET label references unbound binding: {b!r}")
-        if b not in qg.returns:
-            qg.returns.append(b)
-    for b in sets:
-        if b not in qg.returns:
-            qg.returns.append(b)
+    ends = []
     for en, (kind, _v) in edge_sets.items():
         e = edge_by_name[en]
-        for nb in (e.src, e.dst):
-            if nb not in qg.returns:
-                qg.returns.append(nb)
+        ends += [e.src, e.dst]
         if kind == "expr":
             # the current weight rides the match as an edge-prop column
             qg.edge_prop_returns.append((en, "weight", f"_setw_{en}"))
-    matched = plan_match(graph, qg).df
+    matched = _write_rows(graph, qg, [b for b, _ in label_adds] + list(sets) + ends)
     out = graph
     for en, (kind, v) in edge_sets.items():
         e = edge_by_name[en]
@@ -392,12 +330,7 @@ def run_cypher_set(graph: PropertyGraph, query: str) -> PropertyGraph:
     return out
 
 
-_REMOVE_ITEM = re.compile(
-    r"^\s*(?P<b>[A-Za-z_][A-Za-z0-9_]*)\.(?P<p>[A-Za-z_][A-Za-z0-9_]*)\s*$"
-)
-
-
-def run_cypher_delete(graph: PropertyGraph, query: str) -> PropertyGraph:
+def run_cypher_delete(graph: PropertyGraph, query) -> PropertyGraph:
     """openCypher ``MATCH ... [DETACH] DELETE n[, e, ...]`` — the
     query-language surface of remove_vertices/remove_edges (extension;
     the reference declares removeNode/removeEdge but leaves them ``???``,
@@ -412,43 +345,23 @@ def run_cypher_delete(graph: PropertyGraph, query: str) -> PropertyGraph:
     remove_vertices — all broadcastable semi-differences. The plain-
     DELETE constraint check is ONE limit(1) probe over the would-remain
     incident edges."""
-    sp = _stmt_verb_split(
-        query, {"DETACH DELETE": ("DETACH", "DELETE"), "DELETE": ("DELETE",)}
-    )
-    if (
-        sp is None
-        or not sp[1]
-        or not re.fullmatch(
-            r"[A-Za-z_][A-Za-z0-9_]*(?:\s*,\s*[A-Za-z_][A-Za-z0-9_]*)*", sp[2]
-        )
-    ):
-        raise CypherParseError(
-            f"DELETE statement must be MATCH ... [DETACH] DELETE targets: {query!r}"
-        )
-    _detach = sp[0] == "DETACH DELETE"
-    qg = QueryGraph()
-    _parse_clauses(match_clauses(sp[1]), qg)
+    qg, w = _write_statement(query, Delete)
     edge_by_name = {e.name: e for e in qg.edges if e.name}
-    targets = [t.strip() for t in sp[2].split(",")]
     node_targets, edge_targets = [], []
-    for t in targets:
+    for t in w.targets:
         if t in qg.labels:
             node_targets.append(t)
         elif t in edge_by_name:
             edge_targets.append(t)
         else:
             raise CypherParseError(f"DELETE references unbound binding: {t!r}")
-    for t in node_targets:
-        if t not in qg.returns:
-            qg.returns.append(t)
+    ends = []
     for en in edge_targets:
         e = edge_by_name[en]
         if len(e.types) != 1:
             raise CypherParseError(f"edge DELETE needs exactly one edge type on {en!r}")
-        for nb in (e.src, e.dst):
-            if nb not in qg.returns:
-                qg.returns.append(nb)
-    matched = plan_match(graph, qg).df
+        ends += [e.src, e.dst]
+    matched = _write_rows(graph, qg, node_targets + ends)
     out = graph
     deleted_edges = None
     for en in edge_targets:
@@ -466,7 +379,7 @@ def run_cypher_delete(graph: PropertyGraph, query: str) -> PropertyGraph:
             part = matched.select(F.col(t).alias("id"))
             ids = part if ids is None else ids.unionByName(part)
         ids = ids.dropDuplicates(["id"])
-        if not _detach:
+        if not w.detach:
             # openCypher: plain DELETE must not orphan relationships —
             # any incident edge that this statement does not itself
             # delete is an error (one limit(1) probe)
@@ -491,41 +404,26 @@ def run_cypher_delete(graph: PropertyGraph, query: str) -> PropertyGraph:
     return out
 
 
-def run_cypher_remove(graph: PropertyGraph, query: str) -> PropertyGraph:
+def run_cypher_remove(graph: PropertyGraph, query) -> PropertyGraph:
     """openCypher ``MATCH ... REMOVE n.prop[, ...]`` — drop property
     keys from matched nodes via remove_node_props (broadcast semi-join
     + map_filter; the nodes table never shuffles). A removed property
     reads back as NULL (the IS NULL / coalesce contract). Edge
     properties are typed columns here, so REMOVE on an edge variable is
     a typed error (SET e.weight to a new value instead)."""
-    sp = _stmt_verb_split(query, {"REMOVE": ("REMOVE",)})
-    if sp is None or not sp[1] or not sp[2]:
-        raise CypherParseError(
-            f"REMOVE statement must be MATCH ... REMOVE b.prop: {query!r}"
-        )
-    from ..cypher.parser import _split_patterns
-
-    qg = QueryGraph()
-    _parse_clauses(match_clauses(sp[1]), qg)
+    qg, w = _write_statement(query, Remove)
     edge_names = {e.name for e in qg.edges if e.name}
     removes: dict[str, list[str]] = {}
     label_removes: list[tuple[str, str]] = []  # (binding, label)
-    for item in _split_patterns(sp[2]):
-        lm_ = _SET_LABEL_ITEM.match(item)
-        if lm_:
-            b = lm_.group("b")
+    for it in w.items:
+        b = it.binding
+        if it.label is not None:
             if b not in qg.labels:
                 raise CypherParseError(
                     f"REMOVE label references unbound binding: {b!r}"
                 )
-            label_removes.append((b, lm_.group("label")))
-            if b not in qg.returns:
-                qg.returns.append(b)
+            label_removes.append((b, it.label))
             continue
-        rm = _REMOVE_ITEM.match(item)
-        if not rm:
-            raise CypherParseError(f"unsupported REMOVE item (need b.prop): {item!r}")
-        b = rm.group("b")
         if b in edge_names:
             raise CypherParseError(
                 "REMOVE on an edge variable is unsupported (edge props are "
@@ -533,11 +431,8 @@ def run_cypher_remove(graph: PropertyGraph, query: str) -> PropertyGraph:
             )
         if b not in qg.labels:
             raise CypherParseError(f"REMOVE references unbound binding: {b!r}")
-        removes.setdefault(b, []).append(rm.group("p"))
-    for b in removes:
-        if b not in qg.returns:
-            qg.returns.append(b)
-    matched = plan_match(graph, qg).df
+        removes.setdefault(b, []).append(it.prop)
+    matched = _write_rows(graph, qg, [b for b, _ in label_removes] + list(removes))
     out = graph
     for b, keys in removes.items():
         out = out.remove_node_props(matched.select(F.col(b).alias("id")), keys)
@@ -548,89 +443,21 @@ def run_cypher_remove(graph: PropertyGraph, query: str) -> PropertyGraph:
     return out
 
 
-_MERGE_NODE_STMT = re.compile(
-    r"(?is)^\s*MERGE\s+\(\s*(?P<name>[A-Za-z_][A-Za-z0-9_]*)\s*:\s*"
-    r"(?P<label>[A-Za-z_][A-Za-z0-9_]*)\s*"
-    r"(?:\{(?P<props>[^}]*)\}\s*)?\)\s*(?P<tail>.*)$"
-)
-# tail-anchored (round-14): the MATCH body is carved off by
-# _stmt_verb_split on the token stream; this matches what FOLLOWS the
-# top-level MERGE keyword
-_MERGE_EDGE_TAIL = re.compile(
-    r"(?is)^\(\s*(?P<a>[A-Za-z_][A-Za-z0-9_]*)\s*\)\s*"
-    r"-\s*\[\s*(?P<en>[A-Za-z_][A-Za-z0-9_]*)?\s*:\s*"
-    r"(?P<type>[A-Za-z_][A-Za-z0-9_]*)\s*\]\s*->\s*"
-    r"\(\s*(?P<b>[A-Za-z_][A-Za-z0-9_]*)\s*\)\s*(?P<tail>.*)$"
-)
-_ON_CLAUSE = re.compile(r"(?is)\bON\s+(CREATE|MATCH)\s+SET\s+")
-_PROP_ENTRY = re.compile(
-    r"^\s*(?P<k>[A-Za-z_][A-Za-z0-9_]*)\s*:\s*"
-    r"(?P<v>'[^']*'|\"[^\"]*\"|-?\d+(?:\.\d+)?)\s*$"
-)
+def _edge_pairs(graph: PropertyGraph, qg: QueryGraph, edge, verb: str) -> DataFrame:
+    """The distinct matched (src, dst) pairs of a CREATE / MERGE edge,
+    typed with its one edge type."""
+    for nb in (edge.src, edge.dst):
+        if nb not in qg.labels:
+            raise CypherParseError(f"{verb} endpoint {nb!r} is not bound by MATCH")
+    matched = _write_rows(graph, qg, [edge.src, edge.dst])
+    return (
+        matched.select(F.col(edge.src).alias("src"), F.col(edge.dst).alias("dst"))
+        .dropDuplicates(["src", "dst"])
+        .withColumn("type", F.lit(edge.type))
+    )
 
 
-def _parse_props_literal(s: str | None) -> dict[str, tuple]:
-    """``{k: 'str', k2: 3}`` -> {k: ("str", v) | ("num", float)}. The
-    props map is string-valued; numeric entries keep their literal text
-    for storage and compare as doubles for matching (the same contract
-    as WHERE literals, store.node_set)."""
-    out: dict[str, tuple] = {}
-    if s is None or not s.strip():
-        return out
-    from ..cypher.parser import _split_patterns
-
-    for entry in _split_patterns(s):
-        pm = _PROP_ENTRY.match(entry)
-        if not pm:
-            raise CypherParseError(f"unsupported MERGE property entry: {entry!r}")
-        raw = pm.group("v")
-        if raw[0] in "'\"":
-            out[pm.group("k")] = ("str", raw[1:-1])
-        else:
-            out[pm.group("k")] = ("num", raw)
-    return out
-
-
-def _split_on_clauses(tail: str) -> tuple[list[str], list[str]]:
-    """Split a MERGE tail into ON CREATE SET / ON MATCH SET item lists
-    (each a list of raw ``b.prop = value`` strings)."""
-    from ..cypher.parser import _split_patterns
-
-    tail = tail.strip()
-    if not tail:
-        return [], []
-    parts = _ON_CLAUSE.split(tail)
-    if parts[0].strip():
-        raise CypherParseError(
-            f"unsupported trailing clause after MERGE pattern: {parts[0]!r}"
-        )
-    on_create: list[str] = []
-    on_match: list[str] = []
-    for kw, items in zip(parts[1::2], parts[2::2]):
-        dst = on_create if kw.upper() == "CREATE" else on_match
-        if dst:
-            raise CypherParseError(f"duplicate ON {kw.upper()} SET clause")
-        dst.extend(_split_patterns(items))
-    return on_create, on_match
-
-
-_CREATE_NODE_STMT = re.compile(r"(?is)^\s*CREATE\s+(?P<pats>\(.+\))\s*$")
-_CREATE_NODE_PAT = re.compile(
-    r"(?is)^\s*\(\s*(?P<name>[A-Za-z_][A-Za-z0-9_]*)?\s*:\s*"
-    r"(?P<label>[A-Za-z_][A-Za-z0-9_]*)\s*"
-    r"(?:\{(?P<props>[^}]*)\}\s*)?\)\s*$"
-)
-# tail-anchored (round-14): matches what follows the top-level CREATE
-# keyword once _stmt_verb_split carves off the MATCH body
-_CREATE_EDGE_TAIL = re.compile(
-    r"(?is)^\(\s*(?P<a>[A-Za-z_][A-Za-z0-9_]*)\s*\)\s*"
-    r"-\s*\[\s*:\s*(?P<type>[A-Za-z_][A-Za-z0-9_]*)\s*"
-    r"(?:\{(?P<eprops>[^}]*)\}\s*)?\]\s*->\s*"
-    r"\(\s*(?P<b>[A-Za-z_][A-Za-z0-9_]*)\s*\)\s*$"
-)
-
-
-def run_cypher_create(graph: PropertyGraph, query: str) -> PropertyGraph:
+def run_cypher_create(graph: PropertyGraph, query) -> PropertyGraph:
     """openCypher CREATE (round-8; extension — the reference declares no
     mutation at all, StatsStore.scala:172-177 ``???``). Two forms:
 
@@ -646,53 +473,56 @@ def run_cypher_create(graph: PropertyGraph, query: str) -> PropertyGraph:
     Plan shape at scale: node form is a driver-literal append; edge
     form is one planned MATCH projected to the distinct endpoint pair
     plus an append — no shuffle beyond the match itself."""
-    sp = _stmt_verb_split(query, {"CREATE": ("CREATE",)})
-    em = _CREATE_EDGE_TAIL.match(sp[2]) if sp is not None and sp[1] else None
-    if em:
-        qg = parse(f"MATCH {sp[1]} RETURN {em.group('a')}, {em.group('b')}")
-        matched = plan_match(graph, qg).df
-        eprops = _parse_props_literal(em.group("eprops"))
+    qg, w = _write_statement(query, Create)
+    if w.edge is not None:
+        eprops = dict(w.edge.props)
         for k in eprops:
             if k != "weight":
                 raise CypherParseError(
                     f"CREATE edge props support weight only, got: {k!r}"
                 )
-        pairs = matched.select(
-            F.col(em.group("a")).alias("src"),
-            F.col(em.group("b")).alias("dst"),
-        ).dropDuplicates(["src", "dst"])
-        rows = pairs.withColumn("type", F.lit(em.group("type")))
+        rows = _edge_pairs(graph, qg, w.edge, "CREATE")
         if "weight" in eprops:
-            rows = rows.withColumn(
-                "weight", F.lit(float(eprops["weight"][1])).cast("double")
-            )
+            rows = rows.withColumn("weight", F.lit(float(eprops["weight"])).cast("double"))
         return graph.insert_edges(rows)
-    nm = _CREATE_NODE_STMT.match(query)
-    if not nm:
-        raise CypherParseError(
-            "CREATE statement must be `CREATE (n:Label {props})[, ...]` or "
-            f"`MATCH ... CREATE (a)-[:T]->(b)`: {query!r}"
-        )
-    from ..cypher.parser import _split_patterns
-
-    rows = []
     nid = graph.next_id()
-    for pat in _split_patterns(nm.group("pats")):
-        pm = _CREATE_NODE_PAT.match(pat)
-        if not pm:
-            raise CypherParseError(f"unsupported CREATE node pattern: {pat!r}")
-        props = {
-            k: v for k, (_kind, v) in _parse_props_literal(pm.group("props")).items()
-        }
-        rows.append((nid, pm.group("label"), props))
-        nid += 1
+    rows = [(nid + i, n.label, dict(n.props)) for i, n in enumerate(w.nodes)]
     row_df = graph.spark.createDataFrame(
         rows, "id long, label string, props map<string,string>"
     )
     return graph.insert_vertices(row_df)
 
 
-def run_cypher_merge(graph: PropertyGraph, query: str) -> PropertyGraph:
+def _merge_sets(w: Merge, target: str | None, weight: bool) -> list[dict]:
+    """A MERGE's ON CREATE SET and ON MATCH SET items as {prop: value}
+    per arm. Each item sets ``target.prop`` (an edge: exactly one
+    ``target.weight`` item per arm); ON CREATE takes literals only."""
+    arms = []
+    for items, allow_expr in ((w.on_create or (), False), (w.on_match or (), True)):
+        if weight and items and (len(items) > 1 or target is None):
+            raise CypherParseError(
+                "edge MERGE SET supports exactly one item on a named edge "
+                f"variable ({target or '<unnamed>'}.weight)"
+            )
+        need = f"{target}.weight" if weight else f"{target}.prop"
+        out: dict[str, tuple] = {}
+        for it in items:
+            if it.label is None and (it.binding != target or (weight and it.prop != "weight")):
+                raise CypherParseError(
+                    f"edge MERGE SET must target {need}: {it.text!r}" if weight
+                    else f"MERGE SET item must target {target!r}: {it.text!r}"
+                )
+            if it.label is not None or (it.value[0] == "expr" and not allow_expr):
+                raise CypherParseError(
+                    f"unsupported {'edge ' if weight else ''}MERGE SET item (need "
+                    f"{need} = {'value/expr' if allow_expr else 'literal'}): {it.text!r}"
+                )
+            out[it.prop] = it.value
+        arms.append(out)
+    return arms
+
+
+def run_cypher_merge(graph: PropertyGraph, query) -> PropertyGraph:
     """openCypher MERGE (match-or-create; extension — the reference
     declares no mutation at all, StatsStore.scala:172-177 ``???``),
     wiring the round-7 API verbs ``merge_vertices``/``merge_edges``
@@ -719,111 +549,40 @@ def run_cypher_merge(graph: PropertyGraph, query: str) -> PropertyGraph:
     The node form's existence probe is ONE limit(1) point-lookup
     action (the statement's semantics branch on existence; the
     created row itself is a literal)."""
-    sp = _stmt_verb_split(query, {"MERGE": ("MERGE",)})
-    if sp is not None and sp[1]:
-        em = _MERGE_EDGE_TAIL.match(sp[2])
-        if em:
-            return _run_merge_edge(graph, sp[1], em)
-    nm = _MERGE_NODE_STMT.match(query)
-    if not nm:
-        raise CypherParseError(
-            "MERGE statement must be `MERGE (n:Label {props})` or "
-            f"`MATCH ... MERGE (a)-[r:T]->(b)`: {query!r}"
-        )
-    name, label = nm.group("name"), nm.group("label")
-    pattern_props = _parse_props_literal(nm.group("props"))
-    on_create, on_match = _split_on_clauses(nm.group("tail"))
-
-    def _parse_set_items(items: list[str], allow_expr: bool) -> dict[str, tuple]:
-        out: dict[str, tuple] = {}
-        for item in items:
-            si = _read_set_item(item)
-            if si is not None and si[0] != name:
-                raise CypherParseError(f"MERGE SET item must target {name!r}: {item!r}")
-            if si is None or (si[2][0] == "expr" and not allow_expr):
-                raise CypherParseError(
-                    f"unsupported MERGE SET item (need {name}.prop = "
-                    f"{'value/expr' if allow_expr else 'literal'}): {item!r}"
-                )
-            out[si[1]] = si[2]
-        return out
-
-    create_sets = _parse_set_items(on_create, allow_expr=False)
-    match_sets = _parse_set_items(on_match, allow_expr=True)
-
-    # match: label scan + ALL pattern props equal (numerics as doubles —
-    # the WHERE-literal contract)
-    cand = graph.nodes.filter(F.col("label") == label)
-    if pattern_props and "props" not in graph.nodes.columns:
-        # no props column: nothing can match a props pattern — the
-        # merge takes the create branch (insert_vertices adds the
-        # column via unionByName)
-        cand = cand.limit(0)
-    else:
-        for k, (kind, v) in pattern_props.items():
-            c = F.col("props").getItem(k)
-            cand = cand.filter(
-                (c.cast("double") == float(v)) if kind == "num" else (c == v)
-            )
-    exists = bool(cand.select("id").limit(1).count())
-    if not exists:
-        nid = graph.next_id()
-        props = {k: v for k, (_kind, v) in pattern_props.items()}
+    qg, w = _write_statement(query, Merge)
+    if w.edge is not None:
+        return _run_merge_edge(graph, qg, w)
+    node = w.node
+    create_sets, match_sets = _merge_sets(w, node.name, weight=False)
+    # match: the label's node set with ALL pattern props equal (numerics
+    # as doubles — the WHERE-literal contract). No props column: nothing
+    # can match a props pattern, so the merge takes the create branch
+    # (insert_vertices adds the column via unionByName)
+    cand = None
+    if not node.filters or "props" in graph.nodes.columns:
+        cand = graph.node_set(node.label, node.filters)
+    if cand is None or not cand.limit(1).count():
+        props = dict(node.props)
         props.update({k: v for k, (_kind, v) in create_sets.items()})
         row_df = graph.spark.createDataFrame(
-            [(nid, label, props)], "id long, label string, props map<string,string>"
+            [(graph.next_id(), node.label, props)],
+            "id long, label string, props map<string,string>",
         )
         return graph.merge_vertices(row_df)
     if not match_sets:
         return graph
     # ON MATCH SET through the update_node_props broadcast upsert, the
     # same update rows as run_cypher_set's node path
-    return graph.update_node_props(_node_props(graph, cand.select("id"), match_sets))
+    return graph.update_node_props(_node_props(graph, cand, match_sets))
 
 
-def _run_merge_edge(
-    graph: PropertyGraph, body: str, em: "re.Match"
-) -> PropertyGraph:
-    a, b, en, etype = em.group("a"), em.group("b"), em.group("en"), em.group("type")
-    on_create, on_match = _split_on_clauses(em.group("tail"))
-
-    def _parse_weight_items(items: list[str], allow_expr: bool):
-        """MERGE edge SET items: ``r.weight = lit`` (and, on match, an
-        arithmetic expression over r.weight). Returns None | ("lit", f)
-        | ("expr", tree)."""
-        if not items:
-            return None
-        if len(items) > 1 or en is None:
-            raise CypherParseError(
-                "edge MERGE SET supports exactly one item on a named edge "
-                f"variable ({en or '<unnamed>'}.weight)"
-            )
-        si = _read_set_item(items[0])
-        if si is not None and si[:2] != (en, "weight"):
-            raise CypherParseError(f"edge MERGE SET must target {en}.weight: {items[0]!r}")
-        if si is None or (si[2][0] == "expr" and not allow_expr):
-            raise CypherParseError(
-                f"unsupported edge MERGE SET item (need {en}.weight = "
-                f"{'value/expr' if allow_expr else 'literal'}): {items[0]!r}"
-            )
-        return _weight_value(en, si[2])
-
-    create_w = _parse_weight_items(on_create, allow_expr=False)
-    match_w = _parse_weight_items(on_match, allow_expr=True)
-
-    qg = QueryGraph()
-    _parse_clauses(match_clauses(body), qg)
-    for nb in (a, b):
-        if nb not in qg.labels:
-            raise CypherParseError(f"MERGE endpoint {nb!r} is not bound by MATCH")
-        if nb not in qg.returns:
-            qg.returns.append(nb)
-    matched = plan_match(graph, qg).df
-    pairs = (
-        matched.select(F.col(a).alias("src"), F.col(b).alias("dst"))
-        .dropDuplicates(["src", "dst"])
-        .withColumn("type", F.lit(etype))
+def _run_merge_edge(graph: PropertyGraph, qg: QueryGraph, w: Merge) -> PropertyGraph:
+    edge = w.edge
+    create_w, match_w = (
+        _weight_value(edge.name, arm["weight"]) if arm else None
+        for arm in _merge_sets(w, edge.name, weight=True)
     )
+    pairs = _edge_pairs(graph, qg, edge, "MERGE")
     rows = pairs
     if create_w is not None:
         rows = rows.withColumn("weight", F.lit(create_w[1]).cast("double"))
@@ -832,15 +591,14 @@ def _run_merge_edge(
         return out
     # ON MATCH applies to edges that existed BEFORE the merge: semi-join
     # the matched pairs against the pre-merge typed edge set
-    pre = graph.edges.filter(F.col("type") == etype)
+    pre = graph.edges.filter(F.col("type") == edge.type)
     existing = pairs.join(
         pre.select("src", "dst"), on=["src", "dst"], how="left_semi"
     )
     if match_w[0] == "lit":
         upd = existing.withColumn("weight", F.lit(match_w[1]).cast("double"))
     else:
-        cur = "weight" if "weight" in pre.columns else None
-        if cur is None:
+        if "weight" not in pre.columns:
             raise CypherParseError("graph edges carry no weight column")
         wsrc = pre.select("src", "dst", F.col("weight").alias("_curw")).dropDuplicates(
             ["src", "dst"]
@@ -853,6 +611,13 @@ def _run_merge_edge(
             .drop("_curw")
         )
     return out.update_edge_weights(upd.select("src", "dst", "type", "weight"))
+
+
+# the writer of each write node type (GraphDB.update routes on it)
+WRITERS = {
+    SetClause: run_cypher_set, Remove: run_cypher_remove, Delete: run_cypher_delete,
+    Create: run_cypher_create, Merge: run_cypher_merge,
+}
 
 
 _NUM_FNS = {

@@ -153,6 +153,7 @@ def test_window_ledger_history_is_append_only():
         "13": "23527ebff29c0d8b",
         "14": "b15ce8aaf216f05d",
         "15": "6fe1352a4c424f93",  # final: CORRECTNESS_r15 published
+        "16": "ac0937879781c7d4",  # final: CORRECTNESS_r16 published
     }
     published = {
         str(n)
