@@ -224,11 +224,10 @@ class QueryGraph:
     # (the cross_filters slot; they cannot push to any single scan).
     # A literal comparison stores its RHS as a ("num", v) node.
     expr_filters: list[tuple[tuple, str, tuple]] = field(default_factory=list)
-    order_by: list[tuple[str, bool]] = field(default_factory=list)  # (column, desc)
-    # full ORDER BY sequence incl. property items (extension):
-    # ("col", name, desc) | ("prop", binding, prop, desc) — order_by
-    # keeps the plain columns only (back-compat; used when no prop item)
-    order_items: list[tuple] = field(default_factory=list)
+    # ORDER BY (extension): (key, desc) per item; the key is an output
+    # column, an expression over the output columns (its text), or a
+    # (binding, prop) pair for a property sorted without being returned
+    order_by: list[tuple[str | tuple[str, str], bool]] = field(default_factory=list)
     skip: int | None = None  # SKIP n (extension): row offset after ORDER BY
     limit: int | None = None
     # RETURN DISTINCT: dedupe the projected rows (a match set projected
@@ -257,6 +256,14 @@ class CypherParseError(ValueError):
     """The ONLY exception the query front-end may raise (the fuzz suites
     assert no foreign exceptions escape — the reference throws a typed
     MatchError the same way)."""
+
+
+def lex(text: str) -> list[Token]:
+    """``text``'s tokens; text that does not lex raises CypherParseError."""
+    try:
+        return tokenize(text)
+    except CypherLexError as e:
+        raise CypherParseError(str(e)) from None
 
 
 ID_PROP = "\x1did"
@@ -1272,10 +1279,7 @@ def _parse_clauses(clauses: list[Match], qg: QueryGraph) -> None:
                     )
 
             def atoms_of(cond: str) -> list[PropFilter]:
-                try:
-                    ctoks = tokenize(cond)
-                except CypherLexError as e:  # cond is a lexed-slice; belt+braces
-                    raise CypherParseError(str(e)) from None
+                ctoks = lex(cond)
                 # NOT <atom> (round-16): negation folds into the op —
                 # under SQL 3VL every mapping is exact (NULL props drop
                 # the row on both sides of the flip). NOT binds one atom;
@@ -1570,21 +1574,28 @@ def parse_expr(text: str, cols=None) -> tuple:
     return node
 
 
-def _try_parse_expr_item(qg: QueryGraph, item: str) -> bool:
+def _try_parse_expr_item(
+    qg: QueryGraph, item: str, body: list[Token], alias: str | None
+) -> bool:
     """Arithmetic RETURN item `[agg(] expr [)] AS alias` — attempted only
-    after every simpler form failed. Leaves must be node-binding props
-    (edge props: return the edge value by name and compute downstream)."""
-    am = re.fullmatch(
-        r"(?is)\s*(?:(?P<fn>sum|avg|min|max)\s*\((?P<inner>.+)\)|(?P<bare>.+?))"
-        r"\s+AS\s+(?P<alias>[A-Za-z_][A-Za-z0-9_]*)\s*",
-        item,
-    )
-    if not am:
+    after every simpler form failed; ``body`` and ``alias`` are the
+    item's tokens split by _strip_ret_alias. Leaves must be node-binding
+    props (edge props: return the edge value by name and compute
+    downstream)."""
+    if alias is None:
         raise CypherParseError(
             f"arithmetic RETURN item needs an AS alias: {item!r}"
         )
-    body = am.group("inner") if am.group("fn") else am.group("bare")
-    node = parse_expr(body)
+    fn = None
+    if (
+        len(body) > 3
+        and body[0].kind == "word"
+        and body[0].text.lower() in ("sum", "avg", "min", "max")
+        and body[1].text == "("
+        and body[-1].text == ")"
+    ):
+        fn, body = body[0].text.lower(), body[2:-1]
+    node = parse_expr(item[body[0].pos : body[-1].end])
     leaves = expr_prop_leaves(node)
     if not leaves:
         raise CypherParseError(f"expression has no property reference: {item!r}")
@@ -1593,10 +1604,7 @@ def _try_parse_expr_item(qg: QueryGraph, item: str) -> bool:
             raise CypherParseError(
                 f"expression references unbound or non-node variable: {b!r}"
             )
-    qg.expr_returns.append(
-        ExprItem(am.group("fn").lower() if am.group("fn") else None, node,
-                 am.group("alias"))
-    )
+    qg.expr_returns.append(ExprItem(fn, node, alias))
     return True
 
 
@@ -1900,10 +1908,7 @@ def _parse_returns(qg: QueryGraph, items) -> None:
                 raise CypherParseError("RETURN * with no named bindings")
             qg.returns.extend(b for b in named if b not in qg.returns)
             continue
-        try:
-            itoks = tokenize(name)
-        except CypherLexError as e:  # item is a lexed slice; belt+braces
-            raise CypherParseError(str(e)) from None
+        itoks = lex(name)
         body, alias = _strip_ret_alias(itoks)
         spec = _ret_item_shape(body) if body else None
         if spec is not None:
@@ -1955,7 +1960,7 @@ def _parse_returns(qg: QueryGraph, items) -> None:
             and itoks[1].text == "("
         )
         if (has_op and has_dot) or has_case or fn1_head:
-            _try_parse_expr_item(qg, name)
+            _try_parse_expr_item(qg, name, body, alias)
             continue
         if (
             alias is not None
@@ -2068,46 +2073,49 @@ def out_columns(qg: QueryGraph) -> set[str]:
     )
 
 
+def order_item(text: str) -> tuple[str, bool]:
+    """The one ORDER BY item reader: the body as written and the DESC
+    flag of a trailing ASC/DESC token."""
+    toks = lex(text)
+    desc = bool(toks) and toks[-1].is_word("DESC")
+    if toks and toks[-1].is_word("ASC", "DESC"):
+        toks = toks[:-1]
+    if not toks:
+        raise CypherParseError(f"unsupported ORDER BY item: {text!r}")
+    return text[toks[0].pos : toks[-1].end], desc
+
+
 def _parse_order_limit(
     qg: QueryGraph, order_by=(), limit: int | None = None, skip: int | None = None
 ) -> None:
-    """ORDER BY items (spans; an empty one is an unsupported item), SKIP
-    and LIMIT of a single-stage statement."""
+    """ORDER BY items, SKIP and LIMIT of a single-stage statement. An
+    item is an output column, an expression over the output columns,
+    or ``b.prop`` (extension): a property sorted without being
+    returned, resolved via the planner's props join and dropped after
+    LIMIT."""
     out_cols = out_columns(qg)
     for part in order_by:
-        # token shapes (round-16, with the WHERE/RETURN migrations):
-        # `col [ASC|DESC]` over an output column, or `b.prop
-        # [ASC|DESC]` (extension) — sort by a property without
-        # returning it, resolved via the planner's props join and
-        # dropped after LIMIT
-        try:
-            ptoks = tokenize(part)
-        except CypherLexError as e:
-            raise CypherParseError(str(e)) from None
-        desc = False
-        if ptoks and ptoks[-1].is_word("ASC", "DESC"):
-            desc = ptoks[-1].text.upper() == "DESC"
-            ptoks = ptoks[:-1]
-        if len(ptoks) == 1 and ptoks[0].kind == "word":
-            col = ptoks[0].text
-            if col in out_cols:
-                qg.order_by.append((col, desc))
-                qg.order_items.append(("col", col, desc))
-                continue
-            raise CypherParseError(
-                f"ORDER BY of non-returned column: {col!r}"
-            )
+        body, desc = order_item(part)
+        ptoks = lex(body)
         opr = _prop_at(ptoks, 0)
-        if opr and opr[2] == len(ptoks):
+        if len(ptoks) == 1 and ptoks[0].kind == "word":
+            if body not in out_cols:
+                raise CypherParseError(f"ORDER BY of non-returned column: {body!r}")
+            key = body
+        elif opr and opr[2] == len(ptoks):
             if opr[0] not in qg.labels:
                 raise CypherParseError(
                     f"ORDER BY property of unbound binding: {part!r}"
                 )
-            qg.order_items.append(("prop", opr[0], opr[1], desc))
-            continue
-        raise CypherParseError(f"unsupported ORDER BY item: {part!r}")
+            key = opr[:2]
+        else:
+            try:
+                parse_expr(body, out_cols)
+            except CypherParseError:
+                raise CypherParseError(f"unsupported ORDER BY item: {part!r}") from None
+            key = body
+        qg.order_by.append((key, desc))
     qg.skip, qg.limit = skip, limit
-
 
 
 _NEG_OP = {
@@ -2287,10 +2295,7 @@ def _parse_prop_map(s: str) -> list[tuple[str, str, bool]]:
     quoted value never splits."""
     entries: list[tuple[str, str, bool]] = []
     for entry in _split_patterns(s):
-        try:
-            toks = tokenize(entry)
-        except CypherLexError as e:
-            raise CypherParseError(str(e)) from None
+        toks = lex(entry)
         if (
             len(toks) >= 3
             and toks[0].kind == "word"

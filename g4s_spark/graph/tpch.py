@@ -41,6 +41,10 @@ PART_OFF = OFF * 5
 ORDER_OFF = OFF * 6
 LINEITEM_OFF = OFF * 7
 
+# the seven testdata tables the graph is built from (not events,
+# documents or embeddings)
+GRAPH_TABLES = ("region", "nation", "customer", "supplier", "part", "orders", "lineitem")
+
 # SQL fragments reused by oracle builders (__spark_entry__.py)
 SQL_IDS = {
     "Region": f"CAST({REGION_OFF} + r_regionkey AS BIGINT)",
@@ -71,9 +75,9 @@ def build_graph(spark: SparkSession, sf_dir: str, tables: dict[str, DataFrame] |
 
 def _build_graph_uncached(spark: SparkSession, sf_dir: str, tables: dict[str, DataFrame] | None = None) -> PropertyGraph:
     if tables is None:
-        from ..sources import load_tables
+        from ..sources import load_table
 
-        tables = load_tables(spark, sf_dir)
+        tables = {t: load_table(spark, sf_dir, t) for t in GRAPH_TABLES}
     region, nation = tables["region"], tables["nation"]
     customer, supplier = tables["customer"], tables["supplier"]
     part, orders, lineitem = tables["part"], tables["orders"], tables["lineitem"]
@@ -129,8 +133,7 @@ def _build_graph_uncached(spark: SparkSession, sf_dir: str, tables: dict[str, Da
     # full scan of the unioned nodes/edges (StatsStore analogue, free).
     from .stats import GraphStats
 
-    counts = {name: tables[name].count() for name in
-              ["region", "nation", "customer", "supplier", "part", "orders", "lineitem"]}
+    counts = {name: tables[name].count() for name in GRAPH_TABLES}
     label_counts = {
         "Region": counts["region"], "Nation": counts["nation"],
         "Customer": counts["customer"], "Supplier": counts["supplier"],

@@ -37,7 +37,6 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StructField, StructType
 
 import operator
-import re
 
 from ..checkpointing import MAX_CLOSURE_ITERS, fixpoint, iter_checkpoint
 from ..cypher.parser import (
@@ -61,12 +60,18 @@ from ..cypher.parser import (
     parse_statement,
     stage_query_graph,
     write_shape_error,
+    _lit_at,
     _parse_clauses,
     _parse_returns,
+    _prop_at,
+    _ret_item_shape,
     _split_bool,
     _strip_ret_alias,
+    _top_cmps,
+    lex,
+    order_item,
+    out_columns,
 )
-from ..cypher.tokenizer import tokenize
 from ..graph.stats import hist_sel
 from ..graph.store import PRED_OPS, PropertyGraph, apply_scalar_fn
 from .cost import expand_card, step_cost
@@ -692,34 +697,30 @@ def _run_unwind(graph: PropertyGraph, unwinds, rest: list, resolve: bool) -> Dat
     # conjuncts lift out of the part's first WHERE (when no MATCH
     # follows it) and prune the GENERATOR itself — a pre-join filter on
     # the literal rows, the cheapest possible placement
-    post: dict[str, list] = {}
+    post: dict[str, list[Column]] = {}
     w = next((i for i, c in enumerate(rest) if getattr(c, "where", None)), None)
     if w is not None and not any(isinstance(c, Match) for c in rest[w + 1 :]):
         kept_conjs = []
         for conj in _split_bool(rest[w].where, "AND"):
-            cm = _CARRY_COND.match(conj)
-            if cm and cm.group("c") in unames:
-                post.setdefault(cm.group("c"), []).append(cm)
+            cond = _read_conjunct(conj)
+            lit = cond and cond[3]
+            if lit and lit[0] in unames:
+                post.setdefault(lit[0], []).append(_lit_cmp(cond[1], *lit))
             else:
                 kept_conjs.append(conj)
         if post:
             rest[w] = dc_replace(rest[w], where=" AND ".join(kept_conjs) or None)
     for i, (name, gen) in enumerate(gens):
-        for cm in post.get(name, ()):
-            raw = cm.group("val")
-            if raw[0] in "'\"":
-                c, v = F.col(name), raw[1:-1]
-            else:
-                c, v = F.col(name).cast("double"), float(raw)
-            gen = gen.filter(PRED_OPS[cm.group("op")](c, F.lit(v)))
+        for cond in post.get(name, ()):
+            gen = gen.filter(cond)
         gens[i] = (name, gen)
     ret = rest[-1]
     kept: list[str] = []  # non-unwind items, returned by the rest of the part
     out_cols: list[str | None] = []  # RETURN-ordered output column names
     requested: dict[str, str] = {}  # unwind name -> output alias
     for item in ret.items:
-        body, alias = _strip_ret_alias(tokenize(item))
-        name = body[0].text if len(body) == 1 and body[0].kind == "word" else None
+        body, alias = _strip_ret_alias(lex(item))
+        name = _word(body)
         if name in unames:
             requested[name] = alias or name
         else:
@@ -734,22 +735,21 @@ def _run_unwind(graph: PropertyGraph, unwinds, rest: list, resolve: bool) -> Dat
         raise CypherParseError(
             "UNWIND with a MATCH body must RETURN at least one pattern binding"
         )
+
     # ORDER BY / SKIP / LIMIT run once, after the join. An ORDER BY item
     # that reads no output column (`ORDER BY c.name`) rides the rest of
     # the part as a hidden column, sorted like a property sort key
-    known = [c for c in out_cols if c]
-    order, hidden = [], []
-    for o in ret.order_by:
-        body, desc = _order_item(o)
-        if kept and not _over_cols(body, known):
-            if re.fullmatch(r"[A-Za-z_][A-Za-z0-9_]*", body):
-                raise CypherParseError(f"ORDER BY of non-returned column: {body!r}")
-            if ret.distinct:
-                raise CypherParseError(_DISTINCT_PROP_ORDER)
-            hidden.append(f"_g4s_ob{len(hidden)}")
-            kept.append(f"{body} AS {hidden[-1]}")
-            o = f"{hidden[-1]} DESC" if desc else hidden[-1]
-        order.append(o)
+    def hide(body: str, a: str) -> bool:
+        if not kept:
+            return False
+        if _word(lex(body)):
+            raise CypherParseError(f"ORDER BY of non-returned column: {body!r}")
+        if ret.distinct:
+            raise CypherParseError(_DISTINCT_PROP_ORDER)
+        kept.append(f"{body} AS {a}")
+        return True
+
+    order, hidden = _hide_order(ret.order_by, [c for c in out_cols if c], hide)
     out = None
     if kept:
         inner = Projection("RETURN", tuple(kept))
@@ -777,17 +777,22 @@ def _run_unwind(graph: PropertyGraph, unwinds, rest: list, resolve: bool) -> Dat
     if all(c is not None for c in out_cols) and set(out_cols) <= set(out.columns):
         extras = [c for c in out.columns if c not in out_cols]
         out = out.select(*out_cols, *extras)
-    out = _order_limit(out, out.columns, dc_replace(ret, order_by=tuple(order)), hidden)
-    return out.drop(*hidden) if hidden else out
+    return _order_limit(out, out.columns, order, hidden, hidden, ret.skip, ret.limit)
 
 
-def _order_item(item: str) -> tuple[str, bool]:
-    """An ORDER BY item's body and its DESC flag."""
-    om = re.fullmatch(r"(?is)(?P<body>.+?)(?:\s+(?P<dir>ASC|DESC))?", item)
-    if om is None:
-        raise CypherParseError(f"unsupported ORDER BY item: {item!r}")
-    return om.group("body"), (om.group("dir") or "").upper() == "DESC"
+def _word(toks) -> str | None:
+    """The name a single-word token list spells, else None."""
+    return toks[0].text if len(toks) == 1 and toks[0].kind == "word" else None
 
+
+# --------------------------------------------------------------------------
+# The projection tail: every projection (a single stage, a WITH/RETURN
+# stage over a new MATCH, a carry-only stage, a leading-UNWIND RETURN)
+# reads its ORDER BY items with parser.order_item, hides a sort key it
+# does not project as an ``_ob_<i>`` column (_hide_order), and runs
+# ORDER BY, SKIP and LIMIT through _order_limit. Aggregates compile
+# through _agg_col.
+# --------------------------------------------------------------------------
 
 _DISTINCT_PROP_ORDER = (
     "ORDER BY a property with RETURN DISTINCT: return the "
@@ -807,7 +812,7 @@ def _prop_sort(col: str, desc: bool) -> list[Column]:
     return [k.desc() if desc else k.asc() for k in (num, raw_sec)]
 
 
-def _over_cols(body: str, cols: list[str]) -> bool:
+def _over_cols(body: str, cols) -> bool:
     """True when ``body`` reads only the columns ``cols`` (a column or
     an arithmetic expression over them)."""
     try:
@@ -815,6 +820,97 @@ def _over_cols(body: str, cols: list[str]) -> bool:
     except CypherParseError:
         return False
     return True
+
+
+def _col_or_expr(body: str, cols) -> Column:
+    """A column by its value, or an expression over ``cols``."""
+    return F.col(body) if body in cols else expr_col(parse_expr(body, cols), _carried)
+
+
+def _hide_order(items, cols, hide) -> tuple[list[tuple[str, bool]], list[str]]:
+    """Read a projection's ORDER BY items into (body, desc) sort keys
+    over its output ``cols``. An item that reads no output column rides
+    the projection as the hidden column ``_ob_<i>`` when ``hide(body,
+    alias)`` adds it there; otherwise _order_limit compiles or rejects
+    it."""
+    order, hidden = [], []
+    for i, text in enumerate(items):
+        body, desc = order_item(text)
+        if not _over_cols(body, cols) and hide(body, f"_ob_{i}"):
+            body = f"_ob_{i}"
+            hidden.append(body)
+        order.append((body, desc))
+    return order, hidden
+
+
+def _order_limit(
+    df: DataFrame, cols, order, prop_keys, hidden, skip: int | None, limit: int | None
+) -> DataFrame:
+    """The one ORDER BY / SKIP / LIMIT applier. A sort key in
+    ``prop_keys`` holds property values and sorts as property sort keys
+    (_prop_sort); a column sorts by its value; an expression over
+    ``cols`` compiles through expr_col (`ORDER BY n * 2 DESC`). The
+    ``hidden`` sort columns are dropped after LIMIT."""
+    if order:
+        exprs = []
+        for body, desc in order:
+            if body in prop_keys:
+                exprs.extend(_prop_sort(body, desc))
+                continue
+            try:
+                c = _col_or_expr(body, cols)
+            except CypherParseError:
+                raise CypherParseError(f"unsupported ORDER BY item: {body!r}") from None
+            exprs.append(c.desc() if desc else c.asc())
+        df = df.orderBy(*exprs)
+    if skip is not None:
+        df = df.offset(skip)
+    if limit is not None:
+        df = df.limit(limit)
+    return df.drop(*hidden) if hidden else df
+
+
+def _agg_col(fn: str, distinct: bool, src: str | None, param=None, typed=False) -> Column:
+    """The one aggregate compiler: (function, DISTINCT, source column,
+    parameter) -> Column; ``src`` None is count(*). count and collect
+    read the source as is, the numeric aggregates as a double — min/max
+    too unless ``typed`` (a carry-only stage keeps the carried type).
+    sum over no values is 0, not NULL — the case an OPTIONAL MATCH's
+    unmatched rows hit (avg/min/max stay NULL, also per openCypher).
+    collect() is the sorted distinct value list (deterministic), and
+    DISTINCT is a no-op for it and for min/max."""
+    if src is None:
+        return F.count(F.lit(1))
+    c = F.col(src)
+    if fn == "count":
+        # DISTINCT counts the distinct VALUES (rows are distinct as
+        # tuples, not per column)
+        return F.count_distinct(c) if distinct else F.count(c)
+    if fn == "collect":
+        return F.sort_array(F.collect_set(c))
+    if typed and fn in ("min", "max"):
+        return getattr(F, fn)(c)
+    num = c.cast("double")
+    if fn == "sum":
+        return F.coalesce(F.sum_distinct(num) if distinct else F.sum(num), F.lit(0.0))
+    if fn == "avg":
+        return F.expr(f"avg(DISTINCT CAST(`{src}` AS DOUBLE))") if distinct else F.avg(num)
+    if fn in ("stdev", "stdevp"):
+        # openCypher stDev (sample) / stDevP (population)
+        return (F.stddev_samp if fn == "stdev" else F.stddev_pop)(num)
+    if fn == "percentilecont":
+        # sort-based interpolation — bit-identical to DuckDB's
+        # quantile_cont (NOTES r5: percentiles are cross-engine exact,
+        # unlike stddev)
+        return F.percentile(num, F.lit(param))
+    if fn == "percentiledisc":
+        # the value at ceil(q·n) in sorted order — an actual element,
+        # per openCypher percentileDisc; built from
+        # sort_array(collect_list) so it stays deterministic
+        vals = F.sort_array(F.collect_list(num))
+        idx = F.greatest(F.lit(1), F.ceil(F.lit(param) * F.size(vals)).cast("int"))
+        return F.element_at(vals, idx)
+    return getattr(F, fn)(num)  # min / max
 
 
 # --------------------------------------------------------------------------
@@ -829,15 +925,6 @@ def _over_cols(body: str, cols: list[str]) -> bool:
 # implicitly DISTINCT, and aggregates count distinct matches.
 # --------------------------------------------------------------------------
 
-_NAME_ITEM = re.compile(
-    r"(?is)^(?P<n>[A-Za-z_][A-Za-z0-9_]*)"
-    r"(?:\s+AS\s+(?P<a>[A-Za-z_][A-Za-z0-9_]*))?$"
-)
-_CARRY_COND = re.compile(
-    r"^\s*(?P<c>[A-Za-z_][A-Za-z0-9_]*)\s*(?P<op><>|!=|<=|>=|=|<|>)\s*"
-    r"(?P<val>'[^']*'|\"[^\"]*\"|-?\d+(?:\.\d+)?)\s*$"
-)
-
 
 def _carried(_b, c: str) -> Column:
     """The raw leaf of a WITH stage's expressions: a carried column,
@@ -845,147 +932,124 @@ def _carried(_b, c: str) -> Column:
     return F.col(c)
 
 
+def _read_conjunct(conj: str):
+    """A WHERE conjunct split at its first top-level comparator
+    (_top_cmps: one inside a literal or a CASE...END never splits it):
+    ``(lhs, op, rhs, lit)``, where ``lit`` is ``(name, kind, text)`` for
+    a `name <op> literal` conjunct and None otherwise; None without a
+    comparator."""
+    cmps, _ = _top_cmps(conj)
+    if not cmps:
+        return None
+    s, e, op = cmps[0]
+    lhs, rhs = conj[:s], conj[e:]
+    name, rtoks = _word(lex(lhs)), lex(rhs)
+    lit = _lit_at(rtoks, 0)
+    if name is None or lit is None or lit[2] != len(rtoks):
+        return lhs, op, rhs, None
+    return lhs, op, rhs, (name, lit[0], lit[1])
+
+
+def _lit_cmp(op: str, name: str, kind: str, text: str) -> Column:
+    """`name <op> literal`: a raw-string compare against a quoted
+    literal, a double compare against a number."""
+    if kind == "str":
+        return PRED_OPS[op](F.col(name), F.lit(text))
+    return PRED_OPS[op](F.col(name).cast("double"), F.lit(float(text)))
+
+
 def _carry_filter(df: DataFrame, where_text: str) -> DataFrame:
-    """WITH ... WHERE over the carried columns: `col <op> literal`
-    conjunctions (HAVING when the stage aggregated), or arithmetic
-    comparisons over carried columns (`n * 2 >= m + 1`)."""
+    """WITH ... WHERE over the carried columns (HAVING when the stage
+    aggregated): per conjunct, `col <op> literal` or a comparison of
+    expressions over carried columns (`n * 2 >= m + 1`, CASE)."""
     for conj in _split_bool(where_text, "AND"):
-        m = _CARRY_COND.match(conj)
-        if not m:
-            cm = re.search(r"<=|>=|<>|!=|=|<|>", conj)
-            if not cm:
-                raise CypherParseError(
-                    f"unsupported WITH WHERE condition: {conj!r}"
-                )
-            lhs = expr_col(parse_expr(conj[: cm.start()], df.columns), _carried)
-            rhs = expr_col(parse_expr(conj[cm.end():], df.columns), _carried)
-            df = df.filter(PRED_OPS[cm.group(0)](lhs, rhs))
-            continue
-        col = m.group("c")
-        if col not in df.columns:
-            raise CypherParseError(f"WITH WHERE references unknown column: {col!r}")
-        raw = m.group("val")
-        if raw[0] in "'\"":
-            c, v = F.col(col), raw[1:-1]
+        cond = _read_conjunct(conj)
+        if cond is None:
+            raise CypherParseError(f"unsupported WITH WHERE condition: {conj!r}")
+        lhs, op, rhs, lit = cond
+        if lit is None:
+            cols = df.columns
+            lcol = expr_col(parse_expr(lhs, cols), _carried)
+            df = df.filter(PRED_OPS[op](lcol, expr_col(parse_expr(rhs, cols), _carried)))
+        elif lit[0] not in df.columns:
+            raise CypherParseError(f"WITH WHERE references unknown column: {lit[0]!r}")
         else:
-            c, v = F.col(col).cast("double"), float(raw)
-        df = df.filter(PRED_OPS[m.group("op")](c, F.lit(v)))
+            df = df.filter(_lit_cmp(op, *lit))
     return df
 
 
-_CARRY_AGG = re.compile(
-    r"(?is)^\s*(?P<fn>count|sum|avg|min|max|collect)\s*\(\s*"
-    r"(?P<dist>DISTINCT\s+)?"
-    r"(?:(?P<star>\*)|(?P<col>[A-Za-z_][A-Za-z0-9_]*))\s*\)"
-    r"\s+AS\s+(?P<alias>[A-Za-z_][A-Za-z0-9_]*)\s*$"
-)
-
-
-def _run_carry_stage(carried: DataFrame, items, dedup: bool) -> DataFrame:
+def _run_carry_stage(carried: DataFrame, proj: Projection, dedup: bool):
     """A WITH/RETURN stage with NO new MATCH: pure projection or
     aggregation over the carried columns (extension). This enables the
     aggregate-of-aggregate idiom — e.g. the TPC-H Q13 count-of-counts,
     `WITH c, count(o) AS n WITH n, count(c) AS cnt` — which openCypher
-    users reach for as soon as they group twice. Aggregates run over the
-    carried rows (already distinct under the engine's existence
-    semantics): count -> long, sum/avg -> double, min/max keep the
-    carried column's type. Items may also be carried columns, id() of a
-    carried binding, or aliased arithmetic expressions over carried
-    columns (they join the grouping keys). ``dedup`` dedupes a
-    projection without aggregates: WITH always, RETURN when DISTINCT."""
-    if tuple(items) == ("*",):
-        return carried.dropDuplicates() if dedup else carried
-    if not items:
+    users reach for as soon as they group twice. Items read like RETURN
+    items: a carried column, id() of a carried binding (the column
+    itself), count(*), an aggregate over a carried column (through
+    _agg_col; min/max keep the carried type), or an aliased expression
+    over carried columns (a grouping key). ``dedup`` dedupes a
+    projection without aggregates: WITH always, RETURN when DISTINCT.
+    A RETURN without DISTINCT or aggregates can sort by a carried
+    column or expression it does not project. Returns the frame, its
+    output columns and the _order_limit sort arguments."""
+    cols = carried.columns
+    if tuple(proj.items) == ("*",):
+        order, hidden = _hide_order(proj.order_by, cols, lambda _b, _a: False)
+        return (carried.dropDuplicates() if dedup else carried), cols, (order, (), hidden)
+    if not proj.items:
         raise CypherParseError("empty WITH/RETURN item list")
-    keys, key_names, aggs, agg_srcs = [], [], [], []
-    for it in items:
-        nm = _NAME_ITEM.match(it)
-        if nm and nm.group("n") in carried.columns:
-            a = nm.group("a") or nm.group("n")
-            keys.append(F.col(nm.group("n")).alias(a))
-            key_names.append(a)
-            continue
-        idm = re.fullmatch(
-            r"(?i)id\s*\(\s*(?P<n>[A-Za-z_][A-Za-z0-9_]*)\s*\)"
-            r"(?:\s+AS\s+(?P<a>[A-Za-z_][A-Za-z0-9_]*))?",
-            it.strip(),
-        )
-        if idm and idm.group("n") in carried.columns:
+    keys, key_names, aggs, agg_names, agg_srcs = [], [], [], [], []
+
+    def key(c: Column, a: str) -> None:
+        keys.append(c.alias(a))
+        key_names.append(a)
+
+    for it in proj.items:
+        body, alias = _strip_ret_alias(lex(it))
+        name = _word(body)
+        spec = _ret_item_shape(body) if body else None
+        if name in cols:
+            key(F.col(name), alias or name)
+        elif spec and spec[:2] == ("ifn", "id") and spec[2] in cols:
             # id(x) over a carried binding column is the column itself
             # (binding columns ARE node ids) — round-8
-            a = idm.group("a") or f"id_{idm.group('n')}"
-            keys.append(F.col(idm.group("n")).alias(a))
-            key_names.append(a)
-            continue
-        am = _CARRY_AGG.match(it)
-        if am:
-            fn, col, alias = am.group("fn").lower(), am.group("col"), am.group("alias")
-            if col is not None and col not in carried.columns:
+            key(F.col(spec[2]), alias or f"id_{spec[2]}")
+        elif spec and (spec[0] == "count_star" or spec[0] == "agg" and spec[4] is None):
+            fn, dist, src = ("count", False, None) if spec[0] == "count_star" else spec[1:4]
+            if src is not None and src not in cols:
                 raise CypherParseError(
-                    f"aggregate references unknown carried column: {col!r}"
+                    f"aggregate references unknown carried column: {src!r}"
                 )
-            if fn == "count":
-                if col is None:
-                    src = F.count(F.lit(1))
-                elif am.group("dist"):
-                    # distinct VALUES of the column (carried rows are
-                    # already distinct as tuples, not per column)
-                    src = F.count_distinct(F.col(col))
-                else:
-                    src = F.count(F.col(col))
-                aggs.append(src.cast("long").alias(alias))
-            elif fn == "collect":
-                if col is None:
-                    raise CypherParseError("collect(*) is not a thing; name a column")
-                # sorted distinct values — same deterministic reading as
-                # the plan_match collect() aggregate
-                aggs.append(F.sort_array(F.collect_set(F.col(col))).alias(alias))
-            elif fn == "sum" and am.group("dist"):
-                # sum over the distinct VALUES (VERDICT r6 #8); empty ->
-                # 0 per openCypher (the OPTIONAL-stage unmatched case)
-                aggs.append(
-                    F.coalesce(
-                        F.sum_distinct(F.col(col).cast("double")), F.lit(0.0)
-                    ).alias(alias)
-                )
-            elif fn == "avg" and am.group("dist"):
-                aggs.append(
-                    F.expr(f"avg(DISTINCT CAST(`{col}` AS DOUBLE))").alias(alias)
-                )
-            elif fn == "sum":
-                aggs.append(
-                    F.coalesce(
-                        F.sum(F.col(col).cast("double")), F.lit(0.0)
-                    ).alias(alias)
-                )
-            elif fn == "avg":
-                aggs.append(F.avg(F.col(col).cast("double")).alias(alias))
-            else:
-                # min/max: DISTINCT is a semantic no-op
-                aggs.append(getattr(F, fn)(F.col(col)).alias(alias))
-            if col is not None:
-                agg_srcs.append(col)
-            continue
-        em = re.fullmatch(
-            r"(?is)(?P<body>.+?)\s+AS\s+(?P<alias>[A-Za-z_][A-Za-z0-9_]*)\s*", it
-        )
-        if em:
-            keys.append(
-                expr_col(parse_expr(em.group("body"), carried.columns), _carried)
-                .alias(em.group("alias"))
+            agg_names.append(alias or ("count_star" if src is None else f"{fn}_{src}"))
+            aggs.append(_agg_col(fn, dist, src, typed=True).alias(agg_names[-1]))
+            if src is not None:
+                agg_srcs.append(src)
+        elif alias is not None:
+            key(expr_col(parse_expr(it[body[0].pos : body[-1].end], cols), _carried), alias)
+        else:
+            raise CypherParseError(
+                f"carry-only stage item must be a carried column, an "
+                f"aggregate over one, or an aliased expression, got: {it!r}"
             )
-            key_names.append(em.group("alias"))
-            continue
-        raise CypherParseError(
-            f"carry-only stage item must be a carried column, an "
-            f"aggregate over one, or an aliased expression, got: {it!r}"
-        )
+
+    def hide(body: str, a: str) -> bool:
+        if not _over_cols(body, cols):
+            return False
+        if aggs or dedup:
+            if body in cols:
+                raise CypherParseError(f"ORDER BY of non-returned column: {body!r}")
+            return False
+        key(_col_or_expr(body, cols), a)
+        return True
+
+    order, hidden = _hide_order(proj.order_by, key_names + agg_names, hide)
     if not aggs:
         out = carried.select(*keys)
-        return out.dropDuplicates() if dedup else out
+        return (out.dropDuplicates() if dedup else out), key_names, (order, (), hidden)
     srcs = [c for c in dict.fromkeys(agg_srcs) if c not in key_names]
     pre = carried.select(*keys, *[F.col(c) for c in srcs])
-    return pre.groupBy(*key_names).agg(*aggs) if key_names else pre.agg(*aggs)
+    out = pre.groupBy(*key_names).agg(*aggs) if key_names else pre.agg(*aggs)
+    return out, key_names + agg_names, (order, (), hidden)
 
 
 def _new_out_col(qg: QueryGraph, marks: tuple[int, ...]) -> str:
@@ -1013,17 +1077,21 @@ def _new_out_col(qg: QueryGraph, marks: tuple[int, ...]) -> str:
 def _run_stage(
     graph: PropertyGraph,
     matches: list[Match],
-    items,
+    proj: Projection,
     carried: DataFrame | None,
     dedup: bool,
-) -> tuple[DataFrame, QueryGraph, list[str]]:
+):
     """Plan one pipeline stage: the MATCH clauses carrying `carried`,
-    projecting the WITH/RETURN `items`. Returns (df, qg, out cols).
+    projecting the WITH/RETURN `proj`. Returns the frame, its output
+    columns, the _order_limit sort arguments and its binding columns.
 
     A stage that opens with OPTIONAL MATCH (VERDICT r6 #5) has its
     pattern demoted to the first optional group and the carried rows
     become the required match set, so unmatched carried rows survive
-    with NULLs for the stage's new bindings (and count(b) = 0)."""
+    with NULLs for the stage's new bindings (and count(b) = 0). A
+    RETURN without DISTINCT or aggregates can sort by a property of a
+    binding it returns (`ORDER BY b.prop`), sorted like a property
+    sort key."""
     qg = QueryGraph()
     _parse_clauses(matches, qg)
     if matches[0].optional:
@@ -1051,6 +1119,7 @@ def _run_stage(
             for grp in qg.or_filters
         ]
         qg.carry_required = True
+    items = proj.items
     if tuple(items) == ("*",):
         # WITH * — every named binding of this match plus every carried
         # column rides through (openCypher's all-variables projection)
@@ -1068,9 +1137,9 @@ def _run_stage(
     sel: list[tuple[str, str]] = []  # (source col, output alias)
     carry_srcs: list[str] = []
     for it in items:
-        nm = _NAME_ITEM.match(it)
-        if nm:
-            n, a = nm.group("n"), nm.group("a")
+        body, a = _strip_ret_alias(lex(it))
+        n = _word(body)
+        if n is not None:
             if n in qg.paths or n in qg.opt_paths:
                 raise CypherParseError(f"cannot carry path {n!r}; use length({n})")
             if n in qg.labels:
@@ -1093,6 +1162,22 @@ def _run_stage(
         _parse_returns(qg, [it])
         out = _new_out_col(qg, marks)
         sel.append((out, out))
+    prop_keys: list[str] = []
+
+    def hide(body: str, a: str) -> bool:
+        ptoks = lex(body)
+        pr = _prop_at(ptoks, 0)
+        if (
+            dedup or qg.aggregates or any(x.agg is not None for x in qg.expr_returns)
+            or not (pr and pr[2] == len(ptoks) and pr[0] in qg.returns)
+        ):
+            return False
+        qg.prop_returns.append((pr[0], pr[1], a))
+        sel.append((a, a))
+        prop_keys.append(a)
+        return True
+
+    order, hidden = _hide_order(proj.order_by, [dst for _, dst in sel], hide)
     dummy_added = False
     if not (
         qg.returns or qg.prop_returns or qg.edge_prop_returns
@@ -1127,37 +1212,8 @@ def _run_stage(
     df = df.select(*[F.col(src).alias(dst) for src, dst in sel])
     if dedup or dummy_added:
         df = df.dropDuplicates()
-    return df, qg, [dst for _, dst in sel]
-
-
-def _order_limit(
-    df: DataFrame, cols: list[str], proj: Projection, prop_keys=()
-) -> DataFrame:
-    """A pipeline projection's ORDER BY (over its output columns, or an
-    arithmetic expression over them: `ORDER BY n * 2 DESC`), SKIP and
-    LIMIT. Columns in ``prop_keys`` hold property values and sort as
-    property sort keys (_prop_sort)."""
-    if proj.order_by:
-        exprs = []
-        for part in proj.order_by:
-            body, desc = _order_item(part)
-            if body in prop_keys:
-                exprs.extend(_prop_sort(body, desc))
-                continue
-            if body in cols:
-                c = F.col(body)
-            else:
-                try:
-                    c = expr_col(parse_expr(body, cols), _carried)
-                except CypherParseError:
-                    raise CypherParseError(f"unsupported ORDER BY item: {part!r}") from None
-            exprs.append(c.desc() if desc else c.asc())
-        df = df.orderBy(*exprs)
-    if proj.skip is not None:
-        df = df.offset(proj.skip)
-    if proj.limit is not None:
-        df = df.limit(proj.limit)
-    return df
+    cols = [dst for _, dst in sel]
+    return df, cols, (order, prop_keys, hidden), {x for x in cols if x in qg.labels}
 
 
 def _unwind_column(df: DataFrame, u: Unwind) -> DataFrame:
@@ -1190,14 +1246,13 @@ def _run_stages(graph: PropertyGraph, clauses) -> tuple[DataFrame, set[str]]:
         else:
             dedup = c.kind == "WITH" or c.distinct
             if matches:
-                df, qg, cols = _run_stage(graph, matches, c.items, carried, dedup)
-                bindings = {x for x in cols if x in qg.labels}
+                df, cols, sort, bindings = _run_stage(graph, matches, c, carried, dedup)
             else:
-                df = _run_carry_stage(carried, c.items, dedup)
-                cols, bindings = df.columns, set()
+                df, cols, sort = _run_carry_stage(carried, c, dedup)
+                bindings = set()
             if c.where:
                 df = _carry_filter(df, c.where)
-            df = _order_limit(df, cols, c)
+            df = _order_limit(df, cols, *sort, c.skip, c.limit)
             if c.kind == "RETURN":
                 return df, bindings
             carried, matches = df, []
@@ -2191,26 +2246,26 @@ def plan_match(
     prop_cols: dict[str, list[tuple[str, str]]] = {}  # binding -> [(prop, outcol)]
     for b, p, a in qg.prop_returns:
         prop_cols.setdefault(b, []).append((p, a))
-    # ORDER BY b.prop (extension): resolve the property as a helper
-    # column, dropped after LIMIT. Restricted to returned bindings and
-    # non-aggregating queries (else alias the property in RETURN).
-    ob_aliases: dict[int, str] = {}
-    for i, it in enumerate(qg.order_items):
-        if it[0] != "prop":
-            continue
-        _, ob_b, ob_p, _d = it
-        if qg.aggregates or any(x.agg is not None for x in qg.expr_returns):
-            raise CypherParseError(
-                "ORDER BY a property with aggregation: return the property "
-                "with an alias and ORDER BY the alias"
-            )
-        if ob_b not in needed:
-            raise CypherParseError(
-                f"ORDER BY property of non-returned binding: {ob_b!r}"
-            )
-        a = f"_ob_{i}"
-        prop_cols.setdefault(ob_b, []).append((ob_p, a))
-        ob_aliases[i] = a
+    # ORDER BY b.prop (extension): resolve the property as a hidden
+    # sort column, dropped after LIMIT. Restricted to returned bindings
+    # and non-aggregating queries (else alias the property in RETURN).
+    order, ob_aliases = [], []
+    for i, (key, desc) in enumerate(qg.order_by):
+        if isinstance(key, tuple):
+            ob_b, ob_p = key
+            if qg.aggregates or any(x.agg is not None for x in qg.expr_returns):
+                raise CypherParseError(
+                    "ORDER BY a property with aggregation: return the property "
+                    "with an alias and ORDER BY the alias"
+                )
+            if ob_b not in needed:
+                raise CypherParseError(
+                    f"ORDER BY property of non-returned binding: {ob_b!r}"
+                )
+            key = f"_ob_{i}"
+            prop_cols.setdefault(ob_b, []).append((ob_p, key))
+            ob_aliases.append(key)
+        order.append((key, desc))
     for ag in qg.aggregates:
         if ag.prop is not None and not ag.on_edge:
             prop_cols.setdefault(ag.binding, []).append((ag.prop, f"_agg_{ag.alias}"))
@@ -2319,79 +2374,17 @@ def plan_match(
     if qg.aggregates or expr_aggs:
         # aggregates over distinct matches (existence semantics): rows are
         # already distinct over (returned + aggregated bindings); numeric
-        # aggs evaluate the string prop as a double
-        _FN = {"sum": F.sum, "avg": F.avg, "min": F.min, "max": F.max}
-        aggs = []
-        for ag in qg.aggregates:
-            if ag.func == "count":
-                if ag.binding == "*":
-                    cnt = F.count(F.lit(1))
-                elif ag.prop is not None:
-                    # count(b.prop): non-NULL property values per group
-                    # (the staged _agg_ column resolves like any other
-                    # property aggregate) — VERDICT r6 #8; DISTINCT
-                    # counts the distinct values instead
-                    src = F.col(f"_agg_{ag.alias}")
-                    cnt = F.count_distinct(src) if ag.distinct else F.count(src)
-                else:
-                    src = F.col(ag.binding)
-                    cnt = F.count_distinct(src) if ag.distinct else F.count(src)
-                aggs.append(cnt.alias(ag.alias))
-            elif ag.func == "collect":
-                src = (
-                    F.col(ag.binding) if ag.prop is None
-                    else F.col(f"_agg_{ag.alias}")
-                )
-                # sorted distinct values: collect() made deterministic
-                aggs.append(F.sort_array(F.collect_set(src)).alias(ag.alias))
-            elif ag.func in ("stdev", "stdevp"):
-                # openCypher stDev (sample) / stDevP (population)
-                f = F.stddev_samp if ag.func == "stdev" else F.stddev_pop
-                aggs.append(f(F.col(f"_agg_{ag.alias}").cast("double")).alias(ag.alias))
-            elif ag.func == "percentilecont":
-                # sort-based interpolation — bit-identical to DuckDB's
-                # quantile_cont (NOTES r5: percentiles are cross-engine
-                # exact, unlike stddev)
-                aggs.append(
-                    F.percentile(
-                        F.col(f"_agg_{ag.alias}").cast("double"), F.lit(ag.param)
-                    ).alias(ag.alias)
-                )
-            elif ag.func == "percentiledisc":
-                # the value at ceil(q·n) in sorted order — an actual
-                # element, per openCypher percentileDisc; built from
-                # sort_array(collect_list) so it stays deterministic
-                vals = F.sort_array(
-                    F.collect_list(F.col(f"_agg_{ag.alias}").cast("double"))
-                )
-                idx = F.greatest(
-                    F.lit(1),
-                    F.ceil(F.lit(ag.param) * F.size(vals)).cast("int"),
-                )
-                aggs.append(F.element_at(vals, idx).alias(ag.alias))
-            else:
-                src = F.col(f"_agg_{ag.alias}").cast("double")
-                if ag.func == "sum" and ag.distinct:
-                    c = F.coalesce(F.sum_distinct(src), F.lit(0.0))
-                elif ag.func == "sum":
-                    # openCypher: sum over no values is 0, not NULL —
-                    # the case an OPTIONAL MATCH's unmatched rows hit
-                    # (avg/min/max stay NULL, also per openCypher)
-                    c = F.coalesce(F.sum(src), F.lit(0.0))
-                elif ag.func == "avg" and ag.distinct:
-                    c = F.expr(
-                        f"avg(DISTINCT CAST(`_agg_{ag.alias}` AS DOUBLE))"
-                    )
-                else:
-                    # min/max: DISTINCT is a semantic no-op
-                    c = _FN[ag.func](src)
-                aggs.append(c.alias(ag.alias))
-        _EFN = {"sum": F.sum, "avg": F.avg, "min": F.min, "max": F.max}
-        for it in expr_aggs:
-            c = _EFN[it.agg](F.col(f"_agg_{it.alias}"))
-            if it.agg == "sum":
-                c = F.coalesce(c, F.lit(0.0))
-            aggs.append(c.alias(it.alias))
+        # aggs evaluate the string prop (or the staged expression) as a
+        # double. count(b.prop) counts non-NULL values (VERDICT r6 #8)
+        aggs = [
+            _agg_col(
+                ag.func, ag.distinct,
+                None if ag.binding == "*"
+                else ag.binding if ag.prop is None else f"_agg_{ag.alias}",
+                ag.param,
+            ).alias(ag.alias)
+            for ag in qg.aggregates
+        ] + [_agg_col(it.agg, False, f"_agg_{it.alias}").alias(it.alias) for it in expr_aggs]
         out = out.groupBy(*group_cols).agg(*aggs) if group_cols else out.agg(*aggs)
         steps.append(("aggregate", tuple(
             [ag.alias for ag in qg.aggregates] + [it.alias for it in expr_aggs]
@@ -2405,36 +2398,21 @@ def plan_match(
         # distinct matches projected to properties; duplicates from shared
         # property values are kept (the match set, not the value set, is
         # what's distinct) unless RETURN DISTINCT asks for the value set
-        out = out.select(*group_cols, *ob_aliases.values())
+        out = out.select(*group_cols, *ob_aliases)
         if qg.distinct:
             if ob_aliases:
                 raise CypherParseError(_DISTINCT_PROP_ORDER)
             out = out.dropDuplicates()
             steps.append(("distinct", tuple(group_cols)))
-    if ob_aliases:
-        # property sort keys are string-typed: numeric strings order by
-        # their numeric cast first, the raw string second (deterministic
-        # for non-numeric values; a pure tie-break for numeric ones)
-        exprs = []
-        for i, it in enumerate(qg.order_items):
-            if it[0] == "col":
-                c, d = F.col(it[1]), it[2]
-                exprs.append(c.desc() if d else c.asc())
-            else:
-                exprs.extend(_prop_sort(ob_aliases[i], it[3]))
-        out = out.orderBy(*exprs)
-        steps.append(("order_by", tuple(qg.order_items)))
-    elif qg.order_by:
-        out = out.orderBy(*[F.col(c).desc() if d else F.col(c).asc() for c, d in qg.order_by])
+    out = _order_limit(
+        out, out_columns(qg), order, ob_aliases, ob_aliases, qg.skip, qg.limit
+    )
+    if order:
         steps.append(("order_by", tuple(qg.order_by)))
     if qg.skip is not None:
-        out = out.offset(qg.skip)
         steps.append(("skip", qg.skip))
     if qg.limit is not None:
-        out = out.limit(qg.limit)
         steps.append(("limit", qg.limit))
-    if ob_aliases:
-        out = out.drop(*ob_aliases.values())
     return PlannedQuery(out, steps, total_cost)
 
 

@@ -129,12 +129,7 @@ def test_carry_return(g, tmpl, fn):
     _close({r.n: r.v for r in df.collect()}, _model(fn))
 
 
-# the WITH WHERE splits a conjunct at its first comparison operator,
-# so a CASE (which carries its own comparisons) cannot stand there
-WHERE_EXPRS = [(t, f) for t, f in EXPRS if "CASE" not in t]
-
-
-@pytest.mark.parametrize("tmpl,fn", WHERE_EXPRS, ids=[t for t, _ in WHERE_EXPRS])
+@pytest.mark.parametrize("tmpl,fn", EXPRS, ids=IDS)
 def test_carry_where(g, tmpl, fn):
     want = _model(fn)
     t = _threshold(want)
