@@ -3,9 +3,10 @@
 Reference: NaiveStatsStore maintains write-time counters for node labels,
 edge types and (srcLabel, edgeType, dstLabel) triplets
 (g4s-optimizer/.../optim/StatsStore.scala:111-255); selectivity = label
-count / total (:179-189). We recompute with two groupBy.count() jobs and
-cache driver-side — the reference snapshots stats per query the same way
-(GraphDB.scala:23-27).
+count / total (:179-189). GraphStats.compute recomputes them from the
+(id, label) rows and the edge topology in three collects, and the graph
+keeps the result driver-side as a derived entry — the reference
+snapshots stats per query the same way (GraphDB.scala:23-27).
 """
 
 from __future__ import annotations
@@ -18,15 +19,23 @@ from pyspark.sql import functions as F
 
 @dataclass
 class GraphStats:
+    # Node counts describe DISTINCT (id, label) rows: a duplicated node
+    # row counts once, so these are counts of the ids a label scan
+    # matches (every match set is deduped).
     node_count: int
     edge_count: int
+    # label -> distinct ids carrying it
     label_counts: dict[str, int] = field(default_factory=dict)
+    # type -> edge rows (parallel edges each count)
     type_counts: dict[str, int] = field(default_factory=dict)
     # (srcLabel, edgeType, dstLabel) -> edge count — the reference's
     # triplet counters (StatsStore.scala:141-170,210-253); exact expand
     # cardinalities for label-constrained hops where independent
     # selectivities mis-estimate (e.g. a type that connects several label
-    # pairs). Empty dict = unknown (planner falls back to independence).
+    # pairs). The edges join the distinct (id, label) rows, so an edge
+    # counts once per (src label, dst label) pair and a duplicated node
+    # row does not count it twice. Empty dict = unknown (planner falls
+    # back to independence).
     triplet_counts: dict[tuple[str, str, str], int] = field(default_factory=dict)
     # (type, side) -> distinct endpoint count, side 0 = src, 2 = dst.
     # Raw countDistinct over the edge table (danglers included) — only
@@ -35,7 +44,7 @@ class GraphStats:
     # of the type exists (a dangling edge contributes no triplet row, so
     # coverage < type count). Empty dict = unknown -> no elimination.
     endpoint_counts: dict[tuple[str, int], int] = field(default_factory=dict)
-    # True when every node id carries exactly one label row. The planner's
+    # True when no node id carries two different labels. The planner's
     # label-implied semi-join skip is only sound under this invariant: with
     # multi-label nodes the two-sided triplet join counts an edge once per
     # label *pair*, so a side-sum over triplet_counts can equal type_card
@@ -45,33 +54,47 @@ class GraphStats:
 
     @staticmethod
     def compute(nodes: DataFrame, edges: DataFrame) -> "GraphStats":
-        lc = {r.label: r["count"] for r in nodes.groupBy("label").count().collect()}
-        tc = {r.type: r["count"] for r in edges.groupBy("type").count().collect()}
-        # (id,label) resolution joins shuffle on src/dst; AQE broadcasts
-        # the slim label projection when it is small enough
+        """The stats of ``nodes``' distinct (id, label) rows and of
+        ``edges``, in three collects: the label set of each id, the
+        counts of each edge type, and the triplet join. Reads only the
+        id and label columns of ``nodes``."""
         lab = nodes.select("id", "label")
-        trip = (
-            edges.select("src", "dst", "type")
-            .join(lab.select(F.col("id").alias("src"), F.col("label").alias("sl")), on="src")
-            .join(lab.select(F.col("id").alias("dst"), F.col("label").alias("dl")), on="dst")
-            .groupBy("sl", "type", "dl")
-            .count()
-        )
-        tpc = {(r.sl, r.type, r.dl): r["count"] for r in trip.collect()}
+        labels = lab.groupBy("id").agg(F.collect_set("label").alias("ls"))
+        lc: dict[str, int] = {}
+        one_label = True
+        for r in (
+            labels.select(F.explode("ls").alias("label"), (F.size("ls") > 1).alias("multi"))
+            .groupBy("label")
+            .agg(F.count("*").alias("n"), F.max("multi").alias("multi"))
+            .collect()
+        ):
+            lc[r.label] = int(r.n)
+            one_label = one_label and not r.multi
+        tc: dict[str, int] = {}
         ep: dict[tuple[str, int], int] = {}
         for r in (
             edges.groupBy("type")
             .agg(
+                F.count("*").alias("n"),
                 F.countDistinct("src").alias("ns"),
                 F.countDistinct("dst").alias("nd"),
             )
             .collect()
         ):
+            tc[r.type] = int(r.n)
             ep[(r.type, 0)] = int(r.ns)
             ep[(r.type, 2)] = int(r.nd)
-        one_label = (
-            nodes.groupBy("id").count().filter(F.col("count") > 1).limit(1).count() == 0
+        # (id,label) resolution joins shuffle on src/dst; AQE broadcasts
+        # the distinct label rows when they are small enough
+        rows = lab.distinct()
+        trip = (
+            edges.select("src", "dst", "type")
+            .join(rows.select(F.col("id").alias("src"), F.col("label").alias("sl")), on="src")
+            .join(rows.select(F.col("id").alias("dst"), F.col("label").alias("dl")), on="dst")
+            .groupBy("sl", "type", "dl")
+            .count()
         )
+        tpc = {(r.sl, r.type, r.dl): r["count"] for r in trip.collect()}
         return GraphStats(
             sum(lc.values()), sum(tc.values()), lc, tc, tpc, ep, one_label
         )

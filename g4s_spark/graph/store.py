@@ -11,9 +11,10 @@ DataStore (DataStore.scala:9-92). Here:
   props: map)`` — the transpose is a column swap (free), so unlike the
   reference we never materialize it as a table (SURVEY §1.3); only the
   driver-side adjacency index of anchored reads keeps both directions,
-- label/type statistics for the cost-based planner come from
-  ``groupBy(label).count()`` and are cached driver-side, mirroring
-  StatsStore (g4s-optimizer/.../optim/StatsStore.scala:111-255),
+- label/type statistics for the cost-based planner come from one
+  function, ``GraphStats.compute``, over the distinct (id, label) rows
+  and the edges, and are cached driver-side, mirroring StatsStore
+  (g4s-optimizer/.../optim/StatsStore.scala:111-255),
 - everything computed FROM the tables (stats, the slim projection,
   payload dedups, the operators' edge folds and counts) lives in one
   per-graph registry, ``PropertyGraph.derived`` (see memo.Derived).
@@ -622,9 +623,14 @@ class PropertyGraph:
 
     @property
     def stats(self) -> GraphStats:
-        return self.derived.get(
-            "stats", STATS_READS, lambda: GraphStats.compute(self.nodes, self.edges)
-        )
+        """GraphStats.compute over the slim (id, label) cache when
+        cache() pinned one, else over the nodes' id and label columns."""
+
+        def build():
+            slim = self.derived.peek("nodes_slim")
+            return GraphStats.compute(self.nodes if slim is None else slim, self.edges)
+
+        return self.derived.get("stats", STATS_READS, build)
 
     @stats.setter
     def stats(self, value: GraphStats) -> None:

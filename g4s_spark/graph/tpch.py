@@ -126,74 +126,7 @@ def _build_graph_uncached(spark: SparkSession, sf_dir: str, tables: dict[str, Da
         .unionByName(e(lineitem, li_id, _id("l_partkey", PART_OFF), "OF_PART", F.lit(1)))
         .unionByName(e(lineitem, li_id, _id("l_suppkey", SUPPLIER_OFF), "BY_SUPP", F.lit(2)))
     )
-    g = PropertyGraph(nodes, edges, spark)
-
-    # label/type counts are table counts — parquet row-group metadata makes
-    # .count() on a bare scan cheap, so the planner's stats never require a
-    # full scan of the unioned nodes/edges (StatsStore analogue, free).
-    from .stats import GraphStats
-
-    counts = {name: tables[name].count() for name in GRAPH_TABLES}
-    label_counts = {
-        "Region": counts["region"], "Nation": counts["nation"],
-        "Customer": counts["customer"], "Supplier": counts["supplier"],
-        "Part": counts["part"], "Order": counts["orders"], "Lineitem": counts["lineitem"],
-    }
-    type_counts = {
-        "IN_REGION": counts["nation"],
-        "FROM_NATION": counts["customer"] + counts["supplier"],
-        "PLACED": counts["orders"],
-        "HAS_ITEM": counts["lineitem"],
-        "OF_PART": counts["lineitem"],
-        "BY_SUPP": counts["lineitem"],
-    }
-    # (srcLabel, type, dstLabel) triplet counters (StatsStore.scala:
-    # 141-170) — static from the schema, so FROM_NATION's two label pairs
-    # estimate exactly instead of via independent selectivities
-    triplet_counts = {
-        ("Nation", "IN_REGION", "Region"): counts["nation"],
-        ("Customer", "FROM_NATION", "Nation"): counts["customer"],
-        ("Supplier", "FROM_NATION", "Nation"): counts["supplier"],
-        ("Customer", "PLACED", "Order"): counts["orders"],
-        ("Order", "HAS_ITEM", "Lineitem"): counts["lineitem"],
-        ("Lineitem", "OF_PART", "Part"): counts["lineitem"],
-        ("Lineitem", "BY_SUPP", "Supplier"): counts["lineitem"],
-    }
-    # distinct endpoint counts per (type, side) — the tautological-hop
-    # elimination's participation test (planner._eliminate_tautological
-    # _edges). Side counts that are one-edge-per-row with a unique key
-    # are the table counts (static); the referenced-key sides are exact
-    # distinct counts over the key column, computed once per session
-    # (the graph is cached by build_graph) — small column scans.
-    dc = lambda df, col: df.select(col).distinct().count()  # noqa: E731
-    endpoint_counts = {
-        ("IN_REGION", 0): counts["nation"],
-        ("IN_REGION", 2): dc(nation, "n_regionkey"),
-        ("FROM_NATION", 0): counts["customer"] + counts["supplier"],
-        ("FROM_NATION", 2): (
-            customer.select(F.col("c_nationkey").alias("k"))
-            .unionByName(supplier.select(F.col("s_nationkey").alias("k")))
-            .distinct()
-            .count()
-        ),
-        ("PLACED", 0): dc(orders, "o_custkey"),
-        ("PLACED", 2): counts["orders"],
-        ("HAS_ITEM", 0): dc(lineitem, "l_orderkey"),
-        ("HAS_ITEM", 2): counts["lineitem"],
-        ("OF_PART", 0): counts["lineitem"],
-        ("OF_PART", 2): dc(lineitem, "l_partkey"),
-        ("BY_SUPP", 0): counts["lineitem"],
-        ("BY_SUPP", 2): dc(lineitem, "l_suppkey"),
-    }
-    g.stats = GraphStats(
-        sum(label_counts.values()), sum(type_counts.values()), label_counts, type_counts,
-        triplet_counts,
-        endpoint_counts,
-        # ids are disjoint by table offset and each table contributes one
-        # label row per key, so the single-label invariant holds statically
-        single_label=True,
-    )
-    return g
+    return PropertyGraph(nodes, edges, spark)
 
 
 NODES_SQL_CTE = f"""
@@ -212,7 +145,7 @@ NODES_SQL_CTE = f"""
 # oracles. Matches build_graph exactly.
 EDGES_SQL_CTE = f"""
     graph_edges(src, dst, type, weight) AS (
-        SELECT {SQL_IDS['Nation'].replace('n_nationkey', 'n_nationkey')},
+        SELECT {SQL_IDS['Nation']},
                CAST({REGION_OFF} + n_regionkey AS BIGINT), 'IN_REGION', CAST(4 AS BIGINT) FROM nation
         UNION ALL
         SELECT {SQL_IDS['Customer']}, CAST({NATION_OFF} + c_nationkey AS BIGINT), 'FROM_NATION', 3 FROM customer

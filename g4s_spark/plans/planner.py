@@ -718,6 +718,7 @@ def _run_unwind(graph: PropertyGraph, unwinds, rest: list, resolve: bool) -> Dat
     kept: list[str] = []  # non-unwind items, returned by the rest of the part
     out_cols: list[str | None] = []  # RETURN-ordered output column names
     requested: dict[str, str] = {}  # unwind name -> output alias
+    words: set[str] = set()  # the words of the kept items' bodies
     for item in ret.items:
         body, alias = _strip_ret_alias(lex(item))
         name = _word(body)
@@ -725,6 +726,7 @@ def _run_unwind(graph: PropertyGraph, unwinds, rest: list, resolve: bool) -> Dat
             requested[name] = alias or name
         else:
             kept.append(item)
+            words.update(t.text for t in body if t.kind == "word")
         out_cols.append(alias or name)
     if len(rest) == 1:
         if kept:
@@ -738,12 +740,22 @@ def _run_unwind(graph: PropertyGraph, unwinds, rest: list, resolve: bool) -> Dat
 
     # ORDER BY / SKIP / LIMIT run once, after the join. An ORDER BY item
     # that reads no output column (`ORDER BY c.name`) rides the rest of
-    # the part as a hidden column, sorted like a property sort key
+    # the part as a hidden column, sorted like a property sort key. It
+    # may read only bindings the kept items read: a hidden property of
+    # another binding would join that binding to the distinct match set
+    # and multiply its rows
     def hide(body: str, a: str) -> bool:
         if not kept:
             return False
-        if _word(lex(body)):
+        toks = lex(body)
+        if _word(toks):
             raise CypherParseError(f"ORDER BY of non-returned column: {body!r}")
+        for i in range(len(toks)):
+            pr = _prop_at(toks, i)
+            if pr and pr[0] not in words:
+                raise CypherParseError(
+                    f"ORDER BY property of non-returned binding: {pr[0]!r}"
+                )
         if ret.distinct:
             raise CypherParseError(_DISTINCT_PROP_ORDER)
         kept.append(f"{body} AS {a}")

@@ -110,3 +110,16 @@ def carried_aggs(g):
 def test_carried_aggregate_matches_model(carried_aggs, j):
     got, want = carried_aggs[f"a{j}"], AGGS[j][1]
     assert got == (want if isinstance(want, list) else pytest.approx(want))
+
+
+@pytest.mark.parametrize("query", [
+    "MATCH (h:H)-[:E]->(n:N) RETURN n ORDER BY h.s",
+    "UNWIND [1] AS k MATCH (h:H)-[:E]->(n:N) RETURN n ORDER BY h.s",
+    "UNWIND [1] AS k MATCH (h:H)-[:E]->(n:N) RETURN k, n.x AS x ORDER BY h.s DESC",
+])
+def test_order_by_property_of_non_returned_binding_is_rejected(g, query):
+    """A hidden sort property of a binding the RETURN does not read
+    would join that binding to the distinct match set and multiply its
+    rows (several H nodes point at each N)."""
+    with pytest.raises(CypherParseError, match="ORDER BY property of non-returned binding: 'h'"):
+        run_cypher(g, query)
