@@ -1,3 +1,3 @@
-from .parser import CypherParseError, PatternEdge, QueryGraph, parse
+from .parser import CypherParseError, PatternEdge, QueryGraph, ReturnItem, parse
 
-__all__ = ["parse", "QueryGraph", "PatternEdge", "CypherParseError"]
+__all__ = ["parse", "QueryGraph", "PatternEdge", "ReturnItem", "CypherParseError"]

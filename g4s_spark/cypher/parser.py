@@ -70,50 +70,48 @@ class PropFilter:
 
 
 @dataclass(frozen=True)
-class AggItem:
-    """RETURN aggregate (extension): count(b), sum/avg/min/max(b.prop)
-    evaluated as a double over the distinct matches, or the same over an
-    edge variable's typed property (on_edge=True, e.g. sum(e.weight))."""
+class ReturnItem:
+    """One RETURN / WITH item: the output column ``alias`` and the value
+    tree ``expr``, optionally aggregated (``agg``; ``expr`` None is
+    ``count(*)``).
 
-    func: str  # count | sum | avg | min | max | collect | stdev | percentilecont
-    binding: str
-    prop: str | None  # None for count
+    ``expr`` nodes are the parse_expr nodes — ("num", float) |
+    ("prop", binding, prop) | ("op", "+-*/", left, right) |
+    ("neg", operand) | ("strlen", binding, prop) | ("fn1", name,
+    operand) | ("case", whens, else), where a WITH stage's carried
+    column is a ("prop", None, column) leaf — plus the item-only nodes:
+    ("var", binding) a node binding's id column; ("eprop", edge, prop)
+    an edge variable's typed column (``type(e)`` reads ``type``);
+    ("id"|"labels"|"keys"|"properties", binding); ("length", path);
+    ("sfn", spec, prop node) a scalar string function
+    (store.apply_scalar_fn's spec); ("coalesce", prop node, default);
+    ("concat", parts) with ("prop", ...) and ("str", text) parts."""
+
     alias: str
-    on_edge: bool = False
+    expr: tuple | None
+    # count | sum | avg | min | max | collect | stdev | stdevp |
+    # percentilecont | percentiledisc
+    agg: str | None = None
     # DISTINCT aggregates over the VALUES (openCypher): sum/avg/count
     # switch to the distinct form; min/max/collect treat it as a no-op
     distinct: bool = False
-    # percentileCont's quantile argument
+    # percentileCont/Disc's quantile argument
     param: float | None = None
 
 
-@dataclass(frozen=True)
-class ExprItem:
-    """RETURN arithmetic expression (extension): a +-*/ tree over
-    ``binding.prop`` leaves (node bindings; evaluated as doubles) and
-    numeric literals, optionally wrapped in one aggregate —
-    e.g. ``sum(l.extendedprice * (1 - l.discount)) AS rev``. The alias
-    is mandatory (an expression has no natural column name).
-
-    ``expr`` nodes: ("num", float) | ("prop", binding, prop) |
-    ("op", "+-*/", left, right) | ("neg", operand) |
-    ("strlen", binding, prop) | ("fn1", name, operand) |
-    ("case", whens, else). A WITH stage's carried column is a
-    ("prop", None, column) leaf."""
-
-    agg: str | None  # None | sum | avg | min | max
-    expr: tuple
-    alias: str
-
-
 def expr_walk(expr: tuple):
-    """Every node of an expression tree, pre-order, children left to
-    right (a CASE yields each WHEN's condition then its THEN, then the
-    ELSE)."""
+    """Every node of an expression or ReturnItem tree, pre-order,
+    children left to right (a CASE yields each WHEN's condition then
+    its THEN, then the ELSE)."""
     yield expr
     kind = expr[0]
-    if kind in ("neg", "fn1"):
+    if kind in ("neg", "fn1", "sfn"):
         yield from expr_walk(expr[-1])
+    elif kind == "coalesce":
+        yield from expr_walk(expr[1])
+    elif kind == "concat":
+        for part in expr[1]:
+            yield from expr_walk(part)
     elif kind == "case":
         for cond_l, _op, _lit, then_e in expr[1]:
             yield from expr_walk(cond_l)
@@ -126,16 +124,17 @@ def expr_walk(expr: tuple):
 
 
 def expr_prop_leaves(expr: tuple) -> list[tuple[str, str]]:
-    """All (binding, prop) leaves of an ExprItem tree, in order."""
+    """All (binding, prop) leaves of an expression tree, in order."""
     return [(n[1], n[2]) for n in expr_walk(expr) if n[0] in ("prop", "strlen")]
 
 
 @dataclass
 class QueryGraph:
-    """Bindings + directed typed edges + return set
-    (QueryGraph.scala:15-22), plus extensions beyond the reference
-    surface: WHERE prop filters, property returns, aggregates
-    (count/sum/avg/min/max), ORDER BY, LIMIT."""
+    """Bindings + directed typed edges + RETURN items
+    (QueryGraph.scala:15-22, whose return set is one ``Set[Binding]``),
+    plus extensions beyond the reference surface: WHERE filters, value
+    and aggregate RETURN items in one ordered list, ORDER BY, SKIP,
+    LIMIT."""
 
     labels: dict[str, str | None] = field(default_factory=dict)  # binding -> label
     # multi-label nodes (extension): ``(n:A:B)`` binds the FIRST label in
@@ -154,13 +153,9 @@ class QueryGraph:
     # rows ARE the required match set — the planner must not scan any
     # binding standalone, and every pattern group left-joins onto carry
     carry_required: bool = False
-    returns: list[str] = field(default_factory=list)
-    # property access in RETURN: (binding, prop, alias); values are strings
-    # (the props map is map<string,string>)
-    prop_returns: list[tuple[str, str, str]] = field(default_factory=list)
-    # edge-variable property access in RETURN: (edge_name, prop, alias) —
-    # resolved against the typed edge columns (weight), not the props map
-    edge_prop_returns: list[tuple[str, str, str]] = field(default_factory=list)
+    # RETURN / WITH items in item order, one ReturnItem per item; the
+    # planner emits one column per item, in this order
+    items: list[ReturnItem] = field(default_factory=list)
     filters: list[PropFilter] = field(default_factory=list)
     # WHERE predicates on edge variables — pushed into the edge scan
     edge_filters: list[PropFilter] = field(default_factory=list)
@@ -192,33 +187,6 @@ class QueryGraph:
     # (optional-group index, edge indices within that group); length(p)
     # is NULL for unmatched rows
     opt_paths: dict[str, tuple[int, tuple[int, ...]]] = field(default_factory=dict)
-    path_lengths: list[tuple[str, str]] = field(default_factory=list)  # (path, alias)
-    aggregates: list[AggItem] = field(default_factory=list)
-    # arithmetic RETURN items (extension): see ExprItem
-    expr_returns: list[ExprItem] = field(default_factory=list)
-    # scalar string functions over property returns (extension; the
-    # reference has NO scalar library, SURVEY §2.7): (fn, binding, prop,
-    # alias) with fn in {tolower, toupper, trim}
-    string_fn_returns: list[tuple[str, str, str, str]] = field(default_factory=list)
-    # coalesce(b.prop, 'default') RETURN items (round-7): the NULL-fill
-    # companion of OPTIONAL MATCH — (binding, prop, default, alias)
-    coalesce_returns: list[tuple[str, str, str, str]] = field(default_factory=list)
-    # id(n) RETURN items (round-8): (binding, alias) — the binding's node
-    # id projected under the alias (ids ARE the binding columns)
-    id_returns: list[tuple[str, str]] = field(default_factory=list)
-    # string-concatenation RETURN items (round-8): `a.p + '_' + b.q AS x`
-    # — (parts, alias) where parts is a tuple of ("prop", binding, prop)
-    # and ("lit", text) nodes; NULL-propagating like openCypher's +
-    concat_returns: list[tuple[tuple, str]] = field(default_factory=list)
-    # keys(n) / properties(n) RETURN items (round-8): (binding, alias,
-    # with_values) — sorted comma-joined key list, or k=v pair list
-    # (scalar-contract rendering of openCypher's list/map, like labels)
-    keys_returns: list[tuple[str, str, bool]] = field(default_factory=list)
-    # labels(n) RETURN items (round-8): (binding, alias) — the node's
-    # label set rendered as a sorted comma-joined STRING (openCypher
-    # returns a list; the driver contract is scalar columns only —
-    # same deviation as collect()'s sorted rendering)
-    labels_returns: list[tuple[str, str]] = field(default_factory=list)
     # arithmetic WHERE predicates (extension): (lhs_expr, op, rhs_expr)
     # applied after the required chain binds every referenced binding
     # (the cross_filters slot; they cannot push to any single scan).
@@ -1576,7 +1544,7 @@ def parse_expr(text: str, cols=None) -> tuple:
 
 def _try_parse_expr_item(
     qg: QueryGraph, item: str, body: list[Token], alias: str | None
-) -> bool:
+) -> None:
     """Arithmetic RETURN item `[agg(] expr [)] AS alias` — attempted only
     after every simpler form failed; ``body`` and ``alias`` are the
     item's tokens split by _strip_ret_alias. Leaves must be node-binding
@@ -1604,8 +1572,7 @@ def _try_parse_expr_item(
             raise CypherParseError(
                 f"expression references unbound or non-node variable: {b!r}"
             )
-    qg.expr_returns.append(ExprItem(fn, node, alias))
-    return True
+    qg.items.append(ReturnItem(alias, node, fn))
 
 
 # ---------------------------------------------------------------------------
@@ -1754,124 +1721,91 @@ def _ret_item_shape(toks: list[Token]):
 
 
 def _apply_ret_item(qg: QueryGraph, spec, name: str, alias: str | None) -> None:
-    """Append one shape-matched RETURN/WITH item to qg, preserving the
-    regex-era binding checks, default aliases, and error texts."""
+    """Append the ReturnItem of one shape-matched RETURN/WITH item to qg,
+    preserving the regex-era binding checks, default aliases, and error
+    texts."""
     tag = spec[0]
+    agg, dist, param = None, False, None
     if tag == "prop":
         _, b, p = spec
-        a = alias or f"{b}_{p}"
+        default = f"{b}_{p}"
         if b in qg.labels:
-            qg.prop_returns.append((b, p, a))
+            node = ("prop", b, p)
         elif b in _edge_names(qg):
-            qg.edge_prop_returns.append((b, p, a))
+            node = ("eprop", b, p)
         else:
             raise CypherParseError(f"return of unbound variable: {b!r}")
-        return
-    if tag == "count_star":
+    elif tag == "count_star":
         # count(*) counts the distinct matches themselves
-        qg.aggregates.append(AggItem("count", "*", None, alias or "count_star"))
-        return
-    if tag == "length":
+        agg, node, default = "count", None, "count_star"
+    elif tag == "length":
         pn = spec[1]
         if pn not in qg.paths and pn not in qg.opt_paths:
             raise CypherParseError(f"length() of unknown path: {pn!r}")
-        qg.path_lengths.append((pn, alias or f"len_{pn}"))
-        return
-    if tag == "agg":
-        _, fn, dist, arg, prop = spec
-        if arg not in qg.labels:
-            # edge-variable property aggregate: sum/avg/min/max/
-            # collect(e.prop) over the typed edge columns
-            if arg in _edge_names(qg) and fn != "count":
-                if prop is None:
-                    raise CypherParseError(
-                        f"{fn}() needs a property: {fn}({arg}.<prop>)"
-                    )
-                if dist:
-                    raise CypherParseError(
-                        "DISTINCT edge-property aggregates are unsupported"
-                    )
-                a = alias or f"{fn}_{arg}_{prop}"
-                qg.aggregates.append(AggItem(fn, arg, prop, a, on_edge=True))
-                return
-            raise CypherParseError(f"{fn}() of unbound variable: {arg!r}")
-        if fn == "count":
-            # count(b.prop) counts matches whose property is non-NULL
-            # (openCypher parity, VERDICT r6 #8); count(b) counts all;
-            # count(DISTINCT ...) counts the distinct values
-            a = alias or (
-                f"count_{arg}" if prop is None else f"count_{arg}_{prop}"
-            )
-        elif fn == "collect":
-            # collect(b) / collect(b.prop): the SORTED DISTINCT value
-            # list — openCypher's collect() with the deterministic
-            # reading existence semantics imply (a bag ordered by
-            # arrival would be nondeterministic under distinct-match
-            # evaluation); DISTINCT is therefore a no-op
-            a = alias or (
-                f"collect_{arg}" if prop is None else f"collect_{arg}_{prop}"
-            )
+        node, default = ("length", pn), f"len_{pn}"
+    elif tag == "agg":
+        _, agg, dist, arg, prop = spec
+        default = f"{agg}_{arg}" if prop is None else f"{agg}_{arg}_{prop}"
+        # an edge variable's aggregate: sum/avg/min/max/collect(e.prop)
+        # over the typed edge columns
+        on_edge = arg not in qg.labels
+        if on_edge and (arg not in _edge_names(qg) or agg == "count"):
+            raise CypherParseError(f"{agg}() of unbound variable: {arg!r}")
+        # count(b.prop) counts matches whose property is non-NULL
+        # (openCypher parity, VERDICT r6 #8); count(b) counts all;
+        # count(DISTINCT ...) counts the distinct values. collect(b) /
+        # collect(b.prop) is the SORTED DISTINCT value list —
+        # openCypher's collect() with the deterministic reading
+        # existence semantics imply (a bag ordered by arrival would be
+        # nondeterministic under distinct-match evaluation)
+        if prop is None and (on_edge or agg not in ("count", "collect")):
+            raise CypherParseError(f"{agg}() needs a property: {agg}({arg}.<prop>)")
+        if on_edge and dist:
+            raise CypherParseError("DISTINCT edge-property aggregates are unsupported")
+        if prop is None:
+            node = ("var", arg)
         else:
-            if prop is None:
-                raise CypherParseError(f"{fn}() needs a property: {fn}({arg}.<prop>)")
-            a = alias or f"{fn}_{arg}_{prop}"
-        qg.aggregates.append(AggItem(fn, arg, prop, a, distinct=dist))
-        return
-    if tag == "pct":
-        _, kind, arg, prop, q = spec
+            node = ("eprop" if on_edge else "prop", arg, prop)
+    elif tag == "pct":
+        _, agg, arg, prop, param = spec
         if arg not in qg.labels:
             raise CypherParseError(f"percentile of unbound variable: {arg!r}")
-        a = alias or f"{kind}_{arg}_{prop}"
-        qg.aggregates.append(AggItem(kind, arg, prop, a, param=q))
-        return
-    if tag == "coalesce":
+        node, default = ("prop", arg, prop), f"{agg}_{arg}_{prop}"
+    elif tag == "coalesce":
         _, b, p, dflt = spec
         if b not in qg.labels:
             raise CypherParseError(
                 f"coalesce() of unbound or non-node variable: {b!r}"
             )
-        qg.coalesce_returns.append((b, p, dflt, alias or f"coalesce_{b}_{p}"))
-        return
-    if tag == "sfn":
-        _, fn, b, p, a1, a2 = spec
+        node, default = ("coalesce", ("prop", b, p), dflt), f"coalesce_{b}_{p}"
+    elif tag in ("sfn", "replace"):
+        if tag == "replace":
+            _, b, p, x, y = spec
+            fn, enc = "replace", f"replace\x1f{x}\x1f{y}"
+        else:
+            _, fn, b, p, a1, a2 = spec
         if b not in qg.labels:
             raise CypherParseError(f"{fn}() of unbound or non-node variable: {b!r}")
-        enc = _encode_scalar_fn(fn, a1, a2, name)
-        qg.string_fn_returns.append((enc, b, p, alias or f"{fn}_{b}_{p}"))
-        return
-    if tag == "replace":
-        _, b, p, x, y = spec
-        if b not in qg.labels:
-            raise CypherParseError(
-                f"replace() of unbound or non-node variable: {b!r}"
-            )
-        qg.string_fn_returns.append(
-            (f"replace\x1f{x}\x1f{y}", b, p, alias or f"replace_{b}_{p}")
-        )
-        return
-    if tag == "ifn":
+        if tag == "sfn":
+            enc = _encode_scalar_fn(fn, a1, a2, name)
+        node, default = ("sfn", enc, ("prop", b, p)), f"{fn}_{b}_{p}"
+    else:
         # graph-introspection functions (round-8): id(n) projects the
         # binding's node id; labels(n) the sorted comma-joined label
         # string (scalar-contract rendering of openCypher's list);
         # type(r) rides the edge-property path — `type` is a physical
         # column of the edge table, so the scan carries it for free
         _, fn, b = spec
-        a = alias or f"{fn}_{b}"
+        default = f"{fn}_{b}"
         if fn == "type":
             if b not in _edge_names(qg):
                 raise CypherParseError(f"type() of non-edge variable: {b!r}")
-            qg.edge_prop_returns.append((b, "type", a))
+            node = ("eprop", b, "type")
         elif b not in qg.labels:
             raise CypherParseError(f"{fn}() of unbound or non-node variable: {b!r}")
-        elif fn == "id":
-            qg.id_returns.append((b, a))
-        elif fn == "labels":
-            qg.labels_returns.append((b, a))
         else:
-            # keys()/properties(): sorted comma-joined rendering
-            qg.keys_returns.append((b, a, fn == "properties"))
-        return
-    raise CypherParseError(f"unsupported return item: {name!r}")  # unreachable
+            node = (fn, b)
+    qg.items.append(ReturnItem(alias or default, node, agg, dist, param))
 
 
 def _split_depth0(toks: list[Token], punct: str) -> list[list[Token]]:
@@ -1895,8 +1829,8 @@ def _split_depth0(toks: list[Token], punct: str) -> list[list[Token]]:
 
 
 def _parse_returns(qg: QueryGraph, items) -> None:
-    """Parse RETURN / WITH items (a Projection's spans) into qg's return
-    fields."""
+    """Parse RETURN / WITH items (a Projection's spans) into qg.items,
+    one ReturnItem per item (RETURN * one per named binding)."""
     for name in items:
         if name == "*":
             # RETURN *: every named (non-anonymous) binding of the match,
@@ -1906,7 +1840,10 @@ def _parse_returns(qg: QueryGraph, items) -> None:
             named = sorted(b for b in scope if not b.startswith("_anon"))
             if not named:
                 raise CypherParseError("RETURN * with no named bindings")
-            qg.returns.extend(b for b in named if b not in qg.returns)
+            qg.items.extend(
+                ReturnItem(b, ("var", b)) for b in named
+                if ReturnItem(b, ("var", b)) not in qg.items
+            )
             continue
         itoks = lex(name)
         body, alias = _strip_ret_alias(itoks)
@@ -1927,7 +1864,7 @@ def _parse_returns(qg: QueryGraph, items) -> None:
             parts = []
             for seg in _split_depth0(body, "+"):
                 if len(seg) == 1 and seg[0].kind == "str":
-                    parts.append(("lit", seg[0].text[1:-1]))
+                    parts.append(("str", seg[0].text[1:-1]))
                     continue
                 pp = _prop_at(seg, 0)
                 if not (pp and pp[2] == len(seg)):
@@ -1941,7 +1878,7 @@ def _parse_returns(qg: QueryGraph, items) -> None:
                         f"concat of unbound or non-node variable: {pp[0]!r}"
                     )
                 parts.append(("prop", pp[0], pp[1]))
-            qg.concat_returns.append((tuple(parts), alias))
+            qg.items.append(ReturnItem(alias, ("concat", tuple(parts))))
             continue
         # arithmetic / CASE / math-fn items ride the expression path;
         # detection is token-level, so an operator inside a string
@@ -1971,7 +1908,7 @@ def _parse_returns(qg: QueryGraph, items) -> None:
             # RETURN b AS alias (round-8): the binding's id column under
             # a new name — shares id()'s zero-cost projection path (the
             # shape UNION sides need to line their columns up)
-            qg.id_returns.append((body[0].text, alias))
+            qg.items.append(ReturnItem(alias, ("id", body[0].text)))
             continue
         if not (alias is None and len(body) == 1 and body[0].kind == "word"):
             raise CypherParseError(f"unsupported return item: {name!r}")
@@ -1981,13 +1918,8 @@ def _parse_returns(qg: QueryGraph, items) -> None:
             )
         if name not in qg.labels:
             raise CypherParseError(f"return of unbound variable: {name!r}")
-        qg.returns.append(name)
-    if not (
-        qg.returns or qg.prop_returns or qg.edge_prop_returns or qg.aggregates
-        or qg.path_lengths or qg.expr_returns or qg.string_fn_returns
-        or qg.coalesce_returns or qg.id_returns or qg.labels_returns
-        or qg.concat_returns or qg.keys_returns
-    ):
+        qg.items.append(ReturnItem(name, ("var", name)))
+    if not qg.items:
         raise CypherParseError("empty RETURN")
 
 
@@ -2051,28 +1983,6 @@ def bind_params(query: str, params: dict | None) -> str:
     return "".join(out)
 
 
-
-
-
-
-def out_columns(qg: QueryGraph) -> set[str]:
-    """Names of the columns a planned qg emits (bindings + aliases)."""
-    return (
-        set(qg.returns)
-        | {alias for _, _, alias in qg.prop_returns}
-        | {alias for _, _, alias in qg.edge_prop_returns}
-        | {a.alias for a in qg.aggregates}
-        | {alias for _, alias in qg.path_lengths}
-        | {it.alias for it in qg.expr_returns}
-        | {a for _, _, _, a in qg.string_fn_returns}
-        | {a for _, _, _, a in qg.coalesce_returns}
-        | {a for _, a in qg.id_returns}
-        | {a for _, a in qg.labels_returns}
-        | {a for _, a in qg.concat_returns}
-        | {a for _, a, _w in qg.keys_returns}
-    )
-
-
 def order_item(text: str) -> tuple[str, bool]:
     """The one ORDER BY item reader: the body as written and the DESC
     flag of a trailing ASC/DESC token."""
@@ -2093,7 +2003,7 @@ def _parse_order_limit(
     or ``b.prop`` (extension): a property sorted without being
     returned, resolved via the planner's props join and dropped after
     LIMIT."""
-    out_cols = out_columns(qg)
+    out_cols = {it.alias for it in qg.items}
     for part in order_by:
         body, desc = order_item(part)
         ptoks = lex(body)

@@ -99,16 +99,11 @@ class GraphStats:
             sum(lc.values()), sum(tc.values()), lc, tc, tpc, ep, one_label
         )
 
-    # selectivities (StatsStore.scala:179-189)
+    # selectivity (StatsStore.scala:179-189)
     def node_sel(self, label: str | None) -> float:
         if label is None or self.node_count == 0:
             return 1.0
         return self.label_counts.get(label, 0) / self.node_count
-
-    def edge_sel(self, types: list[str] | None) -> float:
-        if not types or self.edge_count == 0:
-            return 1.0
-        return sum(self.type_counts.get(t, 0) for t in types) / self.edge_count
 
     def label_card(self, label: str | None) -> int:
         if label is None:

@@ -68,8 +68,8 @@ PRED_OPS = {
 
 def apply_scalar_fn(spec: str, c: "F.Column") -> "F.Column":
     """Evaluate an encoded scalar-function spec over a property column —
-    shared by WHERE pushdown (node_set) and RETURN projection
-    (string_fn_returns). Spec = fn name, optionally with
+    shared by WHERE pushdown (node_set) and RETURN projection (a
+    ReturnItem's "sfn" node). Spec = fn name, optionally with
     US-separated args: ``substring\\x1f<start>[\\x1f<len>]`` (0-based
     per openCypher; Spark's substring is 1-based), ``replace\\x1f<search>
     \\x1f<repl>``, ``left/right\\x1f<n>``, or a bare

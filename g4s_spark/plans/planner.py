@@ -50,6 +50,7 @@ from ..cypher.parser import (
     Projection,
     QueryGraph,
     Remove,
+    ReturnItem,
     SetClause,
     Statement,
     Unwind,
@@ -70,7 +71,6 @@ from ..cypher.parser import (
     _top_cmps,
     lex,
     order_item,
-    out_columns,
 )
 from ..graph.stats import hist_sel
 from ..graph.store import PRED_OPS, PropertyGraph, apply_scalar_fn
@@ -199,9 +199,8 @@ def _write_statement(query, cls) -> tuple[QueryGraph, object]:
 def _write_rows(graph: PropertyGraph, qg: QueryGraph, bindings) -> DataFrame:
     """Plan a write's MATCH through plan_match, returning ``bindings``
     (the ones the write reads) as well."""
-    for b in bindings:
-        if b not in qg.returns:
-            qg.returns.append(b)
+    for b in dict.fromkeys(bindings):
+        qg.items.append(ReturnItem(b, ("var", b)))
     return plan_match(graph, qg).df
 
 
@@ -299,7 +298,7 @@ def run_cypher_set(graph: PropertyGraph, query) -> PropertyGraph:
         ends += [e.src, e.dst]
         if kind == "expr":
             # the current weight rides the match as an edge-prop column
-            qg.edge_prop_returns.append((en, "weight", f"_setw_{en}"))
+            qg.items.append(ReturnItem(f"_setw_{en}", ("eprop", en, "weight")))
     matched = _write_rows(graph, qg, [b for b, _ in label_adds] + list(sets) + ends)
     out = graph
     for en, (kind, v) in edge_sets.items():
@@ -671,6 +670,55 @@ def expr_col(node, raw) -> Column:
     return _ARITH[op](expr_col(l, raw), expr_col(r, raw))
 
 
+# the leaves of a ReturnItem tree: a node binding's id column, a node
+# or edge property, a node's label set or props map, a path length
+_LEAVES = ("var", "id", "prop", "eprop", "labels", "keys", "properties", "length")
+
+
+def item_col(node, leaf) -> Column:
+    """The one RETURN item compiler: a ReturnItem tree -> Column, over
+    ``leaf(node)``, the column of a leaf node. A bare property stays the
+    uncast string (the props map is string-valued); the arithmetic nodes
+    compile through expr_col, whose leaves are doubles. labels() reads
+    the sorted comma-joined label set and keys()/properties() render the
+    props map sorted and comma-joined (the scalar-column rendering of
+    openCypher's lists and maps); a string concatenation is NULL when
+    any part is, like openCypher's + (F.concat)."""
+    kind = node[0]
+    if kind in ("keys", "properties"):
+        props = leaf(node)
+        if kind == "keys":
+            return F.concat_ws(",", F.array_sort(F.map_keys(props)))
+        return F.concat_ws(",", F.transform(
+            F.array_sort(F.map_entries(props)),
+            lambda s: F.concat(s.key, F.lit("="), s.value),
+        ))
+    if kind in _LEAVES:
+        return leaf(node)
+    if kind == "sfn":
+        return apply_scalar_fn(node[1], item_col(node[2], leaf))
+    if kind == "coalesce":
+        return F.coalesce(item_col(node[1], leaf), F.lit(node[2]))
+    if kind == "concat":
+        return F.concat(*(
+            F.lit(p[1]) if p[0] == "str" else item_col(p, leaf) for p in node[1]
+        ))
+    return expr_col(node, lambda b, p: leaf(("prop", b, p)))
+
+
+def _item_leaves(qg: QueryGraph) -> list[tuple]:
+    """The distinct leaves of qg's RETURN items, in item order (a size()
+    operand is its ("prop", b, p) leaf)."""
+    out: dict[tuple, None] = {}
+    for it in qg.items:
+        for n in expr_walk(it.expr) if it.expr is not None else ():
+            if n[0] == "strlen":
+                n = ("prop", *n[1:])
+            if n[0] in _LEAVES:
+                out[n] = None
+    return list(out)
+
+
 def _run_unwind(graph: PropertyGraph, unwinds, rest: list, resolve: bool) -> DataFrame:
     """Leading UNWIND [literals] | range() AS x (chainable): a row
     generator cross-multiplied with the rest of the part's (distinct)
@@ -810,6 +858,12 @@ _DISTINCT_PROP_ORDER = (
     "ORDER BY a property with RETURN DISTINCT: return the "
     "property with an alias and ORDER BY the alias"
 )
+
+
+def _prop_items(qg: QueryGraph) -> list[str]:
+    """The aliases of qg's bare node-property items: their columns hold
+    property strings and sort as property sort keys (_prop_sort)."""
+    return [it.alias for it in qg.items if it.agg is None and it.expr[0] == "prop"]
 
 
 def _prop_sort(col: str, desc: bool) -> list[Column]:
@@ -1064,28 +1118,6 @@ def _run_carry_stage(carried: DataFrame, proj: Projection, dedup: bool):
     return out, key_names + agg_names, (order, (), hidden)
 
 
-def _new_out_col(qg: QueryGraph, marks: tuple[int, ...]) -> str:
-    """Alias of the single item _parse_returns just appended."""
-    lists = (
-        [a.alias for a in qg.aggregates],
-        [a for _, _, a in qg.prop_returns],
-        [a for _, _, a in qg.edge_prop_returns],
-        [a for _, a in qg.path_lengths],
-        [it.alias for it in qg.expr_returns],
-        [a for _, _, _, a in qg.string_fn_returns],
-        [a for _, _, _, a in qg.coalesce_returns],
-        [a for _, a in qg.id_returns],
-        [a for _, a in qg.labels_returns],
-        [a for _, a in qg.concat_returns],
-        [a for _, a, _w in qg.keys_returns],
-        list(qg.returns),
-    )
-    for prev_len, cur in zip(marks, lists):
-        if len(cur) > prev_len:
-            return cur[-1]
-    raise CypherParseError("WITH item produced no output column")
-
-
 def _run_stage(
     graph: PropertyGraph,
     matches: list[Match],
@@ -1103,7 +1135,7 @@ def _run_stage(
     with NULLs for the stage's new bindings (and count(b) = 0). A
     RETURN without DISTINCT or aggregates can sort by a property of a
     binding it returns (`ORDER BY b.prop`), sorted like a property
-    sort key."""
+    sort key, as is an ORDER BY of a bare property item's alias."""
     qg = QueryGraph()
     _parse_clauses(matches, qg)
     if matches[0].optional:
@@ -1155,7 +1187,7 @@ def _run_stage(
             if n in qg.paths or n in qg.opt_paths:
                 raise CypherParseError(f"cannot carry path {n!r}; use length({n})")
             if n in qg.labels:
-                qg.returns.append(n)
+                qg.items.append(ReturnItem(n, ("var", n)))
                 sel.append((n, a or n))
                 continue
             if carried is not None and n in carried.columns:
@@ -1163,48 +1195,31 @@ def _run_stage(
                 sel.append((n, a or n))
                 continue
             raise CypherParseError(f"WITH/RETURN references unknown name: {n!r}")
-        marks = (
-            len(qg.aggregates), len(qg.prop_returns),
-            len(qg.edge_prop_returns), len(qg.path_lengths),
-            len(qg.expr_returns), len(qg.string_fn_returns),
-            len(qg.coalesce_returns), len(qg.id_returns),
-            len(qg.labels_returns), len(qg.concat_returns),
-            len(qg.keys_returns), len(qg.returns),
-        )
         _parse_returns(qg, [it])
-        out = _new_out_col(qg, marks)
-        sel.append((out, out))
-    prop_keys: list[str] = []
+        sel.append((qg.items[-1].alias,) * 2)
 
     def hide(body: str, a: str) -> bool:
         ptoks = lex(body)
         pr = _prop_at(ptoks, 0)
         if (
-            dedup or qg.aggregates or any(x.agg is not None for x in qg.expr_returns)
-            or not (pr and pr[2] == len(ptoks) and pr[0] in qg.returns)
+            dedup or any(x.agg for x in qg.items)
+            or not (pr and pr[2] == len(ptoks) and ReturnItem(pr[0], ("var", pr[0])) in qg.items)
         ):
             return False
-        qg.prop_returns.append((pr[0], pr[1], a))
+        qg.items.append(ReturnItem(a, ("prop", pr[0], pr[1])))
         sel.append((a, a))
-        prop_keys.append(a)
         return True
 
     order, hidden = _hide_order(proj.order_by, [dst for _, dst in sel], hide)
     dummy_added = False
-    if not (
-        qg.returns or qg.prop_returns or qg.edge_prop_returns
-        or qg.aggregates or qg.path_lengths or qg.expr_returns
-        or qg.string_fn_returns or qg.coalesce_returns
-        or qg.id_returns or qg.labels_returns or qg.concat_returns
-        or qg.keys_returns
-    ):
+    if not qg.items:
         # carried-only projection over a new pattern = existence check;
         # plan needs at least one emitted binding, then it is dropped
         # (the post-select dedup below restores distinctness)
         keys = [c for c in (carried.columns if carried is not None else [])
                 if c in qg.labels]
         dummy = keys[0] if keys else next(iter(qg.labels))
-        qg.returns.append(dummy)
+        qg.items.append(ReturnItem(dummy, ("var", dummy)))
         dummy_added = True
     carry_df = None
     if carried is not None:
@@ -1225,7 +1240,7 @@ def _run_stage(
     if dedup or dummy_added:
         df = df.dropDuplicates()
     cols = [dst for _, dst in sel]
-    return df, cols, (order, prop_keys, hidden), {x for x in cols if x in qg.labels}
+    return df, cols, (order, _prop_items(qg), hidden), {x for x in cols if x in qg.labels}
 
 
 def _unwind_column(df: DataFrame, u: Unwind) -> DataFrame:
@@ -1338,8 +1353,8 @@ def _qg_referenced_strings(qg: QueryGraph) -> set[str]:
     for f in dc_fields(qg):
         if f.name not in skip:
             walk(getattr(qg, f.name))
-    # other edges' variable names are consumers too (edge_filters /
-    # edge_prop_returns address edges by name); collect them so a binding
+    # other edges' variable names are consumers too (edge_filters and
+    # edge-property items address edges by name); collect them so a binding
     # named like an edge variable is conservatively kept
     for e in qg.edges:
         if e.name is not None:
@@ -1365,7 +1380,7 @@ def _eliminate_tautological_edges(qg: QueryGraph, stats, steps: list) -> QueryGr
     Soundness gates: exact single type, plain 1-hop directed edge, no
     edge variable, no self-loop; ``y`` unreferenced anywhere (generic
     conservative scan incl. optionals / pattern filters / verbs — verb
-    layers put their bindings in ``returns``), in no other edge, no
+    layers return their bindings as items), in no other edge, no
     extra labels; skip entirely under paths (edge indices), carried
     stages, count(*) (it counts distinct FULL-pattern matches), unknown
     endpoint stats, or multi-label graphs (the triplet identity is only
@@ -1379,7 +1394,7 @@ def _eliminate_tautological_edges(qg: QueryGraph, stats, steps: list) -> QueryGr
         or qg.paths
         or qg.opt_paths
         or qg.carry_required
-        or any(a.binding == "*" for a in qg.aggregates)
+        or any(it.expr is None for it in qg.items)
     ):
         return qg
     referenced = _qg_referenced_strings(qg)
@@ -1448,9 +1463,8 @@ def _probe_order(qg: QueryGraph, cols: list[str]):
     if (
         not edges
         or qg.optionals or qg.pattern_filters or qg.cross_filters
-        or qg.expr_filters or qg.edge_filters or qg.edge_prop_returns
-        or qg.paths or qg.path_lengths or qg.carry_required
-        or any(a.on_edge for a in qg.aggregates)
+        or qg.expr_filters or qg.edge_filters or qg.paths or qg.carry_required
+        or any(n[0] in ("eprop", "length") for n in _item_leaves(qg))
         or any(
             e.undirected or (e.min_hops, e.max_hops) != (1, 1) or e.src == e.dst
             for e in edges
@@ -1616,27 +1630,30 @@ def plan_match(
         # hop-eliminated) query graph and stats
         return _edge_implies_label(qg, stats, e, binding)
 
-    # edge-variable property returns: (edge name) -> [(prop, out alias)]
+    # The leaves every RETURN item reads, gathered once: a binding's id
+    # column is the binding column; every other leaf gets its own column
+    # (_v<i>). An edge leaf is a column of its edge scan; a node
+    # property, label set or props map resolves after the match; a path
+    # length is computed once its dist columns are bound.
+    leaves = _item_leaves(qg)
+    leaf_cols = {
+        n: n[1] if n[0] in ("var", "id") else f"_v{i}" for i, n in enumerate(leaves)
+    }
+    item_bindings = list(dict.fromkeys(
+        n[1] for n in leaves if n[0] not in ("eprop", "length")
+    ))
+    # edge name -> [(prop, scan column)]
     edge_prop_cols: dict[str, list[tuple[str, str]]] = {}
-    for en, p, a in qg.edge_prop_returns:
-        edge_prop_cols.setdefault(en, []).append((p, a))
-    # edge-property aggregates materialize their value column on the edge
-    # scan like returned edge props, under the _agg_ alias the aggregate
-    # emitter consumes
-    for ag in qg.aggregates:
-        if ag.on_edge:
-            edge_prop_cols.setdefault(ag.binding, []).append(
-                (ag.prop, f"_agg_{ag.alias}")
-            )
-    edge_alias_set = {a for _, _, a in qg.edge_prop_returns}
-    edge_agg_aliases = [f"_agg_{a.alias}" for a in qg.aggregates if a.on_edge]
+    for n in leaves:
+        if n[0] == "eprop":
+            edge_prop_cols.setdefault(n[1], []).append((n[2], leaf_cols[n]))
+    edge_leaf_cols = [c for cs in edge_prop_cols.values() for _, c in cs]
+    measured_paths = [n[1] for n in leaves if n[0] == "length"]
 
     # length(p): var-length edges on a measured path carry a min-hop dist
     # column (computed inside the closure, see _var_length_pairs); fixed
     # edges contribute compile-time constants
-    measured = {
-        i for pn, _ in qg.path_lengths if pn in qg.paths for i in qg.paths[pn]
-    }
+    measured = {i for pn in measured_paths if pn in qg.paths for i in qg.paths[pn]}
     dist_alias_by_idx: dict[int, str] = {}
     dist_alias_by_id: dict[int, str] = {}
     for i in sorted(measured):
@@ -1649,7 +1666,7 @@ def plan_match(
     # var-length edges carry a dist column through the group's left
     # join; (group idx, edge idx) -> alias
     opt_dist_alias: dict[tuple[int, int], str] = {}
-    for pn, _ in qg.path_lengths:
+    for pn in measured_paths:
         if pn not in qg.opt_paths:
             continue
         gi, idxs = qg.opt_paths[pn]
@@ -1888,25 +1905,9 @@ def plan_match(
     df: DataFrame | None = None
     bound: set[str] = set()
 
-    prop_bindings = [b for b, _, _ in qg.prop_returns] + [
-        b for _, b, _, _ in qg.string_fn_returns
-    ] + [b for b, _, _, _ in qg.coalesce_returns] + [
-        b for b, _ in qg.id_returns
-    ] + [b for b, _ in qg.labels_returns] + [
-        p[1] for parts, _ in qg.concat_returns for p in parts if p[0] == "prop"
-    ] + [b for b, _, _w in qg.keys_returns]
-    agg_bindings = [
-        a.binding for a in qg.aggregates if a.binding != "*" and not a.on_edge
-    ]
-    # arithmetic RETURN items: their prop leaves resolve like prop_returns
-    expr_leaves = list(dict.fromkeys(
-        leaf for it in qg.expr_returns for leaf in expr_prop_leaves(it.expr)
-    ))
-    expr_bindings = list(dict.fromkeys(b for b, _ in expr_leaves))
-
     opt_bindings = {b for g in qg.optionals for e in g for b in (e.src, e.dst)}
     # count(*) counts distinct full-pattern matches — no binding is ever dead
-    star = any(a.binding == "*" for a in qg.aggregates)
+    star = any(it.expr is None for it in qg.items)
 
     def base_need() -> set[str]:
         # optional groups left-join on their shared bindings later, so those
@@ -1914,9 +1915,7 @@ def plan_match(
         # columns ride along like bindings (a match with a returned edge
         # value is distinct per value — openCypher's per-edge semantics)
         need = (
-            set(qg.returns) | set(prop_bindings) | set(agg_bindings)
-            | set(expr_bindings)
-            | opt_bindings | edge_alias_set | set(edge_agg_aliases)
+            set(item_bindings) | opt_bindings | set(edge_leaf_cols)
             | {a.binding for grp in qg.cross_filters for a in grp}
             | {b for ef in qg.expr_filters
                for b, _ in expr_prop_leaves(ef[0]) + expr_prop_leaves(ef[2])}
@@ -1986,8 +1985,7 @@ def plan_match(
     # into a local relation of distinct matches: no job until a later
     # step (property resolution, aggregation) needs one
     probe_cols = list(dict.fromkeys(
-        qg.returns + prop_bindings + agg_bindings + expr_bindings
-        + (sorted(edge_bindings) if star else [])
+        item_bindings + (sorted(edge_bindings) if star else [])
     ))
     probed = _probe_anchored(graph, qg, probe_cols) if carry is None else None
     if probed is not None:
@@ -2145,8 +2143,7 @@ def plan_match(
             )
         later = {b for g2 in qg.optionals[gi + 1:] for e in g2 for b in (e.src, e.dst)}
         galiases = {
-            a for en2, _, a in qg.edge_prop_returns
-            if en2 in {e.name for e in group if e.name}
+            c for e in group if e.name for _, c in edge_prop_cols.get(e.name, ())
         }
         # dist columns of measured optional paths ride the left join
         gdists = {
@@ -2155,8 +2152,7 @@ def plan_match(
         }
         guard: set[str] = set()
         if not gdists and any(
-            pn in qg.opt_paths and qg.opt_paths[pn][0] == gi
-            for pn, _ in qg.path_lengths
+            pn in qg.opt_paths and qg.opt_paths[pn][0] == gi for pn in measured_paths
         ):
             # a fixed-length measured path needs one non-shared column
             # as its NULL-for-unmatched indicator
@@ -2164,7 +2160,7 @@ def plan_match(
             if nonshared:
                 guard = {nonshared[0]}
         keep = sorted(
-            (gb & (set(qg.returns) | set(prop_bindings) | set(agg_bindings) | later))
+            (gb & (set(item_bindings) | later))
             | set(shared) | galiases | gdists | guard
         )
         opt_group_nonshared[gi] = [c for c in keep if c not in shared]
@@ -2188,63 +2184,42 @@ def plan_match(
     clause_state["clause"] = 0
 
     # length(p) materializes once every referenced dist column is bound:
-    # constants for fixed-hop edges + the min-hop dist of each var edge
-    path_len_aliases: list[str] = []
-    for pname, alias in qg.path_lengths:
-        const = 0
-        parts: list = []
-        if pname in qg.opt_paths:
-            # OPTIONAL path (round-7): NULL for unmatched rows — a
-            # var-length dist part is NULL there already; a fixed-only
-            # path guards on one of the group's non-shared columns
+    # constants for fixed-hop edges + the min-hop dist of each var edge.
+    # An OPTIONAL path (round-7) is NULL for unmatched rows: a var-length
+    # dist part is NULL there already; a fixed-only path guards on one of
+    # the group's non-shared columns
+    for pname in measured_paths:
+        opt = pname in qg.opt_paths
+        if opt:
             gi, idxs = qg.opt_paths[pname]
-            for i in idxs:
-                e = qg.optionals[gi][i]
-                if (gi, i) in opt_dist_alias:
-                    parts.append(F.col(opt_dist_alias[(gi, i)]))
-                else:
-                    const += e.min_hops
-            expr = F.lit(const).cast("long")
-            for p in parts:
-                expr = expr + p
-            if not parts:
-                gb2 = {b for e in qg.optionals[gi] for b in (e.src, e.dst)}
-                guards = [
-                    c for c in opt_group_nonshared.get(gi, ()) if c in gb2
-                ]
-                if not guards:
-                    raise CypherParseError(
-                        "length() of a fixed-length OPTIONAL path whose "
-                        "bindings are all shared with MATCH is unsupported"
-                    )
-                expr = F.when(F.col(guards[0]).isNotNull(), expr)
-            df = df.withColumn(alias, expr)
-            path_len_aliases.append(alias)
-            steps.append(("opt_path_length", pname, alias))
-            continue
-        for i in qg.paths[pname]:
-            e = qg.edges[i]
-            if i in dist_alias_by_idx:
-                parts.append(F.col(dist_alias_by_idx[i]))
-            else:
-                const += e.min_hops
-        expr = F.lit(const).cast("long")
-        for p in parts:
-            expr = expr + p
-        df = df.withColumn(alias, expr)
-        path_len_aliases.append(alias)
-        steps.append(("path_length", pname, alias))
+            hops = [(qg.optionals[gi][i], opt_dist_alias.get((gi, i))) for i in idxs]
+        else:
+            hops = [(qg.edges[i], dist_alias_by_idx.get(i)) for i in qg.paths[pname]]
+        expr = F.lit(sum(e.min_hops for e, d in hops if d is None)).cast("long")
+        for _, d in hops:
+            if d is not None:
+                expr = expr + F.col(d)
+        if opt and all(d is None for _, d in hops):
+            gb2 = {b for e in qg.optionals[gi] for b in (e.src, e.dst)}
+            guards = [c for c in opt_group_nonshared.get(gi, ()) if c in gb2]
+            if not guards:
+                raise CypherParseError(
+                    "length() of a fixed-length OPTIONAL path whose "
+                    "bindings are all shared with MATCH is unsupported"
+                )
+            expr = F.when(F.col(guards[0]).isNotNull(), expr)
+        col = leaf_cols[("length", pname)]
+        df = df.withColumn(col, expr)
+        steps.append(("opt_path_length" if opt else "path_length", pname, col))
 
     # with count(*), every bound binding joins the distinct set, not just
     # the grouped/aggregated ones
     star_extra = [b for b in sorted(bound) if b in df.columns] if star else []
-    needed = list(
-        dict.fromkeys(
-            qg.returns + prop_bindings + agg_bindings + expr_bindings
-            + sorted(edge_alias_set) + edge_agg_aliases
-            + path_len_aliases + star_extra + carry_extras
-        )
-    )
+    needed = list(dict.fromkeys(
+        item_bindings + edge_leaf_cols
+        + [leaf_cols[("length", pn)] for pn in measured_paths]
+        + star_extra + carry_extras
+    ))
     if probed is not None:
         assert needed == probe_cols, (needed, probe_cols)
         out = df  # the probe's rows are distinct already
@@ -2255,42 +2230,34 @@ def plan_match(
     # per binding with property accesses — the Readme.md:66-70 "resolve to
     # payload rows" step, done lazily on the already-distinct match set so
     # the props map is only fetched for surviving ids.
-    prop_cols: dict[str, list[tuple[str, str]]] = {}  # binding -> [(prop, outcol)]
-    for b, p, a in qg.prop_returns:
-        prop_cols.setdefault(b, []).append((p, a))
-    # ORDER BY b.prop (extension): resolve the property as a hidden
-    # sort column, dropped after LIMIT. Restricted to returned bindings
-    # and non-aggregating queries (else alias the property in RETURN).
-    order, ob_aliases = [], []
+    prop_cols: dict[str, list[tuple[str, str]]] = {}  # binding -> [(prop, column)]
+    for n in leaves:
+        if n[0] == "prop":
+            prop_cols.setdefault(n[1], []).append((n[2], leaf_cols[n]))
+    # ORDER BY b.prop (extension): the property resolves with the item
+    # leaves, as a hidden sort column dropped after LIMIT. Restricted to
+    # returned bindings and non-aggregating queries (else alias the
+    # property in RETURN).
+    order, ob_cols = [], []
     for i, (key, desc) in enumerate(qg.order_by):
         if isinstance(key, tuple):
-            ob_b, ob_p = key
-            if qg.aggregates or any(x.agg is not None for x in qg.expr_returns):
+            if any(it.agg for it in qg.items):
                 raise CypherParseError(
                     "ORDER BY a property with aggregation: return the property "
                     "with an alias and ORDER BY the alias"
                 )
-            if ob_b not in needed:
+            if key[0] not in needed:
                 raise CypherParseError(
-                    f"ORDER BY property of non-returned binding: {ob_b!r}"
+                    f"ORDER BY property of non-returned binding: {key[0]!r}"
                 )
-            key = f"_ob_{i}"
-            prop_cols.setdefault(ob_b, []).append((ob_p, key))
-            ob_aliases.append(key)
+            n = ("prop", *key)
+            if n not in leaf_cols:
+                leaf_cols[n] = f"_ob_{i}"
+                prop_cols.setdefault(key[0], []).append((key[1], leaf_cols[n]))
+            key = leaf_cols[n]
+            if key not in ob_cols:
+                ob_cols.append(key)
         order.append((key, desc))
-    for ag in qg.aggregates:
-        if ag.prop is not None and not ag.on_edge:
-            prop_cols.setdefault(ag.binding, []).append((ag.prop, f"_agg_{ag.alias}"))
-    for b, pp in expr_leaves:
-        prop_cols.setdefault(b, []).append((pp, f"_xp_{b}_{pp}"))
-    for _fn, b, pp, a in qg.string_fn_returns:
-        prop_cols.setdefault(b, []).append((pp, f"_sf_{a}"))
-    for b, pp, _dflt, a in qg.coalesce_returns:
-        prop_cols.setdefault(b, []).append((pp, f"_cl_{a}"))
-    for parts, a in qg.concat_returns:
-        for i, p in enumerate(parts):
-            if p[0] == "prop":
-                prop_cols.setdefault(p[1], []).append((p[2], f"_cc_{a}_{i}"))
     for b, cols in prop_cols.items():
         # Resolution is per DISTINCT (id, payload) row (round-9,
         # VERDICT r8 #4): a multi-label node (several LABEL rows, one
@@ -2307,117 +2274,82 @@ def plan_match(
             n = n.filter(F.expr(f"id IN ({ids})") if ids else F.lit(False))
         n = n.select(F.col("id").alias(b), F.col("props").alias(f"_props_{b}"))
         out = out.join(n, on=b, how="left")
-        for p, a in cols:
-            out = out.withColumn(a, F.col(f"_props_{b}").getItem(p))
+        for p, c in cols:
+            out = out.withColumn(c, F.col(f"_props_{b}").getItem(p))
         out = out.drop(f"_props_{b}")
         steps.append(("resolve_props", b, tuple(p for p, _ in cols)))
-
-    # id(b): the binding column IS the node id — a zero-cost projection
-    id_aliases = []
-    for b, a in qg.id_returns:
-        out = out.withColumn(a, F.col(b))
-        id_aliases.append(a)
     # labels(b): the per-id label-set lookup, left-joined per binding
-    labels_aliases = [a for _, a in qg.labels_returns]
-    if qg.labels_returns:
-        out = _join_label_sets(graph, out, qg.labels_returns)
-        steps.extend(("resolve_labels", b) for b, _ in qg.labels_returns)
-    # keys(b)/properties(b): one props-map join per binding (deduped on
-    # (id, payload) like every resolution join — a multi-label node
-    # carries one shared payload), rendered sorted so the result is
-    # deterministic
-    keys_aliases = []
-    for b, a, with_values in qg.keys_returns:
-        n = graph.payload_rows().select(
-            F.col("id").alias(b), F.col("props").alias(f"_kp_{a}")
-        )
-        out = out.join(n, on=b, how="left")
-        if with_values:
-            rendered = F.concat_ws(
-                ",",
-                F.transform(
-                    F.array_sort(F.map_entries(F.col(f"_kp_{a}"))),
-                    lambda s: F.concat(s.key, F.lit("="), s.value),
-                ),
+    label_leaves = [n for n in leaves if n[0] == "labels"]
+    if label_leaves:
+        out = _join_label_sets(graph, out, [(n[1], leaf_cols[n]) for n in label_leaves])
+        steps.extend(("resolve_labels", n[1]) for n in label_leaves)
+    # keys(b)/properties(b): one props-map join per leaf, deduped on (id,
+    # payload) like every resolution join (a multi-label node carries
+    # one shared payload)
+    for n in leaves:
+        if n[0] in ("keys", "properties"):
+            maps = graph.payload_rows().select(
+                F.col("id").alias(n[1]), F.col("props").alias(leaf_cols[n])
             )
-        else:
-            rendered = F.concat_ws(
-                ",", F.array_sort(F.map_keys(F.col(f"_kp_{a}")))
-            )
-        out = out.withColumn(a, rendered).drop(f"_kp_{a}")
-        keys_aliases.append(a)
-        steps.append(("resolve_keys", b, with_values))
-    string_fn_aliases = []
-    for fn, _b, _pp, a in qg.string_fn_returns:
-        out = out.withColumn(a, apply_scalar_fn(fn, F.col(f"_sf_{a}")))
-        string_fn_aliases.append(a)
-    coalesce_aliases = []
-    for _b, _pp, dflt, a in qg.coalesce_returns:
-        out = out.withColumn(a, F.coalesce(F.col(f"_cl_{a}"), F.lit(dflt)))
-        coalesce_aliases.append(a)
-    # string concatenation (round-8): NULL-propagating like openCypher's
-    # + (and SQL ||) — F.concat is NULL if any operand is NULL
-    concat_aliases = []
-    for parts, a in qg.concat_returns:
-        cols = [
-            F.lit(p[1]) if p[0] == "lit" else F.col(f"_cc_{a}_{i}")
-            for i, p in enumerate(parts)
-        ]
-        out = out.withColumn(a, F.concat(*cols))
-        concat_aliases.append(a)
-    # arithmetic RETURN items (extension): evaluate the tree over the
-    # resolved _xp_ leaf columns; non-aggregated items project like
-    # prop_returns, aggregated items stage a value column for the agg
-    plain_expr_aliases = []
-    for it in qg.expr_returns:
-        col = expr_col(it.expr, lambda b, p: F.col(f"_xp_{b}_{p}"))
-        if it.agg is None:
-            out = out.withColumn(it.alias, col)
-            plain_expr_aliases.append(it.alias)
-        else:
-            out = out.withColumn(f"_agg_{it.alias}", col)
-    group_cols = (
-        qg.returns + [a for _, _, a in qg.prop_returns] + sorted(edge_alias_set)
-        + path_len_aliases + plain_expr_aliases + string_fn_aliases
-        + coalesce_aliases + concat_aliases + id_aliases + labels_aliases
-        + keys_aliases + carry_extras
-    )
-    expr_aggs = [it for it in qg.expr_returns if it.agg is not None]
-    if qg.aggregates or expr_aggs:
+            out = out.join(maps, on=n[1], how="left")
+            steps.append(("resolve_keys", n[1], n[0] == "properties"))
+
+    # Every item compiles over its leaf columns (item_col) under its
+    # alias; the first item of a repeated alias wins. A binding item is
+    # its binding column; an aggregate's source stages as _agg_<alias>
+    # unless it is a binding column.
+    first: dict[str, ReturnItem] = {}
+    for it in qg.items:
+        first.setdefault(it.alias, it)
+    items = list(first.values())
+    cols = [it.alias for it in items]
+    keys = [it for it in items if not it.agg]
+    aggs = [it for it in items if it.agg]
+
+    def value(node) -> Column:
+        return item_col(node, lambda leaf: F.col(leaf_cols[leaf]))
+
+    staged = {it.alias: value(it.expr) for it in keys if it.expr[0] != "var"}
+    staged.update({
+        f"_agg_{it.alias}": value(it.expr)
+        for it in aggs if it.expr is not None and it.expr[0] != "var"
+    })
+    if staged:
+        out = out.withColumns(staged)
+    if aggs:
         # aggregates over distinct matches (existence semantics): rows are
         # already distinct over (returned + aggregated bindings); numeric
         # aggs evaluate the string prop (or the staged expression) as a
         # double. count(b.prop) counts non-NULL values (VERDICT r6 #8)
-        aggs = [
+        agg_cols = [
             _agg_col(
-                ag.func, ag.distinct,
-                None if ag.binding == "*"
-                else ag.binding if ag.prop is None else f"_agg_{ag.alias}",
-                ag.param,
-            ).alias(ag.alias)
-            for ag in qg.aggregates
-        ] + [_agg_col(it.agg, False, f"_agg_{it.alias}").alias(it.alias) for it in expr_aggs]
-        out = out.groupBy(*group_cols).agg(*aggs) if group_cols else out.agg(*aggs)
-        steps.append(("aggregate", tuple(
-            [ag.alias for ag in qg.aggregates] + [it.alias for it in expr_aggs]
-        )))
-    elif (
-        qg.prop_returns or qg.edge_prop_returns or qg.expr_returns
-        or qg.string_fn_returns or qg.coalesce_returns
-        or qg.id_returns or qg.labels_returns or qg.concat_returns
-        or qg.keys_returns
-    ):
-        # distinct matches projected to properties; duplicates from shared
+                it.agg, it.distinct,
+                None if it.expr is None
+                else it.expr[1] if it.expr[0] == "var" else f"_agg_{it.alias}",
+                it.param,
+            ).alias(it.alias)
+            for it in aggs
+        ]
+        group = [it.alias for it in keys] + carry_extras
+        out = out.groupBy(*group).agg(*agg_cols) if group else out.agg(*agg_cols)
+        steps.append(("aggregate", tuple(it.alias for it in aggs)))
+        if keys + aggs != items:
+            out = out.select(*cols, *carry_extras)
+    else:
+        # distinct matches projected to the items; duplicates from shared
         # property values are kept (the match set, not the value set, is
-        # what's distinct) unless RETURN DISTINCT asks for the value set
-        out = out.select(*group_cols, *ob_aliases)
-        if qg.distinct:
-            if ob_aliases:
+        # what's distinct) unless RETURN DISTINCT asks for the value set.
+        # Bindings and path lengths alone are distinct already; bindings
+        # alone are the matched columns in item order.
+        if staged:
+            out = out.select(*cols, *carry_extras, *ob_cols)
+        if qg.distinct and any(it.expr[0] not in ("var", "length") for it in items):
+            if ob_cols:
                 raise CypherParseError(_DISTINCT_PROP_ORDER)
             out = out.dropDuplicates()
-            steps.append(("distinct", tuple(group_cols)))
+            steps.append(("distinct", tuple(cols + carry_extras)))
     out = _order_limit(
-        out, out_columns(qg), order, ob_aliases, ob_aliases, qg.skip, qg.limit
+        out, cols, order, ob_cols + _prop_items(qg), ob_cols, qg.skip, qg.limit
     )
     if order:
         steps.append(("order_by", tuple(qg.order_by)))

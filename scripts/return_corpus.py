@@ -1,22 +1,24 @@
 """Characterization corpus for the RETURN/WITH item grammar.
 
-Round-16, second tokenizer-migration chunk (VERDICT r15 "what's
-missing #3" names the expression grammar): before migrating the
-twelve `re.fullmatch` RETURN-item shapes in _parse_returns onto token
-spans, snapshot parse() behavior; after, diff. Driver-only.
+Prints, for every item in ITEMS under two MATCH frames, the parsed
+QueryGraph's RETURN item list (one ``(alias, expr, agg, distinct,
+param)`` tuple per ReturnItem, in item order) or the parse error. Run
+it before and after a change to the item grammar and diff the two
+outputs. Driver-only.
 
 Usage:
     python scripts/return_corpus.py > /tmp/ret_before.txt
-    # ... refactor ...
+    # ... change the grammar ...
     python scripts/return_corpus.py > /tmp/ret_after.txt
     diff /tmp/ret_before.txt /tmp/ret_after.txt
 """
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from g4s_spark.cypher.parser import CypherParseError, parse
 
@@ -89,14 +91,7 @@ ITEMS = [
 
 
 def _render(g) -> str:
-    return (
-        f"ret={g.returns} prop={g.prop_returns} eprop={g.edge_prop_returns} "
-        f"agg={g.aggregates} plen={g.path_lengths} "
-        f"expr={[(i.agg, i.expr, i.alias) for i in g.expr_returns]} "
-        f"sfn={g.string_fn_returns} coal={g.coalesce_returns} "
-        f"id={g.id_returns} lab={g.labels_returns} "
-        f"cat={g.concat_returns} keys={g.keys_returns}"
-    )
+    return str([(it.alias, it.expr, it.agg, it.distinct, it.param) for it in g.items])
 
 
 def main() -> None:

@@ -2,14 +2,14 @@
 
 import pytest
 
-from g4s_spark.cypher import CypherParseError, PatternEdge, parse
+from g4s_spark.cypher import CypherParseError, PatternEdge, ReturnItem, parse
 
 
 def test_one_hop():
     qg = parse("MATCH (a:A)-[:X]->(b:B) RETURN b")
     assert qg.labels == {"a": "A", "b": "B"}
     assert qg.edges == [PatternEdge("a", "b", ("X",))]
-    assert qg.returns == ["b"]
+    assert qg.items == [ReturnItem("b", ("var", "b"))]
 
 
 def test_two_hop_reverse_edge():
@@ -19,7 +19,7 @@ def test_two_hop_reverse_edge():
 
 def test_multi_return_and_multi_pattern():
     qg = parse("MATCH (a:A)-[:X]->(b:B), (b)-[:Y]->(c:C) RETURN a, b, c")
-    assert qg.returns == ["a", "b", "c"]
+    assert [it.expr for it in qg.items] == [("var", "a"), ("var", "b"), ("var", "c")]
     assert qg.labels["b"] == "B"
     assert len(qg.edges) == 2
 
@@ -53,18 +53,18 @@ def test_where_filters():
 
 def test_orderby_limit_count():
     qg = parse("MATCH (a:A)-[:X]->(b) RETURN a, count(b) AS n ORDER BY n DESC, a LIMIT 5")
-    assert qg.returns == ["a"]
-    a, = qg.aggregates
-    assert (a.func, a.binding, a.prop, a.alias) == ("count", "b", None, "n")
+    assert qg.items[0] == ReturnItem("a", ("var", "a"))
+    a = qg.items[1]
+    assert (a.agg, a.expr, a.alias) == ("count", ("var", "b"), "n")
     assert qg.order_by == [("n", True), ("a", False)]
     assert qg.limit == 5
 
 
 def test_count_default_alias():
     qg = parse("MATCH (a:A)-[:X]->(b) RETURN count(b)")
-    a, = qg.aggregates
-    assert (a.func, a.binding, a.prop, a.alias) == ("count", "b", None, "count_b")
-    assert qg.returns == []
+    a, = qg.items
+    assert (a.agg, a.expr, a.alias) == ("count", ("var", "b"), "count_b")
+    assert [it for it in qg.items if it.agg is None] == []
 
 
 @pytest.mark.parametrize(
@@ -84,15 +84,15 @@ def test_rejects_out_of_subset(bad):
 
 def test_return_distinct_noop():
     qg = parse("MATCH (a:A)-[:X]->(b) RETURN DISTINCT a, b")
-    assert qg.returns == ["a", "b"]
+    assert [it.expr for it in qg.items] == [("var", "a"), ("var", "b")]
 
 
 def test_count_star():
     qg = parse("MATCH (a:A)-[:X]->(b) RETURN a, count(*) AS n")
-    ag, = qg.aggregates
-    assert (ag.func, ag.binding, ag.prop, ag.alias) == ("count", "*", None, "n")
+    ag = qg.items[1]
+    assert (ag.agg, ag.expr, ag.alias) == ("count", None, "n")
     qg2 = parse("MATCH (a:A)-[:X]->(b) RETURN count(*)")
-    assert qg2.aggregates[0].alias == "count_star"
+    assert qg2.items[0].alias == "count_star"
 
 
 def test_rejects_edge_variable_reuse():
@@ -160,7 +160,7 @@ def test_undirected_matches_both_orientations(spark):
 
 def test_expr_return_parses():
     qg = parse("MATCH (c:Customer) RETURN c, c.acctbal / 2 + 10 AS half")
-    (it,) = qg.expr_returns
+    _, it = qg.items
     assert it.agg is None and it.alias == "half"
     assert it.expr == ("op", "+", ("op", "/", ("prop", "c", "acctbal"), ("num", 2.0)), ("num", 10.0))
 
@@ -170,7 +170,7 @@ def test_expr_aggregate_parses():
         "MATCH (o:Order)-[:HAS_ITEM]->(l:Lineitem) "
         "RETURN o, sum(l.extendedprice * (1 - l.discount)) AS rev"
     )
-    (it,) = qg.expr_returns
+    _, it = qg.items
     assert it.agg == "sum" and it.alias == "rev"
     assert it.expr[0] == "op" and it.expr[1] == "*"
 
@@ -194,7 +194,7 @@ def test_expr_unbalanced_parens_rejected():
 
 def test_return_star_expands_named_bindings():
     qg = parse("MATCH (a:A)-[:X]->(b:B)-[:Y]->() RETURN *")
-    assert qg.returns == ["a", "b"]  # anonymous endpoint excluded
+    assert [it.expr for it in qg.items] == [("var", "a"), ("var", "b")]  # anonymous endpoint excluded
 
 
 def test_return_star_with_no_named_bindings_rejected():

@@ -10,7 +10,7 @@ its optional group (openCypher), never drop rows from the required match.
 
 import pytest
 
-from g4s_spark.cypher import CypherParseError, parse
+from g4s_spark.cypher import CypherParseError, ReturnItem, parse
 from g4s_spark.graph import PropertyGraph
 from g4s_spark.plans import plan_match, run_cypher
 
@@ -40,7 +40,7 @@ def test_parse_edge_variable_and_filters():
     assert len(qg.edge_filters) == 1
     ef = qg.edge_filters[0]
     assert (ef.binding, ef.prop, ef.op, ef.value) == ("e", "weight", ">", 2.0)
-    assert qg.edge_prop_returns == [("e", "weight", "w")]
+    assert qg.items[1] == ReturnItem("w", ("eprop", "e", "weight"))
 
 
 def test_edge_where_filters_scan(weighted):

@@ -123,3 +123,27 @@ def test_order_by_property_of_non_returned_binding_is_rejected(g, query):
     rows (several H nodes point at each N)."""
     with pytest.raises(CypherParseError, match="ORDER BY property of non-returned binding: 'h'"):
         run_cypher(g, query)
+
+
+@pytest.mark.parametrize("query,cols", [
+    ("MATCH (n:N) RETURN id(n) AS i, n.s AS s, toUpper(n.s) AS u", ["i", "s", "u"]),
+    ("MATCH (n:N) RETURN count(*) AS c, n.s AS s", ["c", "s"]),
+    ("MATCH (n:N) WITH n MATCH (n:N) RETURN n.s AS s, n, id(n) AS i", ["s", "n", "i"]),
+])
+def test_return_columns_follow_item_order(g, query, cols):
+    """openCypher: a RETURN emits its columns in item order, whatever
+    the kinds of its items."""
+    assert run_cypher(g, query).columns == cols
+
+
+@pytest.mark.parametrize("query", [
+    "MATCH (n:N) WHERE n.x >= 0 RETURN n.x AS x ORDER BY x{}",
+    "MATCH (n:N) WITH n MATCH (n:N) WHERE n.x >= 0 RETURN n.x AS x ORDER BY x{}",
+])
+def test_order_by_property_alias_sorts_numerically(g, query):
+    """An ORDER BY of a bare property item's alias sorts like `ORDER BY
+    n.x`: numeric values by number, not as text ('10.0' < '2.0')."""
+    asc = [r.x for r in run_cypher(g, query.format("")).collect()]
+    assert asc == ["2.0", "2.0", "9.0", "10.0"]
+    desc = [r.x for r in run_cypher(g, query.format(" DESC")).collect()]
+    assert desc == ["10.0", "9.0", "2.0", "2.0"]

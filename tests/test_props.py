@@ -4,7 +4,7 @@ result resolution to payloads follows Readme.md:66-70 semantics)."""
 
 import pytest
 
-from g4s_spark.cypher import CypherParseError, parse
+from g4s_spark.cypher import CypherParseError, ReturnItem, parse
 from g4s_spark.graph import PropertyGraph
 from g4s_spark.plans import run_cypher
 from pyspark.sql import functions as F
@@ -35,21 +35,23 @@ def rows(df):
 
 def test_parse_prop_return():
     qg = parse("MATCH (a:A)-[:X]->(b) RETURN a, b.name AS bn, b.price")
-    assert qg.returns == ["a"]
-    assert qg.prop_returns == [("b", "name", "bn"), ("b", "price", "b_price")]
+    assert qg.items[0] == ReturnItem("a", ("var", "a"))
+    assert qg.items[1:] == [
+        ReturnItem("bn", ("prop", "b", "name")), ReturnItem("b_price", ("prop", "b", "price"))
+    ]
 
 
 def test_parse_numeric_aggregates():
     qg = parse("MATCH (a)-[:X]->(b) RETURN a, sum(b.price) AS total, avg(b.price)")
-    s, v = qg.aggregates
-    assert (s.func, s.binding, s.prop, s.alias) == ("sum", "b", "price", "total")
-    assert (v.func, v.binding, v.prop, v.alias) == ("avg", "b", "price", "avg_b_price")
+    _, s, v = qg.items
+    assert (s.agg, s.expr, s.alias) == ("sum", ("prop", "b", "price"), "total")
+    assert (v.agg, v.expr, v.alias) == ("avg", ("prop", "b", "price"), "avg_b_price")
     with pytest.raises(CypherParseError):
         parse("MATCH (a)-[:X]->(b) RETURN sum(b)")  # sum needs a property
     # count(b.prop) counts non-NULL values (round-7, VERDICT r6 #8)
     qg2 = parse("MATCH (a)-[:X]->(b) RETURN count(b.price)")
-    c = qg2.aggregates[0]
-    assert (c.func, c.binding, c.prop, c.alias) == ("count", "b", "price", "count_b_price")
+    c = qg2.items[0]
+    assert (c.agg, c.expr, c.alias) == ("count", ("prop", "b", "price"), "count_b_price")
 
 
 def test_prop_return_values(shop):

@@ -1,20 +1,18 @@
 """Parse-level pins for the token-span RETURN/WITH item grammar
-(round-16, second tokenizer-migration chunk after the WHERE atoms —
-the twelve `re.fullmatch` item shapes retired for _ret_item_shape /
-_apply_ret_item token dispatch). Driver-only — no SparkSession;
+(the token shapes of _ret_item_shape, appended to QueryGraph.items as
+one ReturnItem per item by _apply_ret_item). Driver-only — no SparkSession;
 execution-level RETURN coverage lives in test_cypher / test_with /
 test_relational.
 
-Characterization corpus: scripts/return_corpus.py (252 rows diffed
-regex-vs-token at migration time — identical except the documented
-whitespace liberalization, pinned below).
+Characterization corpus: scripts/return_corpus.py (252 rows; the
+whitespace liberalization over the retired regexes is pinned below).
 """
 
 from __future__ import annotations
 
 import pytest
 
-from g4s_spark.cypher import CypherParseError, parse
+from g4s_spark.cypher import CypherParseError, ReturnItem, parse
 
 FRAME = "MATCH (a:Person)-[e:KNOWS]->(b:Person) RETURN {item}"
 PATH_FRAME = "MATCH p = (a:Person)-[:KNOWS*1..2]->(b:Person) RETURN {item}"
@@ -25,9 +23,9 @@ def _g(item: str, frame: str = FRAME):
 
 
 def test_bare_star_and_rename():
-    assert _g("a, b").returns == ["a", "b"]
-    assert _g("*").returns == ["a", "b"]
-    assert _g("a AS x").id_returns == [("a", "x")]
+    assert _g("a, b").items == [ReturnItem("a", ("var", "a")), ReturnItem("b", ("var", "b"))]
+    assert _g("*").items == [ReturnItem("a", ("var", "a")), ReturnItem("b", ("var", "b"))]
+    assert _g("a AS x").items == [ReturnItem("x", ("id", "a"))]
     with pytest.raises(CypherParseError, match="unbound variable: 'e'"):
         _g("e")
     with pytest.raises(CypherParseError, match="unsupported return item"):
@@ -36,27 +34,27 @@ def test_bare_star_and_rename():
 
 def test_prop_returns_node_and_edge():
     g = _g("a.name, e.weight AS w")
-    assert g.prop_returns == [("a", "name", "a_name")]
-    assert g.edge_prop_returns == [("e", "weight", "w")]
+    assert g.items[0] == ReturnItem("a_name", ("prop", "a", "name"))
+    assert g.items[1] == ReturnItem("w", ("eprop", "e", "weight"))
 
 
 def test_count_star_and_aggregates():
-    assert _g("count(*)").aggregates[0].alias == "count_star"
-    assert _g("COUNT( * ) AS n").aggregates[0].alias == "n"
-    a = _g("count(DISTINCT a.name) AS dn").aggregates[0]
-    assert (a.func, a.binding, a.prop, a.distinct, a.alias) == (
-        "count", "a", "name", True, "dn",
+    assert _g("count(*)").items[0] == ReturnItem("count_star", None, "count")
+    assert _g("COUNT( * ) AS n").items[0] == ReturnItem("n", None, "count")
+    a = _g("count(DISTINCT a.name) AS dn").items[0]
+    assert (a.agg, a.expr, a.distinct, a.alias) == (
+        "count", ("prop", "a", "name"), True, "dn",
     )
-    a = _g("stDevP(a.age)").aggregates[0]
-    assert (a.func, a.alias) == ("stdevp", "stdevp_a_age")
+    a = _g("stDevP(a.age)").items[0]
+    assert (a.agg, a.alias) == ("stdevp", "stdevp_a_age")
     # whitespace liberalization vs the retired regexes (round-16):
-    a = _g("sum ( a . age )").aggregates[0]
-    assert (a.func, a.binding, a.prop) == ("sum", "a", "age")
+    a = _g("sum ( a . age )").items[0]
+    assert (a.agg, a.expr) == ("sum", ("prop", "a", "age"))
 
 
 def test_edge_property_aggregates():
-    a = _g("sum(e.weight)").aggregates[0]
-    assert a.on_edge and a.alias == "sum_e_weight"
+    a = _g("sum(e.weight)").items[0]
+    assert a.expr == ("eprop", "e", "weight") and a.alias == "sum_e_weight"
     with pytest.raises(CypherParseError, match="DISTINCT edge-property"):
         _g("sum(DISTINCT e.weight)")
     with pytest.raises(CypherParseError, match="count\\(\\) of unbound variable: 'e'"):
@@ -66,29 +64,29 @@ def test_edge_property_aggregates():
 
 
 def test_percentiles():
-    a = _g("percentileDisc(a.age, .9) AS p").aggregates[0]
-    assert (a.func, a.param, a.alias) == ("percentiledisc", 0.9, "p")
-    assert _g("percentileCont(a.age, 1)").aggregates[0].param == 1.0
+    a = _g("percentileDisc(a.age, .9) AS p").items[0]
+    assert (a.agg, a.param, a.alias) == ("percentiledisc", 0.9, "p")
+    assert _g("percentileCont(a.age, 1)").items[0].param == 1.0
     # out-of-range quantile is no shape -> the canonical error
     with pytest.raises(CypherParseError, match="unsupported return item"):
         _g("percentileCont(a.age, 1.5)")
 
 
 def test_coalesce():
-    assert _g("coalesce(a.name, 'x')").coalesce_returns == [
-        ("a", "name", "x", "coalesce_a_name")
+    assert _g("coalesce(a.name, 'x')").items == [
+        ReturnItem("coalesce_a_name", ("coalesce", ("prop", "a", "name"), "x"))
     ]
     # numeric defaults keep their source text (props are strings)
-    assert _g("coalesce(a.age, -1.5)").coalesce_returns[0][2] == "-1.5"
+    assert _g("coalesce(a.age, -1.5)").items[0].expr[2] == "-1.5"
     # a comma inside the literal is data
-    assert _g("coalesce(a.name, 'a, b')").coalesce_returns[0][2] == "a, b"
+    assert _g("coalesce(a.name, 'a, b')").items[0].expr[2] == "a, b"
 
 
 def test_scalar_string_fns():
-    assert _g("toLower(a.name)").string_fn_returns == [
-        ("tolower", "a", "name", "tolower_a_name")
+    assert _g("toLower(a.name)").items == [
+        ReturnItem("tolower_a_name", ("sfn", "tolower", ("prop", "a", "name")))
     ]
-    assert _g("substring(a.name, 1, 2)").string_fn_returns[0][0] == (
+    assert _g("substring(a.name, 1, 2)").items[0].expr[1] == (
         "substring\x1f1\x1f2"
     )
     with pytest.raises(CypherParseError, match="needs a start index"):
@@ -98,10 +96,10 @@ def test_scalar_string_fns():
 
 
 def test_replace():
-    assert _g("replace(a.name, 'x', 'y') AS r").string_fn_returns == [
-        ("replace\x1fx\x1fy", "a", "name", "r")
+    assert _g("replace(a.name, 'x', 'y') AS r").items == [
+        ReturnItem("r", ("sfn", "replace\x1fx\x1fy", ("prop", "a", "name")))
     ]
-    assert _g("replace(a.name, 'a,b', 'c')").string_fn_returns[0][0] == (
+    assert _g("replace(a.name, 'a,b', 'c')").items[0].expr[1] == (
         "replace\x1fa,b\x1fc"
     )
     with pytest.raises(CypherParseError, match="unsupported return item"):
@@ -110,12 +108,12 @@ def test_replace():
 
 def test_concat():
     g = _g("'<' + a.name + '>' AS x")
-    assert g.concat_returns == [
-        ((("lit", "<"), ("prop", "a", "name"), ("lit", ">")), "x")
+    assert g.items == [
+        ReturnItem("x", ("concat", (("str", "<"), ("prop", "a", "name"), ("str", ">"))))
     ]
     # AS and '+' inside the literal are data
-    assert _g("'a AS b' + a.name AS x").concat_returns[0][0][0] == ("lit", "a AS b")
-    assert _g("a.name + '+' AS x").concat_returns[0][0][1] == ("lit", "+")
+    assert _g("'a AS b' + a.name AS x").items[0].expr[1][0] == ("str", "a AS b")
+    assert _g("a.name + '+' AS x").items[0].expr[1][1] == ("str", "+")
     with pytest.raises(CypherParseError, match="needs an AS alias"):
         _g("a.name + '!'")
     with pytest.raises(CypherParseError, match="concat of unbound or non-node"):
@@ -125,11 +123,11 @@ def test_concat():
 
 
 def test_introspection():
-    assert _g("id(a) AS i").id_returns == [("a", "i")]
-    assert _g("labels(a)").labels_returns == [("a", "labels_a")]
-    assert _g("type(e)").edge_prop_returns == [("e", "type", "type_e")]
-    assert _g("keys(a)").keys_returns == [("a", "keys_a", False)]
-    assert _g("properties(a) AS ps").keys_returns == [("a", "ps", True)]
+    assert _g("id(a) AS i").items == [ReturnItem("i", ("id", "a"))]
+    assert _g("labels(a)").items == [ReturnItem("labels_a", ("labels", "a"))]
+    assert _g("type(e)").items == [ReturnItem("type_e", ("eprop", "e", "type"))]
+    assert _g("keys(a)").items == [ReturnItem("keys_a", ("keys", "a"))]
+    assert _g("properties(a) AS ps").items == [ReturnItem("ps", ("properties", "a"))]
     with pytest.raises(CypherParseError, match="type\\(\\) of non-edge"):
         _g("type(a)")
     with pytest.raises(CypherParseError, match="id\\(\\) of unbound or non-node"):
@@ -137,7 +135,7 @@ def test_introspection():
 
 
 def test_path_length():
-    assert _g("length(p) AS l", PATH_FRAME).path_lengths == [("p", "l")]
+    assert _g("length(p) AS l", PATH_FRAME).items == [ReturnItem("l", ("length", "p"))]
     with pytest.raises(CypherParseError, match="length\\(\\) of unknown path"):
         _g("length(q)", PATH_FRAME)
     with pytest.raises(CypherParseError, match="cannot return path"):
@@ -145,9 +143,9 @@ def test_path_length():
 
 
 def test_expression_items():
-    it = _g("sum(a.age * 2) AS x").expr_returns[0]
+    it = _g("sum(a.age * 2) AS x").items[0]
     assert it.agg == "sum" and it.alias == "x"
-    it = _g("abs(a.age) AS x").expr_returns[0]
+    it = _g("abs(a.age) AS x").items[0]
     assert it.expr[0] == "fn1"
     with pytest.raises(CypherParseError, match="needs an AS alias"):
         _g("a.age + 1")

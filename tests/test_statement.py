@@ -15,6 +15,7 @@ from g4s_spark.cypher.parser import (
     Merge,
     PropFilter,
     Remove,
+    ReturnItem,
     SetClause,
     SetItem,
     Unwind,
@@ -67,7 +68,7 @@ def test_views_keep_their_contracts():
         "MATCH (a)", "a MATCH (a)-->(b)", "b RETURN b"
     ]
     qg = parse("MATCH (a:A) RETURN DISTINCT a.s AS s")
-    assert qg.distinct and qg.prop_returns == [("a", "s", "s")]
+    assert qg.distinct and qg.items == [ReturnItem("s", ("prop", "a", "s"))]
     assert not parse("MATCH (a:A) RETURN a.s AS s").distinct
 
 

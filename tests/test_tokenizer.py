@@ -7,7 +7,7 @@ import sys
 
 sys.path.insert(0, "/root/repo")
 
-from g4s_spark.cypher.parser import CypherParseError, parse, split_with
+from g4s_spark.cypher.parser import CypherParseError, ReturnItem, parse, split_with
 from g4s_spark.cypher.tokenizer import (
     CypherLexError,
     scan_clauses,
@@ -190,9 +190,9 @@ def test_item_splitters_use_token_stream_end_to_end():
     qg = parse(
         "MATCH (c:Customer) RETURN coalesce(c.nick, 'a, b') AS nick, c"
     )
-    assert set(qg.returns) >= {"c"}
+    assert ReturnItem("c", ("var", "c")) in qg.items
     qg = parse("MATCH (c:Customer) RETURN c.name + ' + ' + c.mkt AS t")
-    assert qg.concat_returns
+    assert qg.items[0].expr[0] == "concat"
     with pytest.raises(CypherParseError, match="unsupported ORDER BY item"):
         parse("MATCH (c:Customer) RETURN c ORDER BY c,,c LIMIT 1")
 

@@ -3,7 +3,7 @@ expand with existence semantics."""
 
 import pytest
 
-from g4s_spark.cypher import CypherParseError, parse
+from g4s_spark.cypher import CypherParseError, ReturnItem, parse
 from g4s_spark.graph import PropertyGraph
 from g4s_spark.plans import run_cypher
 
@@ -134,7 +134,7 @@ def test_bounded_varlength_seeded(labeled):
 def test_path_length_parse():
     qg = parse("MATCH p = (a)-[:X*]->(b) RETURN a, b, length(p) AS d")
     assert qg.paths["p"] == (0,)
-    assert qg.path_lengths == [("p", "d")]
+    assert qg.items[2] == ReturnItem("d", ("length", "p"))
     with pytest.raises(CypherParseError, match="unknown path"):
         parse("MATCH (a)-[:X]->(b) RETURN length(q)")
     with pytest.raises(CypherParseError, match="only length"):
