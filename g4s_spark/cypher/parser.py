@@ -54,19 +54,25 @@ class PropFilter:
     ``clause`` records which MATCH clause owns the predicate (0 = the
     required MATCH, i ≥ 1 = the i-th OPTIONAL MATCH): openCypher scopes a
     WHERE to its clause, so an optional clause's predicate must only
-    restrict that optional group, never the required matches."""
+    restrict that optional group, never the required matches.
+    ``value``'s Python type says how the property compares (store.lit_cmp):
+    a float by its numeric reading, an int (id()) against the long id
+    column, a string as text; ``is_num`` is derived from it."""
 
     binding: str
     prop: str
     op: str  # = <> != < <= > >=
-    value: str | float
-    is_num: bool
+    value: str | float | int | None
     clause: int = 0
     # scalar function wrapping the property (extension):
     # tolower | toupper | trim (string compare) | size (numeric length).
     # Still scan-pushed — the function applies inside the node-set
     # filter; selectivity is unestimated (planner keeps its upper bound).
     fn: str | None = None
+
+    @property
+    def is_num(self) -> bool:
+        return isinstance(self.value, (int, float))
 
 
 @dataclass(frozen=True)
@@ -2047,8 +2053,7 @@ def _negate_atoms(atoms: list[PropFilter], cond: str) -> list[PropFilter]:
         )
     f = atoms[0]
     return [PropFilter(
-        f.binding, f.prop, _NEG_OP[f.op], f.value, f.is_num,
-        clause=f.clause, fn=f.fn,
+        f.binding, f.prop, _NEG_OP[f.op], f.value, clause=f.clause, fn=f.fn,
     )]
 
 
@@ -2066,7 +2071,7 @@ def _apply_atom(spec, cond: str, check_binding, qg: QueryGraph, ci: int) -> list
             if tag == "exists" or spec[3]
             else "is_null"
         )
-        return [PropFilter(b, p, op, None, False, clause=ci)]
+        return [PropFilter(b, p, op, None, clause=ci)]
     if tag == "fn":
         _, fn_src, b, p, a1, a2, op, lk, lv = spec
         check_binding(b, cond)
@@ -2082,15 +2087,11 @@ def _apply_atom(spec, cond: str, check_binding, qg: QueryGraph, ci: int) -> list
             raise CypherParseError(
                 f"{fn_src}() compares against a string: {cond!r}"
             )
-        return [PropFilter(
-            b, p, op, value, is_num, clause=ci, fn=fn,
-        )]
+        return [PropFilter(b, p, op, value, clause=ci, fn=fn)]
     if tag == "plain":
         _, b, p, op, lk, lv = spec
         check_binding(b, cond)
-        is_num = lk == "num"
-        value = float(lv) if is_num else lv
-        return [PropFilter(b, p, op, value, is_num, clause=ci)]
+        return [PropFilter(b, p, op, float(lv) if lk == "num" else lv, clause=ci)]
     if tag in ("id", "id_in"):
         b = spec[1]
         check_binding(b, cond)
@@ -2105,7 +2106,7 @@ def _apply_atom(spec, cond: str, check_binding, qg: QueryGraph, ci: int) -> list
         # beyond 2^53); one outside the long range keeps the double
         return [
             PropFilter(
-                b, ID_PROP, op, v if -2**63 <= v < 2**63 else float(v), True, clause=ci,
+                b, ID_PROP, op, v if -2**63 <= v < 2**63 else float(v), clause=ci,
             )
             for v in map(int, lvs)
         ]
@@ -2115,24 +2116,18 @@ def _apply_atom(spec, cond: str, check_binding, qg: QueryGraph, ci: int) -> list
         # anchor HERE (openCypher =~ is a full match): the
         # planner's op lambdas receive the value as a lit()
         # Column, so the pattern must arrive ready-to-use
-        return [PropFilter(
-            b, p, "regex", f"^(?:{pat})$", False, clause=ci,
-        )]
+        return [PropFilter(b, p, "regex", f"^(?:{pat})$", clause=ci)]
     if tag == "strpred":
         _, b, p, op, val = spec
         check_binding(b, cond)
-        return [PropFilter(b, p, op, val, False, clause=ci)]
+        return [PropFilter(b, p, op, val, clause=ci)]
     if tag == "in":
         _, b, p, items = spec
         check_binding(b, cond)
         if not items:
             raise CypherParseError(f"empty IN list: {cond!r}")
         return [
-            PropFilter(
-                b, p, "=",
-                float(lv) if lk == "num" else lv,
-                lk == "num", clause=ci,
-            )
+            PropFilter(b, p, "=", float(lv) if lk == "num" else lv, clause=ci)
             for lk, lv in items
         ]
     raise CypherParseError(f"unsupported WHERE condition: {cond!r}")
@@ -2242,7 +2237,7 @@ def _parse_pattern(
         maps[binding] = [(k, text) for k, text, _ in entries]
         for k, text, is_num in entries:
             into.append(
-                PropFilter(binding, k, "=", float(text) if is_num else text, is_num, clause=ci)
+                PropFilter(binding, k, "=", float(text) if is_num else text, clause=ci)
             )
 
     def desugar_node_props(nm: re.Match, binding: str) -> None:

@@ -155,10 +155,11 @@ def histogram(base: DataFrame, v: Column):
     """``(lo, hi, n, nd, counts)`` over the rows of ``base``: the numeric
     range, count and bucket counts of ``v`` read as a double, and the
     approximate distinct count of ``v`` itself."""
-    # try_cast: ANSI mode would error the whole job on one non-numeric
-    # string; unparsable values simply fall out of the numeric histogram
-    # (their distinct count still informs equality)
-    vn = v.try_cast("double")
+    from .store import num  # store imports this module
+
+    # unparsable values read as NULL and fall out of the numeric
+    # histogram (their distinct count still informs equality)
+    vn = num(v)
     row = base.agg(
         F.min(vn).alias("lo"), F.max(vn).alias("hi"),
         F.count(vn).alias("n"), F.approx_count_distinct(v).alias("nd"),
@@ -181,15 +182,16 @@ def histogram(base: DataFrame, v: Column):
     return (lo, hi, n, nd, counts)
 
 
-def hist_sel(h, op: str, value, is_num: bool) -> float | None:
+def hist_sel(h, op: str, value) -> float | None:
     """Estimated fraction of rows satisfying ``<op> value`` under
     histogram ``h``. None = unknown (planner keeps its upper bound).
-    Numeric ranges interpolate the buckets; equality uses
-    1/approx-distinct; string ops beyond (=, <>) are unestimated."""
+    A float ``value`` compares the numeric reading (lit_cmp), whose
+    ranges interpolate the buckets. Equality uses 1/approx-distinct;
+    string ops beyond (=, <>) are unestimated."""
     if h is None:
         return None
     lo, hi, n, nd, counts = h
-    if not is_num:
+    if not isinstance(value, float):
         if op == "=":
             return 1.0 / nd
         if op in ("<>", "!="):

@@ -66,6 +66,36 @@ PRED_OPS = {
 }
 
 
+def num(c: Column) -> Column:
+    """The numeric reading of a value: ``c`` as a double, NULL where it
+    does not read as one. Properties are strings, so every numeric
+    context (arithmetic, numeric aggregates, comparisons against a
+    number, sort keys, histograms, toFloat) reads them through this one
+    function; under ANSI mode a plain cast of one non-numeric value
+    would fail the whole job."""
+    return c.try_cast("double")
+
+
+def lit_cmp(op: str, c: Column, value) -> Column:
+    """``c <op> literal``, compared as the literal's Python type says: a
+    float compares num(c), an int (an id() literal) compares the long id
+    column uncast so ids stay exact, a string (or None, IS NULL) compares
+    the raw value."""
+    return PRED_OPS[op](num(c) if isinstance(value, float) else c, F.lit(value))
+
+
+def atom_cmp(f, props: Column, ident: Column) -> Column:
+    """A node's WHERE atom (parser.PropFilter) over its ``props`` map and
+    ``ident`` id column: an id() atom compares the id, any other its
+    property, through the atom's scalar function if it has one."""
+    from ..cypher.parser import ID_PROP
+
+    if f.prop == ID_PROP:
+        return lit_cmp(f.op, ident, f.value)
+    c = props.getItem(f.prop)
+    return lit_cmp(f.op, c if f.fn is None else apply_scalar_fn(f.fn, c), f.value)
+
+
 def apply_scalar_fn(spec: str, c: "F.Column") -> "F.Column":
     """Evaluate an encoded scalar-function spec over a property column —
     shared by WHERE pushdown (node_set) and RETURN projection (a
@@ -83,10 +113,9 @@ def apply_scalar_fn(spec: str, c: "F.Column") -> "F.Column":
         # the double read every numeric context uses, toInteger
         # truncates toward zero per openCypher (toInteger('4.9') = 4),
         # toString is the stored rendering itself. Each returns NULL for
-        # non-convertible input (try_cast), like openCypher.
-        "tofloat": lambda col: col.cast("string").try_cast("double"),
-        "tointeger": lambda col: col.cast("string")
-        .try_cast("double").cast("long"),
+        # non-convertible input (num), like openCypher.
+        "tofloat": lambda col: num(col.cast("string")),
+        "tointeger": lambda col: num(col.cast("string")).cast("long"),
         "tostring": lambda col: col.cast("string"),
     }
     if fn in simple:
@@ -539,8 +568,9 @@ class PropertyGraph:
     def node_set(self, label: str | None, prop_filters=(), or_groups=(), extra_labels=()) -> DataFrame:
         """Node-id set for a label + WHERE prop predicates (extension —
         the reference has no property predicates, SURVEY §2.7). Predicates
-        evaluate against the props map; numeric values compare as doubles
-        (string round-trip through Double.toString is exact).
+        evaluate against the props map and the id column through atom_cmp:
+        a number compares the value's numeric reading, num() (string
+        round-trip through Double.toString is exact).
 
         ``or_groups``: tuples of predicates on THIS binding, each applied
         as one OR-combined filter (a CNF conjunct) — still a plain column
@@ -572,21 +602,7 @@ class PropertyGraph:
             raise ValueError("graph nodes carry no props column; WHERE unsupported")
 
         def cond(f):
-            if f.prop == ID_PROP:
-                # id(b) predicate (round-8): the physical long id column,
-                # compared uncast against an integer literal (exact at
-                # any id), as a double otherwise
-                c = F.col("id")
-                return PRED_OPS[f.op](
-                    c if isinstance(f.value, int) else c.cast("double"), F.lit(f.value)
-                )
-            c = F.col("props").getItem(f.prop)
-            fn = getattr(f, "fn", None)
-            if fn is not None:
-                c = apply_scalar_fn(fn, c)
-            if f.is_num:
-                c = c.cast("double")
-            return PRED_OPS[f.op](c, F.lit(f.value))
+            return atom_cmp(f, F.col("props"), F.col("id"))
 
         for f in prop_filters:
             df = df.filter(cond(f))

@@ -73,7 +73,7 @@ from ..cypher.parser import (
     order_item,
 )
 from ..graph.stats import hist_sel
-from ..graph.store import PRED_OPS, PropertyGraph, apply_scalar_fn
+from ..graph.store import PRED_OPS, PropertyGraph, apply_scalar_fn, atom_cmp, lit_cmp, num
 from .cost import expand_card, step_cost
 
 BROADCAST_MAX_ROWS = 2_000_000  # label sets below this are broadcast
@@ -635,22 +635,23 @@ def expr_col(node, raw) -> Column:
     """The one expression compiler: a parse_expr tree -> Column, for
     every context (RETURN items, WHERE predicates, node/edge SET, MERGE
     SET items, WITH stages). ``raw(binding, prop)`` is the context's
-    UNCAST leaf column; leaves and numeric-function results evaluate as
-    doubles (Spark's LONG ceil/floor would otherwise diverge from the
-    DuckDB oracles), NULL leaves propagate. A CASE WHEN against a string
+    UNCAST leaf column; a leaf evaluates as its numeric reading, num()
+    (a non-numeric value is NULL), and so do size() and numeric-function
+    results (Spark's LONG ceil/floor would otherwise diverge from the
+    DuckDB oracles); NULL leaves propagate. A CASE WHEN against a string
     literal compares a bare leaf uncast; a numeric one compares the
     condition's double value."""
     kind = node[0]
     if kind == "num":
         return F.lit(node[1])
     if kind == "prop":
-        return raw(node[1], node[2]).cast("double")
+        return num(raw(node[1], node[2]))
     if kind == "strlen":
-        return F.length(raw(node[1], node[2])).cast("double")
+        return num(F.length(raw(node[1], node[2])))
     if kind == "neg":
         return -expr_col(node[1], raw)
     if kind == "fn1":
-        return _NUM_FNS[node[1]](expr_col(node[2], raw)).cast("double")
+        return num(_NUM_FNS[node[1]](expr_col(node[2], raw)))
     if kind == "case":
         _, whens, else_e = node
         out = None
@@ -679,11 +680,12 @@ def item_col(node, leaf) -> Column:
     """The one RETURN item compiler: a ReturnItem tree -> Column, over
     ``leaf(node)``, the column of a leaf node. A bare property stays the
     uncast string (the props map is string-valued); the arithmetic nodes
-    compile through expr_col, whose leaves are doubles. labels() reads
-    the sorted comma-joined label set and keys()/properties() render the
-    props map sorted and comma-joined (the scalar-column rendering of
-    openCypher's lists and maps); a string concatenation is NULL when
-    any part is, like openCypher's + (F.concat)."""
+    compile through expr_col, whose leaves are numeric readings (num).
+    labels() reads the sorted comma-joined label set and
+    keys()/properties() render the props map sorted and comma-joined
+    (the scalar-column rendering of openCypher's lists and maps); a
+    string concatenation is NULL when any part is, like openCypher's +
+    (F.concat)."""
     kind = node[0]
     if kind in ("keys", "properties"):
         props = leaf(node)
@@ -753,7 +755,7 @@ def _run_unwind(graph: PropertyGraph, unwinds, rest: list, resolve: bool) -> Dat
             cond = _read_conjunct(conj)
             lit = cond and cond[3]
             if lit and lit[0] in unames:
-                post.setdefault(lit[0], []).append(_lit_cmp(cond[1], *lit))
+                post.setdefault(lit[0], []).append(lit_cmp(cond[1], F.col(lit[0]), lit[1]))
             else:
                 kept_conjs.append(conj)
         if post:
@@ -788,7 +790,7 @@ def _run_unwind(graph: PropertyGraph, unwinds, rest: list, resolve: bool) -> Dat
 
     # ORDER BY / SKIP / LIMIT run once, after the join. An ORDER BY item
     # that reads no output column (`ORDER BY c.name`) rides the rest of
-    # the part as a hidden column, sorted like a property sort key. It
+    # the part as a hidden column, sorted by _order_limit's rule. It
     # may read only bindings the kept items read: a hidden property of
     # another binding would join that binding to the distinct match set
     # and multiply its rows
@@ -837,7 +839,7 @@ def _run_unwind(graph: PropertyGraph, unwinds, rest: list, resolve: bool) -> Dat
     if all(c is not None for c in out_cols) and set(out_cols) <= set(out.columns):
         extras = [c for c in out.columns if c not in out_cols]
         out = out.select(*out_cols, *extras)
-    return _order_limit(out, out.columns, order, hidden, hidden, ret.skip, ret.limit)
+    return _order_limit(out, out.columns, order, hidden, ret.skip, ret.limit)
 
 
 def _word(toks) -> str | None:
@@ -860,22 +862,16 @@ _DISTINCT_PROP_ORDER = (
 )
 
 
-def _prop_items(qg: QueryGraph) -> list[str]:
-    """The aliases of qg's bare node-property items: their columns hold
-    property strings and sort as property sort keys (_prop_sort)."""
-    return [it.alias for it in qg.items if it.agg is None and it.expr[0] == "prop"]
-
-
 def _prop_sort(col: str, desc: bool) -> list[Column]:
-    """Sort keys of a string-typed property column: its numeric cast
-    first, the raw string second ONLY where the cast fails — numeric
-    ties must NOT be broken by their string rendering ('100' vs
-    '100.0') or a LIMIT cut diverges from the oracle's CAST-then-binding
-    ordering (ADVICE r6); non-numeric values keep a deterministic
-    lexical order."""
-    num = F.col(col).try_cast("double")
-    raw_sec = F.when(num.isNull(), F.col(col))
-    return [k.desc() if desc else k.asc() for k in (num, raw_sec)]
+    """Sort keys of a string-typed column (a property, a carried
+    property, a string function's or concat's output): its numeric
+    reading num() first, the raw string second ONLY where that is NULL —
+    numeric ties must NOT be broken by their string rendering ('100'
+    vs '100.0') or a LIMIT cut diverges from the oracle's
+    CAST-then-binding ordering (ADVICE r6); non-numeric values keep a
+    deterministic lexical order."""
+    n = num(F.col(col))
+    return [k.desc() if desc else k.asc() for k in (n, F.when(n.isNull(), F.col(col)))]
 
 
 def _over_cols(body: str, cols) -> bool:
@@ -891,6 +887,16 @@ def _over_cols(body: str, cols) -> bool:
 def _col_or_expr(body: str, cols) -> Column:
     """A column by its value, or an expression over ``cols``."""
     return F.col(body) if body in cols else expr_col(parse_expr(body, cols), _carried)
+
+
+def _check_alias_case(aliases) -> None:
+    """Reject two output aliases that differ only in case: Spark
+    resolves column names case-insensitively, so they would collide."""
+    seen: dict[str, str] = {}
+    for a in aliases:
+        b = seen.setdefault(a.lower(), a)
+        if b != a:
+            raise CypherParseError(f"output aliases {b!r} and {a!r} differ only in case")
 
 
 def _hide_order(items, cols, hide) -> tuple[list[tuple[str, bool]], list[str]]:
@@ -910,17 +916,18 @@ def _hide_order(items, cols, hide) -> tuple[list[tuple[str, bool]], list[str]]:
 
 
 def _order_limit(
-    df: DataFrame, cols, order, prop_keys, hidden, skip: int | None, limit: int | None
+    df: DataFrame, cols, order, hidden, skip: int | None, limit: int | None
 ) -> DataFrame:
-    """The one ORDER BY / SKIP / LIMIT applier. A sort key in
-    ``prop_keys`` holds property values and sorts as property sort keys
-    (_prop_sort); a column sorts by its value; an expression over
-    ``cols`` compiles through expr_col (`ORDER BY n * 2 DESC`). The
-    ``hidden`` sort columns are dropped after LIMIT."""
+    """The one ORDER BY / SKIP / LIMIT applier, with one sort rule read
+    from the frame's schema: a string-typed column sorts by _prop_sort's
+    keys (numeric reading first), any other column by its value; an
+    expression over ``cols`` compiles through expr_col (`ORDER BY n * 2
+    DESC`). The ``hidden`` sort columns are dropped after LIMIT."""
     if order:
+        strs = {c for c, t in df.dtypes if t == "string"}
         exprs = []
         for body, desc in order:
-            if body in prop_keys:
+            if body in strs:
                 exprs.extend(_prop_sort(body, desc))
                 continue
             try:
@@ -936,13 +943,15 @@ def _order_limit(
     return df.drop(*hidden) if hidden else df
 
 
-def _agg_col(fn: str, distinct: bool, src: str | None, param=None, typed=False) -> Column:
+def _agg_col(fn: str, distinct: bool, src: str | None, param=None) -> Column:
     """The one aggregate compiler: (function, DISTINCT, source column,
     parameter) -> Column; ``src`` None is count(*). count and collect
-    read the source as is, the numeric aggregates as a double — min/max
-    too unless ``typed`` (a carry-only stage keeps the carried type).
-    sum over no values is 0, not NULL — the case an OPTIONAL MATCH's
-    unmatched rows hit (avg/min/max stay NULL, also per openCypher).
+    read the source as is; every other aggregate, min/max included,
+    reads its numeric reading, num(), in every projection (a value that
+    does not read as a number is NULL and skipped, so min/max over no
+    numeric value is NULL). sum over no values is 0, not NULL — the
+    case an OPTIONAL MATCH's unmatched rows hit (avg/min/max stay NULL,
+    also per openCypher).
     collect() is the sorted distinct value list (deterministic), and
     DISTINCT is a no-op for it and for min/max."""
     if src is None:
@@ -954,29 +963,28 @@ def _agg_col(fn: str, distinct: bool, src: str | None, param=None, typed=False) 
         return F.count_distinct(c) if distinct else F.count(c)
     if fn == "collect":
         return F.sort_array(F.collect_set(c))
-    if typed and fn in ("min", "max"):
-        return getattr(F, fn)(c)
-    num = c.cast("double")
+    v = num(c)
     if fn == "sum":
-        return F.coalesce(F.sum_distinct(num) if distinct else F.sum(num), F.lit(0.0))
+        return F.coalesce(F.sum_distinct(v) if distinct else F.sum(v), F.lit(0.0))
     if fn == "avg":
-        return F.expr(f"avg(DISTINCT CAST(`{src}` AS DOUBLE))") if distinct else F.avg(num)
+        # a Column has no avg(DISTINCT): num() spelled in SQL
+        return F.expr(f"avg(DISTINCT try_cast(`{src}` AS DOUBLE))") if distinct else F.avg(v)
     if fn in ("stdev", "stdevp"):
         # openCypher stDev (sample) / stDevP (population)
-        return (F.stddev_samp if fn == "stdev" else F.stddev_pop)(num)
+        return (F.stddev_samp if fn == "stdev" else F.stddev_pop)(v)
     if fn == "percentilecont":
         # sort-based interpolation — bit-identical to DuckDB's
         # quantile_cont (NOTES r5: percentiles are cross-engine exact,
         # unlike stddev)
-        return F.percentile(num, F.lit(param))
+        return F.percentile(v, F.lit(param))
     if fn == "percentiledisc":
         # the value at ceil(q·n) in sorted order — an actual element,
         # per openCypher percentileDisc; built from
         # sort_array(collect_list) so it stays deterministic
-        vals = F.sort_array(F.collect_list(num))
+        vals = F.sort_array(F.collect_list(v))
         idx = F.greatest(F.lit(1), F.ceil(F.lit(param) * F.size(vals)).cast("int"))
         return F.element_at(vals, idx)
-    return getattr(F, fn)(num)  # min / max
+    return getattr(F, fn)(v)  # min / max
 
 
 # --------------------------------------------------------------------------
@@ -1001,9 +1009,9 @@ def _carried(_b, c: str) -> Column:
 def _read_conjunct(conj: str):
     """A WHERE conjunct split at its first top-level comparator
     (_top_cmps: one inside a literal or a CASE...END never splits it):
-    ``(lhs, op, rhs, lit)``, where ``lit`` is ``(name, kind, text)`` for
-    a `name <op> literal` conjunct and None otherwise; None without a
-    comparator."""
+    ``(lhs, op, rhs, lit)``, where ``lit`` is ``(name, value)`` for a
+    `name <op> literal` conjunct (a number as a float, lit_cmp's typing)
+    and None otherwise; None without a comparator."""
     cmps, _ = _top_cmps(conj)
     if not cmps:
         return None
@@ -1013,15 +1021,7 @@ def _read_conjunct(conj: str):
     lit = _lit_at(rtoks, 0)
     if name is None or lit is None or lit[2] != len(rtoks):
         return lhs, op, rhs, None
-    return lhs, op, rhs, (name, lit[0], lit[1])
-
-
-def _lit_cmp(op: str, name: str, kind: str, text: str) -> Column:
-    """`name <op> literal`: a raw-string compare against a quoted
-    literal, a double compare against a number."""
-    if kind == "str":
-        return PRED_OPS[op](F.col(name), F.lit(text))
-    return PRED_OPS[op](F.col(name).cast("double"), F.lit(float(text)))
+    return lhs, op, rhs, (name, lit[1] if lit[0] == "str" else float(lit[1]))
 
 
 def _carry_filter(df: DataFrame, where_text: str) -> DataFrame:
@@ -1040,7 +1040,7 @@ def _carry_filter(df: DataFrame, where_text: str) -> DataFrame:
         elif lit[0] not in df.columns:
             raise CypherParseError(f"WITH WHERE references unknown column: {lit[0]!r}")
         else:
-            df = df.filter(_lit_cmp(op, *lit))
+            df = df.filter(lit_cmp(op, F.col(lit[0]), lit[1]))
     return df
 
 
@@ -1052,8 +1052,8 @@ def _run_carry_stage(carried: DataFrame, proj: Projection, dedup: bool):
     users reach for as soon as they group twice. Items read like RETURN
     items: a carried column, id() of a carried binding (the column
     itself), count(*), an aggregate over a carried column (through
-    _agg_col; min/max keep the carried type), or an aliased expression
-    over carried columns (a grouping key). ``dedup`` dedupes a
+    _agg_col), or an aliased expression over carried columns (a
+    grouping key). ``dedup`` dedupes a
     projection without aggregates: WITH always, RETURN when DISTINCT.
     A RETURN without DISTINCT or aggregates can sort by a carried
     column or expression it does not project. Returns the frame, its
@@ -1061,7 +1061,7 @@ def _run_carry_stage(carried: DataFrame, proj: Projection, dedup: bool):
     cols = carried.columns
     if tuple(proj.items) == ("*",):
         order, hidden = _hide_order(proj.order_by, cols, lambda _b, _a: False)
-        return (carried.dropDuplicates() if dedup else carried), cols, (order, (), hidden)
+        return (carried.dropDuplicates() if dedup else carried), cols, (order, hidden)
     if not proj.items:
         raise CypherParseError("empty WITH/RETURN item list")
     keys, key_names, aggs, agg_names, agg_srcs = [], [], [], [], []
@@ -1087,7 +1087,7 @@ def _run_carry_stage(carried: DataFrame, proj: Projection, dedup: bool):
                     f"aggregate references unknown carried column: {src!r}"
                 )
             agg_names.append(alias or ("count_star" if src is None else f"{fn}_{src}"))
-            aggs.append(_agg_col(fn, dist, src, typed=True).alias(agg_names[-1]))
+            aggs.append(_agg_col(fn, dist, src).alias(agg_names[-1]))
             if src is not None:
                 agg_srcs.append(src)
         elif alias is not None:
@@ -1108,14 +1108,15 @@ def _run_carry_stage(carried: DataFrame, proj: Projection, dedup: bool):
         key(_col_or_expr(body, cols), a)
         return True
 
+    _check_alias_case(key_names + agg_names)
     order, hidden = _hide_order(proj.order_by, key_names + agg_names, hide)
     if not aggs:
         out = carried.select(*keys)
-        return (out.dropDuplicates() if dedup else out), key_names, (order, (), hidden)
+        return (out.dropDuplicates() if dedup else out), key_names, (order, hidden)
     srcs = [c for c in dict.fromkeys(agg_srcs) if c not in key_names]
     pre = carried.select(*keys, *[F.col(c) for c in srcs])
     out = pre.groupBy(*key_names).agg(*aggs) if key_names else pre.agg(*aggs)
-    return out, key_names + agg_names, (order, (), hidden)
+    return out, key_names + agg_names, (order, hidden)
 
 
 def _run_stage(
@@ -1134,8 +1135,7 @@ def _run_stage(
     become the required match set, so unmatched carried rows survive
     with NULLs for the stage's new bindings (and count(b) = 0). A
     RETURN without DISTINCT or aggregates can sort by a property of a
-    binding it returns (`ORDER BY b.prop`), sorted like a property
-    sort key, as is an ORDER BY of a bare property item's alias."""
+    binding it returns (`ORDER BY b.prop`)."""
     qg = QueryGraph()
     _parse_clauses(matches, qg)
     if matches[0].optional:
@@ -1240,7 +1240,7 @@ def _run_stage(
     if dedup or dummy_added:
         df = df.dropDuplicates()
     cols = [dst for _, dst in sel]
-    return df, cols, (order, _prop_items(qg), hidden), {x for x in cols if x in qg.labels}
+    return df, cols, (order, hidden), {x for x in cols if x in qg.labels}
 
 
 def _unwind_column(df: DataFrame, u: Unwind) -> DataFrame:
@@ -1677,14 +1677,13 @@ def plan_match(
                 opt_dist_alias[(gi, i)] = a
                 dist_alias_by_id[id(e)] = a
 
-    def edge_prop_col(df: DataFrame, prop: str, cast_num: bool):
+    def edge_prop_col(df: DataFrame, prop: str):
         """Resolve an edge property: typed edge column (weight) first,
         then the props map if the edge table carries one."""
         if prop in df.columns:
             return F.col(prop)
         if "props" in df.columns:
-            c = F.col("props").getItem(prop)
-            return c.cast("double") if cast_num else c
+            return F.col("props").getItem(prop)
         raise ValueError(f"edge property {prop!r} not present on edges")
 
     def pred_sel(binding: str) -> float:
@@ -1703,7 +1702,7 @@ def plan_match(
                 # range/inequality on id: unestimated
                 card = stats.label_card(label)
                 return 1.0 / card if f.op == "=" and card else None
-            return hist_sel(graph.node_histogram(label, f.prop), f.op, f.value, f.is_num)
+            return hist_sel(graph.node_histogram(label, f.prop), f.op, f.value)
 
         sel = 1.0
         for f in filters_by_binding().get(binding, ()):
@@ -1726,9 +1725,7 @@ def plan_match(
             return 1.0
         sel = 1.0
         for f in edge_filters_by_clause.get(clause_state["clause"], {}).get(e.name, ()):
-            s = hist_sel(
-                graph.edge_histogram(tuple(e.types), f.prop), f.op, f.value, f.is_num
-            )
+            s = hist_sel(graph.edge_histogram(tuple(e.types), f.prop), f.op, f.value)
             if s is not None:
                 sel *= s
         return sel
@@ -1824,13 +1821,11 @@ def plan_match(
             steps.append(("scan_reuse", tuple(e.types), e.min_hops, e.max_hops))
         else:
             for f in efs:
-                raw = raw.filter(
-                    PRED_OPS[f.op](edge_prop_col(raw, f.prop, f.is_num), F.lit(f.value))
-                )
+                raw = raw.filter(lit_cmp(f.op, edge_prop_col(raw, f.prop), f.value))
             if efs:
                 steps.append(("edge_filter", e.name, len(efs)))
             base = raw.select(
-                "src", "dst", *[edge_prop_col(raw, p, False).alias(a) for p, a in props]
+                "src", "dst", *[edge_prop_col(raw, p).alias(a) for p, a in props]
             )
             if e.undirected:
                 # Direction.Both (-[]-): the scan is the symmetrized edge
@@ -2097,10 +2092,7 @@ def plan_match(
             df = df.join(n, on=b, how="left")
         acc = None
         for a in grp:
-            c = F.col(f"_cf_{a.binding}").getItem(a.prop)
-            if a.is_num:
-                c = c.cast("double")
-            cc = PRED_OPS[a.op](c, F.lit(a.value))
+            cc = atom_cmp(a, F.col(f"_cf_{a.binding}"), F.col(a.binding))
             acc = cc if acc is None else (acc | cc)
         df = df.filter(acc).drop(*[f"_cf_{b}" for b in bs])
         steps.append(("cross_filter", tuple(bs), len(grp)))
@@ -2298,6 +2290,7 @@ def plan_match(
     # alias; the first item of a repeated alias wins. A binding item is
     # its binding column; an aggregate's source stages as _agg_<alias>
     # unless it is a binding column.
+    _check_alias_case(it.alias for it in qg.items)
     first: dict[str, ReturnItem] = {}
     for it in qg.items:
         first.setdefault(it.alias, it)
@@ -2319,8 +2312,8 @@ def plan_match(
     if aggs:
         # aggregates over distinct matches (existence semantics): rows are
         # already distinct over (returned + aggregated bindings); numeric
-        # aggs evaluate the string prop (or the staged expression) as a
-        # double. count(b.prop) counts non-NULL values (VERDICT r6 #8)
+        # aggs read the string prop (or the staged expression) through
+        # num(). count(b.prop) counts non-NULL values (VERDICT r6 #8)
         agg_cols = [
             _agg_col(
                 it.agg, it.distinct,
@@ -2348,9 +2341,7 @@ def plan_match(
                 raise CypherParseError(_DISTINCT_PROP_ORDER)
             out = out.dropDuplicates()
             steps.append(("distinct", tuple(cols + carry_extras)))
-    out = _order_limit(
-        out, cols, order, ob_cols + _prop_items(qg), ob_cols, qg.skip, qg.limit
-    )
+    out = _order_limit(out, cols, order, ob_cols, qg.skip, qg.limit)
     if order:
         steps.append(("order_by", tuple(qg.order_by)))
     if qg.skip is not None:

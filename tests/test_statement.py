@@ -122,10 +122,10 @@ WRITE_TREES = [
      [],
      Create(nodes=(
          WriteNode("x", "C", (("name", "c, CREATE (y)"), ("rank", "3")), (
-             PropFilter("x", "name", "=", "c, CREATE (y)", False),
-             PropFilter("x", "rank", "=", 3.0, True),
+             PropFilter("x", "name", "=", "c, CREATE (y)"),
+             PropFilter("x", "rank", "=", 3.0),
          )),
-         WriteNode(None, "C", (("b", "1.5"),), (PropFilter("_anon1", "b", "=", 1.5, True),)),
+         WriteNode(None, "C", (("b", "1.5"),), (PropFilter("_anon1", "b", "=", 1.5),)),
      ))),
     ("MATCH (a:A), (c:C) CREATE (a)-[:LINKS {weight: 2.5}]->(c)",
      ["(a:A), (c:C)"],
@@ -133,7 +133,7 @@ WRITE_TREES = [
     ("MERGE (n:A {k: 'v, w'}) ON CREATE SET n.x = 1 ON MATCH SET n.note = 'a ON CREATE SET b'",
      [],
      Merge(
-         node=WriteNode("n", "A", (("k", "v, w"),), (PropFilter("n", "k", "=", "v, w", False),)),
+         node=WriteNode("n", "A", (("k", "v, w"),), (PropFilter("n", "k", "=", "v, w"),)),
          on_create=(_lit("n", "x", "1", "n.x = 1"),),
          on_match=(_lit("n", "note", "a ON CREATE SET b", "n.note = 'a ON CREATE SET b'"),),
      )),
