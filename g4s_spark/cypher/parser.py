@@ -21,7 +21,6 @@ from .tokenizer import (
     Token,
     scan_clauses,
     split_punct,
-    split_top_level,
     tokenize,
 )
 
@@ -249,9 +248,11 @@ ID_PROP = "\x1did"
 # fn, =~, STARTS/ENDS WITH, CONTAINS, IN [...], id() — is now shape-
 # matched on the token list, so a comparator or keyword INSIDE a string
 # literal can never split or match, whitespace never matters, and the
-# lexer-greedy '<-NUM' case ('c.x <-5' meaning '< -5', ADVICE r15) is
-# normalized once for every shape instead of per-regex. The reference
-# gets this from its openCypher front-end (reference build.sbt:117).
+# lexer-greedy arrows ('c.x <-5' meaning '< -5', ADVICE r15) are split
+# once (_split_arrows) for every shape. One reader, read_conjunct, sorts
+# each WHERE conjunct into a pattern predicate, a numeric comparison or
+# an OR group of atoms. The reference gets this from its openCypher
+# front-end (reference build.sbt:117).
 # Deliberate liberalizations vs the regexes (documented in the round-16
 # corpus diff, scripts/predicate_corpus.py): a unary minus may be
 # separated from its digits ('= - 5'), and a bracketed IN item yields
@@ -265,21 +266,17 @@ _FN_WORDS = {
 }
 
 
-def _split_arrow_lt(toks: list[Token]) -> list[Token]:
-    """Re-emit a '<-' token immediately preceding a number as '<' plus
-    '-' (the lexer is greedy on relationship arrows; in predicate
-    position '<-5' can only read as '<' with a unary minus, ADVICE
-    r15) so every downstream shape sees a plain comparator."""
+def _split_arrows(toks: list[Token]) -> list[Token]:
+    """Re-emit each '<-', '--' and '->' token as its two one-character
+    tokens. The lexer reads them greedily as relationship arrows; in an
+    expression or a predicate none can be one ('a.x <-5' is '< -5',
+    'a.x--5' is '- -5', ADVICE r15), so every reader of those sees plain
+    comparators and signs."""
     out: list[Token] = []
-    for i, t in enumerate(toks):
-        if (
-            t.kind == "punct"
-            and t.text == "<-"
-            and i + 1 < len(toks)
-            and toks[i + 1].kind == "num"
-        ):
-            out.append(Token("punct", "<", t.pos, t.pos + 1))
-            out.append(Token("punct", "-", t.pos + 1, t.end))
+    for t in toks:
+        if t.kind == "punct" and t.text in ("<-", "--", "->"):
+            out.append(Token("punct", t.text[0], t.pos, t.pos + 1))
+            out.append(Token("punct", t.text[1], t.pos + 1, t.end))
         else:
             out.append(t)
     return out
@@ -357,8 +354,7 @@ def _match_atom(toks: list[Token], cond: str):
     a tagged spec tuple, or None when no shape consumes every token
     (the caller raises the canonical "unsupported WHERE condition").
     Spec tags: plain / null / exists / fn / id / id_in / regex / strpred
-    / in."""
-    toks = _split_arrow_lt(toks)
+    / in. ``toks`` arrive through _split_arrows."""
     n = len(toks)
     prop = _prop_at(toks, 0)
     if prop:
@@ -516,105 +512,96 @@ def _encode_scalar_fn(fn: str, a1: str | None, a2: str | None, ctx: str) -> str:
     return fn
 
 
-def _arith_op_present(s: str) -> bool:
-    """An arithmetic operator acting BETWEEN operands, decided on the
-    token stream (round-15): an operator inside a string literal no
-    longer counts, so ``c.name = 'a-b'`` stays a plain literal filter
-    (scan pushdown) instead of detouring through the expression path.
-    A leading unary sign does not count either, so ``c.x > -5`` stays
-    a literal filter; ``a.x - 5`` (operator between operands) counts.
-    Unlexable fragments keep the old raw scan as the fallback."""
-    t = s.strip()
-    try:
-        toks = tokenize(t)
-    except CypherLexError:
-        if t.startswith("-"):
-            t = t[1:]
-        return re.search(r"[-+*/]", t) is not None
-    for i, tok in enumerate(toks):
-        if tok.kind == "punct" and tok.text in ("+", "-", "*", "/"):
-            if i == 0 and tok.text == "-":
-                continue
-            return True
-    return False
-
-
 _CMP_TOKENS = {"<=", ">=", "<>", "!=", "=", "<", ">"}
 
 
-def _top_cmps(c: str) -> tuple[list[tuple[int, int, str]], bool]:
-    """Comparison-operator occurrences OUTSIDE string literals and
-    CASE...END spans, via the token stream (round-15): a cmp inside a
-    literal (``'a>b'``) or a CASE arm never splits, ``=~`` is one token
-    and never yields its ``=``, and nested CASE pairs correctly (the
-    old raw-text scan used a non-greedy regex and matched literal
-    interiors). Returns ``([(start, end, op), ...], case_present)``."""
-    try:
-        toks = tokenize(c)
-    except CypherLexError:
-        return [], False
-    out: list[tuple[int, int, str]] = []
-    case_depth = 0
-    case_present = False
+def _scan_cmp(toks: list[Token]) -> tuple[int | None, bool]:
+    """The first comparator outside every bracket group and CASE...END
+    span (its index, else None), and whether ``toks`` read as a numeric
+    expression: a CASE, an arithmetic operator between two operands (a
+    sign that opens an operand is unary), or a leading abs / round /
+    ceil / floor / sqrt call. A word after ``.`` is a property name,
+    never a keyword."""
+    at, depth = None, 0
+    numeric = (
+        len(toks) > 1 and toks[0].kind == "word"
+        and toks[0].text.lower() in _EXPR_FN1_WORDS and toks[1].text == "("
+    )
     for i, t in enumerate(toks):
-        if t.kind == "word":
-            u = t.text.upper()
-            if u == "CASE":
-                case_depth += 1
-                case_present = True
-            elif u == "END" and case_depth:
-                case_depth -= 1
-        elif t.kind == "punct" and t.text in _CMP_TOKENS and case_depth == 0:
-            out.append((t.pos, t.end, t.text))
-        elif (
-            t.kind == "punct"
-            and t.text == "<-"
-            and case_depth == 0
-            and i + 1 < len(toks)
-            and toks[i + 1].kind == "num"
-        ):
-            # the lexer is greedy on relationship arrows, so '<-5'
-            # (meaning '< -5', spaceless) arrives as one '<-' token;
-            # a number right after can only read as '<' plus unary
-            # minus in predicate position (ADVICE r15) — split so the
-            # RHS keeps the sign
-            out.append((t.pos, t.pos + 1, "<"))
-    return out, case_present
+        if i and toks[i - 1].text == ".":
+            continue
+        case = t.is_word("CASE")
+        numeric = numeric or case or (
+            0 < i < len(toks) - 1
+            and t.kind == "punct" and t.text in ("+", "-", "*", "/")
+            and (toks[i - 1].kind != "punct" or toks[i - 1].text == ")")
+            and (toks[i + 1].kind != "punct" or toks[i + 1].text in ("(", "-"))
+        )
+        if t.text in ("(", "[", "{") or case:
+            depth += 1
+        elif t.text in (")", "]", "}") or (t.is_word("END") and depth):
+            depth -= 1
+        elif at is None and depth == 0 and t.kind == "punct" and t.text in _CMP_TOKENS:
+            at = i
+    return at, numeric
 
 
-def _cmp_numeric_split(c: str) -> tuple[str, str, str, bool] | None:
-    """Decompose ``<expr> <cmp> <numeric literal>`` on token spans
-    (round-16, VERDICT r15 #4 — retiring the last raw-text comparison
-    split, the old non-greedy ``(?P<lhs>.+?)(op)(num)$`` regex that
-    could match a comparator inside a string literal): returns
-    ``(lhs_text, op, val_text, case_present)`` when the conjunct's
-    LAST top-level comparator is followed by nothing but a (signed)
-    numeric literal, else None. Only the last comparator can qualify —
-    any earlier one's tail contains the later comparator, which is not
-    numeric — so this is exactly the split the backtracking regex
-    computed, minus its literal-interior matches. The spaceless
-    ``<-5`` lexer-greed case arrives pre-split from _top_cmps."""
-    cmps, case_present = _top_cmps(c)
-    if not cmps:
-        return None
-    s0, e0, op0 = cmps[-1]
-    rhs = c[e0:]
-    try:
-        rtoks = tokenize(rhs)
-    except CypherLexError:
-        return None
-    if len(rtoks) == 1 and rtoks[0].kind == "num":
-        val = rtoks[0].text
-    elif (
-        len(rtoks) == 2
-        and rtoks[0].kind == "punct"
-        and rtoks[0].text == "-"
-        and rtoks[1].kind == "num"
+def _cmp_side(text: str, toks: list[Token], cols) -> tuple:
+    """One side of a WHERE comparison: a lone (signed) literal as
+    ("num", v) or ("str", s), else its parse_expr tree."""
+    lit = _lit_at(toks, 0)
+    if lit and lit[2] == len(toks):
+        return ("num", float(lit[1])) if lit[0] == "num" else ("str", lit[1])
+    return _expr(text, toks, cols)
+
+
+def read_conjunct(text: str, cols=None) -> tuple:
+    """The one WHERE conjunct reader: a top-level AND conjunct (a span of
+    Match.where or Projection.where) read on its tokens, without one
+    pair of parens that wraps it all, into one of three shapes:
+
+    - ("pattern", negated, text): a ``[NOT] (a)-[:T]->(b)`` predicate;
+    - ("cmp", lhs, op, rhs): an expression comparison, each side a
+      parse_expr tree or a lone literal ("num", v) / ("str", s) (a
+      string only right of a property);
+    - ("atoms", wrapped, ((negated, spec, text), ...)): an OR group of
+      _match_atom specs, one per disjunct (its text as written) read
+      without one wrapping pair of parens and a leading NOT; ``wrapped``
+      says parens wrapped the conjunct.
+
+    In MATCH WHERE (``cols`` None) a comparison is an expression only
+    when it is numeric (_scan_cmp); every other conjunct is an atom
+    group, so ``a.x = 1`` stays a pushed-down filter. A WITH WHERE names its carried ``cols`` bare and
+    reads comparisons only."""
+    toks, wrapped = _strip_outer_parens(_split_arrows(lex(text)))
+    neg = len(toks) > 1 and toks[0].is_word("NOT")
+    body = toks[1:] if neg else toks
+    if cols is None and body and body[0].text == "(" and any(
+        a.text == "-" and b.text == "[" for a, b in zip(body, body[1:])
     ):
-        val = "-" + rtoks[1].text
-    else:
-        return None
-    return c[:s0], op0, val, case_present
+        return ("pattern", neg, text[body[0].pos : body[-1].end])
+    ors = _split_bool(text, toks, "OR")
+    at, numeric = _scan_cmp(toks)
+    if cols is not None:
+        if neg or len(ors) > 1:
+            raise CypherParseError(f"WITH WHERE supports neither OR nor NOT: {text!r}")
+        if at is None:
+            raise CypherParseError(f"unsupported WITH WHERE condition: {text!r}")
+    elif len(ors) > 1 or at is None or not numeric:
+        atoms = []
+        for d in ors:
+            cond = text[d[0].pos : d[-1].end]
+            d = _strip_outer_parens(d)[0]
+            dneg = len(d) > 1 and d[0].is_word("NOT")
+            spec = _match_atom(d[1:] if dneg else d, text)
+            if spec is None:
+                raise CypherParseError(f"unsupported WHERE condition: {cond!r}")
+            atoms.append((dneg, spec, cond))
+        return ("atoms", wrapped, tuple(atoms))
+    lhs, rhs = _cmp_side(text, toks[:at], cols), _cmp_side(text, toks[at + 1 :], cols)
+    if lhs[0] == "str" or (rhs[0] == "str" and lhs[0] != "prop"):
+        raise CypherParseError(f"unsupported WHERE condition: {text!r}")
+    return ("cmp", lhs, toks[at].text, rhs)
 
 
 # ---------------------------------------------------------------------------
@@ -646,23 +633,25 @@ class Unwind:
 
 @dataclass(frozen=True)
 class Match:
-    """``[OPTIONAL] MATCH <pattern> [WHERE <cond>]`` as source spans."""
+    """``[OPTIONAL] MATCH <pattern> [WHERE <cond>]`` as source spans;
+    ``where`` holds the WHERE's top-level AND conjuncts."""
 
     optional: bool
     pattern: str
-    where: str | None = None
+    where: tuple[str, ...] = ()
 
 
 @dataclass(frozen=True)
 class Projection:
     """``WITH``/``RETURN [DISTINCT] items [WHERE] [ORDER BY] [SKIP]
     [LIMIT]`` (WHERE on WITH only). ``items`` and ``order_by`` are the
-    top-level comma-separated spans; ``start`` is the keyword's offset."""
+    top-level comma-separated spans, ``where`` the top-level AND
+    conjuncts; ``start`` is the keyword's offset."""
 
     kind: str
     items: tuple[str, ...]
     distinct: bool = False
-    where: str | None = None
+    where: tuple[str, ...] = ()
     order_by: tuple[str, ...] = ()
     skip: int | None = None
     limit: int | None = None
@@ -847,6 +836,13 @@ def _items(text: str, toks: list[Token]) -> tuple[str, ...]:
     return tuple(p.strip() for p in split_punct(text, toks, ","))
 
 
+def _conjuncts(q: str, text: str, toks: list[Token]) -> tuple[str, ...]:
+    """A WHERE body's top-level AND conjunct spans."""
+    if not toks:
+        raise CypherParseError(f"empty WHERE in: {q!r}")
+    return tuple(text[p[0].pos : p[-1].end] for p in _split_bool(text, toks, "AND"))
+
+
 def _unwind(text: str, toks: list[Token]) -> Unwind:
     if len(toks) < 3 or not toks[-2].is_word("AS") or toks[-1].kind != "word":
         raise CypherParseError(f"unsupported UNWIND (need UNWIND <list> AS name): {text!r}")
@@ -911,11 +907,9 @@ def _assemble(q: str, segs) -> tuple[list[list], list[bool]]:
             alls.append(bool(text))
             parts.append([])
         elif name == "WHERE" and isinstance(last, Match):
-            if last.where is not None:
+            if last.where:
                 raise CypherParseError(f"multiple WHERE in one clause: {q!r}")
-            if not text:
-                raise CypherParseError(f"empty WHERE in: {q!r}")
-            clauses[-1] = dc_replace(last, where=text)
+            clauses[-1] = dc_replace(last, where=_conjuncts(q, text, toks))
         elif name in _PROJ_TAIL:
             rank = _PROJ_TAIL.index(name)
             if (
@@ -927,9 +921,7 @@ def _assemble(q: str, segs) -> tuple[list[list], list[bool]]:
             if name == "ORDER BY":
                 value = _items(text, toks)
             elif name == "WHERE":
-                if not text:
-                    raise CypherParseError(f"empty WHERE in: {q!r}")
-                value = text
+                value = _conjuncts(q, text, toks)
             elif len(toks) == 1 and toks[0].kind == "num" and "." not in toks[0].text:
                 value = int(toks[0].text)
             else:
@@ -1030,7 +1022,7 @@ def _set_item(text: str, toks: list[Token], remove: bool = False) -> SetItem:
         return SetItem(b, p, value=("lit", _lit_at(rhs, 0)[1]), text=item)
     if len(rhs) == 2 and rhs[0].text == "-" and rhs[1].kind == "num" and rhs[0].end == rhs[1].pos:
         return SetItem(b, p, value=("lit", "-" + rhs[1].text), text=item)
-    node = parse_expr(text[rhs[0].pos : rhs[-1].end])
+    node = _expr(text, rhs)
     for lb, _lp in expr_prop_leaves(node):
         if lb != b:
             raise CypherParseError(
@@ -1194,13 +1186,12 @@ def _parse_clauses(clauses: list[Match], qg: QueryGraph) -> None:
         return f"_anon{anon}"
 
     for ci, clause in enumerate(clauses):
-        patterns_text, where_text = clause.pattern, clause.where
         target = qg.edges
         if ci > 0:
             target = []
             qg.optionals.append(target)
         clause_bound: set[str] = set()
-        for pattern in _split_patterns(patterns_text):
+        for pattern in _split_patterns(clause.pattern):
             pm_ = re.match(r"^(?P<pname>[A-Za-z_][A-Za-z0-9_]*)\s*=\s*(?P<rest>.+)$", pattern)
             pname = None
             if pm_:
@@ -1235,7 +1226,7 @@ def _parse_clauses(clauses: list[Match], qg: QueryGraph) -> None:
             qg.match_bindings = set(qg.labels)
         elif not target:
             raise CypherParseError("OPTIONAL MATCH needs at least one pattern edge")
-        if where_text:
+        if clause.where:
             enames = _edge_names(qg)
             clause_enames = {e.name for e in target if e.name}
 
@@ -1252,126 +1243,64 @@ def _parse_clauses(clauses: list[Match], qg: QueryGraph) -> None:
                         "that clause's pattern (correlated clause predicates unsupported)"
                     )
 
-            def atoms_of(cond: str) -> list[PropFilter]:
-                ctoks = lex(cond)
-                # NOT <atom> (round-16): negation folds into the op —
-                # under SQL 3VL every mapping is exact (NULL props drop
-                # the row on both sides of the flip). NOT binds one atom;
-                # a parenthesized group needs De Morgan the CNF splitter
-                # doesn't do, and NOT IN would need an AND the OR-group
-                # channel can't carry — both stay unsupported.
-                neg = False
-                cond_atom = cond
-                if len(ctoks) > 1 and ctoks[0].is_word("NOT"):
-                    neg = True
-                    cond_atom = cond[ctoks[1].pos :]
-                    ctoks = tokenize(cond_atom)  # re-lex: positions index cond_atom
-                spec = _match_atom(ctoks, cond_atom)
-                if spec is None:
-                    raise CypherParseError(f"unsupported WHERE condition: {cond!r}")
-                if neg:
-                    atoms = _negate_atoms(
-                        _apply_atom(spec, cond_atom, check_binding, qg, ci), cond
-                    )
-                    return atoms
-                return _apply_atom(spec, cond_atom, check_binding, qg, ci)
-
-            # WHERE is CNF: conjuncts split on top-level AND, each conjunct
-            # an optionally-parenthesized disjunction. SQL precedence makes
-            # a bare `a AND b OR c` mean `(a AND b) OR c`, which CNF-first
-            # splitting would silently mis-read — so OR groups must be
+            # WHERE is CNF: each conjunct a pattern predicate, a numeric
+            # comparison, or an optionally-parenthesized disjunction of
+            # atoms (read_conjunct). SQL precedence makes a bare `a AND b
+            # OR c` mean `(a AND b) OR c`, which CNF-first splitting
+            # would silently mis-read — so OR groups must be
             # parenthesized whenever ANDs are present.
-            conjuncts = _split_bool(where_text, "AND")
-            for conj in conjuncts:
-                c, parenthesized = _strip_outer_parens(conj)
-                # pattern predicate conjunct: [NOT] (..)-[..]-(..) — the
-                # leading paren plus an edge bracket distinguishes it from
-                # a parenthesized OR group (already stripped above)
-                pm = re.match(r"(?is)^(?P<neg>NOT\s+)?(?P<pat>\(.*)$", c)
-                if pm and re.search(r"-\s*\[", pm.group("pat")):
+            for conj in clause.where:
+                shape = read_conjunct(conj)
+                if shape[0] == "pattern":
                     if ci > 0:
                         raise CypherParseError(
                             "pattern predicates in OPTIONAL MATCH WHERE are unsupported"
                         )
                     tmp: list[PatternEdge] = []
-                    _parse_pattern(
-                        pm.group("pat"), qg, tmp, fresh, set(),
-                        allow_props=False,
-                    )
+                    _parse_pattern(shape[2], qg, tmp, fresh, set(), allow_props=False)
                     if not any(
                         b in clause_bound for e2 in tmp for b in (e2.src, e2.dst)
                     ):
                         raise CypherParseError(
                             "pattern predicate must reference a bound binding"
                         )
-                    qg.pattern_filters.append((tuple(tmp), bool(pm.group("neg"))))
+                    qg.pattern_filters.append((tuple(tmp), shape[1]))
                     continue
-                em = _cmp_numeric_split(c)
-                if em and (
-                    (_arith_op_present(em[0]) and "." in em[0]) or em[3]
-                ):
-                    # arithmetic predicate: expr <op> numeric literal
-                    lhs_txt, cmp_op, cmp_val, _case = em
+                if shape[0] == "cmp":
+                    # arithmetic predicate (extension): applied after the
+                    # required chain binds every binding it reads
+                    _, lhs, op, rhs = shape
                     if ci > 0:
                         raise CypherParseError(
                             "arithmetic WHERE in OPTIONAL MATCH is unsupported"
                         )
-                    node = parse_expr(lhs_txt)
-                    leaves = expr_prop_leaves(node)
+                    leaves = expr_prop_leaves(lhs) + expr_prop_leaves(rhs)
                     if not leaves:
-                        raise CypherParseError(f"WHERE expression has no property: {c!r}")
+                        raise CypherParseError(f"WHERE expression has no property: {conj!r}")
                     for b, _pp in leaves:
-                        check_binding(b, c)
+                        check_binding(b, conj)
                         if b in enames:
                             raise CypherParseError(
                                 "arithmetic WHERE over edge variables is unsupported"
                             )
-                    qg.expr_filters.append(
-                        (node, cmp_op, ("num", float(cmp_val)))
-                    )
+                    qg.expr_filters.append((lhs, op, rhs))
                     continue
-                # expr-vs-expr comparison (extension): split at the FIRST
-                # comparison operator OUTSIDE any CASE...END span (a CASE
-                # right of the outer comparison, e.g. `a.x > CASE WHEN
-                # b.y = 1 ...`, has internal comparisons that must not
-                # split; arithmetic itself has none). Token-stream scan
-                # (round-15): cmps inside string literals never match.
-                cmps, case_present = _top_cmps(c)
-                if cmps and "." in c and (
-                    case_present
-                    or _arith_op_present(c[:cmps[0][0]])
-                    or _arith_op_present(c[cmps[0][1]:])
-                    or re.match(r"(?i)\s*(?:abs|round|ceil|floor|sqrt)\s*\(", c)
-                ):
-                    first_start, first_end, first_op = cmps[0]
-                    lhs_txt, rhs_txt = c[:first_start], c[first_end:]
-                    try:
-                        ln, rn = parse_expr(lhs_txt), parse_expr(rhs_txt)
-                        ok = True
-                    except CypherParseError:
-                        ok = False
-                    if ok:
-                        leaves = expr_prop_leaves(ln) + expr_prop_leaves(rn)
-                        if leaves:
-                            if ci > 0:
-                                raise CypherParseError(
-                                    "arithmetic WHERE in OPTIONAL MATCH is unsupported"
-                                )
-                            for b, _pp in leaves:
-                                check_binding(b, c)
-                                if b in enames:
-                                    raise CypherParseError(
-                                        "arithmetic WHERE over edge variables is unsupported"
-                                    )
-                            qg.expr_filters.append((ln, first_op, rn))
-                            continue
-                disjuncts = _split_bool(c, "OR")
-                if len(disjuncts) > 1 and len(conjuncts) > 1 and not parenthesized:
+                _, wrapped, specs = shape
+                if len(specs) > 1 and len(clause.where) > 1 and not wrapped:
                     raise CypherParseError(
                         "parenthesize OR groups when mixing AND and OR: "
                         f"ambiguous conjunct {conj!r}"
                     )
-                atoms = [a for d in disjuncts for a in atoms_of(d)]
+                # NOT <atom> (round-16): negation folds into the op —
+                # under SQL 3VL every mapping is exact (NULL props drop
+                # the row on both sides of the flip). NOT binds one atom;
+                # a parenthesized group needs De Morgan, and NOT IN would
+                # need an AND the OR-group channel can't carry — both stay
+                # unsupported.
+                atoms = []
+                for neg, spec, cond in specs:
+                    got = _apply_atom(spec, cond, check_binding, qg, ci)
+                    atoms.extend(_negate_atoms(got, cond) if neg else got)
                 if len(atoms) == 1:
                     pf = atoms[0]
                     (qg.edge_filters if pf.binding in enames else qg.filters).append(pf)
@@ -1391,59 +1320,49 @@ def _parse_clauses(clauses: list[Match], qg: QueryGraph) -> None:
                     qg.cross_filters.append(tuple(atoms))
 
 
-_EXPR_TOKEN = re.compile(
-    r"\s*(?:(?P<kw>(?i:CASE|WHEN|THEN|ELSE|END)\b)"
-    r"|(?P<fnword>(?i:size|abs|round|ceil|floor|sqrt)\b)"
-    r"|(?P<num>\d+(?:\.\d+)?)"
-    r"|(?P<str>'[^']*')"
-    r"|(?P<prop>[A-Za-z_][A-Za-z0-9_]*\.[A-Za-z_][A-Za-z0-9_]*)"
-    r"|(?P<cmp><=|>=|<>|=|<|>)"
-    r"|(?P<op>[-+*/()]))"
-)
+_EXPR_KW = {"CASE", "WHEN", "THEN", "ELSE", "END"}
+# the numeric functions of a sub-expression (size() reads one b.p)
+_EXPR_FN1_WORDS = {"abs", "round", "ceil", "floor", "sqrt"}
+_EXPR_CMP = {"<=", ">=", "<>", "=", "<", ">"}
+_EXPR_OPS = {"+", "-", "*", "/", "(", ")"}
 
 
-_EXPR_NAME = re.compile(r"\s*([A-Za-z_][A-Za-z0-9_]*)")
-
-
-def _tokenize_expr(s: str, cols=None) -> list[tuple[str, object]]:
-    """Expression tokens. With ``cols`` (the carried column names of a
-    WITH stage) a bare identifier is a column: one in ``cols`` becomes
-    a ("prop", (None, name)) leaf, ahead of any keyword reading of the
-    same word; any other identifier that is no keyword is an unknown
-    column."""
-    toks, pos = [], 0
-    while pos < len(s):
-        nm = _EXPR_NAME.match(s, pos) if cols is not None else None
-        if nm and nm.group(1) in cols:
-            toks.append(("prop", (None, nm.group(1))))
-            pos = nm.end()
+def _expr_tokens(text: str, toks: list[Token], cols=None) -> list[tuple[str, object]]:
+    """``text``'s lexer tokens ``toks`` (through _split_arrows) as
+    _parse_arith's (kind, value) pairs; ``b.p`` is one ("prop", (b, p)).
+    With ``cols`` (the carried column names of a WITH stage) a bare
+    identifier is a column: one in ``cols`` becomes a ("prop", (None,
+    name)) leaf, ahead of any keyword reading of the same word; any
+    other identifier that is no keyword is an unknown column."""
+    out: list[tuple[str, object]] = []
+    i = 0
+    while i < len(toks):
+        t = toks[i]
+        if t.kind == "word" and cols is not None and t.text in cols:
+            out.append(("prop", (None, t.text)))
+            i += 1
             continue
-        m = _EXPR_TOKEN.match(s, pos)
-        if nm and (m is None or m.lastgroup not in ("kw", "fnword")):
-            raise CypherParseError(
-                f"final RETURN after WITH references unknown column: {nm.group(1)!r}"
-            )
-        if not m:
-            if s[pos:].strip() == "":
-                break
-            raise CypherParseError(f"bad token in expression at: {s[pos:]!r}")
-        if m.group("kw") is not None:
-            toks.append(("kw", m.group("kw").upper()))
-        elif m.group("fnword") is not None:
-            toks.append(("fn", m.group("fnword").upper()))
-        elif m.group("num") is not None:
-            toks.append(("num", float(m.group("num"))))
-        elif m.group("str") is not None:
-            toks.append(("str", m.group("str")[1:-1]))
-        elif m.group("prop") is not None:
-            b, p = m.group("prop").split(".")
-            toks.append(("prop", (b, p)))
-        elif m.group("cmp") is not None:
-            toks.append(("cmp", m.group("cmp")))
+        kw = t.text.upper() if t.kind == "word" else None
+        fn = kw == "SIZE" or (kw is not None and kw.lower() in _EXPR_FN1_WORDS)
+        if cols is not None and kw is not None and kw not in _EXPR_KW and not fn:
+            raise CypherParseError(f"expression references unknown column: {t.text!r}")
+        pr = _prop_at(toks, i) if cols is None else None
+        if pr:
+            out.append(("prop", pr[:2]))
+            i = pr[2]
+            continue
+        if kw in _EXPR_KW:
+            out.append(("kw", kw))
+        elif fn:
+            out.append(("fn", kw))
+        elif t.kind in ("num", "str"):
+            out.append((t.kind, float(t.text) if t.kind == "num" else t.text[1:-1]))
+        elif t.kind == "punct" and t.text in _EXPR_CMP | _EXPR_OPS:
+            out.append(("cmp" if t.text in _EXPR_CMP else "op", t.text))
         else:
-            toks.append(("op", m.group("op")))
-        pos = m.end()
-    return toks
+            raise CypherParseError(f"bad token in expression at: {text[t.pos:]!r}")
+        i += 1
+    return out
 
 
 def _parse_arith(toks: list, pos: int = 0) -> tuple[tuple, int]:
@@ -1536,16 +1455,24 @@ def _parse_arith(toks: list, pos: int = 0) -> tuple[tuple, int]:
     return expr(pos)
 
 
-def parse_expr(text: str, cols=None) -> tuple:
-    """The one expression parse: tokenize ``text``, parse it whole
-    (trailing tokens are an error) and return the tree. ``cols`` lists
-    the carried columns a WITH stage may name bare (_tokenize_expr);
-    without it a bare identifier is a bad token."""
-    toks = _tokenize_expr(text, cols)
-    node, end = _parse_arith(toks)
-    if end != len(toks):
-        raise CypherParseError(f"trailing tokens in expression: {text!r}")
+def _expr(text: str, toks: list[Token], cols=None) -> tuple:
+    """The tree of the expression ``toks`` (tokens of ``text``), read
+    whole: trailing tokens are an error."""
+    etoks = _expr_tokens(text, _split_arrows(toks), cols)
+    node, end = _parse_arith(etoks)
+    if end != len(etoks):
+        raise CypherParseError(
+            f"trailing tokens in expression: {text[toks[0].pos : toks[-1].end]!r}"
+        )
     return node
+
+
+def parse_expr(text: str, cols=None) -> tuple:
+    """The one expression parse: ``text`` read on the statement lexer's
+    tokens, parsed whole (trailing tokens are an error). ``cols`` lists
+    the carried columns a WITH stage may name bare (_expr_tokens);
+    without it a bare identifier is a bad token."""
+    return _expr(text, lex(text), cols)
 
 
 def _try_parse_expr_item(
@@ -1569,7 +1496,7 @@ def _try_parse_expr_item(
         and body[-1].text == ")"
     ):
         fn, body = body[0].text.lower(), body[2:-1]
-    node = parse_expr(item[body[0].pos : body[-1].end])
+    node = _expr(item, body)
     leaves = expr_prop_leaves(node)
     if not leaves:
         raise CypherParseError(f"expression has no property reference: {item!r}")
@@ -1597,7 +1524,6 @@ def _try_parse_expr_item(
 # ---------------------------------------------------------------------------
 
 _AGG_FNS = {"count", "sum", "avg", "min", "max", "collect", "stdev", "stdevp"}
-_EXPR_FN1_WORDS = {"abs", "round", "ceil", "floor", "sqrt"}
 _INTROSPECT_FNS = {"id", "labels", "type", "keys", "properties"}
 
 
@@ -1614,7 +1540,8 @@ def _ret_item_shape(toks: list[Token]):
     """Shape-match ONE aliased-stripped RETURN/WITH item body; returns a
     tagged spec tuple or None (caller tries concat, then the expression
     path, then the bare-binding forms). Tags: prop / count_star /
-    length / agg / pct / coalesce / sfn / replace / ifn."""
+    length / agg / coalesce / sfn / replace / ifn; an aggregate is
+    ("agg", fn, distinct, binding, prop or None, percentile or None)."""
     n = len(toks)
     pr = _prop_at(toks, 0)
     if pr and pr[2] == n:
@@ -1641,13 +1568,15 @@ def _ret_item_shape(toks: list[Token]):
         if m >= 2 and inner[0].is_word("DISTINCT"):
             k, dist = 1, True
         if m - k == 1 and inner[k].kind == "word":
-            return ("agg", fnl, dist, inner[k].text, None)
+            return ("agg", fnl, dist, inner[k].text, None, None)
         pr2 = _prop_at(inner, k)
         if pr2 and pr2[2] == m:
-            return ("agg", fnl, dist, pr2[0], pr2[1])
+            return ("agg", fnl, dist, pr2[0], pr2[1], None)
         return None
     if fnl in ("percentilecont", "percentiledisc"):
         pr2 = _prop_at(inner, 0)
+        if pr2 is None and m and inner[0].kind == "word":
+            pr2 = (inner[0].text, None, 1)
         if not pr2:
             return None
         k = pr2[2]
@@ -1668,7 +1597,7 @@ def _ret_item_shape(toks: list[Token]):
         v = float(q)
         if not 0.0 <= v <= 1.0:  # out-of-range quantile: no shape, so the
             return None          # item falls to the canonical error
-        return ("pct", fnl, pr2[0], pr2[1], v)
+        return ("agg", fnl, False, pr2[0], pr2[1], v)
     if fnl == "coalesce":
         pr2 = _prop_at(inner, 0)
         if not pr2:
@@ -1750,12 +1679,12 @@ def _apply_ret_item(qg: QueryGraph, spec, name: str, alias: str | None) -> None:
             raise CypherParseError(f"length() of unknown path: {pn!r}")
         node, default = ("length", pn), f"len_{pn}"
     elif tag == "agg":
-        _, agg, dist, arg, prop = spec
+        _, agg, dist, arg, prop, param = spec
         default = f"{agg}_{arg}" if prop is None else f"{agg}_{arg}_{prop}"
-        # an edge variable's aggregate: sum/avg/min/max/collect(e.prop)
-        # over the typed edge columns
+        # an edge variable's aggregate: any aggregate of e.prop over the
+        # typed edge columns
         on_edge = arg not in qg.labels
-        if on_edge and (arg not in _edge_names(qg) or agg == "count"):
+        if on_edge and (arg not in _edge_names(qg) or (agg == "count" and prop is None)):
             raise CypherParseError(f"{agg}() of unbound variable: {arg!r}")
         # count(b.prop) counts matches whose property is non-NULL
         # (openCypher parity, VERDICT r6 #8); count(b) counts all;
@@ -1772,11 +1701,6 @@ def _apply_ret_item(qg: QueryGraph, spec, name: str, alias: str | None) -> None:
             node = ("var", arg)
         else:
             node = ("eprop" if on_edge else "prop", arg, prop)
-    elif tag == "pct":
-        _, agg, arg, prop, param = spec
-        if arg not in qg.labels:
-            raise CypherParseError(f"percentile of unbound variable: {arg!r}")
-        node, default = ("prop", arg, prop), f"{agg}_{arg}_{prop}"
     elif tag == "coalesce":
         _, b, p, dflt = spec
         if b not in qg.labels:
@@ -2133,55 +2057,29 @@ def _apply_atom(spec, cond: str, check_binding, qg: QueryGraph, ci: int) -> list
     raise CypherParseError(f"unsupported WHERE condition: {cond!r}")
 
 
-def _split_bool(s: str, word: str) -> list[str]:
-    """Split a WHERE fragment on a top-level boolean keyword (AND/OR)
-    via the token stream (round-15, continuing the r14 statement-level
-    migration one clause inward): the keyword inside a string literal,
-    inside any bracket group — (), [] incl. IN-list brackets, {} — or
-    in an identifier position (``a.and``, ``x AS or``) never splits;
-    the per-predicate grammar inside each part stays regex."""
-    try:
-        toks = tokenize(s)
-        segs = split_top_level(s, toks, {word: (word,)})
-    except CypherLexError as e:
-        raise CypherParseError(str(e)) from None
-    out = [text for _, text in segs]
-    if any(not p for p in out):
-        raise CypherParseError(f"dangling {word} in WHERE: {s!r}")
-    return out
+def _split_bool(text: str, toks: list[Token], word: str) -> list[list[Token]]:
+    """``toks`` (tokens of the WHERE fragment ``text``) cut at each
+    top-level boolean keyword ``word`` (AND / OR): one inside a string
+    literal, inside any bracket group or in an identifier position
+    (``a.and``, ``x AS or``) never cuts. An empty part is an error."""
+    cuts = [i for _n, i, _s, _e in scan_clauses(toks, {word: (word,)})]
+    parts = [toks[a + 1 : b] for a, b in zip([-1] + cuts, cuts + [len(toks)])]
+    if not all(parts):
+        raise CypherParseError(f"dangling {word} in WHERE: {text!r}")
+    return parts
 
 
-def _strip_outer_parens(s: str) -> tuple[str, bool]:
-    """Remove one pair of parens if they wrap the whole conjunct; returns
-    (stripped, was_parenthesized). Token-stream scan (round-15): a paren
-    inside a string literal (`(c.name = ')')`) no longer miscounts;
-    unlexable input keeps the old char scan."""
-    s = s.strip()
-    if not (s.startswith("(") and s.endswith(")")):
-        return s, False
-    try:
-        toks = tokenize(s)
-    except CypherLexError:
-        depth = 0
-        for i, ch in enumerate(s):
-            if ch == "(":
-                depth += 1
-            elif ch == ")":
-                depth -= 1
-                if depth == 0 and i != len(s) - 1:
-                    return s, False
-        return s[1:-1].strip(), True
+def _strip_outer_parens(toks: list[Token]) -> tuple[list[Token], bool]:
+    """``toks`` without one pair of parens that wraps them all, and
+    whether there was one (``(a) OR (b)`` has none)."""
+    if not (len(toks) > 1 and toks[0].text == "(" and toks[-1].text == ")"):
+        return toks, False
     depth = 0
-    for i, t in enumerate(toks):
-        if t.kind != "punct":
-            continue
-        if t.text == "(":
-            depth += 1
-        elif t.text == ")":
-            depth -= 1
-            if depth == 0 and i != len(toks) - 1:
-                return s, False  # e.g. "(a) OR (b)" — parens don't wrap all
-    return s[1:-1].strip(), True
+    for t in toks[:-1]:
+        depth += (t.text == "(") - (t.text == ")")
+        if depth == 0:
+            return toks, False
+    return toks[1:-1], True
 
 
 def _edge_names(qg: QueryGraph) -> set[str]:

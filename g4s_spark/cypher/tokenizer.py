@@ -19,8 +19,10 @@ raw-text splitting kept re-fixing ad hoc are handled by construction:
   ``.`` / ``:`` / ``AS``.
 
 The literal grammar is ``'[^']*'`` / ``"[^"]*"``, no escapes, the same
-one the pattern regexes (``_NODE``/``_EDGE``) and the expression lexer
-read, so splitting and execution see identical spans by construction.
+one the pattern regexes (``_NODE``/``_EDGE``) read. Expressions and
+WHERE conjuncts are read on these tokens too (``parser.parse_expr``,
+``parser.read_conjunct``), so splitting and execution see identical
+spans by construction.
 
 Everything the lexer cannot read raises CypherParseError — the typed
 error the fuzz suites require (no foreign exceptions escape).
@@ -78,6 +80,8 @@ def tokenize(s: str) -> list[Token]:
     return toks
 
 
+_OPENER = {")": "(", "]": "[", "}": "{"}
+
 # tokens that, when immediately preceding a keyword word, demote it to a
 # plain identifier (property access, label position, alias name)
 _DEMOTING_PUNCT = {".", ":"}
@@ -115,7 +119,8 @@ def scan_clauses(
     ``char_start``/``char_end`` delimit the keyword text itself —
     clause bodies are the source slices BETWEEN consecutive hits.
     Depth tracks ()/[]/{} so sub-pattern parentheses shield their
-    contents.
+    contents; a closer must close an opener of its own kind, so every
+    span between two top-level cuts nests properly.
     """
     # candidate sequences per first word, longest first
     by_first: dict[str, list[tuple[str, tuple[str, ...]]]] = {}
@@ -134,7 +139,7 @@ def scan_clauses(
             if t.text in "([{":
                 opens.append(t)
             elif t.text in ")]}":
-                if not opens:
+                if not opens or opens[-1].text != _OPENER[t.text]:
                     raise CypherLexError(
                         f"unbalanced '{t.text}' at position {t.pos}: "
                         "no matching opener"
@@ -203,26 +208,3 @@ def split_punct(source: str, toks: list[Token], punct: str) -> list[str]:
         )
     parts.append(source[prev_end:])
     return parts
-
-
-def split_top_level(
-    source: str,
-    toks: list[Token],
-    keywords: dict[str, tuple[str, ...]],
-    extra_guard=None,
-) -> list[tuple[str | None, str]]:
-    """Split ``source`` at top-level clause keywords into
-    ``(clause_name, body_text)`` segments; the text before the first
-    keyword arrives as ``(None, head)``. ``extra_guard(toks, idx)`` may
-    veto individual hits (e.g. WITH directly after STARTS/ENDS)."""
-    hits = scan_clauses(toks, keywords)
-    if extra_guard is not None:
-        hits = [h for h in hits if extra_guard(toks, h[1])]
-    out: list[tuple[str | None, str]] = []
-    prev_name: str | None = None
-    prev_end = 0
-    for name, _i, start, end in hits:
-        out.append((prev_name, source[prev_end:start].strip()))
-        prev_name, prev_end = name, end
-    out.append((prev_name, source[prev_end:].strip()))
-    return out

@@ -61,16 +61,14 @@ from ..cypher.parser import (
     parse_statement,
     stage_query_graph,
     write_shape_error,
-    _lit_at,
     _parse_clauses,
     _parse_returns,
     _prop_at,
     _ret_item_shape,
-    _split_bool,
     _strip_ret_alias,
-    _top_cmps,
     lex,
     order_item,
+    read_conjunct,
 )
 from ..graph.stats import hist_sel
 from ..graph.store import PRED_OPS, PropertyGraph, apply_scalar_fn, atom_cmp, lit_cmp, num
@@ -748,18 +746,23 @@ def _run_unwind(graph: PropertyGraph, unwinds, rest: list, resolve: bool) -> Dat
     # follows it) and prune the GENERATOR itself — a pre-join filter on
     # the literal rows, the cheapest possible placement
     post: dict[str, list[Column]] = {}
-    w = next((i for i, c in enumerate(rest) if getattr(c, "where", None)), None)
+    w = next((i for i, c in enumerate(rest) if getattr(c, "where", ())), None)
     if w is not None and not any(isinstance(c, Match) for c in rest[w + 1 :]):
         kept_conjs = []
-        for conj in _split_bool(rest[w].where, "AND"):
-            cond = _read_conjunct(conj)
-            lit = cond and cond[3]
-            if lit and lit[0] in unames:
-                post.setdefault(lit[0], []).append(lit_cmp(cond[1], F.col(lit[0]), lit[1]))
+        for conj in rest[w].where:
+            # a conjunct that does not read over the unwound names alone
+            # stays in the WHERE
+            try:
+                _, lhs, op, rhs = read_conjunct(conj, unames)
+                lift = lhs[0] == "prop" and rhs[0] in ("num", "str")
+            except CypherParseError:
+                lift = False
+            if lift:
+                post.setdefault(lhs[2], []).append(lit_cmp(op, F.col(lhs[2]), rhs[1]))
             else:
                 kept_conjs.append(conj)
         if post:
-            rest[w] = dc_replace(rest[w], where=" AND ".join(kept_conjs) or None)
+            rest[w] = dc_replace(rest[w], where=tuple(kept_conjs))
     for i, (name, gen) in enumerate(gens):
         for cond in post.get(name, ()):
             gen = gen.filter(cond)
@@ -1006,41 +1009,17 @@ def _carried(_b, c: str) -> Column:
     return F.col(c)
 
 
-def _read_conjunct(conj: str):
-    """A WHERE conjunct split at its first top-level comparator
-    (_top_cmps: one inside a literal or a CASE...END never splits it):
-    ``(lhs, op, rhs, lit)``, where ``lit`` is ``(name, value)`` for a
-    `name <op> literal` conjunct (a number as a float, lit_cmp's typing)
-    and None otherwise; None without a comparator."""
-    cmps, _ = _top_cmps(conj)
-    if not cmps:
-        return None
-    s, e, op = cmps[0]
-    lhs, rhs = conj[:s], conj[e:]
-    name, rtoks = _word(lex(lhs)), lex(rhs)
-    lit = _lit_at(rtoks, 0)
-    if name is None or lit is None or lit[2] != len(rtoks):
-        return lhs, op, rhs, None
-    return lhs, op, rhs, (name, lit[1] if lit[0] == "str" else float(lit[1]))
-
-
-def _carry_filter(df: DataFrame, where_text: str) -> DataFrame:
+def _carry_filter(df: DataFrame, where: tuple[str, ...]) -> DataFrame:
     """WITH ... WHERE over the carried columns (HAVING when the stage
-    aggregated): per conjunct, `col <op> literal` or a comparison of
-    expressions over carried columns (`n * 2 >= m + 1`, CASE)."""
-    for conj in _split_bool(where_text, "AND"):
-        cond = _read_conjunct(conj)
-        if cond is None:
-            raise CypherParseError(f"unsupported WITH WHERE condition: {conj!r}")
-        lhs, op, rhs, lit = cond
-        if lit is None:
-            cols = df.columns
-            lcol = expr_col(parse_expr(lhs, cols), _carried)
-            df = df.filter(PRED_OPS[op](lcol, expr_col(parse_expr(rhs, cols), _carried)))
-        elif lit[0] not in df.columns:
-            raise CypherParseError(f"WITH WHERE references unknown column: {lit[0]!r}")
+    aggregated): per conjunct (parser.read_conjunct), `col <op>
+    literal` or a comparison of expressions over carried columns
+    (`n * 2 >= m + 1`, CASE)."""
+    for conj in where:
+        _, lhs, op, rhs = read_conjunct(conj, df.columns)
+        if lhs[0] == "prop" and rhs[0] in ("num", "str"):
+            df = df.filter(lit_cmp(op, F.col(lhs[2]), rhs[1]))
         else:
-            df = df.filter(lit_cmp(op, F.col(lit[0]), lit[1]))
+            df = df.filter(PRED_OPS[op](expr_col(lhs, _carried), expr_col(rhs, _carried)))
     return df
 
 
@@ -1081,13 +1060,15 @@ def _run_carry_stage(carried: DataFrame, proj: Projection, dedup: bool):
             # (binding columns ARE node ids) — round-8
             key(F.col(spec[2]), alias or f"id_{spec[2]}")
         elif spec and (spec[0] == "count_star" or spec[0] == "agg" and spec[4] is None):
-            fn, dist, src = ("count", False, None) if spec[0] == "count_star" else spec[1:4]
+            fn, dist, src, param = (
+                ("count", False, None, None) if spec[0] == "count_star" else spec[1:4] + spec[5:]
+            )
             if src is not None and src not in cols:
                 raise CypherParseError(
                     f"aggregate references unknown carried column: {src!r}"
                 )
             agg_names.append(alias or ("count_star" if src is None else f"{fn}_{src}"))
-            aggs.append(_agg_col(fn, dist, src).alias(agg_names[-1]))
+            aggs.append(_agg_col(fn, dist, src, param).alias(agg_names[-1]))
             if src is not None:
                 agg_srcs.append(src)
         elif alias is not None:

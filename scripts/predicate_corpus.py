@@ -1,10 +1,10 @@
-"""Characterization corpus for the WHERE per-predicate grammar.
+"""Characterization corpus for the WHERE grammar.
 
-Round-16 (VERDICT r15 "what's missing #3"): before migrating the
-per-predicate regexes (_COND / _COND_NULL / _COND_STR / _COND_FN /
-_COND_REGEX / _COND_IN / _COND_ID / _COND_EXISTS) onto token spans,
-snapshot parse() behavior over a wide predicate corpus; after the
-migration, diff the snapshots. Runs driver-only (no SparkSession).
+Prints, for every WHERE body in PREDICATES (planted in one MATCH frame),
+the parsed QueryGraph's filter lists — every expression-filter tree in
+full — or the parse error. Run it before and after a change to the
+WHERE reader and diff the two outputs. Runs driver-only (no
+SparkSession).
 
 Usage:
     python scripts/predicate_corpus.py > /tmp/pred_before.txt
@@ -15,9 +15,10 @@ Usage:
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from g4s_spark.cypher.parser import CypherParseError, parse
 
@@ -94,6 +95,15 @@ PREDICATES = [
     "a.age + 1 > 30", "a.age * 2 = b.age", "a.age + 1 <-5",
     "abs(a.age) > 2",
     "a.age > CASE WHEN b.age = 1 THEN 2 ELSE 3 END",
+    # parenthesized disjuncts, one holding an edge bracket in a literal
+    "(a.age = 1) OR (a.name = '-[')", "(a.age = 1) OR (a.name = 'x')",
+    # a double-quoted literal inside CASE reads like a single-quoted one
+    "CASE WHEN a.name = 'bob' THEN 1 ELSE 0 END = 1",
+    'CASE WHEN a.name = "bob" THEN 1 ELSE 0 END = 1',
+    # a spaced property reads like an unspaced one
+    "a.age * 2 > 3", "a . age * 2 > 3",
+    # arrow tokens next to numbers in expressions
+    "a.x--5", "a.x*2<-5", "a.x->5",
 ]
 
 
@@ -107,7 +117,7 @@ def main() -> None:
                 f"edge={sorted(map(str, g.edge_filters))} "
                 f"or={sorted(map(str, g.or_filters))} "
                 f"cross={sorted(map(str, g.cross_filters))} "
-                f"expr={len(g.expr_filters)} pat={len(g.pattern_filters)}"
+                f"expr={list(map(str, g.expr_filters))} pat={len(g.pattern_filters)}"
             )
         except CypherParseError as e:
             out = f"ERR {e}"

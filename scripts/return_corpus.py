@@ -47,6 +47,9 @@ ITEMS = [
     "percentileCont(a.age, 1)", "percentileCont(a.age, 0)",
     "percentileCont(a.age, 1.5)", "percentileCont(z.age, 0.5)",
     "percentilecont(a.age, 0.5)",
+    # edge-property count and percentiles, a binding's percentile
+    "count(e.weight)", "count(DISTINCT e.weight)", "percentileCont(e.weight, 0.5)",
+    "percentileDisc(e.weight, .9) AS p", "percentileCont(a, 0.5)",
     # coalesce
     "coalesce(a.name, 'x')", "coalesce(a.name, \"x\") AS c",
     "coalesce(a.age, 0)", "coalesce(a.age, -1.5)", "coalesce(z.p, 'x')",

@@ -39,9 +39,9 @@ def test_tree_shape():
     )
     assert stmt.union_all and len(stmt.parts) == 2
     m, w, u, om, r = stmt.parts[0]
-    assert m == Match(False, "(a:A)-[:X]->(b)", "b.s = 'x, WITH y'")
+    assert m == Match(False, "(a:A)-[:X]->(b)", ("b.s = 'x, WITH y'",))
     assert (w.kind, w.distinct, w.items, w.where, w.order_by, w.limit) == (
-        "WITH", True, ("a", "count(b) AS n"), "n > 1", ("n DESC",), 3
+        "WITH", True, ("a", "count(b) AS n"), ("n > 1",), ("n DESC",), 3
     )
     assert (u.alias, u.bounds) == ("k", (1, 6, 2))
     assert om == Match(True, "(a)-->(c)")

@@ -12,7 +12,6 @@ from g4s_spark.cypher.tokenizer import (
     CypherLexError,
     scan_clauses,
     split_punct,
-    split_top_level,
     tokenize,
 )
 
@@ -68,8 +67,7 @@ def test_multiword_clause_requires_full_sequence():
 
 def test_split_top_level_bodies():
     q = "MATCH (a) WITH a MATCH (b) RETURN b"
-    segs = split_top_level(q, tokenize(q), {"WITH": ("WITH",)})
-    assert segs == [(None, "MATCH (a)"), ("WITH", "a MATCH (b) RETURN b")]
+    assert split_with(q) == ["MATCH (a)", "a MATCH (b) RETURN b"]
 
 
 def test_parse_clause_order_enforced():
@@ -121,6 +119,10 @@ def test_unbalanced_brackets_named_errors():
         parse("MATCH (a RETURN a")
     with pytest.raises(CypherParseError, match="unbalanced"):
         split_with("MATCH (a)] WITH a RETURN a")
+    # a closer of another kind closes nothing, so no span a reader cuts
+    # out of the statement can hold an unbalanced bracket
+    with pytest.raises(CypherParseError, match="unbalanced '\\]' at position 20"):
+        parse("MATCH (a) WHERE ( * ] (a) RETURN a")
 
 
 def test_reserved_word_binding_error_is_self_explanatory():
@@ -198,34 +200,48 @@ def test_item_splitters_use_token_stream_end_to_end():
 
 
 def test_cmp_scan_on_token_stream():
-    """Round-15: the expr-comparison scan runs on the token stream.
-    Comparison/arith chars inside string literals no longer engage the
+    """The WHERE reader runs on the token stream: comparison and
+    arithmetic characters inside string literals never engage the
     expression path — `c.name = 'a-b'` stays a plain pushdown filter —
-    and `=~` is one token, never yielding its '=' to the splitter."""
-    from g4s_spark.cypher.parser import _arith_op_present, _top_cmps
-
-    assert _arith_op_present("'a-b'") is False
-    assert _arith_op_present("a.x - 5") is True
-    assert _arith_op_present("-5") is False
-    assert [op for _, _, op in _top_cmps("c.name = 'a>b'")[0]] == ["="]
-    assert _top_cmps("c.name =~ 'p.*'")[0] == []
-    cmps, case_present = _top_cmps(
-        "a.x > CASE WHEN b.y = 1 THEN 2 ELSE 3 END"
-    )
-    assert [op for _, _, op in cmps] == [">"] and case_present
-
+    a leading sign is unary, an operator between operands is
+    arithmetic, `=~` is one token, never yielding its '=' to the
+    splitter, and a comparator inside CASE...END never splits."""
     qg = parse("MATCH (c:Customer) WHERE c.name = 'a-b' RETURN c")
-    assert qg.filters and not qg.expr_filters
+    assert [(f.op, f.value) for f in qg.filters] == [("=", "a-b")] and not qg.expr_filters
+    qg = parse("MATCH (c:Customer) WHERE c.x > -5 RETURN c")
+    assert [(f.op, f.value) for f in qg.filters] == [(">", -5.0)] and not qg.expr_filters
+    qg = parse("MATCH (c:Customer) WHERE c.x - 5 > 0 RETURN c")
+    assert qg.expr_filters == [
+        (("op", "-", ("prop", "c", "x"), ("num", 5.0)), ">", ("num", 0.0))
+    ] and not qg.filters
+    qg = parse("MATCH (c:Customer) WHERE c.name = 'a>b' RETURN c")
+    assert [(f.op, f.value) for f in qg.filters] == [("=", "a>b")]
+    qg = parse("MATCH (c:Customer) WHERE c.name =~ 'p.*' RETURN c")
+    assert [f.op for f in qg.filters] == ["regex"] and not qg.expr_filters
+    qg = parse(
+        "MATCH (a)-[:T]->(b) WHERE a.x > CASE WHEN b.y = 1 THEN 2 ELSE 3 END RETURN a"
+    )
+    assert qg.expr_filters == [(
+        ("prop", "a", "x"), ">",
+        ("case", ((("prop", "b", "y"), "=", ("num", 1.0), ("num", 2.0)),), ("num", 3.0)),
+    )]
+
     qg = parse("MATCH (c:Customer) WHERE c.acctbal + 1 > 2 RETURN c")
     assert qg.expr_filters
 
 
 def test_strip_outer_parens_literal_safe():
-    """Round-15: outer-paren stripping counts paren TOKENS — a paren
-    inside a string literal no longer miscounts the depth."""
-    from g4s_spark.cypher.parser import _strip_outer_parens
-
-    assert _strip_outer_parens("(a) OR (b)") == ("(a) OR (b)", False)
-    assert _strip_outer_parens("(c.name = ')')") == ("c.name = ')'", True)
+    """Outer-paren stripping counts paren TOKENS — a paren inside a
+    string literal never miscounts the depth — and strips only a pair
+    that wraps the whole conjunct: `(a) OR (b)` is an unwrapped OR
+    group, which must be parenthesized next to an AND."""
+    qg = parse("MATCH (c:Customer) WHERE (c.x = 1) OR (c.y = 2) RETURN c")
+    assert [[(f.prop, f.value) for f in g] for g in qg.or_filters] == [
+        [("x", 1.0), ("y", 2.0)]
+    ]
+    with pytest.raises(CypherParseError, match="parenthesize"):
+        parse("MATCH (c:Customer) WHERE (c.x = 1) OR (c.y = 2) AND c.z = 3 RETURN c")
+    qg = parse("MATCH (c:Customer) WHERE (c.name = ')') RETURN c")
+    assert [(f.op, f.value) for f in qg.filters] == [("=", ")")]
     qg = parse("MATCH (c:Customer) WHERE (c.name = ')x(') RETURN c")
     assert qg.filters and qg.filters[0].value == ")x("

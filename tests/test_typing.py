@@ -63,25 +63,24 @@ AGGS = [
     ("percentileDisc({}, 0.5)", lambda vs: pct_disc(vs, 0.5)),
 ]
 
-# form -> (query over the items {}, the value they read, its raw values,
-# the aggregates the form takes: the percentiles read a node property
-# argument only, and an edge property has no count). A WITH stage is
-# implicitly DISTINCT, so `WITH n.x AS x` aggregates the distinct values.
+# form -> (query over the items {}, the value they read, its raw
+# values); every form takes every aggregate. A WITH stage is implicitly
+# DISTINCT, so `WITH n.x AS x` aggregates the distinct values.
 AGG_FORMS = {
-    "prop": ("MATCH (n:N) RETURN {}", "n.x", list(XS.values()), AGGS),
-    "alias": ("MATCH (n:N) WITH n.x AS x RETURN {}", "x", list(dict.fromkeys(XS.values())), AGGS[:-2]),
-    "carry": ("MATCH (n:N) WITH n, n.x AS x RETURN {}", "x", list(XS.values()), AGGS[:-2]),
-    "unwind": ("UNWIND [1] AS k MATCH (n:N) RETURN k, {}", "n.x", list(XS.values()), AGGS),
-    "edge": ("MATCH (a:N)-[e:E]->(b:N) RETURN {}", "e.p", list(PS.values()), AGGS[1:-2]),
+    "prop": ("MATCH (n:N) RETURN {}", "n.x", list(XS.values())),
+    "alias": ("MATCH (n:N) WITH n.x AS x RETURN {}", "x", list(dict.fromkeys(XS.values()))),
+    "carry": ("MATCH (n:N) WITH n, n.x AS x RETURN {}", "x", list(XS.values())),
+    "unwind": ("UNWIND [1] AS k MATCH (n:N) RETURN k, {}", "n.x", list(XS.values())),
+    "edge": ("MATCH (a:N)-[e:E]->(b:N) RETURN {}", "e.p", list(PS.values())),
 }
 
 
 @pytest.mark.parametrize("form", AGG_FORMS)
 def test_aggregates_read_the_numeric_value(g, form):
-    query, v, vals, aggs = AGG_FORMS[form]
-    items = ", ".join(f"{it.format(v)} AS a{j}" for j, (it, _) in enumerate(aggs))
+    query, v, vals = AGG_FORMS[form]
+    items = ", ".join(f"{it.format(v)} AS a{j}" for j, (it, _) in enumerate(AGGS))
     (row,) = run_cypher(g, query.format(items)).collect()
-    for j, (it, model) in enumerate(aggs):
+    for j, (it, model) in enumerate(AGGS):
         assert row[f"a{j}"] == pytest.approx(model(vals)), it
 
 

@@ -307,10 +307,10 @@ def test_negative_literal_stays_plain_filter(props_graph):
 
 def test_spaceless_less_than_negative_literal(props_graph):
     """``p.age - 100 <-5`` (meaning ``< -5``, no space): the lexer
-    greedily reads ``<-`` as a relationship arrow, so _top_cmps splits
-    a top-level ``<-`` followed by a number into ``<`` plus unary
-    minus (ADVICE r15) — the predicate plans through the expression
-    path instead of raising a parse error."""
+    greedily reads ``<-`` as a relationship arrow, so the WHERE reader
+    splits it into ``<`` plus unary minus (ADVICE r15) — the predicate
+    plans through the expression path instead of raising a parse
+    error."""
     got = rows(run_cypher(
         props_graph,
         "MATCH (p:Person) WHERE p.age - 100 <-51 RETURN p",
@@ -320,27 +320,30 @@ def test_spaceless_less_than_negative_literal(props_graph):
 
 
 def test_cmp_numeric_split_ignores_literal_interiors():
-    """The expr-op-literal decomposition consumes tokens (round-16,
-    VERDICT r15 #4): a comparator inside a string literal never
-    splits, and a signed RHS with a space ('> - 5') lexes as minus +
-    num."""
-    from g4s_spark.cypher.parser import _cmp_numeric_split
+    """The expression-comparison split consumes tokens: a comparator
+    inside a string literal never splits, a signed RHS with a space
+    ('< - 5') lexes as minus + num, a comparator inside CASE...END never
+    splits, and a comparison against a string literal stays a plain
+    filter."""
+    from g4s_spark.cypher import CypherParseError
+    from g4s_spark.cypher.parser import parse
 
-    # comparator only inside the literal → no split
-    assert _cmp_numeric_split("c.name + '>' ") is None
-    # plain split, LAST top-level comparator wins, sign carried
-    lhs, op, val, case_present = _cmp_numeric_split("c.x + 1 < -5")
-    assert (op, val, case_present) == ("<", "-5", False)
-    assert lhs.strip() == "c.x + 1"
-    # spaced sign also accepted (the old regex required '-5' glued)
-    assert _cmp_numeric_split("c.x + 1 < - 5")[2] == "-5"
-    # comparator inside CASE...END suppressed; outer one found
-    lhs, op, val, case_present = _cmp_numeric_split(
-        "CASE WHEN c.x > 3 THEN 1 ELSE 0 END = 1"
-    )
-    assert (op, val, case_present) == ("=", "1", True)
-    # non-numeric tail → None (falls to the plain-filter grammar)
-    assert _cmp_numeric_split("c.name = 'abc'") is None
+    def where(w):
+        return parse(f"MATCH (c:C) WHERE {w} RETURN c")
+
+    # comparator only inside the literal: no comparison at all
+    with pytest.raises(CypherParseError, match="unsupported WHERE condition"):
+        where("c.name + '>' ")
+    lhs = ("op", "+", ("prop", "c", "x"), ("num", 1.0))
+    assert where("c.x + 1 < -5").expr_filters == [(lhs, "<", ("num", -5.0))]
+    assert where("c.x + 1 < - 5").expr_filters == [(lhs, "<", ("num", -5.0))]
+    qg = where("CASE WHEN c.x > 3 THEN 1 ELSE 0 END = 1")
+    assert qg.expr_filters == [(
+        ("case", ((("prop", "c", "x"), ">", ("num", 3.0), ("num", 1.0)),), ("num", 0.0)),
+        "=", ("num", 1.0),
+    )]
+    qg = where("c.name = 'abc'")
+    assert not qg.expr_filters and [(f.op, f.value) for f in qg.filters] == [("=", "abc")]
 
 
 def test_case_right_of_comparison(props_graph):
