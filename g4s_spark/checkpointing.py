@@ -1,9 +1,10 @@
 """Lineage truncation and the one semi-naive fixpoint driver.
 
-Every frontier loop in the package (bfs, sssp, the Cypher closure,
-``bfs_levels``, components, scc, layering, the betweenness forward
-phase) runs through :func:`fixpoint`: expand the last delta, drop what
-the state already holds, merge, stop when the delta is empty. The
+Every Spark frontier loop in the package (the join rounds of bfs and
+sssp, the Cypher closure, ``bfs_levels``, components, scc, layering,
+the betweenness forward phase) runs through :func:`fixpoint`: expand
+the last delta, drop what the state already holds, merge, stop when
+the delta is empty. The
 driver owns the checkpoint policy, the convergence count, the
 broadcast-size counts and the iteration cap; a loop supplies only its
 ``expand`` and ``merge`` plans.

@@ -10,7 +10,8 @@ DataStore (DataStore.scala:9-92). Here:
 - ``edges(src: long, dst: long, type: string, weight: double,
   props: map)`` — the transpose is a column swap (free), so unlike the
   reference we never materialize it as a table (SURVEY §1.3); only the
-  driver-side adjacency index of anchored reads keeps both directions,
+  driver-side adjacency index of anchored reads and of bfs/sssp keeps
+  both directions,
 - label/type statistics for the cost-based planner come from one
   function, ``GraphStats.compute``, over the distinct (id, label) rows
   and the edges, and are cached driver-side, mirroring StatsStore
@@ -138,73 +139,105 @@ def apply_scalar_fn(spec: str, c: "F.Column") -> "F.Column":
 
 # The driver-side indexes (PropertyGraph.adjacency) are built from the
 # cached tables only, and each only while its arrays stay under this
-# budget: (key, neighbour) int64 pairs out and in are 32 B per edge;
+# budget: (key, neighbour) int64 pairs out and in are 32 B per edge, and
+# a weighted index adds an 8 B weight and a 1 B null flag per direction;
 # the label index holds at most 16 B per (id, label) row (the row's id
 # under its label and among all ids).
 INDEX_MAX_BYTES = 256 << 20
 INDEX_BYTES_PER_EDGE = 32
+INDEX_BYTES_PER_WEIGHT = 18
 INDEX_BYTES_PER_NODE = 16
+# the weight columns a weighted index holds: Spark type -> numpy dtype
+NUMERIC_WEIGHTS = {
+    "tinyint": np.int8, "smallint": np.int16, "int": np.int32,
+    "bigint": np.int64, "float": np.float32, "double": np.float64,
+}
 
 _NO_IDS = np.empty(0, np.int64)
 
 
 class AdjacencyIndex:
     """A graph's edge topology held on the driver: per edge type and
-    direction, the (key, neighbour) id pairs sorted by key. It is a CSR
-    whose row pointers come from binary search, so ids need not be
-    dense. The reference keeps the same per-type matrix and its
+    direction, the (key, neighbour) id pairs sorted by key, and on a
+    weighted index each edge's weight and null flag in the same order.
+    It is a CSR whose row pointers come from binary search, so ids need
+    not be dense. The reference keeps the same per-type matrix and its
     transpose in memory (ConcurrentDirectedGraph.scala:30-35); here a
     frontier of a few ids costs two searches per type, not a job."""
 
-    def __init__(self, pairs: dict):
-        # (type, reverse) -> (sorted keys, neighbours in key order)
+    def __init__(self, pairs: dict, weight_type: str | None = None):
+        # (type, reverse) -> (sorted keys, neighbours[, weights, nulls])
+        # in key order; weight_type is the weight column's Spark type
+        # (None: unweighted)
         self.pairs = pairs
-        self.nbytes = sum(k.nbytes + v.nbytes for k, v in pairs.values())
+        self.weight_type = weight_type
+        self.nbytes = sum(a.nbytes for arrays in pairs.values() for a in arrays)
 
     @staticmethod
-    def build(edges: DataFrame) -> "AdjacencyIndex | None":
-        """One collect of the (src, dst, type) columns; None when the
-        edge count puts the arrays over INDEX_MAX_BYTES."""
-        if edges.count() * INDEX_BYTES_PER_EDGE > INDEX_MAX_BYTES:
+    def build(edges: DataFrame, weight_col: str | None = None) -> "AdjacencyIndex | None":
+        """One collect of the (src, dst, type[, weight_col]) columns;
+        None when the edge count puts the arrays over INDEX_MAX_BYTES,
+        or when ``weight_col`` is not one of NUMERIC_WEIGHTS."""
+        cols = [F.col("src"), F.col("dst"), F.col("type")]
+        per_edge, weight_type = INDEX_BYTES_PER_EDGE, None
+        if weight_col is not None:
+            weight_type = edges.select(weight_col).dtypes[0][1]
+            if weight_type not in NUMERIC_WEIGHTS:
+                return None
+            w = F.col(weight_col)
+            cols += [F.coalesce(w, F.lit(0)).alias("w"), w.isNull().alias("w_null")]
+            per_edge += INDEX_BYTES_PER_WEIGHT
+        if edges.count() * per_edge > INDEX_MAX_BYTES:
             return None
-        pdf = edges.select("src", "dst", "type").toPandas()
+        pdf = edges.select(*cols).toPandas()
         src = pdf["src"].to_numpy(np.int64)
         dst = pdf["dst"].to_numpy(np.int64)
+        extra = ()
+        if weight_col is not None:
+            extra = (pdf["w"].to_numpy(NUMERIC_WEIGHTS[weight_type]), pdf["w_null"].to_numpy(bool))
         pairs = {}
         for t, rows in pdf.groupby("type", dropna=False).indices.items():
             for reverse, keys, nbrs in ((False, src, dst), (True, dst, src)):
-                keys, nbrs = keys[rows], nbrs[rows]
-                order = np.lexsort((nbrs, keys))
-                pairs[(t, reverse)] = (keys[order], nbrs[order])
-        return AdjacencyIndex(pairs)
+                arrays = (keys[rows], nbrs[rows], *(a[rows] for a in extra))
+                # parallel edges order by weight, so equal tables give
+                # equal indexes whatever order the collect returned
+                order = np.lexsort(arrays[::-1])
+                pairs[(t, reverse)] = tuple(a[order] for a in arrays)
+        return AdjacencyIndex(pairs, weight_type)
 
-    def expand(self, ids: np.ndarray, types, reverse: bool, cap: int):
+    def expand(self, ids: np.ndarray, types, reverse: bool, cap: int | None = None):
         """The edges leaving ``ids`` over ``types`` (every type when
         empty), followed against their direction when ``reverse``:
-        ``(row, nbr)`` arrays, ``row`` indexing ``ids``. None when there
-        would be more than ``cap`` of them: the range lengths give the
-        count before any row is built."""
+        ``(row, nbr, weight, null)`` arrays, ``row`` indexing ``ids``;
+        ``weight`` and ``null`` are None on an unweighted index. None
+        when there would be more than ``cap`` of them: the range lengths
+        give the count before any row is built."""
         spans, total = [], 0
-        for (t, rev), (keys, nbrs) in self.pairs.items():
+        for (t, rev), (keys, *cols) in self.pairs.items():
             if rev != reverse or (types and t not in types):
                 continue
             lo = np.searchsorted(keys, ids, "left")
             n = np.searchsorted(keys, ids, "right") - lo
             total += int(n.sum())
-            if total > cap:
+            if cap is not None and total > cap:
                 return None
-            spans.append((lo, n, nbrs))
-        rows = [np.repeat(np.arange(len(ids)), n) for _, n, _ in spans]
+            spans.append((lo, n, cols))
         # each id's range [lo, lo + n) laid end to end
-        picked = [
-            nbrs[np.arange(n.sum()) + np.repeat(lo - np.cumsum(n) + n, n)]
-            for lo, n, nbrs in spans
+        picks = [np.arange(n.sum()) + np.repeat(lo - np.cumsum(n) + n, n) for lo, n, _ in spans]
+        spans = [
+            (np.repeat(np.arange(len(ids)), n), *(c[pick] for c in cols))
+            for pick, (_, n, cols) in zip(picks, spans)
         ]
-        return np.concatenate([_NO_IDS, *rows]), np.concatenate([_NO_IDS, *picked])
+        empty = [_NO_IDS, _NO_IDS]
+        if self.weight_type is not None:
+            empty += [np.empty(0, NUMERIC_WEIGHTS[self.weight_type]), np.empty(0, bool)]
+        out = tuple(np.concatenate([e, *(span[j] for span in spans)]) for j, e in enumerate(empty))
+        return out if self.weight_type is not None else (*out, None, None)
 
     def __eq__(self, other) -> bool:
         return (
             isinstance(other, AdjacencyIndex)
+            and self.weight_type == other.weight_type
             and self.pairs.keys() == other.pairs.keys()
             and all(
                 np.array_equal(a, b)
@@ -678,22 +711,32 @@ class PropertyGraph:
 
         return self.derived.get(("edge_hist", types, prop), EDGE_ROWS, build)
 
+    def edge_index(self, weight_col: str | None = None) -> AdjacencyIndex | None:
+        """The driver-side adjacency index, with the weights of
+        ``weight_col`` when given, or None. It is built on first use
+        from the cached edge table; a write whose result holds an
+        uncached union of what it reads neither inherits nor rebuilds
+        it. The unweighted index reads ``edges``; each weighted one is
+        its own entry reading ``edges`` and ``weights``, so a weight
+        write keeps the unweighted index. An index over INDEX_MAX_BYTES
+        is recorded as None and never built."""
+        key = "adjacency" if weight_col is None else ("adjacency", weight_col)
+        if key not in self.derived and not self.edges.is_cached:
+            return None
+        reads = {"edges"} if weight_col is None else EDGE_ROWS
+        return self.derived.get(key, reads, lambda: AdjacencyIndex.build(self.edges, weight_col))
+
     def adjacency(self) -> tuple[AdjacencyIndex, LabelIndex] | None:
-        """The driver-side adjacency and label indexes, or None. Each is
-        built on first use from a cache: the cached edge table and the
-        slim (id, label) cache. A write whose result holds an uncached
-        union of what an index reads neither inherits that index nor
-        rebuilds it. The adjacency reads ``edges`` and the label index
-        ``labels``, so a props write inherits both. An index over
-        INDEX_MAX_BYTES is recorded as None and never built."""
+        """The unweighted edge_index and the driver-side label index, or
+        None. The label index is built on first use from the slim
+        (id, label) cache and reads ``labels``, so a props write
+        inherits both."""
         slim = self.derived.peek("nodes_slim")
         if ("adjacency" not in self.derived and not self.edges.is_cached) or (
             "label_index" not in self.derived and slim is None
         ):
             return None
-        adj = self.derived.get(
-            "adjacency", {"edges"}, lambda: AdjacencyIndex.build(self.edges)
-        )
+        adj = self.edge_index()
         labels = self.derived.get("label_index", {"labels"}, lambda: LabelIndex.build(slim))
         return None if adj is None or labels is None else (adj, labels)
 

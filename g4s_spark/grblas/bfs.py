@@ -8,10 +8,12 @@ outside the kernel. Here the mask parameter threads through ``vxm``
 it plans as a left-anti join on the vector index (shuffle-free when the
 frontier is broadcastable).
 
-The DataFrame-native BFS in ``operators/algorithms.py`` remains the
-production path (size-aware broadcast); this one exists to prove
-kernel-parity: BFS is expressible purely in GraphBLAS calls. Both run
-through the package's one fixpoint driver (``checkpointing.fixpoint``).
+The production BFS is ``operators/algorithms.py``'s ``bfs``: rounds on
+the driver's adjacency index when the graph has one, else join rounds
+with a size-aware broadcast; this one exists to prove kernel-parity:
+BFS is expressible purely in GraphBLAS calls. It and the join rounds
+run through the package's one fixpoint driver
+(``checkpointing.fixpoint``).
 """
 
 from __future__ import annotations

@@ -5,10 +5,16 @@ LOR_LAND (DocSpec.scala:31-53); SSSP = iterate `d ← d min.+ A` until
 fixpoint, convergence via isEq (DocSpec.scala:55-101).
 
 Scale notes:
-- each iteration is one shuffle join keyed on the frontier ids; the
-  frontier/visited sets are distinct-keyed DataFrames, never collected,
-- every frontier loop (bfs, sssp, components, scc, topological_layers,
-  the betweenness forward phase) runs through
+- bfs and sssp on a graph with a driver-side adjacency index
+  (``PropertyGraph.edge_index``: a cached graph under INDEX_MAX_BYTES)
+  run every round on the driver over numpy arrays, as the reference
+  pushes its frontier through in-memory matrices, and return one local
+  relation: no Spark job per round. Without the index they run as join
+  rounds, where each iteration is one shuffle join keyed on the
+  frontier ids and the frontier/visited sets are distinct-keyed
+  DataFrames, never collected,
+- every Spark frontier loop (those bfs and sssp rounds, components,
+  scc, topological_layers, the betweenness forward phase) runs through
   ``checkpointing.fixpoint``: each round's delta is checkpointed lazily
   and counted ONCE — that count is the convergence test and the
   broadcast-size input — and the merged state is checkpointed lazily,
@@ -22,11 +28,15 @@ Scale notes:
 
 from __future__ import annotations
 
+import itertools
+
+import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..checkpointing import MAX_CLOSURE_ITERS, fixpoint, iter_checkpoint
-from ..graph.store import EDGE_ROWS, PropertyGraph
+from ..graph.store import EDGE_ROWS, NUMERIC_WEIGHTS, AdjacencyIndex, PropertyGraph
 
 # frontier/visited sets below this row count are broadcast into the expand
 # join; beyond it the join shuffles on src. The visited set grows
@@ -78,6 +88,62 @@ def _cached_typed_edges(
     return graph.derived.get(key, reads, build)
 
 
+def _driver_rounds(
+    index: AdjacencyIndex, start_ids, types, cap: int | None, error: str | None
+):
+    """``fixpoint``'s semi-naive loop on the driver, over ``index``:
+    round ``i`` expands the ids the last round improved, keeps each
+    neighbour's least candidate distance (frontier distance + edge
+    weight; 1 per edge on an unweighted index) and only the strict
+    improvements over the state. A null weight gives a null candidate,
+    which only a missing or null distance takes, as the join rounds'
+    ``d.dist IS NULL OR c.dist < d.dist`` does. At the ``cap``-th round
+    it raises ``RuntimeError(error)``, or returns the truncated state
+    with ``error=None``. Returns (ids sorted, distances, null flags)."""
+    ids = np.unique(np.asarray(start_ids, np.int64))
+    dist = np.zeros(len(ids), NUMERIC_WEIGHTS[index.weight_type or "bigint"])
+    null = np.zeros(len(ids), bool)
+    frontier = ids, dist, null
+    for _ in range(cap) if cap is not None else itertools.count():
+        f_ids, f_dist, f_null = frontier
+        row, nbr, w, w_null = index.expand(f_ids, types, False)
+        cand = f_dist[row] + (1 if w is None else w)
+        c_null = f_null[row] if w_null is None else f_null[row] | w_null
+        # each neighbour's least candidate: the first of its run when
+        # sorted by (neighbour, null, distance)
+        order = np.lexsort((cand, c_null, nbr))
+        nbr, cand, c_null = nbr[order], cand[order], c_null[order]
+        first = np.ones(len(nbr), bool)
+        first[1:] = nbr[1:] != nbr[:-1]
+        nbr, cand, c_null = nbr[first], cand[first], c_null[first]
+        pos = np.searchsorted(ids, nbr)
+        at = pos.clip(max=max(len(ids) - 1, 0))
+        found = (pos < len(ids)) & (ids[at] == nbr)
+        better = ~found | null[at] | (~c_null & (cand < dist[at]))
+        if not better.any():
+            return ids, dist, null
+        nbr, cand, c_null, pos, found = (a[better] for a in (nbr, cand, c_null, pos, found))
+        dist[pos[found]], null[pos[found]] = cand[found], c_null[found]
+        new = ~found
+        ids, dist, null = (
+            np.insert(a, pos[new], v[new]) for a, v in ((ids, nbr), (dist, cand), (null, c_null))
+        )
+        frontier = nbr, cand, c_null
+    if error is not None:
+        raise RuntimeError(error)
+    return ids, dist, null
+
+
+def _dist_frame(graph: PropertyGraph, state, dist_type: str) -> DataFrame:
+    """The (id long, dist) local relation of a driver loop's state."""
+    ids, dist, null = state
+    col = pd.array(dist)
+    col[null] = pd.NA
+    return graph.spark.createDataFrame(
+        pd.DataFrame({"id": ids, "dist": col}), f"id long, dist {dist_type}"
+    )
+
+
 def bfs(
     graph: PropertyGraph,
     start_ids: list[int],
@@ -85,18 +151,25 @@ def bfs(
     edge_types: list[str] | None = None,
     broadcast_frontier: bool | None = None,
 ) -> DataFrame:
-    """Multi-source BFS: returns (id long, dist long) with the minimum hop
-    count from any start node. LOR_LAND frontier push: frontier ⋈ edges →
+    """Multi-source BFS: returns (id long, dist long), one row per
+    reached id (a start id included once) with the minimum hop count
+    from any start node. LOR_LAND frontier push: frontier ⋈ edges →
     distinct new ids not yet visited.
 
-    The edge set is cached once (every iteration re-joins it); the
-    frontier/visited sets are broadcast only while under
-    BROADCAST_SET_MAX_ROWS (size-aware default; pass True/False to force),
-    so the monotonically-growing visited set never gets broadcast
-    unboundedly."""
+    With the graph's driver-side adjacency index (``edge_index``) every
+    round runs on the driver and the result is a local relation.
+    Without it the rounds are joins: the edge set is cached once (every
+    iteration re-joins it); the frontier/visited sets are broadcast only
+    while under BROADCAST_SET_MAX_ROWS (size-aware default; pass
+    True/False to force), so the monotonically-growing visited set never
+    gets broadcast unboundedly."""
+    starts = sorted({int(s) for s in start_ids})
+    index = graph.edge_index()
+    if index is not None:
+        return _dist_frame(graph, _driver_rounds(index, starts, edge_types, max_hops, None), "long")
     spark = graph.spark
     edges = _cached_typed_edges(graph, edge_types, ("src", "dst"))
-    visited = spark.createDataFrame([(int(s), 0) for s in start_ids], "id long, dist long")
+    visited = spark.createDataFrame([(s, 0) for s in starts], "id long, dist long")
 
     def expand(_i, visited, frontier, n_visited, n_frontier):
         return (
@@ -110,7 +183,7 @@ def bfs(
     def merge(i, visited, nxt):
         return visited.unionByName(nxt.withColumn("dist", F.lit(i + 1)))
 
-    n = len(start_ids)
+    n = len(starts)
     return fixpoint(
         expand, merge, visited, visited.select("id"), max_hops, n_state=n, n_delta=n
     )
@@ -126,9 +199,19 @@ def sssp(
 ) -> DataFrame:
     """Single/multi-source shortest path over the MIN_PLUS semiring:
     d ← min(d, d ⊕min.+ A) iterated to fixpoint (Bellman-Ford layered
-    relaxation). Returns (id long, dist). Same caching/size-aware
-    broadcast strategy as bfs(). Raises if max_iters is hit before the
-    fixpoint (never a silently-truncated answer)."""
+    relaxation). Returns (id long, dist), one row per reached id, with
+    ``dist`` of the weight column's type, summed outward from the
+    source. Runs on the driver over the weighted adjacency index
+    (``edge_index(weight_col)``) when the graph has one, else as join
+    rounds with bfs()'s caching/size-aware broadcast strategy. Raises if
+    max_iters is hit before the fixpoint (never a silently-truncated
+    answer)."""
+    error = f"sssp did not converge within {max_iters} iterations; raise max_iters"
+    starts = sorted({int(s) for s in start_ids})
+    index = graph.edge_index(weight_col)
+    if index is not None:
+        state = _driver_rounds(index, starts, edge_types, max_iters, error)
+        return _dist_frame(graph, state, index.weight_type)
     edges = _cached_typed_edges(graph, edge_types, ("src", "dst", weight_col)).select(
         "src", "dst", F.col(weight_col).alias("w")
     )
@@ -137,7 +220,7 @@ def sssp(
     # distances for oracle comparison; double weights -> double distances)
     wtype = dict(edges.dtypes)["w"]
     zero = 0.0 if wtype in ("double", "float") else 0
-    dist = spark.createDataFrame([(int(s), zero) for s in start_ids], f"id long, dist {wtype}")
+    dist = spark.createDataFrame([(s, zero) for s in starts], f"id long, dist {wtype}")
 
     def expand(_i, dist, frontier, n_dist, n_frontier):
         candidates = (
@@ -158,12 +241,8 @@ def sssp(
     def merge(_i, dist, improved):
         return dist.join(improved.select("id"), on="id", how="left_anti").unionByName(improved)
 
-    n = len(start_ids)
-    return fixpoint(
-        expand, merge, dist, dist, max_iters,
-        f"sssp did not converge within {max_iters} iterations; raise max_iters",
-        n_state=n, n_delta=n,
-    )
+    n = len(starts)
+    return fixpoint(expand, merge, dist, dist, max_iters, error, n_state=n, n_delta=n)
 
 
 def reachable(graph: PropertyGraph, start_ids: list[int], edge_types: list[str] | None = None) -> DataFrame:

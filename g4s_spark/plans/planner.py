@@ -1518,7 +1518,7 @@ def _probe_anchored(graph: PropertyGraph, qg: QueryGraph, cols: list[str]):
         got = adj.expand(table[frm], e.types, reverse, PROBE_MAX_ROWS)
         if got is None:
             return None
-        rows, nbrs = got
+        rows, nbrs, _, _ = got
         m = keep(to, nbrs)
         table = {b: v[rows[m]] for b, v in table.items()}
         table[to] = nbrs[m]

@@ -49,6 +49,7 @@ WARM = {
     # the driver-side indexes build only from the caches
     "adjacency": lambda g: g.cache().adjacency()[0],
     "label_index": lambda g: g.cache().adjacency()[1],
+    ("adjacency", "weight"): lambda g: g.cache().edge_index("weight"),
 }
 
 

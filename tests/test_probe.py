@@ -157,6 +157,27 @@ def test_probe_equals_general_path(spark, graph, queries):
     _assert_twins_agree(grown.cache(), plain_grown, queries[2])
 
 
+def test_weight_write_keeps_the_unweighted_index(spark):
+    """A weight write changes no (src, dst, type) row: its result keeps
+    the unweighted adjacency index, so a hop1 read stays on the probe,
+    and drops the weighted index sssp reads."""
+    nodes = [(0, "A", {"k": "v0"}), (1, "B", {"k": "v1"}), (2, "B", {"k": "v2"})]
+    edges = [(0, 1, "T", 1.0), (0, 2, "T", 2.0), (1, 2, "U", 3.0)]
+    ndf = spark.createDataFrame(pd.DataFrame(nodes, columns=["id", "label", "props"]), NODE_SCHEMA)
+    edf = spark.createDataFrame(edges, EDGE_SCHEMA + ", weight double")
+    g = PropertyGraph(ndf, edf, spark).cache()
+    g.stats = _counts(nodes, [e[:3] for e in edges])
+    assert g.adjacency() is not None and g.edge_index("weight") is not None
+    written = g.update_edge_weights(
+        spark.createDataFrame([(0, 1, 5.0)], "src long, dst long, weight double")
+    )
+    assert "adjacency" in written.derived and ("adjacency", "weight") not in written.derived
+    assert written.edge_index("weight") is None  # an uncached join: sssp runs join rounds
+    planned = plan_match(written, parse("MATCH (a:A)-[:T]->(b) WHERE id(a) = 0 RETURN b"))
+    assert planned.steps[0][0] == "probe"
+    assert sorted(r.b for r in planned.df.collect()) == [1, 2]
+
+
 # hop1-hop3 run no job once the index is built; prop resolves the
 # payload of the probed ids only (5 jobs on the join chain)
 JOB_BUDGET = {"hop1": 0, "hop2": 0, "hop3": 0, "prop": 3}
